@@ -59,6 +59,9 @@ object Tables {
     if (df.rdd.getNumPartitions * 2 >= want) df else df.repartition(want)
   }
 
+  /** Session conf overriding fanOut's per-task input-byte target. */
+  private[graft] val TargetPartitionBytesKey = "spark.graft.fanout.targetPartitionBytes"
+
   /** The size-derived fan-out width for `df` (see [[fanOut]]): bounded by
     * the session's parallelism, floored at 1, derived from the optimizer's
     * size estimate so no job runs. `costFactor` scales the estimate for
@@ -72,8 +75,10 @@ object Tables {
   private[graft] def fanWidth(df: DataFrame, costFactor: Int = 1): Int = {
     val spark = df.sparkSession
     val cores = spark.sparkContext.defaultParallelism
-    val target = spark.conf.getOption("spark.graft.fanout.targetPartitionBytes")
-      .map(_.toLong).getOrElse(256L * 1024)
+    val target = spark.conf.getOption(TargetPartitionBytesKey).fold(256L * 1024) { raw =>
+      raw.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$TargetPartitionBytesKey must be a positive integer (bytes), got '$raw'"))
+    }
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes * costFactor
     ((bytes + target - 1) / target).min(cores).max(1).toInt
   }

@@ -42,7 +42,8 @@ import graft.pgproto.Lsn
   * realignment needed. `commit(end)` acks that LSN — the standby status
   * update of `pq/replication/stream.go:735-751`.
   *
-  * Options:
+  * Options (size and count options must be positive integers; a
+  * malformed, zero or negative value fails stream construction):
   *  - `path`                 WAL frame file (FileWalSource) — required unless
   *                           a test injected a source via [[PgCdcTestHook]]
   *  - `startLsn`             snapshot→CDC handoff: first offset resumes here
@@ -53,7 +54,14 @@ import graft.pgproto.Lsn
   *  - `maxBufferedTxns` / `maxBufferedBytes`  backpressure caps on the
   *                           driver's committed-but-undelivered backlog
   *                           (default 4096 txns / 256 MiB); polling stops at
-  *                           the cap so a socket feed sees TCP backpressure
+  *                           the cap. `maxBufferedBytes` also bounds the
+  *                           socket reader's queue of received-but-unpolled
+  *                           frames, which lets the reader run ahead of a
+  *                           running micro-batch until that budget is
+  *                           reached and then exerts TCP backpressure. A
+  *                           socket feed's driver memory is thus at most
+  *                           `maxBufferedBytes` queued plus
+  *                           `maxBufferedBytes` grouped
   *  - `spillThresholdEvents` / `maxBufferedStreamEvents`  executor-side
   *                           streamed-txn memory: per-txn in-memory cap
   *                           before disk spill (default 64k) and the total
@@ -156,10 +164,22 @@ private[streaming] final case class PreparedGroup(
 class PgCdcMicroBatchStream(options: CaseInsensitiveStringMap)
     extends MicroBatchStream with SupportsTriggerAvailableNow with ReportsSourceMetrics {
 
-  private val maxFramesPerPartition =
-    math.max(1, options.getInt("maxFramesPerPartition", 8192))
-  private val defaultMaxTxnsPerTrigger =
-    options.getLong("maxTxnsPerTrigger", Long.MaxValue)
+  /** A positive integral option, or `default` when unset. A malformed,
+    * zero, negative or out-of-range value fails stream construction with a
+    * message naming the option and the value — never silently clamped.
+    */
+  private def positiveOption(key: String, default: Long, max: Long = Long.MaxValue): Long =
+    Option(options.get(key)).fold(default) { raw =>
+      raw.toLongOption.filter(v => v > 0 && v <= max).getOrElse {
+        val range = if (max == Long.MaxValue) "a positive integer" else s"an integer in [1, $max]"
+        throw new IllegalArgumentException(s"pgcdc: option '$key' must be $range, got '$raw'")
+      }
+    }
+  private def positiveIntOption(key: String, default: Int): Int =
+    positiveOption(key, default, Int.MaxValue).toInt
+
+  private val maxFramesPerPartition = positiveIntOption("maxFramesPerPartition", 8192)
+  private val defaultMaxTxnsPerTrigger = positiveOption("maxTxnsPerTrigger", Long.MaxValue)
 
   /** B7 snapshot→CDC handoff seam: the snapshot records its consistent-point
     * LSN (slot creation's `consistent_point`, reference
@@ -176,15 +196,23 @@ class PgCdcMicroBatchStream(options: CaseInsensitiveStringMap)
   // Executor-side assembler tuning, shipped with each partition:
   // `spillThresholdEvents` = per-streamed-txn in-memory cap before disk
   // spill; `maxBufferedStreamEvents` = total in-memory fail-fast bound.
-  private val spillThresholdEvents =
-    math.max(1, options.getInt("spillThresholdEvents", 1 << 16))
-  private val maxBufferedStreamEvents =
-    math.max(1, options.getInt("maxBufferedStreamEvents", 1 << 20))
+  private val spillThresholdEvents = positiveIntOption("spillThresholdEvents", 1 << 16)
+  private val maxBufferedStreamEvents = positiveIntOption("maxBufferedStreamEvents", 1 << 20)
   private val dropForeignOrigin = options.getBoolean("dropForeignOrigin", false)
   // `schema.table=col1+col2;…` — row-key columns recorded as key_names in
   // place of the wire identity flags (REPLICA IDENTITY FULL flags every
   // column); see TransactionAssembler.keyNameOverrides
   private val keyOverrides = Option(options.get("keyOverrides")).getOrElse("")
+
+  // Backpressure: once the committed-but-undelivered backlog reaches either
+  // cap, pump() stops polling the feed — over a real socket the reader's
+  // queue then fills to ITS byte budget (also maxBufferedBytes) and the
+  // unread bytes exert TCP backpressure on the walsender, the same mechanism
+  // as the reference's fixed-capacity message channel
+  // (`pq/replication/stream.go:93`). Without this, a producer sustainedly
+  // faster than the consumer grows driver memory without bound.
+  private val maxBufferedTxns = positiveIntOption("maxBufferedTxns", 4096)
+  private val maxBufferedBytes = positiveOption("maxBufferedBytes", 256L << 20)
 
   private val wal: WalSource = {
     val hook = Option(options.get("testSourceKey")).flatMap(PgCdcTestHook.get)
@@ -208,6 +236,7 @@ class PgCdcMicroBatchStream(options: CaseInsensitiveStringMap)
           publication = publication,
           protoVersion = options.getInt("protoVersion", 2),
           password = Option(options.get("password")),
+          maxQueuedBytes = maxBufferedBytes,
           sslMode = Option(options.get("sslmode")).getOrElse("disable"),
           sslRootCert = Option(options.get("sslrootcert")),
           sslCert = Option(options.get("sslcert")),
@@ -228,16 +257,6 @@ class PgCdcMicroBatchStream(options: CaseInsensitiveStringMap)
   private val buffer = mutable.ArrayBuffer.empty[TxnGroup]
   private var baseSeq = 0L
 
-  // Backpressure: once the committed-but-undelivered backlog reaches either
-  // cap, pump() stops polling the feed — over a real socket the unread bytes
-  // then exert TCP backpressure on the walsender, the same mechanism as the
-  // reference's fixed-capacity message channel
-  // (`pq/replication/stream.go:93`). Without this, a producer sustainedly
-  // faster than the consumer grows driver memory without bound.
-  private val maxBufferedTxns =
-    math.max(1, options.getInt("maxBufferedTxns", 4096))
-  private val maxBufferedBytes =
-    math.max(1L, options.getLong("maxBufferedBytes", 256L << 20))
   private var bufferedBytes = 0L
 
   /** Test/metrics visibility into the committed backlog. */
@@ -255,6 +274,8 @@ class PgCdcMicroBatchStream(options: CaseInsensitiveStringMap)
     val m = new java.util.HashMap[String, String]()
     m.put("backlogTxns", buffer.size.toString)
     m.put("backlogBytes", bufferedBytes.toString)
+    m.put("queuedBytes", wal.queuedBytes.toString)
+    m.put("queuedFrames", wal.queuedFrames.toString)
     m.put("confirmedLsn", Lsn.format(wal.confirmedLsn))
     m.put("txnsDelivered", txnsDelivered.toString)
     m.put("openStreamedTxns", openStreamed.size.toString)
@@ -316,8 +337,7 @@ class PgCdcMicroBatchStream(options: CaseInsensitiveStringMap)
   private val maxBufferedStreamFrames =
     options.getInt("maxBufferedStreamFrames", 1 << 20)
   private var bufferedStreamFrames = 0L
-  private val maxBufferedPreparedBytes =
-    math.max(1L, options.getLong("maxBufferedPreparedBytes", 256L << 20))
+  private val maxBufferedPreparedBytes = positiveOption("maxBufferedPreparedBytes", 256L << 20)
 
   /** Remove a gid's parked section, releasing its byte/frame accounting.
     * Streamed sections keep their frames counted in `bufferedStreamFrames`

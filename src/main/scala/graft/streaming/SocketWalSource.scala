@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.io.EOFException
-import java.util.concurrent.ArrayBlockingQueue
 import graft.pgproto.{Lsn, PgConnection, PgWire, WalFrames}
 import graft.services.Replication
 
@@ -12,14 +11,21 @@ import graft.services.Replication
   * `pq/replication/replication.go:23-41`, `stream.go:93-148`), built on the
   * shared [[PgConnection]] wire layer.
   *
-  * Threading: one reader thread drains the socket into a BOUNDED queue
-  * (default 1024 payloads, the reference's channel capacity,
-  * `stream.go:93`); when the consumer stops polling the queue fills, the
-  * reader blocks, the kernel buffer fills, and the walsender sees TCP
-  * backpressure — the second half of the driver-side backlog cap. One
-  * writer lock serializes status updates (acks, keepalive replies) against
-  * the shared output stream — the reference's shared-socket mutex hazard
-  * (`stream.go:73-84`) solved by construction.
+  * Threading: one reader thread drains the socket into a queue bounded by
+  * BYTES ([[FrameQueue]], budget `maxQueuedBytes` — the stream passes its
+  * `maxBufferedBytes`), so the reader runs ahead of the consumer: while a
+  * micro-batch executes, the walsender's backlog keeps arriving, and the
+  * next trigger groups all of it instead of whatever fit in a fixed count
+  * of frames. The reference never needs this because it handles each
+  * message as it arrives (`stream.go:93`); a micro-batch consumer polls in
+  * bursts. When the queued bytes reach the budget the reader parks, the
+  * kernel buffer fills, and the walsender sees TCP backpressure — the
+  * second half of the driver-side backlog cap, so the driver holds at most
+  * `maxBufferedBytes` (plus one frame) queued here and `maxBufferedBytes`
+  * grouped in the stream. One writer lock serializes status updates
+  * (acks, keepalive replies) against the shared output stream — the
+  * reference's shared-socket mutex hazard (`stream.go:73-84`) solved by
+  * construction.
   *
   * `open(fromLsn)` (re)connects from scratch and starts replication at the
   * confirmed LSN; a dead connection reads as `healthy == false`, and the
@@ -36,7 +42,10 @@ final class SocketWalSource(
     publication: String,
     protoVersion: Int = 2,
     password: Option[String] = None,
-    queueCapacity: Int = 1024,
+    /** Reader hand-off budget: the reader parks once this many payload
+      * bytes are queued but not yet polled (see [[FrameQueue]]).
+      */
+    maxQueuedBytes: Long = 256L << 20,
     sslMode: String = "disable",
     sslRootCert: Option[String] = None,
     sslCert: Option[String] = None,
@@ -60,6 +69,8 @@ final class SocketWalSource(
       */
     readTimeoutMs: Int = 60000) extends WalSource {
 
+  require(maxQueuedBytes > 0, s"pgcdc: maxQueuedBytes must be positive, got $maxQueuedBytes")
+
   @volatile private var confirmed: Long = Lsn.Zero
   @volatile private var conn: PgConnection = null
   private val writeLock = new Object
@@ -68,7 +79,7 @@ final class SocketWalSource(
   // close()+open() (join timed out while it was parked in queue.put) can
   // only ever write to its own generation's dead queue, never feed a
   // pre-disconnect frame into the reopened session (round-4 advice).
-  @volatile private var queue = new ArrayBlockingQueue[Array[Byte]](queueCapacity)
+  @volatile private var queue = new FrameQueue(maxQueuedBytes)
   private val generation = new java.util.concurrent.atomic.AtomicLong(0L)
   @volatile private var streamEnded = false
   @volatile private var failure: Throwable = null
@@ -79,7 +90,7 @@ final class SocketWalSource(
   override def open(fromLsn: Long): Unit = {
     close()
     val gen = generation.incrementAndGet()
-    queue = new ArrayBlockingQueue[Array[Byte]](queueCapacity)
+    queue = new FrameQueue(maxQueuedBytes)
     streamEnded = false
     failure = null
     if (Lsn.compare(fromLsn, confirmed) > 0) confirmed = fromLsn
@@ -162,13 +173,14 @@ final class SocketWalSource(
   }
 
   /** Reader thread: CopyData payloads ('w'/'k' frames) into the bounded
-    * queue. `put` blocking on a full queue IS the backpressure mechanism.
+    * queue. `put` blocking on a queue at its byte budget IS the
+    * backpressure mechanism.
     * Everything it touches is generation-local (`myConn`/`myQueue`); shared
     * failure/streamEnded writes are dropped once a newer open() supersedes
     * this generation.
     */
   private def readLoop(gen: Long, myConn: PgConnection,
-      myQueue: ArrayBlockingQueue[Array[Byte]]): Unit = {
+      myQueue: FrameQueue): Unit = {
     def current: Boolean = generation.get() == gen
     def fail(t: Throwable): Unit = if (current) failure = t
     try {
@@ -210,6 +222,9 @@ final class SocketWalSource(
     Option(queue.poll())
   }
 
+  override def queuedBytes: Long = queue.bytes
+  override def queuedFrames: Int = queue.frames
+
   /** False once the connection died (EOF, error, or never opened) and the
     * queue has drained — the consumer's reconnect trigger. Queued frames
     * are still served first so nothing received is lost.
@@ -245,7 +260,7 @@ final class SocketWalSource(
       conn = null
     }
     if (reader != null) {
-      // A reader parked in queue.put() (full queue) is not unblocked by the
+      // A reader parked in queue.put() (budget reached) is not unblocked by the
       // socket close — interrupt it so it can't leak, or later push a stale
       // pre-disconnect frame into a reopened session's queue.
       reader.interrupt()
@@ -253,4 +268,36 @@ final class SocketWalSource(
       reader = null
     }
   }
+}
+
+/** The reader → consumer hand-off of [[SocketWalSource]]: a FIFO of
+  * payloads bounded by the bytes queued but not yet polled. `put` parks
+  * while the queued bytes are at or above `budget`, so the queue holds at
+  * most `budget` plus one frame, and a single frame larger than the budget
+  * is still admitted into an empty queue (it cannot deadlock). `poll`
+  * releases the frame's bytes and wakes a parked reader; an interrupt
+  * (`close()`) unparks it with `InterruptedException`.
+  */
+private[streaming] final class FrameQueue(budget: Long) {
+  private val q = new java.util.ArrayDeque[Array[Byte]]()
+  private var queued = 0L
+
+  def put(f: Array[Byte]): Unit = synchronized {
+    while (queued >= budget) wait()
+    q.addLast(f)
+    queued += f.length
+  }
+
+  def poll(): Array[Byte] = synchronized {
+    val f = q.pollFirst()
+    if (f != null) {
+      if (queued >= budget) notifyAll()
+      queued -= f.length
+    }
+    f
+  }
+
+  def isEmpty: Boolean = synchronized(q.isEmpty)
+  def bytes: Long = synchronized(queued)
+  def frames: Int = synchronized(q.size)
 }

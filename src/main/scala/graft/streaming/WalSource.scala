@@ -43,6 +43,13 @@ trait WalSource extends AutoCloseable {
     * File/in-memory feeds have no socket; they record or drop it.
     */
   def sendStatusUpdate(frame: Array[Byte]): Unit = ()
+
+  /** Payload bytes / frames received but not yet polled — how far a
+    * socket reader has run ahead of the consumer. Feeds that read on
+    * demand hold nothing.
+    */
+  def queuedBytes: Long = 0L
+  def queuedFrames: Int = 0
 }
 
 /** Replays a WalGen/WalFile frame file. Deterministic: re-opening from LSN L

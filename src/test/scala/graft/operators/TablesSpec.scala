@@ -53,4 +53,21 @@ class TablesSpec extends AnyFunSuite {
       col("id").as("event_id"), timestamp_micros(lit(Micros)).as("ts")))(m =>
       assert(m == Micros))
   }
+
+  test("fanOut rejects a malformed or non-positive targetPartitionBytes, naming the key") {
+    val key = Tables.TargetPartitionBytesKey
+    val prior = spark.conf.getOption(key)
+    val df = spark.range(1000).toDF("id")
+    try {
+      Seq("abc", "1.5", "", "0", "-4096").foreach { bad =>
+        spark.conf.set(key, bad)
+        val ex = intercept[IllegalArgumentException](Tables.fanWidth(df))
+        assert(ex.getMessage.contains(key) && ex.getMessage.contains(s"'$bad'"),
+          s"message must name the key and the value: ${ex.getMessage}")
+      }
+      spark.conf.set(key, "1")
+      assert(Tables.fanWidth(df) == spark.sparkContext.defaultParallelism,
+        "a 1-byte target widens to the session's parallelism")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -71,7 +71,12 @@ final class FakeWalsender(
       * ErrorResponse with that exact SQLSTATE — e.g. the 22023
       * invalidated-snapshot family. Checked before `sqlResults`.
       */
-    sqlErrors: String => Option[(String, String)] = _ => None) {
+    sqlErrors: String => Option[(String, String)] = _ => None,
+    /** When set, a replication stream enters CopyBoth but serves its first
+      * frame only once this latch opens — lets a spec open the feed, pin
+      * the client's state, then release the backlog.
+      */
+    streamGate: Option[java.util.concurrent.CountDownLatch] = None) {
 
   private val slotInUseLeft = new java.util.concurrent.atomic.AtomicInteger(slotInUseRejections)
 
@@ -100,6 +105,8 @@ final class FakeWalsender(
     * count that never drains (the serve thread stays parked on read).
     */
   val liveConnections = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Replication frames written to the socket so far, across streams. */
+  val framesServed = new java.util.concurrent.atomic.AtomicLong(0L)
 
   @volatile private var running = true
   private val acceptor = new Thread(() => acceptLoop(), "fake-walsender-accept")
@@ -249,6 +256,7 @@ final class FakeWalsender(
               val i = dropIdx.getAndIncrement()
               if (i < dropPlan.length) dropPlan(i) else -1
             }
+            streamGate.foreach(_.await())
             var sent = 0
             val it = ResumeFilter(frames.iterator, fromLsn)
             var cut = false
@@ -259,6 +267,7 @@ final class FakeWalsender(
               } else {
                 PgWire.writeMessage(out, PgWire.Tag.CopyData, it.next())
                 sent += 1
+                framesServed.incrementAndGet()
                 if (keepaliveEvery > 0 && sent % keepaliveEvery == 0)
                   PgWire.writeMessage(out, PgWire.Tag.CopyData,
                     graft.pgproto.MessageEncoder.keepalive(

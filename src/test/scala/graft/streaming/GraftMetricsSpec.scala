@@ -27,6 +27,8 @@ class GraftMetricsSpec extends AnyFunSuite {
     assert(before.get("backlogBytes").toLong > 0L)
     assert(before.get("txnsDelivered").toLong == 0L)
     assert(before.get("cdcLatencyMs") != null, "frame server time seen -> latency gauge present")
+    assert(before.get("queuedBytes") == "0" && before.get("queuedFrames") == "0",
+      "a file feed reads on demand: nothing queued ahead")
 
     s.planInputPartitions(o0, end)
     s.commit(end)
@@ -36,6 +38,42 @@ class GraftMetricsSpec extends AnyFunSuite {
     assert(after.get("txnsDelivered").toLong == 4L, "cumulative delivered counter advances")
     assert(graft.pgproto.Lsn.parse(after.get("confirmedLsn")) > 0L, "ack advanced the confirmed LSN")
     s.stop()
+  }
+
+  test("queuedBytes/queuedFrames show the socket reader's run-ahead and return to 0 after a drain") {
+    val frames = WalGen.frames(6, 2).toSeq
+    val server = new FakeWalsender(frames)
+    def awaitTrue(what: String)(cond: => Boolean): Unit = {
+      val deadline = System.currentTimeMillis + 10000
+      while (!cond && System.currentTimeMillis < deadline) Thread.sleep(10)
+      assert(cond, s"timed out waiting for $what")
+    }
+    try {
+      // One txn grouped per trigger: the rest waits in the reader's queue.
+      val s = new PgCdcMicroBatchStream(new CaseInsensitiveStringMap(java.util.Map.of(
+        "host", "127.0.0.1", "port", server.port.toString,
+        "slot", "s_gauges", "publication", "p1", "maxBufferedTxns", "1")))
+      def gauge(k: String): Long = s.metrics(java.util.Optional.empty()).get(k).toLong
+      var start = s.initialOffset().asInstanceOf[CdcOffset]
+      var end = start
+      awaitTrue("first txn grouped") {
+        end = s.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[CdcOffset]
+        end.seq == 1L
+      }
+      awaitTrue("the later txns' frames queue behind the backlog cap")(gauge("queuedFrames") > 0L)
+      assert(gauge("queuedBytes") > 0L)
+
+      awaitTrue("all 6 txns drained") {
+        s.commit(end)
+        start = end
+        end = s.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[CdcOffset]
+        end.seq == 6L
+      }
+      s.commit(end)
+      assert(gauge("queuedFrames") == 0L && gauge("queuedBytes") == 0L,
+        "a drained feed holds nothing queued")
+      s.stop()
+    } finally server.close()
   }
 
   test("listener observes progress and the pgcdc gauge map through a real query") {

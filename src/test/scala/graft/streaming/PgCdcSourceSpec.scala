@@ -436,4 +436,34 @@ class PgCdcSourceSpec extends AnyFunSuite {
     PgCdcRelations.clear("rel-registry")
     assert(PgCdcRelations.relations("rel-registry").isEmpty)
   }
+
+  private val sizeOptions = Seq("maxBufferedBytes", "maxBufferedTxns", "maxFramesPerPartition",
+    "maxTxnsPerTrigger", "spillThresholdEvents", "maxBufferedStreamEvents",
+    "maxBufferedPreparedBytes")
+  private val intOptions = Set("maxBufferedTxns", "maxFramesPerPartition",
+    "spillThresholdEvents", "maxBufferedStreamEvents")
+
+  private def constructWith(key: String, value: String): IllegalArgumentException = {
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", "/nonexistent.wal", key, value))
+    val ex = intercept[IllegalArgumentException](new PgCdcMicroBatchStream(opts))
+    assert(ex.getMessage.contains(s"'$key'") && ex.getMessage.contains(s"'$value'"),
+      s"the error must name the option and the value: ${ex.getMessage}")
+    ex
+  }
+
+  test("size/count options: zero or negative values fail stream construction, not clamped") {
+    for (key <- sizeOptions; bad <- Seq("0", "-1", "-9223372036854775808")) constructWith(key, bad)
+  }
+
+  test("size/count options: non-numeric values fail with the option named") {
+    for (key <- sizeOptions; bad <- Seq("abc", "1.5", "", "64MB")) constructWith(key, bad)
+  }
+
+  test("size/count options: int-valued options reject values past Int.MaxValue") {
+    for (key <- intOptions.toSeq) constructWith(key, "3000000000")
+    // long-valued options take them
+    new PgCdcMicroBatchStream(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", "/nonexistent.wal", "maxBufferedBytes", "3000000000"))).stop()
+  }
 }

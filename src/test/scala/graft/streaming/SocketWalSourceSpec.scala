@@ -326,6 +326,120 @@ class SocketWalSourceSpec extends AnyFunSuite {
     } finally server.close()
   }
 
+  private def readerThread(slot: String): Thread = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala
+      .find(t => t.getName == s"pgcdc-walsender-reader-$slot" && t.isAlive)
+      .getOrElse(fail(s"no live reader thread for slot $slot"))
+  }
+
+  test("reader queue budget: parks at budget + one frame, resumes after poll()") {
+    val frames = WalGen.frames(400, 3).toSeq // ~2 000 frames, ~110 KB
+    val budget = 4096L
+    val maxFrame = frames.map(_.length).max
+    val server = new FakeWalsender(frames)
+    try {
+      val src = new SocketWalSource("127.0.0.1", server.port, "u", "db",
+        "slot_budget", "pub1", maxQueuedBytes = budget)
+      src.open(0L)
+      awaitTrue("reader fills the queue to its budget")(src.queuedBytes >= budget)
+      awaitTrue("reader parks on the budget") {
+        readerThread("slot_budget").getState == Thread.State.WAITING
+      }
+      val parked = src.queuedBytes
+      assert(parked <= budget + maxFrame,
+        s"at most budget + one frame queued with nobody polling, got $parked")
+      Thread.sleep(100)
+      assert(src.queuedBytes == parked, "a parked reader queues nothing more")
+
+      val got = mutable.ArrayBuffer.empty[Array[Byte]]
+      while (src.queuedBytes >= budget) got += src.poll().get
+      awaitTrue("reader resumes once poll() releases bytes")(src.queuedBytes >= budget)
+      got ++= pollAll(src, frames.size - got.size)
+      assert(got.map(_.toSeq) == frames.map(_.toSeq), "every frame, in order, across the parks")
+      assert(src.queuedBytes == 0L && src.queuedFrames == 0)
+      src.close()
+    } finally server.close()
+  }
+
+  test("reader queue budget: a frame larger than the budget still flows") {
+    val frames = WalGen.frames(3, 2).toSeq
+    val budget = 16L
+    assert(frames.forall(_.length > budget))
+    val server = new FakeWalsender(frames)
+    try {
+      val src = new SocketWalSource("127.0.0.1", server.port, "u", "db",
+        "slot_big", "pub1", maxQueuedBytes = budget)
+      src.open(0L)
+      awaitTrue("an oversized frame is admitted into the empty queue")(src.queuedFrames == 1)
+      Thread.sleep(100)
+      assert(src.queuedFrames == 1, "and only one: the budget is already exceeded")
+      val got = pollAll(src, frames.size)
+      assert(got.map(_.toSeq) == frames.map(_.toSeq), "every oversized frame flows one at a time")
+      src.close()
+    } finally server.close()
+  }
+
+  test("close() unparks a reader blocked on the queue budget and its thread ends") {
+    val server = new FakeWalsender(WalGen.frames(200, 3).toSeq)
+    try {
+      val src = new SocketWalSource("127.0.0.1", server.port, "u", "db",
+        "slot_close", "pub1", maxQueuedBytes = 1024L)
+      src.open(0L)
+      awaitTrue("reader fills the queue to its budget")(src.queuedBytes >= 1024L)
+      val reader = readerThread("slot_close")
+      awaitTrue("reader parks on the budget")(reader.getState == Thread.State.WAITING)
+      src.close()
+      awaitTrue("the parked reader thread ends", 5000)(!reader.isAlive)
+    } finally server.close()
+  }
+
+  test("the reader runs ahead of an idle consumer: a backlog past 1 024 frames and the socket buffers arrives whole") {
+    // ~67 MB: 1 024 txns of 16 inserts carrying 4 KiB of text each — far
+    // more than 1 024 frames plus the loopback socket buffers (≤ 36 MB here
+    // with kernel autotuning). The consumer opens the feed once and then
+    // polls nothing while the walsender writes.
+    import graft.pgproto.{MessageEncoder, Messages}
+    val relOid = 16800L
+    val T0 = 1700000000000000L
+    val body = "x" * 4096
+    def x(lsn: Long, msg: Array[Byte]) = MessageEncoder.xlogData(lsn, lsn, T0, msg)
+    val nTxns = 1024
+    val rows = 16
+    val fs = mutable.ArrayBuffer(x(1, MessageEncoder.relation(relOid, "public", "big", Seq(
+      Messages.RelationColumn("id", 23L, -1, 1), Messages.RelationColumn("body", 25L, -1, 0)))))
+    var lsn = 100L
+    (0 until nTxns).foreach { t =>
+      val end = lsn + rows + 2
+      fs += x(lsn, MessageEncoder.begin(end, T0, 5000L + t))
+      (0 until rows).foreach(r =>
+        fs += x(lsn + 1 + r, MessageEncoder.insert(relOid, Seq(Some((t * rows + r).toString), Some(body)))))
+      fs += x(end - 1, MessageEncoder.commit(end - 1, end, T0))
+      lsn = end
+    }
+    val frames = fs.toSeq
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val server = new FakeWalsender(frames, streamGate = Some(gate))
+    try {
+      val s = new PgCdcMicroBatchStream(new CaseInsensitiveStringMap(java.util.Map.of(
+        "host", "127.0.0.1", "port", server.port.toString,
+        "slot", "s_ahead", "publication", "p1")))
+      val o0 = s.initialOffset().asInstanceOf[CdcOffset]
+      assert(s.latestOffset(o0, ReadLimit.allAvailable()).asInstanceOf[CdcOffset].seq == 0L,
+        "the feed is open; the backlog is held until the gate opens")
+      gate.countDown()
+      awaitTrue("the walsender wrote every frame to the idle consumer", 30000) {
+        server.framesServed.get == frames.size
+      }
+      def queued = s.metrics(java.util.Optional.empty()).get("queuedFrames").toInt
+      awaitTrue("every frame reached the reader's queue")(queued == frames.size)
+      val end = s.latestOffset(o0, ReadLimit.allAvailable()).asInstanceOf[CdcOffset]
+      assert(end.seq == nTxns.toLong, "one trigger sees the whole backlog")
+      assert(queued == 0)
+      s.stop()
+    } finally server.close()
+  }
+
   test("cleartext password auth: right password connects, wrong one fails loudly") {
     val server = new FakeWalsender(WalGen.frames(1, 1).toSeq, requirePassword = Some("sekret"))
     try {
