@@ -4,8 +4,37 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** [[StateLog]]'s churn-proportional sibling: marker-committed state
-  * versions whose rows are HASH-BUCKETED on a key, so committing a new
+/** The `[neg, pos]` interval-key protocol of maintained state versions:
+  * one spelling, one containment order, one replay-prev rule.
+  *
+  * Versions are keyed by the consumer's CURSOR INTERVAL after the span —
+  * the two-sided `[neg, pos]` batch-id range applied so far (epochs count
+  * up from 0, snapshot batches down from -1). Intervals only ever grow,
+  * so version order is containment order: the latest state is the maximal
+  * interval, and the replay-prev for a span is the maximal version
+  * contained in the pre-span cursor.
+  */
+private[sinks] object IntervalKeys {
+
+  def name(key: (Long, Long)): String = s"${key._1}_${key._2}"
+
+  def parse(name: String): Option[(Long, Long)] =
+    name.split("_") match {
+      case Array(a, b) => for (n <- a.toLongOption; p <- b.toLongOption) yield (n, p)
+      case _ => None
+    }
+
+  /** Intervals only grow, so containment order IS `(pos, -neg)`. */
+  def sorted(keys: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    keys.sortBy { case (n, p) => (p, -n) }
+
+  /** The maximal key contained in `from` — the replay-prev. */
+  def within(sortedKeys: Seq[(Long, Long)], from: (Long, Long)): Option[(Long, Long)] =
+    sortedKeys.filter { case (n, p) => n >= from._1 && p <= from._2 }.lastOption
+}
+
+/** Marker-committed maintained-operator state: versions whose rows are
+  * HASH-BUCKETED on a key, so committing a new
   * version rewrites only the buckets the refresh touched — untouched
   * buckets carry into the new version by manifest reference, their files
   * byte-identical. The same slice/manifest construction [[LakeSink]]'s
@@ -35,12 +64,12 @@ import org.apache.spark.sql.functions._
   * pruning) are unchanged — they read all of a bucket's sub-slices.
   * GEOMETRY IS FIXED for the life of a state dir, exactly like
   * [[buckets]] — fingerprinted maintainers encode it and refuse a
-  * mismatched open; `subs = 1` is byte-identical to the pre-sub layout
-  * and manifest encoding.
+  * mismatched open; `subs = 1` keeps the single-level slice layout and
+  * manifest encoding.
   *
-  * Versions are keyed by the consumer's cursor interval exactly like
-  * [[StateLog]] (containment order; replay-prev = maximal version inside
-  * the pre-span cursor). A replayed span whose manifest exists skips the
+  * Versions are keyed by [[IntervalKeys]] (containment order; replay-prev
+  * = maximal version inside the pre-span cursor). A replayed span whose
+  * manifest exists skips the
   * rewrite; a crash mid-write leaves an unreferenced `v.../` directory
   * that the next GC sweeps.
   */
@@ -132,7 +161,7 @@ private[sinks] final class BucketedStateLog(
     f.exists(new Path(commitsDir, ManifestPrefix + nameOf(key)))
 
   /** (bucket, sub) → slice path relative to `dir` for one committed
-    * version. The legacy single-level encoding (`b \t rel`, written at
+    * version. The single-level encoding (`b \t rel`, written at
     * `subs = 1`) parses as sub 0.
     */
   def entries(f: FileSystem, key: (Long, Long)): Map[(Int, Int), String] = {
@@ -279,41 +308,13 @@ private[sinks] final class BucketedStateLog(
     writeManifest(f, key, carried ++ written)
   }
 
-  /** One-time in-place upgrade of a pre-bucketing state directory: lift
-    * EVERY committed legacy whole-state version into this log as a full
-    * rewrite under its own interval key, then retire the legacy files.
-    * Lifting only the newest would destroy the replay-prev the legacy
-    * crash protocol depends on — old code could commit state for a span
-    * and crash before the cursor advanced, and the replayed span's
-    * splice finds its prev via [[latestWithin]] over the PRE-span
-    * cursor; with the prev gone, the spliced commit would carry nothing
-    * forward and silently drop every untouched key. Legacy gc kept at
-    * most the replay horizon, so this is a bounded number of versions,
-    * each garbage-collected by [[gcWithin]] as the horizon passes.
-    */
-  def migrateFrom(spark: SparkSession, f: FileSystem, legacy: StateLog): Unit = {
-    val keys = legacy.committed(f)
-    // CRASH-RESUMABLE: skip per-version, never wholesale — a crash
-    // mid-migration must not leave later legacy versions unlifted behind
-    // an "anything committed" guard (the next refresh would splice from
-    // a stale prev). Legacy files retire only after every lift landed;
-    // normal post-migration refreshes see no legacy versions and return.
-    keys.foreach { k =>
-      if (!isCommitted(f, k))
-        commit(f, legacy.read(spark, k), (0 until buckets).toSet, None, k)
-    }
-    keys.foreach(legacy.retire(f, _))
-  }
-
-  /** `buckets:subs` marker — the dir's committed layout. Geometry is
-    * fixed for the life of a state dir: pre-marker dirs (all written
-    * before sub-slicing existed, hence subs = 1) adopt on the next
-    * commit only when this writer's subs is 1; anything else refuses
-    * and names the migration. The marker is replaced by full rewrites
-    * (they re-slice everything) and merely validated by incremental
-    * commits. A crash in the marker replace leaves it absent next to
-    * committed versions — the next incremental commit under subs > 1
-    * refuses until the full rewrite is re-run, loud not silent.
+  /** `buckets:subs` marker — the dir's committed layout, stamped by the
+    * first (full-rewrite) commit before any manifest exists. Geometry is
+    * fixed for the life of a state dir: the marker is replaced by full
+    * rewrites (they re-slice everything) and merely validated by
+    * incremental commits. A crash in the marker replace leaves it absent
+    * next to committed versions — every incremental commit then refuses
+    * until the full rewrite is re-run, loud not silent.
     */
   private def geometryPath = new Path(dir, "_geometry")
 
@@ -345,8 +346,9 @@ private[sinks] final class BucketedStateLog(
     * buckets/subs prunes point reads to the WRONG slices — silently
     * incomplete results, the same corruption class the write-side check
     * refuses. Readers never write the marker (a read must not mutate
-    * the state dir); a marker-less dir is tolerated — pre-marker
-    * layouts stay readable, and the next commit stamps it.
+    * the state dir). A marker-less dir (empty, or a crashed marker
+    * replace) stays unmemoized, so a reader opened before the first seed
+    * validates against the marker that seed stamps.
     */
   @volatile private var geomReadChecked = false
   private def checkGeometryRead(f: FileSystem): Unit = {
@@ -364,77 +366,50 @@ private[sinks] final class BucketedStateLog(
         // geometry
         geomReadChecked = true
       case None =>
-        // marker-less dir: tolerate pre-marker layouts (stamped by the
-        // next commit) — but refuse the PROVABLE mismatch a lost marker
-        // can't hide: 'b:s'-encoded manifests are written only by
-        // sub-sliced geometries, so a subs=1 instance over them is
-        // misconfigured whatever the marker's fate was
-        latest(f) match {
-          case Some(latestKey) =>
-            if (subs == 1 && manifestHasSubEncoding(f, latestKey))
-              throw new IllegalStateException(
-                s"state dir $dir holds sub-sliced manifests but this " +
-                  "reader is configured subs=1 (its _geometry marker is " +
-                  "missing — a crashed marker replace) — open it with " +
-                  "the sub-sliced geometry, or re-run the full rewrite " +
-                  "that was migrating it")
-            // a real pre-marker history passed the provable check —
-            // memoize (geometry is fixed for life; a migration stamps
-            // the marker under the quiesce contract reads already have)
-            geomReadChecked = true
-          case None =>
-            // EMPTY dir: nothing proven — stay unmemoized so a reader
-            // instantiated before the first seed validates against the
-            // marker that seed stamps
-            ()
+        // lost marker: refuse the PROVABLE mismatch — 'b:s'-encoded
+        // manifests are written only by sub-sliced geometries, so a
+        // subs=1 instance over them is misconfigured whatever the
+        // marker's fate was
+        latest(f).foreach { latestKey =>
+          if (subs == 1 && manifestHasSubEncoding(f, latestKey))
+            throw new IllegalStateException(
+              s"state dir $dir holds sub-sliced manifests but this " +
+                "reader is configured subs=1 (its _geometry marker is " +
+                "missing — a crashed marker replace) — open it with " +
+                "the sub-sliced geometry, or re-run the full rewrite " +
+                "that was migrating it")
         }
     }
   }
 
   private def checkGeometry(f: FileSystem): Unit = {
     val want = s"$buckets:$subs"
-    if (f.exists(geometryPath)) {
-      val in = f.open(geometryPath)
-      val got =
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        finally in.close()
-      if (got != want) throw new IllegalStateException(
+    readGeometry(f) match {
+      case Some(got) => if (got != want) throw new IllegalStateException(
         s"state dir $dir holds versions committed under geometry $got " +
           s"(buckets:subs) but this writer is configured $want — geometry " +
           "is fixed for the life of a state dir; migrate by full rewrite: " +
           "a fingerprinted maintainer's rebuild(), or for parameterless " +
           "ones delete the state dir (keep the lake cursor) so the next " +
           "refresh re-seeds through BASE under the new geometry")
-    } else latest(f) match {
-      case Some(latestKey) =>
-        // marker-less dir with committed versions: EITHER pre-marker
-        // (written before sub-slicing existed — necessarily subs=1 and
-        // legacy-encoded) OR a sub-sliced dir whose marker replace
-        // crashed in the delete+rename window. The manifest's RAW line
-        // encoding distinguishes them ('b:s' is written only by subs>1
-        // geometries, including s=0), so a lost marker never lets a
-        // subs=1 writer re-encode carried (b,s) refs into colliding
-        // legacy keys and silently drop slices.
-        if (manifestHasSubEncoding(f, latestKey)) throw new IllegalStateException(
-          s"state dir $dir holds sub-sliced manifests but its _geometry " +
-            "marker is missing (a crashed marker replace) — re-run the " +
-            "full rewrite (rebuild) that was migrating it, under the " +
-            "sub-sliced geometry")
-        else if (subs != 1) throw new IllegalStateException(
-          s"state dir $dir holds pre-sub-slicing versions (subs=1) but " +
-            s"this writer is configured subs=$subs — migrate by full " +
-            "rewrite: a fingerprinted maintainer's rebuild(), or for " +
-            "parameterless ones delete the state dir (keep the lake " +
-            "cursor) so the next refresh re-seeds through BASE")
-        else writeGeometry(f)
+      case None if latest(f).nonEmpty =>
+        // the first commit stamps the marker before any manifest exists,
+        // so committed versions without it mean a crashed marker replace:
+        // the carried refs' geometry is unknown — re-encoding them under
+        // this writer's could collide (b,s) keys and silently drop slices
+        throw new IllegalStateException(
+          s"state dir $dir has committed versions but its _geometry marker " +
+            "is missing (a crashed marker replace) — re-run the full " +
+            "rewrite (rebuild) that was migrating it, or for parameterless " +
+            "maintainers delete the state dir (keep the lake cursor) so the " +
+            "next refresh re-seeds through BASE")
       case None => writeGeometry(f)
     }
   }
 
   /** True when a committed manifest uses the `b:s` sub-sliced key
     * encoding — raw-line detection, deliberately NOT via [[entries]]
-    * (parsing normalizes `b:0` and legacy `b` to the same key, which is
+    * (parsing normalizes `b:0` and single-level `b` to the same key, which is
     * exactly the distinction a lost-marker check needs).
     */
   private def manifestHasSubEncoding(f: FileSystem, key: (Long, Long)): Boolean = {
@@ -452,7 +427,7 @@ private[sinks] final class BucketedStateLog(
     val tmp = new Path(commitsDir, ManifestPrefix + nameOf(key) + ".tmp")
     val sb = new StringBuilder
     m.toSeq.sortBy(_._1).foreach { case ((b, s), rel) =>
-      // subs == 1 keeps the legacy single-level encoding byte-identical
+      // subs == 1 writes the single-level encoding
       sb.append(if (subs == 1) s"$b" else s"$b:$s")
         .append('\t').append(rel).append('\n')
     }

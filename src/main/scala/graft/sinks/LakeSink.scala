@@ -73,8 +73,44 @@ final class LakeSink(
     s"retainManifests must be >= 2 (current + in-flight readers' previous), " +
       s"got $retainManifests")
 
-  private def fs(spark: SparkSession): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The root's filesystem, behind the FORMAT CHECK every lake operation
+    * (and every maintainer, through [[poll]]/[[cursorInterval]]) passes:
+    * `_graft_format` must read [[FormatVersion]], or be absent from a root
+    * holding no lake entries yet (fresh — the first write stamps it; reads
+    * never write). Any other root was written in another on-disk format
+    * and refuses, naming the root. Memoized only after a match — one
+    * marker read per instance, never one per batch — so a reader opened
+    * before the first write validates the marker that write stamps.
+    */
+  private def fs(spark: SparkSession): FileSystem = {
+    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!formatChecked) readSmallFile(f, new Path(root, FormatFile)) match {
+      case Some(FormatVersion) => formatChecked = true
+      case found =>
+        if (found.nonEmpty || (f.exists(new Path(root)) &&
+            f.listStatus(new Path(root)).exists(st => LakeEntries(st.getPath.getName))))
+          throw new IllegalStateException(
+            s"lake root $root " + found.fold(s"holds lake data but no $FormatFile marker")(
+              v => s"is marked '$v'") + s" — it was written in another on-disk " +
+              s"format than '$FormatVersion'; rebuild the lake under a fresh root")
+    }
+    f
+  }
+
+  @volatile private var formatChecked = false
+
+  /** Stamp the format marker before the first write to a fresh root
+    * (writer-unique temp file, fresh publish and read-back — two first
+    * writers racing cannot delete each other's marker).
+    */
+  private def stampFormat(f: FileSystem): Unit =
+    if (!formatChecked) {
+      val got = BucketedStateLog.stampMarker(f, new Path(root), FormatFile,
+        FormatVersion, fresh = true)
+      if (got != FormatVersion) throw new IllegalStateException(
+        s"lake root $root is marked '$got', not '$FormatVersion'")
+      formatChecked = true
+    }
 
   private def commitDir = new Path(root, "_graft_commits")
   private def changelogDir = new Path(root, "changelog")
@@ -108,8 +144,9 @@ final class LakeSink(
     // truncate events (table-level DDL — rare, one row per table per
     // txn). Crash semantics are unchanged: the marker's EXISTENCE is the
     // commit, its content is best-effort metadata — a reader that cannot
-    // parse it (pre-metadata empty marker, torn write) falls back to the
-    // scan ([[markerTruncates]] returns None).
+    // parse it (the empty marker of an unframable table name, below)
+    // falls back to the scan ([[markerTruncates]] returns None).
+    stampFormat(f)
     val obs = org.apache.spark.sql.Observation()
     batch.observe(obs, collect_set(when(col("op") === "truncate",
         struct(col("schema"), col("table"), col("commit_lsn"), col("lsn"))))
@@ -136,7 +173,7 @@ final class LakeSink(
     // existence semantics (the commit signal) are unchanged, and the
     // ".tmp" sibling never parses as a batch id. Names containing the
     // TAB/NEWLINE delimiters cannot be framed unambiguously — such a
-    // batch writes a legacy (empty) marker so every reader takes the
+    // batch writes an empty marker so every reader takes the
     // maxTruncate scan fallback instead of attributing a phantom
     // position to the wrong table.
     val framable =
@@ -164,8 +201,9 @@ final class LakeSink(
 
   /** Max truncate position for one table across committed batches `ids`,
     * from the batch markers' metadata. `None` = at least one marker lacks
-    * parseable metadata (pre-metadata lake, torn write) — the caller must
-    * fall back to the [[maxTruncate]] scan. `Some(opt)` = authoritative.
+    * parseable metadata (the empty marker of an unframable table name) —
+    * the caller must fall back to the [[maxTruncate]] scan. `Some(opt)` =
+    * authoritative.
     */
   private def markerTruncates(f: FileSystem, ids: Seq[Long],
       schemaName: String, table: String): Option[Option[(Long, Long)]] = {
@@ -378,7 +416,7 @@ final class LakeSink(
       .drop("schema", "table")
     // BASE holds no truncate rows (they fold away), so the tail alone
     // determines the supersession point — read from the batch markers'
-    // metadata (no Spark job); pre-metadata markers fall back to the scan.
+    // metadata (no Spark job); empty markers fall back to the scan.
     val truncAt = markerTruncates(f, tailIds, schemaName, table)
       .getOrElse(maxTruncate(tail))
     val all = baseFor(spark, m, schemaName, table)
@@ -436,39 +474,61 @@ final class LakeSink(
     // same span — the five-maintainer group folds the SAME interval five
     // times otherwise (r21 verdict #5... the group-refresh ask) — share
     // one shuffle instead of five. Restricted folds stay uncached (their
-    // key frames differ per caller).
+    // key frames differ per caller). The fold runs in the holder's lazy
+    // val, never inside the map's bin lock: a second seeder of the same
+    // interval waits on that holder alone, and other keys proceed.
     if (foldScopeDepth.get > 0 && restrictToKeys.isEmpty &&
-        restrictToImmutable.isEmpty)
-      foldCache.computeIfAbsent((schemaName, table, asOf, floor), _ => {
-        val df = stateAsOfUncached(spark, schemaName, table, asOf, floor,
-          None, None).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count() // materialize once; concurrent seeders then read blocks
-        df
-      })
-    else stateAsOfUncached(spark, schemaName, table, asOf, floor,
+        restrictToImmutable.isEmpty) {
+      val fresh = new SharedFold(stateAsOfUncached(spark, schemaName, table,
+        asOf, floor, None, None))
+      val held = foldCache.putIfAbsent((spark, schemaName, table, asOf, floor), fresh)
+      (if (held == null) fresh else held).df
+    } else stateAsOfUncached(spark, schemaName, table, asOf, floor,
       restrictToKeys, restrictToImmutable)
   }
 
+  /** One memoized fold: built, persisted and materialized by the first
+    * reader of `df` (a failed build leaves it unbuilt for the next reader).
+    */
+  private final class SharedFold(build: => DataFrame) {
+    lazy val df: DataFrame = {
+      val d = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      d.count() // materialize once; concurrent seeders then read blocks
+      built = true
+      d
+    }
+    @volatile var built = false
+  }
+
   /** Scoped memo for [[sharedFolds]] — unrestricted pinned-interval folds
-    * only; cleared (and unpersisted) when the outermost scope exits.
+    * only, keyed by session too (a frame never crosses sessions); cleared
+    * (and unpersisted) when the outermost scope exits.
     */
   private val foldCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Long, Long), DataFrame]()
+    (SparkSession, String, String, Long, Long), SharedFold]()
   private val foldScopeDepth = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Run `body` with unrestricted [[stateAsOf]] folds memoized per pinned
     * interval — the GROUP-REFRESH seam: several maintainers seeding over
     * one lake span (each folds the same `[floor, asOf]`) share one
     * materialized fold instead of shuffling the table once per consumer.
-    * Sound because a pinned interval's fold is content-deterministic;
-    * bounded because the scope releases every cached fold on exit (persist
-    * keeps lineage, so a block lost mid-scope recomputes). Reentrant.
+    * Bounded because the scope releases every cached fold on exit (persist
+    * keeps lineage, so a block lost mid-scope recomputes). Reentrant, and
+    * shared by every thread using this instance while any scope is open.
+    *
+    * QUIESCENCE CONTRACT: a pinned interval's fold is content-deterministic
+    * only while no batch lands INSIDE it, so for the life of the scope the
+    * writer must not commit an id within any pinned `[floor, asOf]` (pin
+    * from [[committedHull]], whose ids are all committed already — new
+    * epochs land above it, late snapshots below it), and [[clearSnapshot]]
+    * must not run. Compaction and vacuum are fine: they never change what
+    * a retained interval folds to.
     */
   def sharedFolds[T](body: => T): T = {
     foldScopeDepth.incrementAndGet()
     try body
     finally if (foldScopeDepth.decrementAndGet() == 0) {
-      foldCache.values.forEach(_.unpersist(false))
+      foldCache.values.forEach(h => if (h.built) h.df.unpersist(false))
       foldCache.clear()
     }
   }
@@ -505,24 +565,14 @@ final class LakeSink(
     def deletedWithin(from: Long, to: Long): Boolean = {
       val f2 = math.max(from, vl)
       val t2 = math.min(to, vh)
-      // f2 == MinValue only when the required range AND the vacuum extent
-      // are both unbounded below (legacy single-mark vacuum): presence
-      // cannot be verified by counting an infinite range — refuse.
-      f2 <= t2 && (f2 == Long.MinValue ||
-        committed.count(id => id >= f2 && id <= t2) < t2 - f2 + 1)
+      f2 <= t2 && committed.count(id => id >= f2 && id <= t2) < t2 - f2 + 1
     }
     val posMissing = deletedWithin(math.max(wm + 1, 0L), asOf)
-    // Below-base requirement: the ids in [floor, min(-1, asOf, lo-1)].
-    // A LEGACY one-sided manifest (minFolded = MinValue) folded EVERYTHING
-    // at-or-below its watermark — its below-base required range is EMPTY,
-    // distinct from "no manifest chosen" (m.isEmpty, raw-changelog
-    // rebuild), which needs every negative id at-or-below asOf.
-    val negHi = m match {
-      case Some(mm) if mm.minFolded == Long.MinValue => Long.MinValue // empty
-      case Some(mm) => Seq(-1L, asOf, mm.minFolded - 1).min
-      case None => math.min(-1L, asOf)
-    }
-    val negMissing = negHi != Long.MinValue && deletedWithin(floor, negHi)
+    // Below-base requirement: the ids in [floor, min(-1, asOf, lo-1)]
+    // ("no manifest chosen" rebuilds from the raw changelog, so it needs
+    // every negative id at-or-below asOf).
+    val negMissing = deletedWithin(floor,
+      m.fold(math.min(-1L, asOf))(mm => Seq(-1L, asOf, mm.minFolded - 1).min))
     if (posMissing || negMissing)
       throw new IllegalStateException(
         s"state as of batch $asOf needs changelog batches outside the " +
@@ -543,7 +593,7 @@ final class LakeSink(
     // no key, and must supersede restricted rows too (restricted frames
     // may drop truncate rows freely — foldImages only reads them through
     // the `truncAt` position computed here). Marker metadata first (no
-    // Spark job), scan fallback for pre-metadata markers.
+    // Spark job), scan fallback for empty markers.
     val truncAt = markerTruncates(f, tailIds, schemaName, table)
       .getOrElse(maxTruncate(tail0))
     // `restrictToKeys` (a single-column `k` frame spelled like the fold
@@ -674,14 +724,13 @@ final class LakeSink(
     // Ids continue BELOW everything the lake has ever seen (committed,
     // already folded, or already VACUUMED — a vacuumed snapshot id has no
     // marker left, but reusing it would sit inside consumers' delivered
-    // intervals and be silently absorbed) — a later connector run
-    // delivering a mid-stream table addition must not reuse an id
-    // appendBatch would silently drop as a replay of the first export.
+    // intervals and be silently absorbed; vacuum only drops folded ids,
+    // so the fold floor covers them) — a later connector run delivering a
+    // mid-stream table addition must not reuse an id appendBatch would
+    // silently drop as a replay of the first export.
     def floor(): Long = {
       val folded = Some(foldedLow(spark)).filter(_ != Long.MinValue)
-      val vacuumed = Some(vacuumLowWater(spark))
-        .filter(v => v != Long.MaxValue && v != Long.MinValue)
-      (committedBatchIds(spark).filter(_ < 0) ++ folded ++ vacuumed)
+      (committedBatchIds(spark).filter(_ < 0) ++ folded)
         .minOption.getOrElse(0L).min(0L)
     }
     var snapId = floor()
@@ -702,13 +751,12 @@ final class LakeSink(
     * new shape.
     *
     * Layout: `_graft_schema/era=<validFromBatch>/` per boundary
-    * (replaying the same boundary overwrites idempotently); a
-    * pre-versioning root written by the old latest-wins code reads as the
-    * era at the bottom of the id space.
+    * (replaying the same boundary overwrites idempotently).
     */
   def writeRelations(spark: SparkSession, rels: Seq[graft.pgproto.Messages.Relation],
       validFromBatch: Long = Long.MinValue): Unit = {
     import spark.implicits._
+    stampFormat(fs(spark))
     rels.flatMap { r =>
       r.columns.toSeq.zipWithIndex.map { case (c, i) =>
         (r.namespace, r.name, r.oid, r.replicaIdentity.toInt,
@@ -733,25 +781,12 @@ final class LakeSink(
     val f = fs(spark)
     val p = new Path(root, "_graft_schema")
     if (!f.exists(p)) return None
-    val entries = f.listStatus(p).toSeq
-    val eraDirs = entries
+    val eras: Seq[(Long, String)] = f.listStatus(p).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("era="))
       .flatMap(st => st.getPath.getName.stripPrefix("era=").toLongOption
         .map(_ -> st.getPath.toString))
-    // legacy latest-wins root files (pre-versioning) = the bottom era
-    val legacyFiles = entries
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString)
-    // LEGACY latest-wins root files sort FIRST at the bottom-era key, so
-    // a freshly written `era=Long.MinValue` directory (the default
-    // validFromBatch) supersedes stale pre-versioning files instead of
-    // being shadowed by them (the sort below is stable).
-    val eras: Seq[(Long, () => DataFrame)] =
-      ((if (legacyFiles.isEmpty) Seq.empty
-        else Seq(Long.MinValue -> (() => spark.read.parquet(legacyFiles: _*)))) ++
-        eraDirs.map { case (e, d) => e -> (() => spark.read.parquet(d)) })
-        .sortBy(_._1)
-    def rowsOf(mk: () => DataFrame) = mk()
+      .sortBy(_._1)
+    def rowsOf(dir: String) = spark.read.parquet(dir)
       .filter(col("namespace") === namespace && col("name") === name)
       .orderBy("col_idx").collect()
     // Resolve LAZILY, newest-first at-or-below asOf, stopping at the
@@ -829,22 +864,7 @@ final class LakeSink(
     // watermark, or a late snapshot batch below the fold floor
     if (ids.max <= wm && ids.min >= mf) return
     val hi = math.max(ids.max, wm)
-    // A LEGACY one-sided manifest reads minFolded = MinValue; propagating
-    // it would keep the manifest legacy forever (and stateAsOf's
-    // below-base range check permanently unbounded). Upgrade to the REAL
-    // folded minimum: the lowest id the legacy base can cover — the
-    // lowest surviving committed id, or the vacuum low mark if a vacuum
-    // already dropped lower folded ids. Only a legacy-unknown vacuum
-    // extent (vl = MinValue) keeps the manifest legacy.
-    val mfReal =
-      if (mf != Long.MinValue) mf
-      else {
-        val vl = vacuumLowWater(spark)
-        if (vl == Long.MinValue) Long.MinValue
-        else if (vl == Long.MaxValue) ids.min
-        else math.min(ids.min, vl)
-      }
-    val newLow = math.min(ids.min, mfReal)
+    val newLow = math.min(ids.min, mf)
     val n = m.map(_.buckets).getOrElse(baseBuckets)
     val newV = m.map(_.version + 1).getOrElse(1L)
     val oldEntries = m.map(_.entries).getOrElse(Map.empty[(String, String, Int), String])
@@ -963,34 +983,20 @@ final class LakeSink(
   def cursorAckedVacuumLow(spark: SparkSession, name: String): Long =
     readCursor(spark, name)._2
 
-  /** Cursor interval, the ACKNOWLEDGED vacuum low mark (see below), and
-    * whether the file was a LEGACY single-ended one. The old poll
-    * delivered everything at or below its cursor, so every id that
-    * existed then — snapshot batches included — was delivered: the
-    * faithful floor is the lowest id the lake has ever seen
-    * (re-delivering an already-applied snapshot would double-apply it in
-    * a maintained view). [[poll]] PINS the migrated interval on first
-    * contact, so ids landing later are not silently absorbed into
-    * "already delivered" by this lazy computation.
-    *
-    * The acknowledged mark is the same construction the streaming
+  /** Cursor interval and the ACKNOWLEDGED vacuum low mark. The
+    * acknowledged mark is the same construction the streaming
     * source's `LakeOffset.vl` carries: the vacuum low extent this
     * consumer has accepted as innocent (delivered-or-seeded history).
     * Long.MaxValue = nothing acknowledged — poll then refuses ANY vacuum
-    * below the floor, the pre-acknowledgment behavior.
+    * below the floor.
     */
-  private def readCursor(spark: SparkSession, name: String): ((Long, Long), Long, Boolean) = {
+  private def readCursor(spark: SparkSession, name: String): ((Long, Long), Long) = {
     val p = new Path(new Path(root, "_graft_cursors"), name)
     readSmallFile(fs(spark), p) match {
-      case None => ((0L, Long.MinValue), Long.MaxValue, false)
+      case None => ((0L, Long.MinValue), Long.MaxValue)
       case Some(s) => s.split(":") match {
-        case Array(a, b) => ((a.toLong, b.toLong), Long.MaxValue, false)
-        case Array(a, b, v) => ((a.toLong, b.toLong), v.toLong, false)
-        case Array(a) =>
-          val folded = Some(foldedLow(spark)).filter(_ != Long.MinValue)
-          val low = (committedBatchIds(spark).filter(_ < 0) ++ folded)
-            .minOption.getOrElse(0L).min(0L)
-          ((low, a.toLong), Long.MaxValue, true)
+        case Array(a, b) => ((a.toLong, b.toLong), Long.MaxValue)
+        case Array(a, b, v) => ((a.toLong, b.toLong), v.toLong)
         case _ => throw new IllegalStateException(s"unreadable cursor $p: '$s'")
       }
     }
@@ -1000,6 +1006,7 @@ final class LakeSink(
       spark: SparkSession, name: String, neg: Long, pos: Long,
       ackedVl: Long = Long.MaxValue): Unit = {
     val f = fs(spark)
+    stampFormat(f)
     f.mkdirs(new Path(root, "_graft_cursors"))
     writeStringAtomic(f, new Path(new Path(root, "_graft_cursors"), name),
       if (ackedVl == Long.MaxValue) s"$neg:$pos" else s"$neg:$pos:$ackedVl")
@@ -1019,25 +1026,14 @@ final class LakeSink(
   def seedCursor(spark: SparkSession, name: String): (Long, Long) = {
     val ids = committedBatchIds(spark)
     val m = readManifest(fs(spark)) // one read serves both bounds
-    val lo = m.map(_.minFolded).getOrElse(Long.MinValue)
-    // clamp to the vacuum low mark too: on a legacy-manifest lake the fold
-    // floor reads MinValue, and a seed floor ABOVE already-vacuumed
-    // snapshot ids would make the very next poll refuse the gap the seed
-    // exists to escape. The MinValue sentinel (legacy single-mark vacuum,
-    // unknown extent) must NOT become the floor — a floor of MinValue
-    // would absorb every FUTURE late snapshot batch into "already
-    // delivered" and silently drop it; the unknown extent is instead
-    // ACKNOWLEDGED below, which is what poll's refusal checks against.
-    val vl = vacuumLowWater(spark)
-    val neg = Seq(
-      ids.minOption.getOrElse(0L), 0L,
-      if (lo == Long.MinValue) 0L else lo,
-      if (vl == Long.MaxValue || vl == Long.MinValue) 0L else vl).min
+    // the floor covers every surviving and every folded id (vacuum only
+    // ever drops folded ids, so the fold floor also covers its extent)
+    val neg = (ids ++ m.map(_.minFolded)).minOption.getOrElse(0L).min(0L)
     val pos = math.max(ids.maxOption.getOrElse(Long.MinValue),
       m.map(_.watermark).getOrElse(Long.MinValue))
     // acknowledge the CURRENT vacuum extent as innocent: the seed read
     // (stateAsOf/latestState through BASE) covers everything it deleted
-    writeCursor(spark, name, neg, pos, ackedVl = vl)
+    writeCursor(spark, name, neg, pos, ackedVl = vacuumLowWater(spark))
     (neg, pos)
   }
 
@@ -1060,7 +1056,7 @@ final class LakeSink(
       within: Option[(Long, Long)] = None)(fn: DataFrame => Unit): Int = {
     // an inverted bound (committedHull of an empty lake: (0, MinValue))
     // is legitimately empty — it delivers nothing rather than refusing
-    val ((neg, pos), acked, legacy) = readCursor(spark, name)
+    val ((neg, pos), acked) = readCursor(spark, name)
     val vh = vacuumHighWater(spark)
     if (pos < vh)
       throw new IllegalStateException(
@@ -1071,7 +1067,7 @@ final class LakeSink(
     // consumer has not acknowledged — [[seedCursor]] acknowledges the
     // extent its seed read covered, the same contract as the streaming
     // source's checkpointed `vl` (an unacknowledged extent always
-    // refuses, including the legacy-unknown MinValue sentinel).
+    // refuses).
     val vl = vacuumLowWater(spark)
     if (vl < neg && vl < acked)
       throw new IllegalStateException(
@@ -1085,11 +1081,7 @@ final class LakeSink(
     val ids = within.fold(outside)(b =>
       outside.filter(id => id >= b._1 && id <= b._2))
     if (ids.isEmpty) {
-      // pin a legacy cursor's migrated floor NOW — left lazy, a snapshot
-      // batch landing before the next poll would be absorbed into
-      // "already delivered" by the floor recomputation
-      if (legacy || newAcked != acked)
-        writeCursor(spark, name, neg, pos, newAcked)
+      if (newAcked != acked) writeCursor(spark, name, neg, pos, newAcked)
       return 0
     }
     val (nneg, npos) = (math.min(neg, ids.min), math.max(pos, ids.max))
@@ -1145,19 +1137,21 @@ final class LakeSink(
     * whose delivered floor lies ABOVE it may have missed a vacuumed
     * snapshot batch.
     *
-    * LEGACY repair: a lake vacuumed by the single-mark code has
-    * `_vacuumed` but no `_vacuumed_low`, and that vacuum dropped folded
-    * ids on BOTH sides of zero — the low extent is unknown. Reading it as
-    * "nothing dropped low" (MaxValue) would make [[stateAsOf]]'s
-    * retention intersection empty and silently fold state with holes, so
-    * an absent low mark next to a present high mark reads as
-    * Long.MinValue: everything below the high mark is POTENTIALLY gone,
-    * and readers refuse (conservative) instead of skipping.
+    * A high mark without a low one is CORRUPT, not "nothing dropped low":
+    * [[vacuum]] writes the low mark first, so the low extent of what was
+    * deleted is unknown, and reading it as MaxValue would let
+    * [[stateAsOf]] fold state with holes — refuse instead.
     */
   def vacuumLowWater(spark: SparkSession): Long = {
     val f = fs(spark)
     val low = readLongFile(f, vacuumedLowFile, Long.MaxValue)
-    if (low == Long.MaxValue && f.exists(vacuumedFile)) Long.MinValue else low
+    if (low == Long.MaxValue && f.exists(vacuumedFile))
+      throw new IllegalStateException(
+        s"lake root $root is corrupt: $vacuumedFile exists without " +
+          s"$vacuumedLowFile, so the extent of vacuumed history is unknown " +
+          s"— if $vacuumedLowFile.tmp exists, a vacuum crashed while " +
+          "replacing the mark (rename it into place); otherwise rebuild the lake")
+    low
   }
 
   /** Scrapeable gauges for [[graft.streaming.GraftMetricsServer]]'s
@@ -1177,18 +1171,12 @@ final class LakeSink(
     // at risk iff one of those ids lies OUTSIDE its cursor (undelivered),
     // which would strand it (poll throws its re-bootstrap error).
     // Deliberately models keepLast = 0 (the worst case): a retention
-    // vacuum strands fewer, so the gauge errs toward alerting. Computed
-    // from the id list directly, so a legacy manifest's Long.MinValue
-    // fold floor cannot flag caught-up consumers forever. Per scrape this
-    // costs the commit-log listing plus one cursor-dir listing and one
-    // small read per consumer (legacy cursors parsed against the already
-    // listed ids, no extra listing).
+    // vacuum strands fewer, so the gauge errs toward alerting. Per scrape
+    // this costs the commit-log listing plus one cursor-dir listing and
+    // one small read per consumer.
     val f = fs(spark)
     val wouldDrop = ids.filter(id => id >= lo && id <= wm)
     val cursorDir = new Path(root, "_graft_cursors")
-    val negFloor = // legacy single-ended cursors migrate with this floor
-      (ids.filter(_ < 0) ++ Some(lo).filter(_ != Long.MinValue))
-        .minOption.getOrElse(0L).min(0L)
     val cursors =
       if (!f.exists(cursorDir)) Seq.empty[(Long, Long)]
       else f.listStatus(cursorDir).toSeq
@@ -1198,7 +1186,6 @@ final class LakeSink(
         .map(_.split(":") match {
           case Array(a, b) => (a.toLong, b.toLong)
           case Array(a, b, _) => (a.toLong, b.toLong) // acked mark rides along
-          case Array(a) => (negFloor, a.toLong)
           case _ => (0L, Long.MinValue)
         })
     val atRisk = cursors.count { case (neg, pos) =>
@@ -1292,9 +1279,13 @@ final class LakeSink(
       try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
       finally in.close()
     val lines = text.split("\n").filter(_.nonEmpty)
-    val head = lines.head.split("\t")
-    val (wm, n) = (head(0).toLong, head(1).toInt)
-    val minFolded = if (head.length > 2) head(2).toLong else Long.MinValue
+    val (wm, n, minFolded) = lines.headOption.map(_.split("\t")) match {
+      case Some(Array(w, b, lo)) => (w.toLong, b.toInt, lo.toLong)
+      case _ => throw new IllegalStateException(
+        s"corrupt lake manifest ${new Path(commitDir, ManifestPrefix + v)}: " +
+          s"header '${lines.headOption.getOrElse("")}' is not " +
+          "'watermark<TAB>buckets<TAB>minFolded' — rebuild the lake")
+    }
     val entries = lines.tail.map { l =>
       val Array(s, t, b, rel) = l.split("\t", 4)
       (s, t, b.toInt) -> rel
@@ -1302,23 +1293,9 @@ final class LakeSink(
     Manifest(v, wm, n, entries, minFolded)
   }
 
-  /** Newest committed manifest, if any compaction has published one.
-    * Refuses a PRE-MANIFEST lake root (a `base/` dir or `_watermark` file
-    * from the old two-rename layout with no manifest): silently ignoring
-    * the old base would fold tail-only state — quiet data loss for any
-    * already-vacuumed root.
-    */
+  /** Newest committed manifest, if any compaction has published one. */
   private def readManifest(f: FileSystem): Option[Manifest] =
-    manifestVersions(f).lastOption.map(readManifestVersion(f, _)).orElse {
-      if (f.exists(new Path(root, "base")) ||
-          f.exists(new Path(commitDir, "_watermark")))
-        throw new IllegalStateException(
-          s"lake root $root uses the pre-manifest base layout (base/ dir or " +
-            "_watermark file, no _base_manifest.*) — its folded state is not " +
-            "readable by this version; re-root the lake or rebuild base by " +
-            "re-landing the changelog")
-      None
-    }
+    manifestVersions(f).lastOption.map(readManifestVersion(f, _))
 
   /** Publish a manifest: full content to a temp name, then one rename to
     * the (fresh) versioned name — atomic on every Hadoop filesystem, so a
@@ -1436,9 +1413,19 @@ object LakeSink {
 
   private[sinks] val ManifestPrefix = "_base_manifest."
 
+  /** The lake's one on-disk format, named in `<root>/_graft_format`. */
+  private[sinks] val FormatFile = "_graft_format"
+  private[sinks] val FormatVersion = "graft-lake 1"
+
+  /** Root entries only the lake itself writes (maintainers may stamp
+    * their own dirs and markers under the root before its first write).
+    */
+  private val LakeEntries =
+    Set("changelog", "_graft_commits", "_base_data", "_graft_cursors", "_graft_schema")
+
   /** First line of a batch commit marker that carries truncate metadata
-    * (see [[LakeSink.appendBatch]]) — pre-metadata markers are empty and
-    * read as "unknown", falling back to the scan.
+    * (see [[LakeSink.appendBatch]]) — the empty marker of an unframable
+    * table name reads as "unknown", falling back to the scan.
     */
   private[sinks] val TruncMetaMagic = "t1"
 
@@ -1450,14 +1437,12 @@ object LakeSink {
     * because the id space is two-sided (snapshots count down from -1,
     * epochs up from 0): a late snapshot landing after a compaction sits
     * BELOW the folded interval, and every reader folds it from the
-    * changelog until the next compaction absorbs it. Legacy manifests
-    * without the field read as Long.MinValue (one-sided, pre-two-sided
-    * behavior).
+    * changelog until the next compaction absorbs it.
     */
   private[sinks] final case class Manifest(
       version: Long, watermark: Long, buckets: Int,
       entries: Map[(String, String, Int), String],
-      minFolded: Long = Long.MinValue)
+      minFolded: Long)
 
   /** Folded-image slice schema — read with it explicitly so empty slices
     * and empty folds never trip schema inference.

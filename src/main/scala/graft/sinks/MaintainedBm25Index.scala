@@ -376,13 +376,6 @@ final class MaintainedBm25Index(
   def rebuild(spark: SparkSession): Unit =
     md.rebuild(spark, s => { statsView.rebuild(s); dfView.rebuild(s) })
 
-  /** One-time fingerprint adoption over a pre-guard-era postings state
-    * KNOWN to have been built with exactly these parameters — see
-    * [[MaintainedDistinct.adoptFingerprint]] (the stats view carries no
-    * fingerprint of its own); when in doubt, [[rebuild]].
-    */
-  def adoptFingerprint(spark: SparkSession): Unit = md.adoptFingerprint(spark)
-
   /** Top-k BM25 retrieval for a free-text query: (id, score), score
     * descending, ties on id. Empty (same schema) when the query has no
     * alphabetic tokens or the index is empty.

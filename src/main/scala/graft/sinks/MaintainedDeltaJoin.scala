@@ -243,20 +243,19 @@ final class MaintainedDeltaJoin(
         } else if (writer)
           BucketedStateLog.sweepMarkerTmps(f, stateDir, "_jointype")
         jtChecked = true
-      case None if joinType != "inner" && states.committed(f).nonEmpty =>
-        // pre-marker dirs were written by inner-only code
+      case None if states.committed(f).nonEmpty =>
+        // the first refresh stamps the marker before committing anything
         throw new IllegalStateException(
-          s"MaintainedDeltaJoin('$name'): state dir holds pre-outer-era " +
-            s"versions (committed as 'inner') but this instance is " +
-            s"configured '$joinType' — build the outer join under a NEW " +
-            "name (fresh cursor + state)")
+          s"MaintainedDeltaJoin('$name'): state dir has committed versions " +
+            "but no _jointype marker, so the type they were built as is " +
+            "unknown — build the join under a NEW name (fresh cursor + state)")
       case None =>
         if (writer) {
           stampAndVerify(fresh = true)
           jtChecked = true
         }
-      // reader over an unstamped legacy-inner/empty dir: nothing to
-      // validate; the next refresh stamps the marker
+      // reader over an unstamped empty dir: nothing to validate; the
+      // next refresh stamps the marker
     }
   }
 

@@ -163,7 +163,7 @@ final class MaintainedDistinct(
   /** Refuse a mismatched open. `adoptIfAbsent` (the refresh path) writes
     * the fingerprint on FIRST contact — and only on a genuinely fresh
     * state dir (no committed versions): a committed-but-fingerprintless
-    * dir is pre-guard-era state built under UNKNOWN parameters, and
+    * dir (its guard file removed) was built under UNKNOWN parameters, and
     * silently stamping the current instance's fingerprint over it would
     * be exactly the mixed-assignment-family corruption the guard exists
     * to refuse (an opener with CHANGED bands/centroids would bless
@@ -188,39 +188,12 @@ final class MaintainedDistinct(
         if (states.latest(f).nonEmpty)
           throw new IllegalStateException(
             s"maintained state '$name' has committed versions but no " +
-              "parameter fingerprint — it predates the fingerprint guard " +
-              "(or the guard file was removed), so the parameters it was " +
-              "built under are unknown. Adopting this instance's " +
-              s"fingerprint ($fp) silently could bless foreign-model " +
-              "state. Either rebuild(spark) — a full recompute under " +
-              "this instance's parameters — or, if you KNOW the state " +
-              "was built with exactly these parameters, run the explicit " +
-              "one-time adoptFingerprint(spark).")
+              "parameter fingerprint (the guard file was removed), so the " +
+              "parameters it was built under are unknown. Adopting this " +
+              s"instance's fingerprint ($fp) silently could bless " +
+              "foreign-model state — rebuild(spark), a full recompute " +
+              "under this instance's parameters.")
         else if (adoptIfAbsent) writeFp(f, fp)
-    }
-  }
-
-  /** Explicit one-time adoption of THIS instance's fingerprint over a
-    * committed-but-fingerprintless state dir (pre-guard-era state). Only
-    * for operators who KNOW the existing state was built with exactly
-    * this instance's parameters — at 100 TB this is the upgrade path
-    * that avoids a full recompute when nothing actually changed; when in
-    * doubt, [[rebuild]] instead. Refuses when a DIFFERENT fingerprint is
-    * already stored (that is a real parameter change, not a missing
-    * guard file) and is a no-op when the stored fingerprint already
-    * matches.
-    */
-  def adoptFingerprint(spark: SparkSession): Unit = fingerprint.foreach { fp =>
-    val f = states.fs(spark)
-    readFp(f) match {
-      case Some(stored) if stored != fp =>
-        throw new IllegalStateException(
-          s"maintained state '$name' already carries fingerprint " +
-            s"$stored — adoptFingerprint only covers a MISSING guard " +
-            "file; a stored mismatch is a real parameter change: " +
-            "rebuild(spark) or construct with the original parameters.")
-      case Some(_) => ()
-      case None => writeFp(f, fp)
     }
   }
 

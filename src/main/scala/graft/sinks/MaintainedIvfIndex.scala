@@ -152,12 +152,6 @@ final class MaintainedIvfIndex(
     */
   def rebuild(spark: SparkSession): Unit = md.rebuild(spark)
 
-  /** One-time fingerprint adoption over a pre-guard-era state dir KNOWN
-    * to have been built with exactly these centroids/parameters — see
-    * [[MaintainedDistinct.adoptFingerprint]]; when in doubt, [[rebuild]].
-    */
-  def adoptFingerprint(spark: SparkSession): Unit = md.adoptFingerprint(spark)
-
   /** Squared L2 between two float-array columns in THE arithmetic family
     * every read and write here shares: component differences squared in
     * FLOAT, accumulated in double. ONE definition by construction —

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -197,9 +197,6 @@ final class MaintainedJoin(
   private val stateDir = new Path(lake.root, s"_graft_joins/$name")
   private val states = new BucketedStateLog(stateDir, stateBuckets)
   private val ops = new MaintainerOps("join", name)
-  // pre-bucketing state versions (whole-state parquet under asof=*) —
-  // read once for migration, then retired
-  private val legacyStates = new StateLog(stateDir)
   private def cursorName = s"join_$name"
 
   override def stateId: String = s"${lake.root}#$cursorName"
@@ -274,13 +271,6 @@ final class MaintainedJoin(
       empty.select(rightKey(col("after")).as("jk"), col("after").as("right_after")))
   }
 
-  /** One-time in-place upgrade of a pre-bucketing state directory — see
-    * [[BucketedStateLog.migrateFrom]] (every legacy version lifts, so
-    * the legacy crash protocol's replay-prev survives the upgrade).
-    */
-  private def migrateLegacy(spark: SparkSession, f: FileSystem): Unit =
-    states.migrateFrom(spark, f, legacyStates)
-
   /** Apply every newly committed lake batch to the join (including a late
     * snapshot batch below the cursor's floor — a mid-stream table
     * addition). Returns the number of batches applied (0 = already
@@ -299,7 +289,6 @@ final class MaintainedJoin(
     val from = lake.cursorInterval(spark, cursorName)
     lake.poll(spark, cursorName, within) { span =>
       val f = states.fs(spark)
-      migrateLegacy(spark, f)
       // ONE pass over the span for bounds + truncate + null-touch flags
       // (three separate scans would each reread the span's parquet)
       def flag(c: Column) = max(when(c, 1).otherwise(0))
@@ -482,9 +471,7 @@ final class MaintainedJoin(
     * sink's, like [[MaintainedView.gauges]].
     */
   def gauges(spark: SparkSession): Seq[(String, Double)] = {
-    val f = states.fs(spark)
-    val asOf = IntervalKeys.sorted(
-      Seq(states.latest(f), legacyStates.latest(f)).flatten).lastOption
+    val asOf = states.latest(states.fs(spark))
     val (neg, pos) = lake.cursorInterval(spark, cursorName)
     val lag = lake.committedBatchIds(spark).count(id => id < neg || id > pos)
     Seq(
@@ -492,24 +479,10 @@ final class MaintainedJoin(
       s"join_${name}_lag_batches" -> lag.toDouble) ++ ops.gauges
   }
 
-  /** The current join: `jk`, `left_after`, `right_after`. PURE reader —
-    * an un-migrated legacy state dir is served directly from its own
-    * committed version (migration writes happen only inside [[refresh]],
-    * the single-maintainer path; a reader that also wrote would race a
-    * concurrent refresh's migration and could tear the slice write).
-    */
-  def read(spark: SparkSession): DataFrame = {
-    val f = states.fs(spark)
-    // serve the MAXIMAL interval across BOTH logs: a crash mid-migration
-    // can leave an older lifted version in the bucketed log while the
-    // legacy log still holds newer committed state (retired only after
-    // every lift lands)
-    (states.latest(f), legacyStates.latest(f)) match {
-      case (Some(bk), Some(lk)) if IntervalKeys.succeeds(lk, bk) =>
-        legacyStates.read(spark, lk)
-      case (Some(bk), _) => states.read(spark, bk, emptyJoin(spark).schema)
-      case (None, Some(lk)) => legacyStates.read(spark, lk)
-      case (None, None) => emptyJoin(spark)
+  /** The current join: `jk`, `left_after`, `right_after`. */
+  def read(spark: SparkSession): DataFrame =
+    states.latest(states.fs(spark)) match {
+      case Some(k) => states.read(spark, k, emptyJoin(spark).schema)
+      case None => emptyJoin(spark)
     }
-  }
 }

@@ -89,12 +89,6 @@ final class MaintainedLshIndex(
     */
   def rebuild(spark: SparkSession): Unit = md.rebuild(spark)
 
-  /** One-time fingerprint adoption over a pre-guard-era state dir KNOWN
-    * to have been built with exactly these parameters — see
-    * [[MaintainedDistinct.adoptFingerprint]]; when in doubt, [[rebuild]].
-    */
-  def adoptFingerprint(spark: SparkSession): Unit = md.adoptFingerprint(spark)
-
   /** Distinct n-token shingles of one image's text — the exact sets the
     * signatures hash, un-hashed, shared by [[sigArray]] and the exact-
     * Jaccard verification reads (so verification and indexing cannot

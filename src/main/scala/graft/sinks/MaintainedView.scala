@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.IncrementalAgg
@@ -23,8 +23,6 @@ import graft.operators.IncrementalAgg
   * too: [[IncrementalAgg.stepMerge]] runs over the touched buckets' rows
   * against the precomputed delta, so a refresh over a billion-group view
   * with one churned group reads ~1/buckets of the state, not the state.
-  * Pre-bucketing state dirs (whole-state `asof=*` parquet) migrate in
-  * place at the first refresh.
   *
   * Consistency: the dirty-group recompute source is `stateAsOf(span end)`,
   * NOT `latestState` — the writer may land new batches while a refresh
@@ -116,21 +114,11 @@ final class MaintainedView(
   private val stateDir = new Path(lake.root, s"_graft_views/$name")
   private val states = new BucketedStateLog(stateDir, stateBuckets, agg.groupCols)
   private val ops = new MaintainerOps("view", name)
-  // pre-bucketing state versions (whole-state parquet under asof=*) —
-  // read once for migration, then retired
-  private val legacyStates = new StateLog(stateDir)
   private def cursorName = s"view_$name"
 
   override def stateId: String = s"${lake.root}#$cursorName"
 
   private def stateSchema(spark: SparkSession) = agg.init(spark).schema
-
-  /** One-time in-place upgrade of a pre-bucketing state directory — see
-    * [[BucketedStateLog.migrateFrom]] (every legacy version lifts, so
-    * the legacy crash protocol's replay-prev survives the upgrade).
-    */
-  private def migrateLegacy(spark: SparkSession, f: FileSystem): Unit =
-    states.migrateFrom(spark, f, legacyStates)
 
   /** Apply every newly committed lake batch to the view (including a LATE
     * snapshot batch below the cursor's floor — a mid-stream table
@@ -150,7 +138,6 @@ final class MaintainedView(
     val from = lake.cursorInterval(spark, cursorName)
     lake.poll(spark, cursorName, within) { span =>
       val f = states.fs(spark)
-      migrateLegacy(spark, f)
       // partition-column inference can type small batch_id values as int;
       // bounds + the truncate + row-key-shape flags ride one span pass
       val isTable = col("schema") === schemaName && col("table") === table
@@ -348,7 +335,6 @@ final class MaintainedView(
     */
   private[sinks] def rebuild(spark: SparkSession): Unit = {
     val f = states.fs(spark)
-    migrateLegacy(spark, f)
     val latest = states.latest(f)
     val from = lake.cursorInterval(spark, cursorName)
     val cursorKey = if (from._2 == Long.MinValue) None else Some(from)
@@ -370,9 +356,7 @@ final class MaintainedView(
     * ([[MaintainedBm25Index]] threads its POSTINGS key here so N/avgdl
     * and df can never come from a later interval than the postings a
     * search scored; the companion refreshes after the primary, so its
-    * versions always lie within the primary's interval). Bucketed-log
-    * versions only: views created as composite companions never carry a
-    * pre-bucketing legacy dir.
+    * versions always lie within the primary's interval).
     */
   private[sinks] def latestKeyWithin(spark: SparkSession,
       from: (Long, Long)): Option[(Long, Long)] =
@@ -384,13 +368,13 @@ final class MaintainedView(
     * between the primary's refresh and this view's, and this view's
     * only version covers it) — serving the slightly-newer companion is
     * the pre-pinning semantics and strictly better than serving
-    * nothing. Bucketed-log versions only.
+    * nothing.
     */
   private[sinks] def latestKeyAny(spark: SparkSession): Option[(Long, Long)] =
     states.latest(states.fs(spark))
 
   /** [[read]] pinned to an explicit version key from [[latestKeyWithin]]
-    * (empty view shape for `None`). Bucketed-log versions only.
+    * (empty view shape for `None`).
     */
   private[sinks] def readAt(spark: SparkSession,
       key: Option[(Long, Long)]): DataFrame = key match {
@@ -416,28 +400,16 @@ final class MaintainedView(
 
   /** The current view: group columns, `n`, `sum_<m>`, `min_<m>`,
     * `max_<m>` — group-cardinality, no fold, no scan of the table.
-    * PURE reader: an un-migrated legacy state dir is served directly.
     */
-  def read(spark: SparkSession): DataFrame = {
-    val f = states.fs(spark)
-    // maximal interval across BOTH logs — see [[MaintainedJoin.read]]
-    (states.latest(f), legacyStates.latest(f)) match {
-      case (Some(bk), Some(lk)) if IntervalKeys.succeeds(lk, bk) =>
-        agg.view(legacyStates.read(spark, lk))
-      case (Some(bk), _) => agg.view(states.read(spark, bk, stateSchema(spark)))
-      case (None, Some(lk)) => agg.view(legacyStates.read(spark, lk))
-      case (None, None) => agg.view(agg.init(spark))
-    }
-  }
+  def read(spark: SparkSession): DataFrame =
+    readAt(spark, states.latest(states.fs(spark)))
 
   /** Ops gauges for the `graft_lake_*` family — concatenate with the
     * sink's: `lakeGauges = Some(() => lake.gauges(spark) ++
     * view.gauges(spark))`. Driver-side metadata listings only.
     */
   def gauges(spark: SparkSession): Seq[(String, Double)] = {
-    val f = states.fs(spark)
-    val asOf = IntervalKeys.sorted(
-      Seq(states.latest(f), legacyStates.latest(f)).flatten).lastOption
+    val asOf = states.latest(states.fs(spark))
     val (neg, pos) = lake.cursorInterval(spark, cursorName)
     val lag = lake.committedBatchIds(spark).count(id => id < neg || id > pos)
     Seq(

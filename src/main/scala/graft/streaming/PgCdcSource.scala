@@ -164,19 +164,23 @@ private[streaming] final case class PreparedGroup(
 class PgCdcMicroBatchStream(options: CaseInsensitiveStringMap)
     extends MicroBatchStream with SupportsTriggerAvailableNow with ReportsSourceMetrics {
 
-  /** A positive integral option, or `default` when unset. A malformed,
-    * zero, negative or out-of-range value fails stream construction with a
+  /** An integral option in `[min, max]`, or `default` when unset. A
+    * malformed or out-of-range value fails stream construction with a
     * message naming the option and the value — never silently clamped.
     */
-  private def positiveOption(key: String, default: Long, max: Long = Long.MaxValue): Long =
+  private def rangeOption(key: String, default: Long, min: Long, max: Long): Long =
     Option(options.get(key)).fold(default) { raw =>
-      raw.toLongOption.filter(v => v > 0 && v <= max).getOrElse {
-        val range = if (max == Long.MaxValue) "a positive integer" else s"an integer in [1, $max]"
+      raw.toLongOption.filter(v => v >= min && v <= max).getOrElse {
+        val range =
+          if (min == 1 && max == Long.MaxValue) "a positive integer"
+          else s"an integer in [$min, $max]"
         throw new IllegalArgumentException(s"pgcdc: option '$key' must be $range, got '$raw'")
       }
     }
+  private def positiveOption(key: String, default: Long): Long =
+    rangeOption(key, default, 1, Long.MaxValue)
   private def positiveIntOption(key: String, default: Int): Int =
-    positiveOption(key, default, Int.MaxValue).toInt
+    rangeOption(key, default, 1, Int.MaxValue).toInt
 
   private val maxFramesPerPartition = positiveIntOption("maxFramesPerPartition", 8192)
   private val defaultMaxTxnsPerTrigger = positiveOption("maxTxnsPerTrigger", Long.MaxValue)
@@ -214,6 +218,10 @@ class PgCdcMicroBatchStream(options: CaseInsensitiveStringMap)
   private val maxBufferedTxns = positiveIntOption("maxBufferedTxns", 4096)
   private val maxBufferedBytes = positiveOption("maxBufferedBytes", 256L << 20)
 
+  // walsender socket options, validated whatever the binding
+  private val port = rangeOption("port", 5432, 1, 65535).toInt
+  private val readTimeoutMs = positiveIntOption("readTimeoutMs", 60000)
+
   private val wal: WalSource = {
     val hook = Option(options.get("testSourceKey")).flatMap(PgCdcTestHook.get)
     hook.getOrElse {
@@ -229,7 +237,7 @@ class PgCdcMicroBatchStream(options: CaseInsensitiveStringMap)
           "pgcdc: 'slot' and 'publication' options are required with 'host'")
         new SocketWalSource(
           host = host,
-          port = options.getInt("port", 5432),
+          port = port,
           user = Option(options.get("user")).getOrElse("postgres"),
           database = Option(options.get("database")).getOrElse("postgres"),
           slot = slot,
@@ -242,7 +250,7 @@ class PgCdcMicroBatchStream(options: CaseInsensitiveStringMap)
           sslCert = Option(options.get("sslcert")),
           sslKey = Option(options.get("sslkey")),
           sslPassword = Option(options.get("sslpassword")),
-          readTimeoutMs = options.getInt("readTimeoutMs", 60000))
+          readTimeoutMs = readTimeoutMs)
       } else {
         require(path != null,
           "pgcdc: a WalSource binding is required — 'path' (WAL frame file), " +
@@ -334,8 +342,7 @@ class PgCdcMicroBatchStream(options: CaseInsensitiveStringMap)
       case _ => ()
     } catch { case scala.util.control.NonFatal(_) => () }
   }
-  private val maxBufferedStreamFrames =
-    options.getInt("maxBufferedStreamFrames", 1 << 20)
+  private val maxBufferedStreamFrames = positiveIntOption("maxBufferedStreamFrames", 1 << 20)
   private var bufferedStreamFrames = 0L
   private val maxBufferedPreparedBytes = positiveOption("maxBufferedPreparedBytes", 256L << 20)
 
@@ -433,9 +440,9 @@ class PgCdcMicroBatchStream(options: CaseInsensitiveStringMap)
   // replay, so the partial-group state below is dropped and rebuilt — no
   // duplicate, no loss. The transport layer cannot do this itself because it
   // cannot see (or reset) the grouping state.
-  private val maxReconnectAttempts = options.getInt("maxReconnectAttempts", 5)
-  private val reconnectBackoffMs = options.getLong("reconnectBackoffMs", 100L)
-  private val feedReplayTimeoutMs = options.getLong("feedReplayTimeoutMs", 30000L)
+  private val maxReconnectAttempts = rangeOption("maxReconnectAttempts", 5, 0, Int.MaxValue).toInt
+  private val reconnectBackoffMs = positiveOption("reconnectBackoffMs", 100L)
+  private val feedReplayTimeoutMs = positiveOption("feedReplayTimeoutMs", 30000L)
 
   private def recoverFeed(attempt: Int, cause: Throwable): Unit = {
     if (attempt > maxReconnectAttempts)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -10,6 +10,26 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * work vs per-job overhead. Warm pass at the small SF first, like Bench.
   */
 object ProfileProbe {
+  /** The frame builder a probe name stands for: `mv`/`mj`/`lake`, a
+    * shared-cache prep (probe-addressable so k-means/codegen cost
+    * decomposes; caches are released between the warm and measured pass),
+    * or a registered query. An unknown name fails listing the valid ones.
+    */
+  def resolve(what: String): (SparkSession, String) => DataFrame = {
+    import graft.operators.{LakeQueries, SharedCaches}
+    val preps = SharedCaches.entries.toMap
+    what match {
+      case "mv" => LakeQueries.mvOrders
+      case "mj" => LakeQueries.mjOrders
+      case "lake" => LakeQueries.lakeState
+      case p if preps.contains(p) => preps(p)
+      case q => graft.SparkEntry.queries.getOrElse(q, throw new IllegalArgumentException(
+        if (q.startsWith("prep_"))
+          s"unknown prep '$q'; valid preps: ${SharedCaches.entries.map(_._1).mkString(", ")}"
+        else s"unknown probe '$q'; use mv, mj, lake, a prep_* name or a SparkEntry query"))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -23,21 +43,9 @@ object ProfileProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    def run(what: String, dir: String): Unit = what match {
-      case "mv" => graft.operators.LakeQueries.mvOrders(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      case "mj" => graft.operators.LakeQueries.mjOrders(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      case "lake" => graft.operators.LakeQueries.lakeState(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      // the shared-cache preps, probe-addressable so k-means/codegen cost
-      // decomposes (caches released between the warm and measured pass)
-      case p if p.startsWith("prep_") =>
-        graft.operators.SharedCaches.entries.toMap.apply(p)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-      case q => graft.SparkEntry.queries(q)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-    }
+    val runs = whats.map(w => w -> resolve(w)).toMap // unknown names fail before any work
+    def run(what: String, dir: String): Unit =
+      runs(what)(spark, dir).write.format("noop").mode("overwrite").save()
     // warm pass (JIT/codegen/classloading), like the bench's
     whats.foreach(run(_, warmDir))
     graft.operators.SharedCaches.releaseAll(spark)

@@ -61,6 +61,10 @@ class LakeChaosSpec extends AnyFunSuite {
       val rnd = new Random(seed)
       val dir = Files.createTempDirectory("lake-chaos").toString
       val sink = new LakeSink(dir, baseBuckets = 4)
+      // crash debris only ever follows the format stamp (appendBatch
+      // stamps a fresh root before its first parquet write)
+      Files.write(java.nio.file.Paths.get(dir, LakeSink.FormatFile),
+        LakeSink.FormatVersion.getBytes)
       try {
         var lsn = 100L
         var nextId = 0L
@@ -175,15 +179,15 @@ class LakeChaosSpec extends AnyFunSuite {
           "public", "t", "soakview")
 
         def checkView(): Unit = {
-          val pre = sink.cursor(spark, "view_soakview")
+          val pre = sink.cursorInterval(spark, "view_soakview")
           mv.refresh(spark)
           if (rnd.nextInt(3) == 0) {
             // crash window: view state committed, cursor advance lost —
             // rewind the cursor and replay; the view must not double-apply
             val cf = new java.io.File(s"$dir/_graft_cursors/view_soakview")
             new java.io.File(s"$dir/_graft_cursors/.view_soakview.crc").delete()
-            if (pre == Long.MinValue) cf.delete()
-            else java.nio.file.Files.write(cf.toPath, pre.toString.getBytes)
+            if (pre._2 == Long.MinValue) cf.delete()
+            else java.nio.file.Files.write(cf.toPath, s"${pre._1}:${pre._2}".getBytes)
             mv.refresh(spark)
           }
           // sums carry the extractor's own type: a long measure sums as LONG
@@ -212,14 +216,14 @@ class LakeChaosSpec extends AnyFunSuite {
           groupIsImmutable = true, groupCol = Some("shard"))
 
         def checkShardView(): Unit = {
-          val pre = sink.cursor(spark, "view_soakshard")
+          val pre = sink.cursorInterval(spark, "view_soakshard")
           mvi.refresh(spark)
           if (rnd.nextInt(3) == 0) {
             // crash window: state committed, cursor advance lost
             val cf = new java.io.File(s"$dir/_graft_cursors/view_soakshard")
             new java.io.File(s"$dir/_graft_cursors/.view_soakshard.crc").delete()
-            if (pre == Long.MinValue) cf.delete()
-            else java.nio.file.Files.write(cf.toPath, pre.toString.getBytes)
+            if (pre._2 == Long.MinValue) cf.delete()
+            else java.nio.file.Files.write(cf.toPath, s"${pre._1}:${pre._2}".getBytes)
             mvi.refresh(spark)
           }
           val got = mvi.read(spark).collect().map { r =>
@@ -415,6 +419,10 @@ class LakeChaosSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("lake-chaos-stream").toString
     val ckpt = Files.createTempDirectory("lake-chaos-stream-ckpt").toString
     val sink = new LakeSink(dir, baseBuckets = 4)
+    // crash debris only ever follows the format stamp (appendBatch
+    // stamps a fresh root before its first parquet write)
+    Files.write(java.nio.file.Paths.get(dir, LakeSink.FormatFile),
+      LakeSink.FormatVersion.getBytes)
     try {
       var lsn = 100L
       var nextId = 0L

@@ -52,7 +52,10 @@ class LakeSinkSpec extends AnyFunSuite {
 
   test("a half-written batch (no marker) is invisible until its retry commits") {
     withSink { (sink, dir) =>
-      // simulate the crash window: parquet landed, marker never created
+      // simulate the crash window: the append stamped the root's format
+      // and landed its parquet, but its commit marker was never created
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, LakeSink.FormatFile),
+        LakeSink.FormatVersion.getBytes)
       envelope(Seq(ev(1, "insert", "users", null, Map("id" -> "1", "name" -> "a"))))
         .write.parquet(s"$dir/changelog/batch_id=5")
       assert(sink.committedBatchIds(spark).isEmpty)
@@ -405,30 +408,6 @@ class LakeSinkSpec extends AnyFunSuite {
     }
   }
 
-  test("legacy single-ended cursor migrates with the lake's lowest-ever id as its floor") {
-    withSink { (sink, dir) =>
-      import spark.implicits._
-      sink.appendSnapshot("public.a", Seq((1L, "x")).toDF("id", "v"),
-        Seq("id"), 0L, -1L)
-      sink.appendBatch(envelope(Seq(
-        ev(5, "insert", "users", null, Map("id" -> "1", "name" -> "a")))), 0L)
-      // a pre-upgrade cursor file: one value, "everything <= 0 delivered"
-      val cdir = new java.io.File(s"$dir/_graft_cursors")
-      cdir.mkdirs()
-      java.nio.file.Files.write(new java.io.File(cdir, "old").toPath, "0".getBytes)
-      assert(sink.cursorInterval(spark, "old") == (-1L, 0L),
-        "the already-delivered snapshot batch is NOT re-delivered")
-      assert(sink.poll(spark, "old")(_ => fail("nothing new to deliver")) == 0)
-      // a snapshot landing AFTER the upgrade still reaches the consumer
-      sink.appendSnapshot("public.b", Seq((2L, "y")).toDF("id", "v"),
-        Seq("id"), 0L, -2L)
-      var got = Seq.empty[Long]
-      sink.poll(spark, "old") { df =>
-        got = df.select(col("batch_id")).distinct().collect().map(_.getLong(0)).toSeq
-      }
-      assert(got == Seq(-2L))
-    }
-  }
 
   test("poll: named cursors deliver each committed batch exactly once, vacuum gap detected") {
     withSink { (sink, _) =>

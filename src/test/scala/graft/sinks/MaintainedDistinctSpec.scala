@@ -137,7 +137,7 @@ class MaintainedDistinctSpec extends AnyFunSuite {
       // the negative-refcount check or drop the count to zero
       val cursorFile = new java.io.File(s"$root/_graft_cursors/view_nd_grp")
       new java.io.File(s"$root/_graft_cursors/.view_nd_grp.crc").delete()
-      java.nio.file.Files.write(cursorFile.toPath, "0".getBytes)
+      java.nio.file.Files.write(cursorFile.toPath, "0:0".getBytes)
       assert(sink.cursor(spark, "view_nd_grp") == 0L)
       assert(md.refresh(spark) == 1)
       assert(viewMap(md) == healthy)

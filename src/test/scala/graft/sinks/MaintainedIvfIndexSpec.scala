@@ -153,7 +153,7 @@ class MaintainedIvfIndexSpec extends AnyFunSuite {
       assert(ix.refresh(spark) == 1)
       val cf = new java.io.File(s"$root/_graft_cursors/view_ivf")
       new java.io.File(s"$root/_graft_cursors/.view_ivf.crc").delete()
-      java.nio.file.Files.write(cf.toPath, "0".getBytes)
+      java.nio.file.Files.write(cf.toPath, "0:0".getBytes)
       assert(ix.refresh(spark) == 1)
       assert(ix.cells(spark).isEmpty)
     }

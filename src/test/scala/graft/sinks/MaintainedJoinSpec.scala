@@ -132,7 +132,7 @@ class MaintainedJoinSpec extends AnyFunSuite {
       new java.io.File(s"$root/_graft_cursors/.join_orders_by_user.crc").delete()
       java.nio.file.Files.write(
         new java.io.File(s"$root/_graft_cursors/join_orders_by_user").toPath,
-        "0".getBytes)
+        "0:0".getBytes)
       assert(mj.refresh(spark) == 1, "replayed span")
       assert(joinSet(mj).isEmpty, "no double-apply")
       assert(mj.refresh(spark) == 0)
@@ -280,45 +280,6 @@ class MaintainedJoinSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("a legacy whole-state version migrates into the bucketed log once, losing nothing") {
-    val dir = Files.createTempDirectory("lake-mjm").toString
-    try {
-      val sink = new LakeSink(dir)
-      sink.appendBatch(envelope(Seq(
-        ev(1, "insert", "u", Seq("id"), null, user("1", "ann")),
-        ev(2, "insert", "o", Seq("oid"), null, order("x", "1", "5")))), 0L)
-      // hand-build the PRE-BUCKETING state layout for an applied batch 0:
-      // whole-state parquet under asof=0_0 + bare marker, cursor advanced
-      val legacy = new StateLog(new org.apache.hadoop.fs.Path(
-        s"$dir/_graft_joins/mig"))
-      val f = legacy.fs(spark)
-      val state = sink.latestState(spark, "public", "u")
-        .select(element_at(col("after"), "id").as("jk"),
-          col("after").as("left_after"))
-        .join(sink.latestState(spark, "public", "o")
-          .select(element_at(col("after"), "uid").as("jk"),
-            col("after").as("right_after")), Seq("jk"), "inner")
-      legacy.commit(f, state, (0L, 0L))
-      java.nio.file.Files.createDirectories(
-        new java.io.File(s"$dir/_graft_cursors").toPath)
-      java.nio.file.Files.write(
-        new java.io.File(s"$dir/_graft_cursors/join_mig").toPath,
-        "0:0".getBytes)
-      val mj = new MaintainedJoin(sink,
-        ("public", "u"), ("public", "o"),
-        im => element_at(im, "id"), im => element_at(im, "uid"), "mig")
-      // read() before any refresh serves the migrated state
-      assert(joinSet(mj) == Set(("x", "ann", "5")))
-      // an incremental refresh builds ON the migrated state, not from empty
-      sink.appendBatch(envelope(Seq(
-        ev(3, "insert", "o", Seq("oid"), null, order("y", "1", "6")))), 1L)
-      assert(mj.refresh(spark) == 1)
-      assert(joinSet(mj) == Set(("x", "ann", "5"), ("y", "ann", "6")))
-      assert(joinSet(mj) == expected(sink))
-      assert(!new java.io.File(s"$dir/_graft_joins/mig/asof=0_0").exists(),
-        "legacy version dir retired after migration")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
 
   test("row-key-restricted recompute matches the full fold through churn, compaction, and deletes") {
     // `leftKeyIsRowKey`: u's join key IS its replica key, so the dirty
@@ -360,56 +321,6 @@ class MaintainedJoinSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("migration keeps the legacy replay-prev: crash-before-cursor plus new batches loses nothing") {
-    // the legacy crash protocol: old code commits state for a span, then
-    // crashes BEFORE the cursor advances. The replayed span must splice
-    // against the state from BEFORE it (latestWithin the pre-span
-    // cursor) — so migration has to lift EVERY legacy version, not just
-    // the newest, or the splice finds no prev and untouched keys vanish.
-    val dir = Files.createTempDirectory("lake-mjrp").toString
-    try {
-      val sink = new LakeSink(dir)
-      sink.appendBatch(envelope(Seq(
-        ev(1, "insert", "u", Seq("id"), null, user("1", "ann")),
-        ev(2, "insert", "u", Seq("id"), null, user("2", "bob")),
-        ev(3, "insert", "o", Seq("oid"), null, order("x", "1", "5")),
-        ev(4, "insert", "o", Seq("oid"), null, order("w", "2", "7")))), 0L)
-      val legacy = new StateLog(new org.apache.hadoop.fs.Path(
-        s"$dir/_graft_joins/rp"))
-      val f = legacy.fs(spark)
-      def stateNow() = sink.latestState(spark, "public", "u")
-        .select(element_at(col("after"), "id").as("jk"),
-          col("after").as("left_after"))
-        .join(sink.latestState(spark, "public", "o")
-          .select(element_at(col("after"), "uid").as("jk"),
-            col("after").as("right_after")), Seq("jk"), "inner")
-      legacy.commit(f, stateNow(), (0L, 0L))
-      // old code applies batch 1, commits (0,1), crashes before the
-      // cursor write — the durable cursor still says batch 0
-      sink.appendBatch(envelope(Seq(
-        ev(5, "insert", "o", Seq("oid"), null, order("y", "1", "6")))), 1L)
-      legacy.commit(f, stateNow(), (0L, 1L))
-      java.nio.file.Files.createDirectories(
-        new java.io.File(s"$dir/_graft_cursors").toPath)
-      java.nio.file.Files.write(
-        new java.io.File(s"$dir/_graft_cursors/join_rp").toPath,
-        "0:0".getBytes)
-      // another batch lands before the upgraded binary's first refresh,
-      // so the replayed span's key is NOT a committed legacy version
-      sink.appendBatch(envelope(Seq(
-        ev(6, "insert", "o", Seq("oid"), null, order("z", "1", "9")))), 2L)
-      val mj = new MaintainedJoin(sink,
-        ("public", "u"), ("public", "o"),
-        im => element_at(im, "id"), im => element_at(im, "uid"), "rp")
-      assert(mj.refresh(spark) == 2)
-      // bob's order w is untouched by batches 1-2: it must survive the
-      // spliced commit via the migrated (0,0) replay-prev
-      assert(joinSet(mj) == Set(
-        ("x", "ann", "5"), ("y", "ann", "6"), ("z", "ann", "9"),
-        ("w", "bob", "7")))
-      assert(joinSet(mj) == expected(sink))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
 
   test("truncate on one side falls back to a full recompute at the boundary") {
     withJoin { (sink, mj) =>

@@ -140,7 +140,7 @@ class MaintainedLshIndexSpec extends AnyFunSuite {
       // retraction would trip the negative-refcount check if double-applied
       val cf = new java.io.File(s"$root/_graft_cursors/view_lsh")
       new java.io.File(s"$root/_graft_cursors/.view_lsh.crc").delete()
-      java.nio.file.Files.write(cf.toPath, "0".getBytes)
+      java.nio.file.Files.write(cf.toPath, "0:0".getBytes)
       assert(ix.refresh(spark) == 1)
       assert(pairs(ix).isEmpty)
     }
@@ -318,14 +318,13 @@ class MaintainedLshIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("committed state with NO fingerprint refuses — adopt is explicit, rebuild migrates") {
+  test("committed state with NO fingerprint refuses — rebuild migrates") {
     withIndex { (sink, ix, root) =>
       sink.appendBatch(envelope(Seq(
         ev(1, "insert", null, doc("a1", TextA)),
         ev(2, "insert", null, doc("a2", TextA)))), 0L)
       assert(ix.refresh(spark) == 1)
-      // simulate a pre-guard-era state dir: committed versions exist but
-      // the fingerprint file is gone
+      // committed versions exist but the fingerprint file is gone
       val viewDir = new java.io.File(s"$root/_graft_views/lsh")
       viewDir.listFiles().filter(_.getName.contains("_fingerprint"))
         .foreach(_.delete())
@@ -336,29 +335,14 @@ class MaintainedLshIndexSpec extends AnyFunSuite {
         idKey = "id", textKey = "text", bands = 8, stateBuckets = 8)
       val e = intercept[IllegalStateException](ix8.refresh(spark))
       assert(e.getMessage.contains("no parameter fingerprint") &&
-        e.getMessage.contains("adoptFingerprint") &&
         e.getMessage.contains("rebuild"),
-        s"refusal must name both migration paths: ${e.getMessage}")
+        s"refusal must name the migration path: ${e.getMessage}")
       intercept[IllegalStateException](ix8.candidatePairs(spark))
       // the SAME-params instance cannot be distinguished either — it
-      // refuses too, until the operator decides
+      // refuses too
       intercept[IllegalStateException](ix.refresh(spark))
       intercept[IllegalStateException](ix.buckets(spark))
-      // explicit adopt: the operator KNOWS the state was built under the
-      // original 4-band params — serving resumes with no recompute
-      ix.adoptFingerprint(spark)
-      assert(pairs(ix) == Set(("a1", "a2")))
-      assert(ix.refresh(spark) == 0)
-      // with a fingerprint present again, adopt on a MISMATCHED instance
-      // is a real parameter change and still refuses
-      val e2 = intercept[IllegalStateException](ix8.adoptFingerprint(spark))
-      assert(e2.getMessage.contains("rebuild"))
-      // and a matching adopt is an idempotent no-op
-      ix.adoptFingerprint(spark)
-      assert(pairs(ix) == Set(("a1", "a2")))
-      // rebuild remains the no-trust path over a fingerprintless dir
-      viewDir.listFiles().filter(_.getName.contains("_fingerprint"))
-        .foreach(_.delete())
+      // rebuild is the no-trust path over a fingerprintless dir
       ix8.rebuild(spark)
       assert(ix8.buckets(spark).count() == 8L)
       intercept[IllegalStateException](ix.refresh(spark))

@@ -100,7 +100,7 @@ class MaintainedViewSpec extends AnyFunSuite {
       val cursorFile = new java.io.File(s"$root/_graft_cursors/view_by_grp")
       // the raw write bypasses Hadoop's checksum sidecar — drop it too
       new java.io.File(s"$root/_graft_cursors/.view_by_grp.crc").delete()
-      java.nio.file.Files.write(cursorFile.toPath, "0".getBytes)
+      java.nio.file.Files.write(cursorFile.toPath, "0:0".getBytes)
       assert(sink.cursor(spark, "view_by_grp") == 0L)
       // the replayed span must not double-apply the delete
       assert(mv.refresh(spark) == 1)
@@ -228,71 +228,7 @@ class MaintainedViewSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("a legacy whole-state version serves reads and migrates at the first refresh") {
-    val dir = Files.createTempDirectory("lake-mvm").toString
-    try {
-      val sink = new LakeSink(dir)
-      sink.appendBatch(envelope(Seq(
-        ev(1, "insert", null, row("1", "a", "3")))), 0L)
-      // hand-build the pre-bucketing layout for an applied batch 0
-      val agg = mkAgg
-      val legacy = new StateLog(new org.apache.hadoop.fs.Path(
-        s"$dir/_graft_views/by_grp"))
-      val f = legacy.fs(spark)
-      legacy.commit(f, agg.recomputeAll(
-        sink.latestState(spark, "public", "users").select(col("after"))), (0L, 0L))
-      java.nio.file.Files.createDirectories(
-        new java.io.File(s"$dir/_graft_cursors").toPath)
-      java.nio.file.Files.write(
-        new java.io.File(s"$dir/_graft_cursors/view_by_grp").toPath,
-        "0:0".getBytes)
-      val mv = new MaintainedView(sink, mkAgg, "public", "users", "by_grp")
-      // PURE read before any refresh serves the legacy state directly
-      assert(viewMap(mv) == Map("a" -> ((1L, 3d, 3d, 3d))))
-      // an incremental refresh builds ON the migrated state
-      sink.appendBatch(envelope(Seq(
-        ev(2, "insert", null, row("2", "a", "5")))), 1L)
-      assert(mv.refresh(spark) == 1)
-      assert(viewMap(mv) == Map("a" -> ((2L, 8d, 3d, 5d))))
-      assert(!new java.io.File(s"$dir/_graft_views/by_grp/asof=0_0").exists(),
-        "legacy version dir retired after migration")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
 
-  test("migration keeps the legacy replay-prev: crash-before-cursor plus new batches loses nothing") {
-    // same edge as the join's spec: old code committed (0,1) and crashed
-    // before the cursor advanced past batch 0, then batch 2 landed under
-    // the new binary. The replayed span (0,2) must splice against the
-    // migrated (0,0) replay-prev — untouched group 'b' survives.
-    val dir = Files.createTempDirectory("lake-mvrp").toString
-    try {
-      val sink = new LakeSink(dir)
-      val agg = mkAgg
-      val legacy = new StateLog(new org.apache.hadoop.fs.Path(
-        s"$dir/_graft_views/by_grp"))
-      val f = legacy.fs(spark)
-      def stateNow() = agg.recomputeAll(
-        sink.latestState(spark, "public", "users").select(col("after")))
-      sink.appendBatch(envelope(Seq(
-        ev(1, "insert", null, row("1", "a", "3")),
-        ev(2, "insert", null, row("2", "b", "7")))), 0L)
-      legacy.commit(f, stateNow(), (0L, 0L))
-      sink.appendBatch(envelope(Seq(
-        ev(3, "insert", null, row("3", "a", "5")))), 1L)
-      legacy.commit(f, stateNow(), (0L, 1L))
-      java.nio.file.Files.createDirectories(
-        new java.io.File(s"$dir/_graft_cursors").toPath)
-      java.nio.file.Files.write(
-        new java.io.File(s"$dir/_graft_cursors/view_by_grp").toPath,
-        "0:0".getBytes)
-      sink.appendBatch(envelope(Seq(
-        ev(4, "insert", null, row("4", "a", "1")))), 2L)
-      val mv = new MaintainedView(sink, mkAgg, "public", "users", "by_grp")
-      assert(mv.refresh(spark) == 2)
-      assert(viewMap(mv) == Map(
-        "a" -> ((3L, 9d, 1d, 5d)), "b" -> ((1L, 7d, 7d, 7d))))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
 
   test("groupIsRowKey: a per-key view maintains through the restricted fold") {
     // group col == replica key ("id", extracted verbatim): dirty groups
@@ -471,47 +407,6 @@ class MaintainedViewSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d5))
   }
 
-  test("a crash mid-migration resumes: already-lifted versions skip, the rest still lift") {
-    // partial-migration debris: the OLDER legacy version is already in
-    // the bucketed log (the crashed run lifted it), the newer one is
-    // not. The resumed migration must lift the newer version too — an
-    // "anything committed → done" guard would splice the next refresh
-    // from the stale prev and lose batch 1's effects.
-    val dir = Files.createTempDirectory("lake-mvcr").toString
-    try {
-      val sink = new LakeSink(dir)
-      val agg = mkAgg
-      val stateDir = new org.apache.hadoop.fs.Path(s"$dir/_graft_views/by_grp")
-      val legacy = new StateLog(stateDir)
-      val f = legacy.fs(spark)
-      def stateNow() = agg.recomputeAll(
-        sink.latestState(spark, "public", "users").select(col("after")))
-      sink.appendBatch(envelope(Seq(
-        ev(1, "insert", null, row("1", "a", "3")),
-        ev(2, "insert", null, row("2", "b", "7")))), 0L)
-      legacy.commit(f, stateNow(), (0L, 0L))
-      val v00 = stateNow().localCheckpoint() // snapshot BEFORE batch 1
-      sink.appendBatch(envelope(Seq(
-        ev(3, "insert", null, row("3", "a", "5")))), 1L)
-      legacy.commit(f, stateNow(), (0L, 1L))
-      java.nio.file.Files.createDirectories(
-        new java.io.File(s"$dir/_graft_cursors").toPath)
-      java.nio.file.Files.write(
-        new java.io.File(s"$dir/_graft_cursors/view_by_grp").toPath,
-        "0:1".getBytes)
-      // the crashed migration lifted ONLY (0,0) into the bucketed log
-      val bucketed = new BucketedStateLog(stateDir, 16, agg.groupCols)
-      bucketed.commit(f, v00, (0 until 16).toSet, None, (0L, 0L))
-      sink.appendBatch(envelope(Seq(
-        ev(4, "insert", null, row("4", "b", "1")))), 2L)
-      val mv = new MaintainedView(sink, mkAgg, "public", "users", "by_grp")
-      assert(mv.refresh(spark) == 1)
-      // group a is untouched by batch 2: its value must include batch 1
-      // (the resumed lift of (0,1)), not the stale (0,0) snapshot
-      assert(viewMap(mv) == Map(
-        "a" -> ((2L, 8d, 3d, 5d)), "b" -> ((2L, 8d, 1d, 7d))))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
 
   test("first refresh after seedCursor on a vacuumed lake rebuilds from BASE") {
     // regression: the seed used to apply span DELTAS against empty state —

@@ -439,9 +439,11 @@ class PgCdcSourceSpec extends AnyFunSuite {
 
   private val sizeOptions = Seq("maxBufferedBytes", "maxBufferedTxns", "maxFramesPerPartition",
     "maxTxnsPerTrigger", "spillThresholdEvents", "maxBufferedStreamEvents",
-    "maxBufferedPreparedBytes")
+    "maxBufferedPreparedBytes", "maxBufferedStreamFrames", "reconnectBackoffMs",
+    "feedReplayTimeoutMs", "readTimeoutMs")
   private val intOptions = Set("maxBufferedTxns", "maxFramesPerPartition",
-    "spillThresholdEvents", "maxBufferedStreamEvents")
+    "spillThresholdEvents", "maxBufferedStreamEvents", "maxBufferedStreamFrames",
+    "readTimeoutMs")
 
   private def constructWith(key: String, value: String): IllegalArgumentException = {
     val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
@@ -458,6 +460,14 @@ class PgCdcSourceSpec extends AnyFunSuite {
 
   test("size/count options: non-numeric values fail with the option named") {
     for (key <- sizeOptions; bad <- Seq("abc", "1.5", "", "64MB")) constructWith(key, bad)
+  }
+
+  test("maxReconnectAttempts must be >= 0 and port in [1, 65535]") {
+    for (bad <- Seq("-1", "abc", "3000000000")) constructWith("maxReconnectAttempts", bad)
+    for (bad <- Seq("0", "-1", "65536", "abc", "5432x")) constructWith("port", bad)
+    for ((key, ok) <- Seq("maxReconnectAttempts" -> "0", "port" -> "1", "port" -> "65535"))
+      new PgCdcMicroBatchStream(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("path", "/nonexistent.wal", key, ok))).stop()
   }
 
   test("size/count options: int-valued options reject values past Int.MaxValue") {
