@@ -319,13 +319,7 @@ private[sinks] final class BucketedStateLog(
   private def geometryPath = new Path(dir, "_geometry")
 
   private def readGeometry(f: FileSystem): Option[String] =
-    if (!f.exists(geometryPath)) None
-    else {
-      val in = f.open(geometryPath)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
+    BucketedStateLog.readMarker(f, geometryPath)
 
   private def writeGeometry(f: FileSystem): Unit = {
     val want = s"$buckets:$subs"
@@ -679,6 +673,54 @@ private[sinks] object BucketedStateLog {
       finally in.close()
     sweepMarkerTmps(f, dir, markerName)
     got
+  }
+
+  /** A small marker file's trimmed UTF-8 content; None when absent. */
+  def readMarker(f: FileSystem, p: Path): Option[String] =
+    if (!f.exists(p)) None
+    else {
+      val in = f.open(p)
+      try Some(new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8).trim)
+      finally in.close()
+    }
+
+  /** A state dir's fixed-for-life marker (a model, a join type): the one
+    * validation protocol over [[stampMarker]], memoized per instance once
+    * it has passed. A dir with committed versions must carry the
+    * `expected` marker; a mismatched one refuses with `mismatch(stored)`
+    * and a missing one with `unmarked`. A WRITER stamps a missing marker,
+    * and may re-stamp a mismatched one while no version is committed (a
+    * refresh over an empty lake stamps before any span applies, and the
+    * wrong construction must not burn the name forever). A matching
+    * writer open sweeps crashed-writer tmp debris. A reader over an
+    * unstamped empty dir validates nothing; the next refresh stamps.
+    */
+  final class Marker(dir: Path, markerName: String, expected: String,
+      mismatch: String => String, unmarked: => String) {
+    @volatile private var checked = false
+
+    def check(f: FileSystem, writer: Boolean, committed: => Boolean): Unit = {
+      if (checked) return
+      val existing = readMarker(f, new Path(dir, markerName))
+      // the read-back names whatever actually landed: two concurrent first
+      // writers are a single-writer-contract violation, and the loser
+      // refuses loudly in all but the validate-then-overwritten interleaving
+      def stamp(fresh: Boolean): Unit = {
+        val got = stampMarker(f, dir, markerName, expected, fresh)
+        if (got != expected) throw new IllegalStateException(mismatch(got))
+      }
+      existing match {
+        case Some(m) if m != expected =>
+          if (writer && !committed) stamp(fresh = false)
+          else throw new IllegalStateException(mismatch(m))
+        case Some(_) => if (writer) sweepMarkerTmps(f, dir, markerName)
+        case None if committed => throw new IllegalStateException(unmarked)
+        case None if writer => stamp(fresh = true)
+        case None => return
+      }
+      checked = true
+    }
   }
 
   /** Delete a marker's crashed-writer `<markerName>.<uuid>.tmp` debris —

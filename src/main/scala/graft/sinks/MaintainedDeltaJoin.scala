@@ -182,10 +182,8 @@ final class MaintainedDeltaJoin(
     if (outerR) Some(new BucketedStateLog(
       new Path(stateDir, "_rnull"), stateBuckets, Seq("jk"),
       subBuckets, Seq("rk"))) else None
-  private val ops = new MaintainerOps("djoin", name)
-  private def cursorName = s"djoin_$name"
 
-  override def stateId: String = s"${lake.root}#$cursorName"
+  override def stateId: String = s"${lake.root}#${loop.cursorName}"
 
   // ---- join-type marker ---------------------------------------------------
 
@@ -197,67 +195,21 @@ final class MaintainedDeltaJoin(
     * refuses for bucket counts. Stamped by the first refresh; validated
     * by every refresh and read.
     */
-  private def joinTypePath = new Path(stateDir, "_jointype")
+  private val joinTypeMarker = new BucketedStateLog.Marker(stateDir,
+    "_jointype", joinType,
+    jt => s"MaintainedDeltaJoin('$name'): state dir is marked '$jt' but " +
+      s"this instance is configured '$joinType' — the join type is " +
+      "fixed for the life of a state dir (the pair and companion " +
+      s"states encode it); open it as '$jt', or build the new type " +
+      "under a NEW name (fresh cursor + state)",
+    s"MaintainedDeltaJoin('$name'): state dir has committed versions " +
+      "but no _jointype marker, so the type they were built as is " +
+      "unknown — build the join under a NEW name (fresh cursor + state)")
 
-  @volatile private var jtChecked = false
-  private def checkJoinType(f: FileSystem, writer: Boolean): Unit = {
-    if (jtChecked) return
-    val existing: Option[String] =
-      if (!f.exists(joinTypePath)) None
-      else {
-        val in = f.open(joinTypePath)
-        try Some(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-        finally in.close()
-      }
-    def mismatch(jt: String): Nothing = throw new IllegalStateException(
-      s"MaintainedDeltaJoin('$name'): state dir is marked '$jt' but " +
-        s"this instance is configured '$joinType' — the join type is " +
-        "fixed for the life of a state dir (the pair and companion " +
-        s"states encode it); open it as '$jt', or build the new type " +
-        "under a NEW name (fresh cursor + state)")
-    // The hardened stamp stanza is the SHARED [[BucketedStateLog
-    // .stampMarker]]: writer-unique tmp, publish, unconditional
-    // read-back, debris sweep. Stated honestly: two CONCURRENT first
-    // writers of different types are already a single-writer-contract
-    // violation — the read-back narrows that misconfiguration to fail
-    // loudly in all but the validate-then-overwritten interleaving; the
-    // sequential misconfiguration (the common one) always refuses.
-    def stampAndVerify(fresh: Boolean): Unit = {
-      val got = BucketedStateLog.stampMarker(f, stateDir, "_jointype",
-        joinType, fresh)
-      if (got != joinType) mismatch(got)
-    }
-    existing match {
-      case Some(jt) =>
-        if (jt != joinType) {
-          // a marker next to ZERO committed pair versions pins nothing —
-          // no data exists that the type could mislabel (companions
-          // always commit at-or-after the pairs, so an empty pair log
-          // means an empty dir). A WRITER may re-stamp it: the common
-          // built-the-wrong-type-once flow must not burn the name
-          // forever. Any committed state refuses as before.
-          if (writer && states.committed(f).isEmpty)
-            stampAndVerify(fresh = false)
-          else mismatch(jt)
-        } else if (writer)
-          BucketedStateLog.sweepMarkerTmps(f, stateDir, "_jointype")
-        jtChecked = true
-      case None if states.committed(f).nonEmpty =>
-        // the first refresh stamps the marker before committing anything
-        throw new IllegalStateException(
-          s"MaintainedDeltaJoin('$name'): state dir has committed versions " +
-            "but no _jointype marker, so the type they were built as is " +
-            "unknown — build the join under a NEW name (fresh cursor + state)")
-      case None =>
-        if (writer) {
-          stampAndVerify(fresh = true)
-          jtChecked = true
-        }
-      // reader over an unstamped empty dir: nothing to validate; the
-      // next refresh stamps the marker
-    }
-  }
+  // an empty pair log means an empty dir: companions always commit
+  // at-or-after the pairs
+  private def checkJoinType(f: FileSystem, writer: Boolean): Unit =
+    joinTypeMarker.check(f, writer, states.committed(f).nonEmpty)
 
   // ---- changelog emission -------------------------------------------------
 
@@ -294,17 +246,11 @@ final class MaintainedDeltaJoin(
   }
 
   private def readEmitSeq(f: FileSystem): Option[EmitRec] =
-    if (!f.exists(emitSeqPath)) None
-    else {
-      val in = f.open(emitSeqPath)
-      val s =
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        finally in.close()
+    BucketedStateLog.readMarker(f, emitSeqPath).map { s =>
       // root LAST with a bounded split: URIs carry ':'
       s.split(":", 5) match {
-        case Array(id, n, p, shape, root) => Some(EmitRec(id.toLong,
-          (n.toLong, p.toLong), full = shape == "full", root = root))
+        case Array(id, n, p, shape, root) => EmitRec(id.toLong,
+          (n.toLong, p.toLong), full = shape == "full", root = root)
         // shorter records predate the shape/root fields (no released
         // deployment carries them, but in-development dirs can) —
         // guessing a shape or root could replay a seed as a delta batch
@@ -374,15 +320,7 @@ final class MaintainedDeltaJoin(
     }
     val p = new Path(out.root, "_graft_emit_producer")
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing: Option[String] =
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        try Some(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-        finally in.close()
-      }
-    existing match {
+    BucketedStateLog.readMarker(f, p) match {
       case Some(who) if who != stateId =>
         throw new IllegalStateException(
           s"MaintainedDeltaJoin('$name'): emit lake ${out.root} is owned " +
@@ -802,248 +740,223 @@ final class MaintainedDeltaJoin(
 
   // ---- refresh ----------------------------------------------------------
 
+  /** The span loop. [[pending]] is (pairs, emit): each state is guarded
+    * by its OWN replay marker, so a crash between the pair commit and a
+    * companion's completes the missing commits when the span replays
+    * (the cursor advances only after the whole callback). The emitted
+    * output batch has the same shape of guard: the emit sequence file
+    * plus the emit lake's own commit marker.
+    */
+  private val loop = new SpanRefresh[(Boolean, Boolean)](
+      lake, "djoin", "djoin", name, states) {
+    private def isSide(s: (String, String)) =
+      col("schema") === s._1 && col("table") === s._2
+    private val onSides = isSide(left) || isSide(right)
+
+    protected def onTable: Column = onSides
+
+    override protected def logs: Seq[BucketedStateLog] =
+      Seq(states) ++ rcounts ++ lnulls ++ lcounts ++ rnulls
+
+    // the row-key flags' contract (MaintainedJoin's badRowKey: the flag
+    // requires a single-column identity whose value IS what the
+    // extractor reads — a wrong flag would silently restrict the fold
+    // away from real matches), the immutable tier's, and the REPLICA
+    // IDENTITY FULL contract (an update/delete without a before image
+    // cannot retract its old pairs — fail loud, never corrupt)
+    override protected def contracts: Seq[(String, Column, String)] = {
+      def rowKey(side: (String, String), key: Column => Column, n: String) =
+        (s"${n}RowKey", RowKeyContract.violation(isSide(side), key),
+          s"MaintainedDeltaJoin('$name'): KeyIsRowKey is set for " +
+            s"${side._1}.${side._2} but the span carries events whose " +
+            "key_names are not exactly the single join-key column extracted " +
+            "verbatim — the restricted fold keys on the replica identity")
+      def immutable(side: (String, String), key: Column => Column,
+          keyCol: Option[String], n: String) =
+        (s"${n}Immutable", ImmutableContract.violation(isSide(side), key, keyCol.get),
+          s"MaintainedDeltaJoin('$name'): KeyImmutable is set for " +
+            s"${side._1}.${side._2} but the span carries a key-changing " +
+            "update, a column-less delete/update image, or a declared " +
+            "*KeyCol that does not match the extractor — the restricted " +
+            "fold could resurrect stale versions; drop the flag if this " +
+            "side's join key legitimately moves")
+      (if (leftKeyIsRowKey) Seq(rowKey(left, leftKey, "left")) else Nil) ++
+        (if (rightKeyIsRowKey) Seq(rowKey(right, rightKey, "right")) else Nil) ++
+        (if (leftKeyImmutable && !leftKeyIsRowKey)
+          Seq(immutable(left, leftKey, leftKeyCol, "left")) else Nil) ++
+        (if (rightKeyImmutable && !rightKeyIsRowKey)
+          Seq(immutable(right, rightKey, rightKeyCol, "right")) else Nil) ++
+        Seq(
+          ("beforeless", onSides && col("op").isin("update", "delete") &&
+            col("before").isNull,
+            s"MaintainedDeltaJoin('$name'): an update/delete on " +
+              s"${left._1}.${left._2} or ${right._1}.${right._2} carries no " +
+              "before image — REPLICA IDENTITY FULL is required (the " +
+              "retraction is computed from the old image)"),
+          ("afterless", onSides && col("op") === "update" && col("after").isNull,
+            s"MaintainedDeltaJoin('$name'): an update carries no after " +
+              "image — the envelope is not the lake's insert/update/delete " +
+              "shape this maintainer consumes"))
+    }
+
+    // BEFORE the poll: a mismatched join type must refuse even when the
+    // cursor is already current, and a shared/foreign emit lake must
+    // refuse before anything could be emitted into it
+    override protected def beforePoll(spark: SparkSession, f: FileSystem): Unit = {
+      checkJoinType(f, writer = true)
+      emitTo.foreach(out => checkEmitProducer(spark, out))
+    }
+
+    protected def pending(spark: SparkSession, f: FileSystem,
+        key: (Long, Long)): Option[(Boolean, Boolean)] = {
+      val needPairs = !states.isCommitted(f, key)
+      val needL = outerL && (!rcounts.get.isCommitted(f, key) ||
+        !lnulls.get.isCommitted(f, key))
+      val needR = outerR && (!lcounts.get.isCommitted(f, key) ||
+        !rnulls.get.isCommitted(f, key))
+      val needEmit = emitTo.exists(out => !emitCommitted(spark, f, out, key))
+      Option.when(needPairs || needL || needR || needEmit)((needPairs, needEmit))
+    }
+
+    override protected def seedSlices: Int = totalSlices
+
+    // full join of both sides through BASE
+    protected def seed(span: RefreshSpan, need: (Boolean, Boolean)): Unit =
+      seedAll(span.spark, span.f, span.key, emit = need._2)
+
+    protected def delta(span: RefreshSpan, need: (Boolean, Boolean)): Unit = {
+      val (needPairs, needEmit) = need
+      val (spark, f, key, prevKey) = (span.spark, span.f, span.key, span.prevKey)
+      // ONE job materializes BOTH side deltas (each scans the same
+      // span; two separate checkpoints scheduled it twice), and ONE
+      // bounded collect (≤ 2 rows) serves every emptiness probe —
+      // dl, dr, and each outer side's preserved-delta — replacing
+      // four driver-side isEmpty jobs (the delta refresh is
+      // per-action-latency-bound). The per-side frames filter the
+      // checkpointed union, so values are bit-identical: sideDelta
+      // aggregates per side BEFORE the union, and the tag filter
+      // recovers exactly its rows.
+      val dBoth = sideDelta(span.frame, left, leftKey, keepNullJk = outerL)
+        .withColumn("_sd", lit("l"))
+        .unionByName(sideDelta(span.frame, right, rightKey,
+          keepNullJk = outerR).withColumn("_sd", lit("r")))
+        .localCheckpoint()
+      val dlF = dBoth.filter(col("_sd") === "l").drop("_sd")
+      val drF = dBoth.filter(col("_sd") === "r").drop("_sd")
+      val dl = if (outerL) dlF.filter(col("jk").isNotNull) else dlF
+      val dr = if (outerR) drF.filter(col("jk").isNotNull) else drF
+      // empty-delta short-circuits: a span churning only one side
+      // must not pay the OTHER side's fold for guaranteed-empty
+      // terms. (When a side keeps null jks, its non-null count is
+      // the filtered frame's emptiness; otherwise all == non-null.)
+      val emptyStats = dBoth.groupBy("_sd").agg(
+        count(lit(1)).as("all"),
+        sum(when(col("jk").isNotNull, 1L).otherwise(0L)).as("nn"))
+        .collect().map(r => r.getString(0) ->
+          (r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))).toMap
+      val dlEmpty = emptyStats.get("l").forall(_._2 == 0L)
+      val drEmpty = emptyStats.get("r").forall(_._2 == 0L)
+      val dlAllEmpty = emptyStats.get("l").forall(_._1 == 0L)
+      val drAllEmpty = emptyStats.get("r").forall(_._1 == 0L)
+      // span-gauge totals across the pair state AND the outer
+      // companions (companion maintenance and replay-repair spans
+      // must be observable) — one recordSpan
+      // per applied span, below
+      var gDirty = 0L; var gRewritten = 0; var gCarried = 0
+      // the pair delta feeds the pair commit AND the emission (a
+      // replay that lost only the output batch recomputes it —
+      // deterministic: the span plus the interval-pinned folds)
+      val d: Option[DataFrame] =
+        if (!needPairs && !needEmit) None
+        else Some {
+          // Δout = ΔL ⋈ R_new + L_new ⋈ ΔR − ΔL ⋈ ΔR, all signed;
+          // the cross term subtracts because both one-sided terms
+          // read the NEW folds (each already contains the other
+          // side's delta)
+          def part1 =
+            if (dlEmpty) Seq.empty
+            else Seq(paired(dl, sideAsOf(spark, right, rightKey, key._2,
+              key._1, rightKeyIsRowKey, rightKeyImmutable,
+              Some(dl.select("jk"))), col("l.s")))
+          def part2 =
+            if (drEmpty) Seq.empty
+            else Seq(paired(sideAsOf(spark, left, leftKey, key._2, key._1,
+              leftKeyIsRowKey, leftKeyImmutable, Some(dr.select("jk"))),
+              dr, col("r.s")))
+          def part3 =
+            if (dlEmpty || drEmpty) Seq.empty
+            else Seq(paired(dl, dr, -col("l.s") * col("r.s")))
+          val parts = part1 ++ part2 ++ part3
+          (if (parts.isEmpty) paired(dl, dr, lit(0L)) // empty frame
+            else parts.reduce(_ unionByName _))
+            .groupBy("jk", "lk", "rk", "lh", "rh")
+            .agg(first(col("left_after"), ignoreNulls = true).as("left_after"),
+              first(col("right_after"), ignoreNulls = true).as("right_after"),
+              sum(col("dn")).as("dn"))
+            .filter(col("dn") =!= 0L)
+            // LAZY: the per-slice planning collect (or the emitted
+            // batch write on an emit-only replay) materializes it
+            .localCheckpoint(eager = false)
+        }
+      if (needPairs) {
+        // bounded planning pull: ≤ stateBuckets × subBuckets rows
+        val perSlice = d.get.groupBy(
+            states.bucketExpr(Seq(col("jk"))).as("b"),
+            states.subExpr.as("s"))
+          .count().collect()
+        val dirty = perSlice.map(r => (r.getInt(0), r.getInt(1))).toSet
+        val deltaPairs = perSlice.map(_.getLong(2)).sum
+        if (dirty.isEmpty) {
+          span.carryForward(states, stateSchema)
+          gCarried += stateBuckets * subBuckets
+        } else {
+          val prevTouched = states.readSlices(spark, prevKey.get, dirty,
+            stateSchema)
+          states.commitSlices(f, merged(prevTouched, d.get), dirty,
+            prevKey, key)
+          gDirty += deltaPairs
+          gRewritten += dirty.size
+          gCarried += stateBuckets * subBuckets - dirty.size
+        }
+      }
+      val duL = if (!outerL) None else {
+        val (du, dDirty, dRw, dCa) = refreshOuterSide(span,
+          counts = rcounts.get, nulls = lnulls.get,
+          nullsSchema = lnullSchema,
+          preservedDelta = dlF, preservedEmpty = dlAllEmpty,
+          otherDelta = dr, otherEmpty = drEmpty,
+          preservedAsOf = jks => sideAsOf(spark, left, leftKey, key._2,
+            key._1, leftKeyIsRowKey, leftKeyImmutable, jks),
+          kName = "lk", hName = "lh", imgName = "left_after",
+          needDu = needEmit)
+        gDirty += dDirty; gRewritten += dRw; gCarried += dCa
+        du
+      }
+      val duR = if (!outerR) None else {
+        val (du, dDirty, dRw, dCa) = refreshOuterSide(span,
+          counts = lcounts.get, nulls = rnulls.get,
+          nullsSchema = rnullSchema,
+          preservedDelta = drF, preservedEmpty = drAllEmpty,
+          otherDelta = dl, otherEmpty = dlEmpty,
+          preservedAsOf = jks => sideAsOf(spark, right, rightKey, key._2,
+            key._1, rightKeyIsRowKey, rightKeyImmutable, jks),
+          kName = "rk", hName = "rh", imgName = "right_after",
+          needDu = needEmit)
+        gDirty += dDirty; gRewritten += dRw; gCarried += dCa
+        du
+      }
+      if (needEmit)
+        emitSpan(spark, f, emitTo.get, key, prevKey.get, d.get,
+          duL, duR)
+      span.record(gDirty, gRewritten, gCarried)
+    }
+  }
+
   /** Apply every newly committed lake batch (bounded to `within` under a
     * [[Maintainer.refreshCoherent]] barrier). Returns batches applied.
     */
   override def refresh(spark: SparkSession,
-      within: Option[(Long, Long)] = None): Int = {
-    val t0 = System.nanoTime
-    val n = refreshSpans(spark, within)
-    ops.recordRefresh((System.nanoTime - t0) / 1e6, n)
-    n
-  }
-
-  private def refreshSpans(spark: SparkSession,
-      within: Option[(Long, Long)]): Int = {
-    // BEFORE the poll: a mismatched join type must refuse even when the
-    // cursor is already current (the poll callback only runs on new
-    // spans), and a shared/foreign emit lake must refuse before anything
-    // could be emitted into it
-    checkJoinType(states.fs(spark), writer = true)
-    emitTo.foreach(out => checkEmitProducer(spark, out))
-    val from = lake.cursorInterval(spark, cursorName)
-    lake.poll(spark, cursorName, within) { span =>
-      val f = states.fs(spark)
-      def isSide(s: (String, String)) =
-        col("schema") === s._1 && col("table") === s._2
-      val onSides = isSide(left) || isSide(right)
-      // one span pass: bounds, truncate, the REPLICA IDENTITY FULL
-      // contract (an update/delete without a before image cannot
-      // retract its old pairs — fail loud, never corrupt), and the
-      // row-key flags' contract (MaintainedJoin's badRowKey: the flag
-      // requires a single-column identity whose value IS what the
-      // extractor reads — a wrong flag would silently restrict the
-      // fold away from real matches)
-      def badRowKey(s: (String, String), key: Column => Column, on: Boolean) =
-        if (!on) lit(false) else RowKeyContract.violation(isSide(s), key)
-      def badImmutable(s: (String, String), key: Column => Column,
-          keyCol: Option[String], on: Boolean) =
-        if (!on) lit(false)
-        else ImmutableContract.violation(isSide(s), key, keyCol.get)
-      val bounds = span.agg(
-        min(col("batch_id").cast("long")), max(col("batch_id").cast("long")),
-        max(when(onSides && col("op") === "truncate", 1).otherwise(0)),
-        max(when(onSides && col("op").isin("update", "delete") &&
-          col("before").isNull, 1).otherwise(0)),
-        max(when(onSides && col("op") === "update" &&
-          col("after").isNull, 1).otherwise(0)),
-        sum(when(onSides, 1L).otherwise(0L)),
-        max(when(badRowKey(left, leftKey, leftKeyIsRowKey), 1).otherwise(0)),
-        max(when(badRowKey(right, rightKey, rightKeyIsRowKey), 1).otherwise(0)),
-        max(when(badImmutable(left, leftKey, leftKeyCol,
-          leftKeyImmutable && !leftKeyIsRowKey), 1).otherwise(0)),
-        max(when(badImmutable(right, rightKey, rightKeyCol,
-          rightKeyImmutable && !rightKeyIsRowKey), 1).otherwise(0))
-      ).head()
-      def rowKeyViolation(side: (String, String)) = new IllegalStateException(
-        s"MaintainedDeltaJoin('$name'): KeyIsRowKey is set for " +
-          s"${side._1}.${side._2} but the span carries events whose " +
-          "key_names are not exactly the single join-key column extracted " +
-          "verbatim — the restricted fold keys on the replica identity")
-      if (!bounds.isNullAt(0) && bounds.getInt(6) == 1)
-        throw rowKeyViolation(left)
-      if (!bounds.isNullAt(0) && bounds.getInt(7) == 1)
-        throw rowKeyViolation(right)
-      def immutableViolation(side: (String, String)) = new IllegalStateException(
-        s"MaintainedDeltaJoin('$name'): KeyImmutable is set for " +
-          s"${side._1}.${side._2} but the span carries a key-changing " +
-          "update, a column-less delete/update image, or a declared " +
-          "*KeyCol that does not match the extractor — the restricted " +
-          "fold could resurrect stale versions; drop the flag if this " +
-          "side's join key legitimately moves")
-      if (leftKeyImmutable && !leftKeyIsRowKey && !bounds.isNullAt(0) &&
-          bounds.getInt(8) == 1) throw immutableViolation(left)
-      if (rightKeyImmutable && !rightKeyIsRowKey && !bounds.isNullAt(0) &&
-          bounds.getInt(9) == 1) throw immutableViolation(right)
-      if (!bounds.isNullAt(0) && bounds.getInt(3) == 1)
-        throw new IllegalStateException(
-          s"MaintainedDeltaJoin('$name'): an update/delete on " +
-            s"${left._1}.${left._2} or ${right._1}.${right._2} carries no " +
-            "before image — REPLICA IDENTITY FULL is required (the " +
-            "retraction is computed from the old image)")
-      if (!bounds.isNullAt(0) && bounds.getInt(4) == 1)
-        throw new IllegalStateException(
-          s"MaintainedDeltaJoin('$name'): an update carries no after " +
-            "image — the envelope is not the lake's insert/update/delete " +
-            "shape this maintainer consumes")
-      if (!bounds.isNullAt(0)) {
-        val spanRows = bounds.getLong(5)
-        val key = (math.min(from._1, bounds.getLong(0)),
-          math.max(from._2, bounds.getLong(1)))
-        // each state is guarded by its OWN replay marker: a crash
-        // between the pair commit and a companion's completes the
-        // missing commits when the span replays (the cursor advances
-        // only after the whole callback). The emitted output batch has
-        // the same shape of guard: the emit sequence file plus the emit
-        // lake's own commit marker.
-        val needPairs = !states.isCommitted(f, key)
-        val needL = outerL && (!rcounts.get.isCommitted(f, key) ||
-          !lnulls.get.isCommitted(f, key))
-        val needR = outerR && (!lcounts.get.isCommitted(f, key) ||
-          !rnulls.get.isCommitted(f, key))
-        val needEmit = emitTo.exists(out => !emitCommitted(spark, f, out, key))
-        if (needPairs || needL || needR || needEmit) {
-          val prevKey = states.latestWithin(f, from)
-          val truncated = bounds.getInt(2) == 1
-          if (truncated || prevKey.isEmpty) {
-            // SEED / truncate: full join of both sides through BASE
-            // (a compacted+vacuumed lake holds rows no surviving
-            // changelog row mentions — the delta path cannot see them)
-            seedAll(spark, f, key, needEmit)
-            ops.recordSpan(spanRows, spanRows, totalSlices, 0)
-          } else {
-            // ONE job materializes BOTH side deltas (each scans the same
-            // span; two separate checkpoints scheduled it twice), and ONE
-            // bounded collect (≤ 2 rows) serves every emptiness probe —
-            // dl, dr, and each outer side's preserved-delta — replacing
-            // four driver-side isEmpty jobs (r21 verdict #5: ref_dj is
-            // per-action-latency-bound). The per-side frames filter the
-            // checkpointed union, so values are bit-identical: sideDelta
-            // aggregates per side BEFORE the union, and the tag filter
-            // recovers exactly its rows.
-            val dBoth = sideDelta(span, left, leftKey, keepNullJk = outerL)
-              .withColumn("_sd", lit("l"))
-              .unionByName(sideDelta(span, right, rightKey,
-                keepNullJk = outerR).withColumn("_sd", lit("r")))
-              .localCheckpoint()
-            val dlF = dBoth.filter(col("_sd") === "l").drop("_sd")
-            val drF = dBoth.filter(col("_sd") === "r").drop("_sd")
-            val dl = if (outerL) dlF.filter(col("jk").isNotNull) else dlF
-            val dr = if (outerR) drF.filter(col("jk").isNotNull) else drF
-            // empty-delta short-circuits: a span churning only one side
-            // must not pay the OTHER side's fold for guaranteed-empty
-            // terms. (When a side keeps null jks, its non-null count is
-            // the filtered frame's emptiness; otherwise all == non-null.)
-            val emptyStats = dBoth.groupBy("_sd").agg(
-              count(lit(1)).as("all"),
-              sum(when(col("jk").isNotNull, 1L).otherwise(0L)).as("nn"))
-              .collect().map(r => r.getString(0) ->
-                (r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))).toMap
-            val dlEmpty = emptyStats.get("l").forall(_._2 == 0L)
-            val drEmpty = emptyStats.get("r").forall(_._2 == 0L)
-            val dlAllEmpty = emptyStats.get("l").forall(_._1 == 0L)
-            val drAllEmpty = emptyStats.get("r").forall(_._1 == 0L)
-            // span-gauge totals across the pair state AND the outer
-            // companions (ADVICE r19: companion maintenance and
-            // replay-repair spans must be observable) — one recordSpan
-            // per applied span, below
-            var gDirty = 0L; var gRewritten = 0; var gCarried = 0
-            // the pair delta feeds the pair commit AND the emission (a
-            // replay that lost only the output batch recomputes it —
-            // deterministic: the span plus the interval-pinned folds)
-            val d: Option[DataFrame] =
-              if (!needPairs && !needEmit) None
-              else Some {
-                // Δout = ΔL ⋈ R_new + L_new ⋈ ΔR − ΔL ⋈ ΔR, all signed;
-                // the cross term subtracts because both one-sided terms
-                // read the NEW folds (each already contains the other
-                // side's delta)
-                def part1 =
-                  if (dlEmpty) Seq.empty
-                  else Seq(paired(dl, sideAsOf(spark, right, rightKey, key._2,
-                    key._1, rightKeyIsRowKey, rightKeyImmutable,
-                    Some(dl.select("jk"))), col("l.s")))
-                def part2 =
-                  if (drEmpty) Seq.empty
-                  else Seq(paired(sideAsOf(spark, left, leftKey, key._2, key._1,
-                    leftKeyIsRowKey, leftKeyImmutable, Some(dr.select("jk"))),
-                    dr, col("r.s")))
-                def part3 =
-                  if (dlEmpty || drEmpty) Seq.empty
-                  else Seq(paired(dl, dr, -col("l.s") * col("r.s")))
-                val parts = part1 ++ part2 ++ part3
-                (if (parts.isEmpty) paired(dl, dr, lit(0L)) // empty frame
-                  else parts.reduce(_ unionByName _))
-                  .groupBy("jk", "lk", "rk", "lh", "rh")
-                  .agg(first(col("left_after"), ignoreNulls = true).as("left_after"),
-                    first(col("right_after"), ignoreNulls = true).as("right_after"),
-                    sum(col("dn")).as("dn"))
-                  .filter(col("dn") =!= 0L)
-                  // LAZY: the per-slice planning collect (or the emitted
-                  // batch write on an emit-only replay) materializes it
-                  .localCheckpoint(eager = false)
-              }
-            if (needPairs) {
-              // bounded planning pull: ≤ stateBuckets × subBuckets rows
-              val perSlice = d.get.groupBy(
-                  states.bucketExpr(Seq(col("jk"))).as("b"),
-                  states.subExpr.as("s"))
-                .count().collect()
-              val dirty = perSlice.map(r => (r.getInt(0), r.getInt(1))).toSet
-              val deltaPairs = perSlice.map(_.getLong(2)).sum
-              if (dirty.isEmpty) {
-                states.commit(f, emptyState(spark), Set.empty, prevKey, key)
-                gCarried += stateBuckets * subBuckets
-              } else {
-                val prevTouched = states.readSlices(spark, prevKey.get, dirty,
-                  stateSchema)
-                states.commitSlices(f, merged(prevTouched, d.get), dirty,
-                  prevKey, key)
-                gDirty += deltaPairs
-                gRewritten += dirty.size
-                gCarried += stateBuckets * subBuckets - dirty.size
-              }
-            }
-            val duL = if (!outerL) None else {
-              val (du, dDirty, dRw, dCa) = refreshOuterSide(spark, f, key, from,
-                counts = rcounts.get, nulls = lnulls.get,
-                nullsSchema = lnullSchema,
-                preservedDelta = dlF, preservedEmpty = dlAllEmpty,
-                otherDelta = dr, otherEmpty = drEmpty,
-                preservedAsOf = jks => sideAsOf(spark, left, leftKey, key._2,
-                  key._1, leftKeyIsRowKey, leftKeyImmutable, jks),
-                kName = "lk", hName = "lh", imgName = "left_after",
-                needDu = needEmit)
-              gDirty += dDirty; gRewritten += dRw; gCarried += dCa
-              du
-            }
-            val duR = if (!outerR) None else {
-              val (du, dDirty, dRw, dCa) = refreshOuterSide(spark, f, key, from,
-                counts = lcounts.get, nulls = rnulls.get,
-                nullsSchema = rnullSchema,
-                preservedDelta = drF, preservedEmpty = drAllEmpty,
-                otherDelta = dl, otherEmpty = dlEmpty,
-                preservedAsOf = jks => sideAsOf(spark, right, rightKey, key._2,
-                  key._1, rightKeyIsRowKey, rightKeyImmutable, jks),
-                kName = "rk", hName = "rh", imgName = "right_after",
-                needDu = needEmit)
-              gDirty += dDirty; gRewritten += dRw; gCarried += dCa
-              du
-            }
-            if (needEmit)
-              emitSpan(spark, f, emitTo.get, key, prevKey.get, d.get,
-                duL, duR)
-            ops.recordSpan(spanRows, gDirty, gRewritten, gCarried)
-          }
-        }
-        states.gcWithin(f, from)
-        rcounts.foreach(_.gcWithin(f, from))
-        lnulls.foreach(_.gcWithin(f, from))
-        lcounts.foreach(_.gcWithin(f, from))
-        rnulls.foreach(_.gcWithin(f, from))
-      }
-    }
-  }
+      within: Option[(Long, Long)] = None): Int = loop.refresh(spark, within)
 
   /** Total slice count across the pair state and the outer companions —
     * the seed's "every bucket rewritten" span gauge.
@@ -1162,8 +1075,7 @@ final class MaintainedDeltaJoin(
     * empty or unasked; delta rows; slices rewritten; slices carried) —
     * the last three feed the span gauges.
     */
-  private def refreshOuterSide(spark: SparkSession, f: FileSystem,
-      key: (Long, Long), from: (Long, Long),
+  private def refreshOuterSide(span: RefreshSpan,
       counts: BucketedStateLog, nulls: BucketedStateLog,
       nullsSchema: org.apache.spark.sql.types.StructType,
       preservedDelta: DataFrame, preservedEmpty: Boolean,
@@ -1171,6 +1083,7 @@ final class MaintainedDeltaJoin(
       preservedAsOf: Option[DataFrame] => DataFrame,
       kName: String, hName: String, imgName: String,
       needDu: Boolean): (Option[DataFrame], Long, Int, Int) = {
+    val (spark, f, key, from) = (span.spark, span.f, span.key, span.from)
     val needCounts = !counts.isCommitted(f, key)
     val needNulls = !nulls.isCommitted(f, key)
     if (!needCounts && !needNulls && !needDu) return (None, 0L, 0, 0)
@@ -1262,8 +1175,7 @@ final class MaintainedDeltaJoin(
     var dirtyRows = 0L; var rewritten = 0; var carried = 0
     if (needCounts) cDelta match {
       case None =>
-        counts.commit(f, emptyOf(spark, countSchema), Set.empty,
-          Some(cPrev), key)
+        span.carryForward(counts, countSchema, Some(cPrev))
         carried += stateBuckets
       case Some(cd) =>
         // dirty buckets came from the shared planning collect above;
@@ -1324,8 +1236,7 @@ final class MaintainedDeltaJoin(
 
     if (needNulls) du match {
       case None =>
-        nulls.commit(f, emptyOf(spark, nullsSchema), Set.empty,
-          Some(nPrev), key)
+        span.carryForward(nulls, nullsSchema, Some(nPrev))
         carried += stateBuckets * nulls.subs
       case Some(duF) =>
         val duNamed = duF.select(col("jk"), col("k").as(kName),
@@ -1410,11 +1321,8 @@ final class MaintainedDeltaJoin(
   private[sinks] def unmatchedLeftLog: Option[BucketedStateLog] = lnulls
 
   /** Ops gauges for the `graft_lake_*` family. */
-  def gauges(spark: SparkSession): Seq[(String, Double)] = {
-    val (neg, pos) = lake.cursorInterval(spark, cursorName)
-    val lag = lake.committedBatchIds(spark).count(id => id < neg || id > pos)
-    Seq(s"djoin_${name}_lag_batches" -> lag.toDouble) ++ ops.gauges
-  }
+  def gauges(spark: SparkSession): Seq[(String, Double)] =
+    loop.gauges(spark, asOf = false)()
 }
 
 object MaintainedDeltaJoin {

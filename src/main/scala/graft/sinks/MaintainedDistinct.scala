@@ -1,7 +1,7 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.IncrementalDistinct
 
@@ -17,9 +17,8 @@ import graft.operators.IncrementalDistinct
   * Same persistence story as the other maintainers: refcount rows live
   * in a [[BucketedStateLog]] hash-bucketed on the GROUP key under a
   * versioned manifest, a refresh reads and rewrites only the buckets
-  * whose groups the span's delta touched, and versions commit by atomic
-  * manifest rename BEFORE the lake cursor advances — crash replay finds
-  * the version committed and skips the rewrite. Refcounts need no
+  * whose groups the span's delta touched, and the crash protocol is the
+  * shared one of [[SpanRefresh]]. Refcounts need no
   * dirty-group recompute (the merge is exact arithmetic), so the only
   * full-rebuild triggers are `truncate` and the SEED refresh (the first
   * span after a compacted lake holds groups only in BASE, so the seed
@@ -77,10 +76,8 @@ final class MaintainedDistinct(
   private val stateDir = new Path(lake.root, s"_graft_views/$name")
   private val states = new BucketedStateLog(stateDir, stateBuckets,
     dist.groupCols, subBuckets, Seq("v"))
-  private val ops = new MaintainerOps("distinct", name)
-  private def cursorName = s"view_$name"
 
-  override def stateId: String = s"${lake.root}#$cursorName"
+  override def stateId: String = s"${lake.root}#${loop.cursorName}"
   // ((version key, manifest mtime), (max, p50) slice bytes) of the last
   // skew-gauge scrape — the mtime token invalidates across processes
   // and in-place rebuild recommits alike
@@ -199,17 +196,68 @@ final class MaintainedDistinct(
 
   private def stateSchema(spark: SparkSession) = dist.init(spark).schema
 
-  /** Apply every newly committed lake batch. Returns the number of
-    * batches applied (0 = already current).
-    */
-  override def refresh(spark: SparkSession,
-      within: Option[(Long, Long)] = None): Int = {
-    checkFp(states.fs(spark), adoptIfAbsent = true)
-    val t0 = System.nanoTime
-    val n = refreshSpans(spark, within)
-    ops.recordRefresh((System.nanoTime - t0) / 1e6, n)
-    n
+  private val loop = new OneLogRefresh(lake, "distinct", "view", name, states) {
+    private val isTable = col("schema") === schemaName && col("table") === table
+
+    protected def onTable: Column = isTable
+
+    override protected def beforePoll(spark: SparkSession, f: FileSystem): Unit =
+      checkFp(f, adoptIfAbsent = true)
+
+    // re-check per span, right before any commit: narrows (cannot fully
+    // close — the maintainer contract is single-writer per cursor, like
+    // every refresh here) the window where a refresh that passed the
+    // entry check races a concurrent rebuild's fingerprint adoption and
+    // merges old-model deltas into the rebuilt state
+    override protected def beforeSpan(f: FileSystem): Unit =
+      checkFp(f, adoptIfAbsent = false)
+
+    // the transform sees the current rows as an insert-envelope so one
+    // transform covers both the delta and the recompute paths
+    protected def seed(span: RefreshSpan, work: Unit): Unit =
+      states.commit(span.f, dist.recomputeAll(currentAsOf(span.spark, span.key)),
+        (0 until stateBuckets).toSet, None, span.key)
+
+    protected def delta(span: RefreshSpan, work: Unit): Unit = {
+      val spark = span.spark
+      // LAZY: the per-slice planning collect right below is the
+      // materializing action (eager spent a dedicated job)
+      val d = dist.delta(transform(span.frame.filter(isTable)))
+        .localCheckpoint(eager = false)
+      // bounded planning pull: ≤ stateBuckets × subBuckets rows —
+      // per-(bucket, sub) counts give the dirty slice set AND the
+      // delta's (group, value) cardinality (the dirty-keys gauge) in one
+      // job. The delta's v column routes through the SAME subExpr the
+      // state write uses, so a (group, value) row's slice agrees on both
+      // sides by construction.
+      val perSlice = d
+        .groupBy(states.bucketExpr(dist.groupCols.map(col)).as("b"),
+          states.subExpr.as("s"))
+        .count().collect()
+      val dirty = perSlice.map(r => (r.getInt(0), r.getInt(1))).toSet
+      val deltaPairs = perSlice.map(_.getLong(2)).sum
+      if (dirty.isEmpty) {
+        span.carryForward(states, stateSchema(spark))
+        span.record(0, 0, stateBuckets)
+      } else {
+        // merge input = the DIRTY slices only: a hot bucket's clean
+        // sub-slices neither feed the merge nor get rewritten
+        val prevTouched =
+          states.readSlices(spark, span.prevKey.get, dirty, stateSchema(spark))
+        states.commitSlices(span.f, dist.stepMerge(prevTouched, d), dirty,
+          span.prevKey, span.key)
+        // SLICE counts, not bucket counts: at subBuckets = 1 they
+        // coincide; above it the rewritten/carried series shows the
+        // sub-slice economics the feature delivers — a whole-bucket
+        // count would hide the very reduction these gauges exist to
+        // surface
+        span.record(deltaPairs, dirty.size, stateBuckets * subBuckets - dirty.size)
+      }
+    }
   }
+
+  override def refresh(spark: SparkSession,
+      within: Option[(Long, Long)] = None): Int = loop.refresh(spark, within)
 
   /** Full recompute of the state from the source table as of the applied
     * interval, committed as a full rewrite under the SAME version key,
@@ -246,20 +294,7 @@ final class MaintainedDistinct(
         "has no parameter fingerprint — its state follows the changelog " +
         "and has nothing to migrate")
     val f = states.fs(spark)
-    // Target interval: the UNION of the latest committed version and the
-    // cursor's applied interval. Normally they coincide; after a crashed
-    // rebuild lost the newest manifest, the surviving version is an older
-    // replay-prev while the cursor already covers the wider span —
-    // recommitting at the survivor's key would silently drop the batches
-    // between them (poll never re-delivers inside the cursor).
-    val latest = states.latest(f)
-    val from = lake.cursorInterval(spark, cursorName)
-    val cursorKey = if (from._2 == Long.MinValue) None else Some(from)
-    val target = (latest, cursorKey) match {
-      case (Some(k), Some(c)) =>
-        Some((math.min(k._1, c._1), math.max(k._2, c._2)))
-      case (k, c) => k.orElse(c)
-    }
+    val target = loop.rebuildTarget(spark, f)
     target match {
       case None => fingerprint.foreach(writeFp(f, _))
       case Some(key) =>
@@ -300,93 +335,6 @@ final class MaintainedDistinct(
       lit(null).cast(cur.schema("after").dataType).as("before"),
       col("after"))).select(col("after"))
   }
-
-  private def refreshSpans(spark: SparkSession,
-      within: Option[(Long, Long)]): Int = {
-    val from = lake.cursorInterval(spark, cursorName)
-    lake.poll(spark, cursorName, within) { span =>
-      val f = states.fs(spark)
-      // re-check per span, right before any commit: narrows (cannot
-      // fully close — the maintainer contract is single-writer per
-      // cursor, like every refresh here) the window where a refresh
-      // that passed the entry check races a concurrent rebuild's
-      // fingerprint adoption and merges old-model deltas into the
-      // rebuilt state
-      checkFp(f, adoptIfAbsent = false)
-      val isTable = col("schema") === schemaName && col("table") === table
-      val bounds = span
-        .agg(min(col("batch_id").cast("long")), max(col("batch_id").cast("long")),
-          max(when(isTable && col("op") === "truncate", 1).otherwise(0)),
-          // span rows for THIS table — rides the same one-pass aggregate
-          sum(when(isTable, 1L).otherwise(0L)))
-        .head()
-      // a span of only EMPTY batches has null bounds — let poll advance
-      if (!bounds.isNullAt(0)) {
-        val spanRows = bounds.getLong(3)
-        val key = (math.min(from._1, bounds.getLong(0)),
-          math.max(from._2, bounds.getLong(1)))
-        if (!states.isCommitted(f, key)) {
-          val prevKey = states.latestWithin(f, from)
-          val events = transform(span.filter(isTable))
-          // recompute source: see [[currentAsOf]] — the transform sees
-          // the current rows as an insert-envelope so one transform
-          // covers both the delta and the recompute paths
-          def current = currentAsOf(spark, key)
-          val hasTruncate = bounds.getInt(2) == 1
-          // SEED recomputes through BASE (a compacted+vacuumed lake holds
-          // groups no surviving changelog row mentions)
-          if (hasTruncate || prevKey.isEmpty) {
-            states.commit(f, dist.recomputeAll(current),
-              (0 until stateBuckets).toSet, None, key)
-            ops.recordSpan(spanRows, spanRows, stateBuckets, 0)
-          } else {
-            // LAZY: the per-slice planning collect right below is the
-            // materializing action (eager spent a dedicated job)
-            val d = dist.delta(events).localCheckpoint(eager = false)
-            // bounded planning pull: ≤ stateBuckets × subBuckets rows —
-            // per-(bucket, sub) counts give the dirty slice set AND the
-            // delta's (group, value) cardinality (the dirty-keys gauge)
-            // in one job. The delta's v column routes through the SAME
-            // subExpr the state write uses, so a (group, value) row's
-            // slice agrees on both sides by construction.
-            val perSlice = d
-              .groupBy(states.bucketExpr(dist.groupCols.map(col)).as("b"),
-                states.subExpr.as("s"))
-              .count().collect()
-            val dirty = perSlice.map(r => (r.getInt(0), r.getInt(1))).toSet
-            val touched = dirty.map(_._1)
-            val deltaPairs = perSlice.map(_.getLong(2)).sum
-            if (dirty.isEmpty) {
-              // span had rows but no DML for THIS table — pure carry-forward
-              states.commit(f, stateEmpty(spark), Set.empty, prevKey, key)
-              ops.recordSpan(spanRows, 0, 0, stateBuckets)
-            } else {
-              // merge input = the DIRTY slices only: a hot bucket's clean
-              // sub-slices neither feed the merge nor get rewritten
-              val prevTouched = prevKey
-                .map(states.readSlices(spark, _, dirty, stateSchema(spark)))
-                .getOrElse(dist.init(spark))
-              states.commitSlices(f, dist.stepMerge(prevTouched, d), dirty,
-                prevKey, key)
-              // SLICE counts, not bucket counts: at subBuckets = 1 they
-              // coincide (existing gauge semantics unchanged); above it
-              // the rewritten/carried series shows the sub-slice
-              // economics the feature delivers — a whole-bucket count
-              // would hide the very reduction these gauges exist to
-              // surface
-              ops.recordSpan(spanRows, deltaPairs,
-                dirty.size, stateBuckets * subBuckets - dirty.size)
-            }
-          }
-        }
-        states.gcWithin(f, from)
-      }
-    }
-  }
-
-  private def stateEmpty(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema(spark))
 
   /** The current view: group columns plus `nd_<measure>` — group
     * cardinality, no fold, no scan of the table.
@@ -546,40 +494,35 @@ final class MaintainedDistinct(
   /** Ops gauges for the `graft_lake_*` family — same shape as
     * [[MaintainedView.gauges]]. Driver-side metadata listings only.
     */
-  def gauges(spark: SparkSession): Seq[(String, Double)] = {
-    val f = states.fs(spark)
-    val asOf = states.latest(f)
-    val (neg, pos) = lake.cursorInterval(spark, cursorName)
-    val lag = lake.committedBatchIds(spark).count(id => id < neg || id > pos)
-    // bucket-size skew: max vs median slice bytes of the served version —
-    // a hot bucket (stop-term posting list, skewed hash) shows up here
-    // long before it becomes a read stall. Memoized on (version key,
-    // manifest mtime): steady-state scrapes cost ONE getFileStatus
-    // instead of a listing per slice, while a rebuild's in-place
-    // recommit (same key, rewritten manifest) invalidates the memo in
-    // EVERY process at its next scrape — at most one in-flight scrape
-    // can store numbers raced by a recommit, and the mtime mismatch
-    // flushes them on the scrape after.
-    val (mx, p50) = asOf.map { k =>
-      val token = (k, states.manifestMtime(f, k))
-      skewMemo match {
-        case Some((`token`, cached)) if token._2 != -1L => cached
-        case _ =>
-          val s = states.bucketSizeStats(f, k)
-          // a vanished manifest (mtime -1, gc/recommit race) is NOT
-          // memoized — storing (key, -1) would serve the raced numbers
-          // for as long as the manifest stays missing, instead of the
-          // recompute the race rule promises
-          if (token._2 != -1L) skewMemo = Some((token, s))
-          s
-      }
-    }.getOrElse((0L, 0L))
-    Seq(
-      s"view_${name}_asof" -> asOf.map(_._2).getOrElse(-1L).toDouble,
-      s"view_${name}_lag_batches" -> lag.toDouble,
+  def gauges(spark: SparkSession): Seq[(String, Double)] =
+    loop.gauges(spark) { asOf =>
+      val f = states.fs(spark)
+      // bucket-size skew: max vs median slice bytes of the served version
+      // — a hot bucket (stop-term posting list, skewed hash) shows up
+      // here long before it becomes a read stall. Memoized on (version
+      // key, manifest mtime): steady-state scrapes cost ONE
+      // getFileStatus instead of a listing per slice, while a rebuild's
+      // in-place recommit (same key, rewritten manifest) invalidates the
+      // memo in EVERY process at its next scrape — at most one in-flight
+      // scrape can store numbers raced by a recommit, and the mtime
+      // mismatch flushes them on the scrape after.
+      val (mx, p50) = asOf.map { k =>
+        val token = (k, states.manifestMtime(f, k))
+        skewMemo match {
+          case Some((`token`, cached)) if token._2 != -1L => cached
+          case _ =>
+            val s = states.bucketSizeStats(f, k)
+            // a vanished manifest (mtime -1, gc/recommit race) is NOT
+            // memoized — storing (key, -1) would serve the raced numbers
+            // for as long as the manifest stays missing, instead of the
+            // recompute the race rule promises
+            if (token._2 != -1L) skewMemo = Some((token, s))
+            s
+        }
+      }.getOrElse((0L, 0L))
       // labeled (name-stable) so ONE dashboard panel plots every
       // distinct-state maintainer's skew without knowing its name
-      ops.labeled("bucket_max_bytes", mx.toDouble),
-      ops.labeled("bucket_p50_bytes", p50.toDouble)) ++ ops.gauges
-  }
+      Seq(loop.ops.labeled("bucket_max_bytes", mx.toDouble),
+        loop.ops.labeled("bucket_p50_bytes", p50.toDouble))
+    }
 }

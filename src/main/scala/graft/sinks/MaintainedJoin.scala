@@ -105,9 +105,7 @@ private[sinks] object ImmutableContract {
   * (`jk` null — one deterministic bucket, `hash(null)` is constant),
   * carried forward untouched and recomputed whole whenever a span touches
   * a null-keyed row on a preserved side. Commit protocol and crash safety
-  * are the manifest-rename marker story; the lake cursor advances only
-  * after the state commits, so a crash between the two re-delivers the
-  * span and the already-committed manifest short-circuits the rewrite.
+  * are the shared span protocol of [[SpanRefresh]].
   *
   * Prerequisite: each side's join key must be extractable from its before
   * images too — i.e. the key columns are part of the replica identity
@@ -196,10 +194,8 @@ final class MaintainedJoin(
 
   private val stateDir = new Path(lake.root, s"_graft_joins/$name")
   private val states = new BucketedStateLog(stateDir, stateBuckets)
-  private val ops = new MaintainerOps("join", name)
-  private def cursorName = s"join_$name"
 
-  override def stateId: String = s"${lake.root}#$cursorName"
+  override def stateId: String = s"${lake.root}#${loop.cursorName}"
 
   private def tableEvents(span: DataFrame, side: (String, String)): DataFrame =
     span.filter(col("schema") === side._1 && col("table") === side._2)
@@ -271,213 +267,144 @@ final class MaintainedJoin(
       empty.select(rightKey(col("after")).as("jk"), col("after").as("right_after")))
   }
 
+  private val loop = new OneLogRefresh(lake, "join", "join", name, states) {
+    private def isSide(s: (String, String)) =
+      col("schema") === s._1 && col("table") === s._2
+
+    protected def onTable: Column = isSide(left) || isSide(right)
+
+    // A row-key-flagged side must have (a) a SINGLE-column identity
+    // (FULL flags every column → the fold key is the whole row) and (b)
+    // a join-key extractor that matches that identity column's value (a
+    // wrong-column flag would make the restricted fold match nothing) —
+    // fail loud on either. BOTH images are validated: a delete carries
+    // only `before`, and a delete whose extractor diverges from the
+    // identity column would silently miss its dirty key if only `after`
+    // were checked. The immutable violations — misdeclared keyCol,
+    // column-less delete image, key-changing update — are spelled ONCE
+    // in [[ImmutableContract.violation]], shared with the view's
+    // groupIsImmutable.
+    override protected def contracts: Seq[(String, Column, String)] = {
+      def rowKey(side: (String, String), key: Column => Column, n: String) =
+        (s"${n}RowKey", RowKeyContract.violation(isSide(side), key),
+          s"${n}KeyIsRowKey is set but ${side._1}.${side._2} events carry " +
+            "a non-single-column replica identity (e.g. FULL) — the " +
+            "restricted fold keys on the replica identity, so the flag " +
+            "requires a single-column identity that IS the join key")
+      def immutable(side: (String, String), key: Column => Column,
+          keyCol: Option[String], n: String) =
+        (s"${n}Immutable", ImmutableContract.violation(isSide(side), key, keyCol.get),
+          s"KeyImmutable is set for ${side._1}.${side._2} but the span " +
+            "carries an event violating the contract — a join-key-changing " +
+            "update, a delete or update whose image lacks the key COLUMN " +
+            "(REPLICA IDENTITY FULL, or the key column in the identity, is " +
+            "required; unchanged-TOAST omission is not tolerated; " +
+            "a present column with a NULL value is fine), or a declared " +
+            "*KeyCol that does not match what the key extractor reads " +
+            "— the immutable-restricted fold could resurrect stale versions")
+      (if (leftKeyIsRowKey) Seq(rowKey(left, leftKey, "left")) else Nil) ++
+        (if (rightKeyIsRowKey) Seq(rowKey(right, rightKey, "right")) else Nil) ++
+        (if (leftKeyImmutable && !leftKeyIsRowKey)
+          Seq(immutable(left, leftKey, leftKeyCol, "left")) else Nil) ++
+        (if (rightKeyImmutable && !rightKeyIsRowKey)
+          Seq(immutable(right, rightKey, rightKeyCol, "right")) else Nil)
+    }
+
+    override protected def flags: Seq[(String, Column)] = Seq(
+      "nullTouchLeft" -> nullTouch(left, leftKey),
+      "nullTouchRight" -> nullTouch(right, rightKey))
+
+    // SEED (no prior state) rebuilds like a truncate for cost too: at
+    // seed every key is touched anyway — the probe / semi-join /
+    // anti-splice machinery degenerates to the full join with several
+    // extra shuffles. All buckets written.
+    protected def seed(span: RefreshSpan, work: Unit): Unit = {
+      val (spark, key) = (span.spark, span.key)
+      val rebuilt = joined(
+        sideAsOf(spark, left, leftKey, key._2, key._1, "left_after"),
+        sideAsOf(spark, right, rightKey, key._2, key._1, "right_after"))
+      val next = nullSegment(spark, key._2, key._1)
+        .map(rebuilt.unionByName(_)).getOrElse(rebuilt)
+      states.commit(span.f, next, (0 until stateBuckets).toSet, None, key)
+    }
+
+    protected def delta(span: RefreshSpan, work: Unit): Unit = {
+      val (spark, key, prevKey) = (span.spark, span.key, span.prevKey)
+      val schema = emptyJoin(spark).schema
+      // materialized: feeds the bucket probe, both recompute
+      // restrictions, and the splice's anti join below. LAZY: the
+      // per-bucket planning collect right below is the materializing
+      // action (eager spent a dedicated job)
+      val touched = touchedKeys(span.frame, left, leftKey)
+        .union(touchedKeys(span.frame, right, rightKey)).distinct()
+        .localCheckpoint(eager = false)
+      val preservesLeft = joinType == "left_outer" || joinType == "full_outer"
+      val preservesRight = joinType == "right_outer" || joinType == "full_outer"
+      val nullDirty =
+        (preservesLeft && span.flag("nullTouchLeft")) ||
+          (preservesRight && span.flag("nullTouchRight"))
+      // bounded planning pull: ≤ stateBuckets rows — per-bucket counts
+      // give the touched set AND the dirty-key cardinality (the ops
+      // gauge) in the one job the bucket probe always ran
+      val perBucket = touched
+        .groupBy(states.bucketCol(col("jk")).as("b")).count().collect()
+      val dirtyKeys = perBucket.map(_.getLong(1)).sum
+      val touchedBuckets = perBucket.map(_.getInt(0)).toSet ++
+        (if (nullDirty) Set(states.nullBucket) else Set.empty)
+      // ONLY the touched buckets' slices are read — the splice's input
+      // is bucket-bounded, never the whole state
+      val prevTouched =
+        states.readBuckets(spark, prevKey.get, Some(touchedBuckets), schema)
+      // a row-key side folds ONLY the touched keys' histories; the jk
+      // semi-join stays on both paths so the recomputed set is exactly
+      // `touched` (the splice's invariant). Cast to STRING: the lake's
+      // fold key is StringType and BASE bucket pruning hashes it — a
+      // typed extractor's raw value would hash into the wrong buckets
+      // and prune the right slices away
+      val restrict = Some(touched.select(col("jk").cast("string").as("k")))
+      // restriction strength order per side: row-key (prunes BASE
+      // buckets too) > declared-immutable (prunes fold input, scans BASE
+      // whole) > none (full fold, semi-joined after)
+      def rec(side: (String, String), key0: Column => Column, out: String,
+          isRowKey: Boolean, isImmutable: Boolean) =
+        if (isRowKey) sideAsOf(spark, side, key0, key._2, key._1, out, restrict)
+        else if (isImmutable)
+          sideAsOf(spark, side, key0, key._2, key._1, out, restrictImm = restrict)
+        else sideAsOf(spark, side, key0, key._2, key._1, out)
+      val recomputed = joined(
+        rec(left, leftKey, "left_after", leftKeyIsRowKey, leftKeyImmutable)
+          .join(touched, Seq("jk"), "left_semi"),
+        rec(right, rightKey, "right_after", rightKeyIsRowKey, rightKeyImmutable)
+          .join(touched, Seq("jk"), "left_semi"))
+      // a null jk never matches the anti join, so clean null-segment rows
+      // inside a touched bucket carry forward with the untouched keys;
+      // when a span touches a null-keyed row on a PRESERVED side, that
+      // segment recomputes whole (its bucket is in the touched set then)
+      val spliced = prevTouched.join(broadcast(touched), Seq("jk"), "left_anti")
+        .unionByName(recomputed)
+      val next =
+        if (nullDirty) {
+          val keyedOnly = spliced.filter(col("jk").isNotNull)
+          nullSegment(spark, key._2, key._1)
+            .map(keyedOnly.unionByName(_)).getOrElse(keyedOnly)
+        } else spliced
+      states.commit(span.f, next, touchedBuckets, prevKey, key)
+      span.record(dirtyKeys, touchedBuckets.size, stateBuckets - touchedBuckets.size)
+    }
+  }
+
   /** Apply every newly committed lake batch to the join (including a late
     * snapshot batch below the cursor's floor — a mid-stream table
     * addition). Returns the number of batches applied (0 = already
     * current).
     */
   override def refresh(spark: SparkSession,
-      within: Option[(Long, Long)] = None): Int = {
-    val t0 = System.nanoTime
-    val n = refreshSpans(spark, within)
-    ops.recordRefresh((System.nanoTime - t0) / 1e6, n)
-    n
-  }
-
-  private def refreshSpans(spark: SparkSession,
-      within: Option[(Long, Long)]): Int = {
-    val from = lake.cursorInterval(spark, cursorName)
-    lake.poll(spark, cursorName, within) { span =>
-      val f = states.fs(spark)
-      // ONE pass over the span for bounds + truncate + null-touch flags
-      // (three separate scans would each reread the span's parquet)
-      def flag(c: Column) = max(when(c, 1).otherwise(0))
-      def isSide(s: (String, String)) =
-        col("schema") === s._1 && col("table") === s._2
-      // A row-key-flagged side must have (a) a SINGLE-column identity
-      // (FULL flags every column → the fold key is the whole row) and
-      // (b) a join-key extractor that matches that identity column's
-      // value (a wrong-column flag would make the restricted fold match
-      // nothing) — fail loud on either. BOTH images are validated: a
-      // delete carries only `before`, and a delete whose extractor
-      // diverges from the identity column would silently miss its dirty
-      // key if only `after` were checked. Computed only when a flag is
-      // set (lit(false) folds the branch away otherwise).
-      def badRowKey(s: (String, String), key: Column => Column, on: Boolean) =
-        if (!on) lit(false) else RowKeyContract.violation(isSide(s), key)
-      // the observable contract violations — misdeclared keyCol,
-      // column-less delete image, key-changing update — are spelled
-      // ONCE in [[ImmutableContract.violation]], shared with the view's
-      // groupIsImmutable
-      def badImmutable(s: (String, String), key: Column => Column,
-          keyCol: Option[String], on: Boolean) =
-        if (!on) lit(false)
-        else ImmutableContract.violation(isSide(s), key, keyCol.get)
-      val bounds = span
-        .agg(min(col("batch_id").cast("long")), max(col("batch_id").cast("long")),
-          flag(col("op") === "truncate" && (isSide(left) || isSide(right))),
-          flag(nullTouch(left, leftKey)), flag(nullTouch(right, rightKey)),
-          flag(badRowKey(left, leftKey, leftKeyIsRowKey)),
-          flag(badRowKey(right, rightKey, rightKeyIsRowKey)),
-          flag(badImmutable(left, leftKey, leftKeyCol,
-            leftKeyImmutable && !leftKeyIsRowKey)),
-          flag(badImmutable(right, rightKey, rightKeyCol,
-            rightKeyImmutable && !rightKeyIsRowKey)),
-          // span rows for EITHER side — rides the same one-pass aggregate
-          // (ops gauge; never an extra scan)
-          sum(when(isSide(left) || isSide(right), 1L).otherwise(0L)))
-        .head()
-      // flag reads guard on the empty-span null bounds FIRST (an all-empty
-      // span aggregates every column to NULL, and Row.getInt on a NULL
-      // NPEs inside the poll callback → crash-looping refresh)
-      if (leftKeyIsRowKey && !bounds.isNullAt(0) && bounds.getInt(5) == 1)
-        throw new IllegalStateException(
-          s"leftKeyIsRowKey is set but ${left._1}.${left._2} events carry " +
-            "a non-single-column replica identity (e.g. FULL) — the " +
-            "restricted fold keys on the replica identity, so the flag " +
-            "requires a single-column identity that IS the join key")
-      if (rightKeyIsRowKey && !bounds.isNullAt(0) && bounds.getInt(6) == 1)
-        throw new IllegalStateException(
-          s"rightKeyIsRowKey is set but ${right._1}.${right._2} events " +
-            "carry a non-single-column replica identity (e.g. FULL) — the " +
-            "restricted fold keys on the replica identity, so the flag " +
-            "requires a single-column identity that IS the join key")
-      def immutableViolation(side: (String, String)) = new IllegalStateException(
-        s"KeyImmutable is set for ${side._1}.${side._2} but the span " +
-          "carries an event violating the contract — a join-key-changing " +
-          "update, a delete or update whose image lacks the key COLUMN " +
-          "(REPLICA IDENTITY FULL, or the key column in the identity, is " +
-          "required; unchanged-TOAST omission is not tolerated; " +
-          "a present column with a NULL value is fine), or a declared " +
-          "*KeyCol that does not match what the key extractor reads " +
-          "— the immutable-restricted fold could resurrect stale versions")
-      if (leftKeyImmutable && !leftKeyIsRowKey && !bounds.isNullAt(0) &&
-          bounds.getInt(7) == 1) throw immutableViolation(left)
-      if (rightKeyImmutable && !rightKeyIsRowKey && !bounds.isNullAt(0) &&
-          bounds.getInt(8) == 1) throw immutableViolation(right)
-      // a span of only EMPTY batches (zero rows) has null bounds: no
-      // deltas to apply — just let poll advance the cursor past them
-      if (!bounds.isNullAt(0)) {
-      val spanRows = bounds.getLong(9)
-      val key = (math.min(from._1, bounds.getLong(0)),
-        math.max(from._2, bounds.getLong(1)))
-      if (!states.isCommitted(f, key)) {
-        // lazy: stateAsOf does driver-side manifest/commit-log/mark reads
-        // at CONSTRUCTION time, and a row-key-restricted side never needs
-        // its full fold outside the rare truncate rebuild
-        lazy val lNew = sideAsOf(spark, left, leftKey, key._2, key._1, "left_after")
-        lazy val rNew = sideAsOf(spark, right, rightKey, key._2, key._1, "right_after")
-        val schema = emptyJoin(spark).schema
-        val truncated = bounds.getInt(2) == 1
-        // SEED (no prior state) rebuilds like a truncate, for two reasons:
-        //  - correctness: the dirty-key path derives touched keys from the
-        //    SPAN, but a lake compacted+vacuumed before the first refresh
-        //    holds keys only in BASE — no surviving changelog row mentions
-        //    them, so a span-driven seed would silently omit them forever;
-        //    the rebuild folds stateAsOf, which reads BASE.
-        //  - cost: at seed every key is touched anyway — the probe /
-        //    semi-join / anti-splice machinery degenerates to the full
-        //    join with several extra shuffles.
-        // one commit-log listing serves both the seed test and the
-        // dirty-key path's previous-state read (a listing per refresh is
-        // a network round-trip on object-store-backed lakes)
-        val prevKey = states.latestWithin(f, from)
-        val seeding = prevKey.isEmpty
-        if (truncated || seeding) { // rebuild at the boundary, all buckets written
-          val rebuilt = joined(lNew, rNew)
-          val next = nullSegment(spark, key._2, key._1)
-            .map(rebuilt.unionByName(_)).getOrElse(rebuilt)
-          states.commit(f, next, (0 until stateBuckets).toSet, None, key)
-          ops.recordSpan(spanRows, spanRows, stateBuckets, 0)
-        } else {
-          // materialized: feeds the bucket probe, both recompute
-          // restrictions, and the splice's anti join below. LAZY: the
-          // per-bucket planning collect right below is the materializing
-          // action (eager spent a dedicated job)
-          val touched = touchedKeys(span, left, leftKey)
-            .union(touchedKeys(span, right, rightKey)).distinct()
-            .localCheckpoint(eager = false)
-          val preservesLeft =
-            joinType == "left_outer" || joinType == "full_outer"
-          val preservesRight =
-            joinType == "right_outer" || joinType == "full_outer"
-          val nullDirty =
-            (preservesLeft && bounds.getInt(3) == 1) ||
-              (preservesRight && bounds.getInt(4) == 1)
-          // bounded planning pull: ≤ stateBuckets rows — per-bucket counts
-          // give the touched set AND the dirty-key cardinality (the ops
-          // gauge) in the one job the bucket probe always ran
-          val perBucket = touched
-            .groupBy(states.bucketCol(col("jk")).as("b")).count().collect()
-          val dirtyKeys = perBucket.map(_.getLong(1)).sum
-          val touchedBuckets = perBucket.map(_.getInt(0)).toSet ++
-            (if (nullDirty) Set(states.nullBucket) else Set.empty)
-          // ONLY the touched buckets' slices are read — the splice's
-          // input is bucket-bounded, never the whole state
-          val prevTouched = prevKey
-            .map(states.readBuckets(spark, _, Some(touchedBuckets), schema))
-            .getOrElse(emptyJoin(spark))
-          // a row-key side folds ONLY the touched keys' histories; the
-          // jk semi-join stays on both paths so the recomputed set is
-          // exactly `touched` (the splice's invariant). Cast to STRING:
-          // the lake's fold key is StringType and BASE bucket pruning
-          // hashes it — a typed extractor's raw value would hash into
-          // the wrong buckets and prune the right slices away
-          val restrict = Some(touched.select(col("jk").cast("string").as("k")))
-          // restriction strength order per side: row-key (prunes BASE
-          // buckets too) > declared-immutable (prunes fold input, scans
-          // BASE whole) > none (full fold, semi-joined after)
-          val lRec =
-            if (leftKeyIsRowKey)
-              sideAsOf(spark, left, leftKey, key._2, key._1, "left_after", restrict)
-            else if (leftKeyImmutable)
-              sideAsOf(spark, left, leftKey, key._2, key._1, "left_after",
-                restrictImm = restrict)
-            else lNew
-          val rRec =
-            if (rightKeyIsRowKey)
-              sideAsOf(spark, right, rightKey, key._2, key._1, "right_after", restrict)
-            else if (rightKeyImmutable)
-              sideAsOf(spark, right, rightKey, key._2, key._1, "right_after",
-                restrictImm = restrict)
-            else rNew
-          val recomputed = joined(
-            lRec.join(touched, Seq("jk"), "left_semi"),
-            rRec.join(touched, Seq("jk"), "left_semi"))
-          // a null jk never matches the anti join, so clean null-segment
-          // rows inside a touched bucket carry forward with the untouched
-          // keys; when a span touches a null-keyed row on a PRESERVED
-          // side, that segment recomputes whole (its bucket is in the
-          // touched set then)
-          val spliced = prevTouched.join(broadcast(touched), Seq("jk"), "left_anti")
-            .unionByName(recomputed)
-          val next =
-            if (nullDirty) {
-              val keyedOnly = spliced.filter(col("jk").isNotNull)
-              nullSegment(spark, key._2, key._1)
-                .map(keyedOnly.unionByName(_)).getOrElse(keyedOnly)
-            } else spliced
-          states.commit(f, next, touchedBuckets, prevKey, key)
-          ops.recordSpan(spanRows, dirtyKeys,
-            touchedBuckets.size, stateBuckets - touchedBuckets.size)
-        }
-      }
-      states.gcWithin(f, from)
-      }
-    }
-  }
+      within: Option[(Long, Long)] = None): Int = loop.refresh(spark, within)
 
   /** Ops gauges for the `graft_lake_*` family — concatenate with the
     * sink's, like [[MaintainedView.gauges]].
     */
-  def gauges(spark: SparkSession): Seq[(String, Double)] = {
-    val asOf = states.latest(states.fs(spark))
-    val (neg, pos) = lake.cursorInterval(spark, cursorName)
-    val lag = lake.committedBatchIds(spark).count(id => id < neg || id > pos)
-    Seq(
-      s"join_${name}_asof" -> asOf.map(_._2).getOrElse(-1L).toDouble,
-      s"join_${name}_lag_batches" -> lag.toDouble) ++ ops.gauges
-  }
+  def gauges(spark: SparkSession): Seq[(String, Double)] = loop.gauges(spark)()
 
   /** The current join: `jk`, `left_after`, `right_after`. */
   def read(spark: SparkSession): DataFrame =

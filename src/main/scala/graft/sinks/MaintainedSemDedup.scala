@@ -79,61 +79,29 @@ final class MaintainedSemDedup(
 
   private val stateDir = new Path(lake.root, s"_graft_semdedup/$name")
   private val states = new BucketedStateLog(stateDir, stateBuckets, Seq("cell"))
-  private val ops = new MaintainerOps("semdedup", name)
-  private def cursorName = s"semdedup_$name"
 
-  override def stateId: String = s"${lake.root}#$cursorName"
+  override def stateId: String = s"${lake.root}#${loop.cursorName}"
 
   // ---- model marker -------------------------------------------------------
 
-  private def modelPath = new Path(stateDir, "_model")
   private def modelString: String =
     s"semdedup dim=$dim cells=${centroids.size} tau=$tau idKey=$idKey " +
       s"embKey=$embKey buckets=$stateBuckets " +
       s"centroids=${MaintainedIvfIndex.floatHash(centroids)}"
 
-  @volatile private var modelChecked = false
-  private def checkModel(f: FileSystem, writer: Boolean): Unit = {
-    if (modelChecked) return
-    val existing: Option[String] =
-      if (!f.exists(modelPath)) None
-      else {
-        val in = f.open(modelPath)
-        try Some(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-        finally in.close()
-      }
-    // the SHARED hardened stamp stanza (writer-unique tmp, publish,
-    // unconditional read-back, debris sweep) — one definition in
-    // [[BucketedStateLog.stampMarker]] for every marker in the family
-    def stamp(): Unit = {
-      val got = BucketedStateLog.stampMarker(f, stateDir, "_model",
-        modelString, fresh = false)
-      if (got != modelString)
-        throw new IllegalStateException(
-          s"MaintainedSemDedup('$name'): the model marker was claimed " +
-            s"concurrently by a different model ($got) — single-writer " +
-            "contract violated; rebuild under a NEW name")
-      modelChecked = true
-    }
-    existing match {
-      case Some(m) if m != modelString =>
-        // a marker next to ZERO committed versions pins nothing (a
-        // refresh over an empty lake stamps before any span applies) —
-        // a WRITER may re-stamp the corrected model; committed state
-        // refuses (same footgun fix as the join-type marker)
-        if (writer && states.committed(f).isEmpty) stamp()
-        else throw new IllegalStateException(
-          s"MaintainedSemDedup('$name'): state dir was built under a " +
-            s"different model ($m vs $modelString) — the model is fixed " +
-            "for the life of a state dir; open it with the original " +
-            "centroids/tau, or build the retrained model under a NEW " +
-            "name (fresh cursor + state)")
-      case Some(_) => modelChecked = true
-      case None if writer => stamp()
-      case None => // reader over an unseeded dir: the first refresh stamps
-    }
-  }
+  private val modelMarker = new BucketedStateLog.Marker(stateDir,
+    "_model", modelString,
+    m => s"MaintainedSemDedup('$name'): state dir was built under a " +
+      s"different model ($m vs $modelString) — the model is fixed " +
+      "for the life of a state dir; open it with the original " +
+      "centroids/tau, or build the retrained model under a NEW " +
+      "name (fresh cursor + state)",
+    s"MaintainedSemDedup('$name'): state dir has committed versions but " +
+      "no _model marker, so the model they were built under is unknown " +
+      "— build under a NEW name (fresh cursor + state)")
+
+  private def checkModel(f: FileSystem, writer: Boolean): Unit =
+    modelMarker.check(f, writer, states.committed(f).nonEmpty)
 
   // ---- expressions (the engine arithmetic family — see
   // MaintainedIvfIndex.sqDist: float squares/products, double accumulate,
@@ -220,123 +188,99 @@ final class MaintainedSemDedup(
 
   // ---- refresh --------------------------------------------------------
 
+  private val loop = new OneLogRefresh(lake, "semdedup", "semdedup", name, states) {
+    private val isTable = col("schema") === schemaName && col("table") === table
+
+    protected def onTable: Column = isTable
+
+    // REPLICA IDENTITY FULL (the before image re-derives the retracted
+    // cell), and the id-is-row-key contract (the restricted candidate
+    // fold prunes on the replica identity, so the id the state carries
+    // must BE it)
+    override protected def contracts: Seq[(String, Column, String)] = Seq(
+      ("beforeless", isTable && col("op").isin("update", "delete") &&
+        col("before").isNull,
+        s"MaintainedSemDedup('$name'): an update/delete on " +
+          s"$schemaName.$table carries no before image — REPLICA " +
+          "IDENTITY FULL is required (the retraction re-derives the " +
+          "old image's cell)"),
+      ("badKey", isTable && col("op").isin("insert", "update", "delete") && (
+        col("key_names").isNull || size(col("key_names")) =!= 1 ||
+          !(element_at(col("key_names"), 1) <=> lit(idKey))),
+        s"MaintainedSemDedup('$name'): $schemaName.$table events carry " +
+          s"key_names other than ['$idKey'] — idKey must be the " +
+          "table's single replica-identity key (the candidate fold " +
+          "prunes on it)"))
+
+    override protected def beforePoll(spark: SparkSession, f: FileSystem): Unit =
+      checkModel(f, writer = true)
+
+    // the batch pipeline's full pass, through BASE
+    protected def seed(span: RefreshSpan, work: Unit): Unit =
+      states.commit(span.f, recomputeAll(span.spark, span.key._2, span.key._1),
+        (0 until stateBuckets).toSet, None, span.key)
+
+    protected def delta(span: RefreshSpan, work: Unit): Unit = {
+      val (spark, key, prevKey) = (span.spark, span.key, span.prevKey)
+      // dirty cells and churned ids from the span's images (both sides
+      // of every event — a moved embedding dirties its old AND new cell;
+      // an unusable side contributes nothing)
+      val ev = span.frame.filter(isTable &&
+        col("op").isin("insert", "update", "delete"))
+      val churned = ev.select(explode(array(
+          struct(cellOf(col("before")).as("cell"),
+            element_at(col("before"), idKey).as("id")),
+          struct(cellOf(col("after")).as("cell"),
+            element_at(col("after"), idKey).as("id")))).as("c"))
+        .select(col("c.cell").as("cell"), col("c.id").as("id"))
+        .filter(col("cell").isNotNull && col("id").isNotNull)
+        .distinct()
+        .localCheckpoint()
+      // bounded planning pull: ≤ stateBuckets rows
+      val dirtyBuckets = churned
+        .select(states.bucketExpr(Seq(col("cell"))).as("b"))
+        .distinct().collect().map(_.getInt(0)).toSet
+      if (dirtyBuckets.isEmpty) {
+        span.carryForward(states, stateSchema)
+        span.record(0, 0, stateBuckets)
+      } else {
+        val dirtyCells = churned.select("cell").distinct()
+        val prevTouched = states.readBuckets(spark, prevKey.get,
+          Some(dirtyBuckets), stateSchema).localCheckpoint()
+        // candidates: the dirty cells' previous members plus the churned
+        // docs — their CURRENT images fetched through the key-restricted
+        // fold pinned to the applied interval
+        val memberIds = prevTouched
+          .join(broadcast(dirtyCells), Seq("cell"), "left_semi")
+          .select(col("id").as("k"))
+        val candIds = memberIds
+          .unionByName(churned.select(col("id").as("k"))).distinct()
+        val docs = lake.stateAsOf(spark, schemaName, table,
+            key._2, key._1, restrictToKeys = Some(candIds))
+          .select("after")
+        // recompute EXACTLY the dirty cells' verdicts (a churned doc now
+        // outside every dirty cell… cannot exist: both its cells are
+        // dirty by construction)
+        val fresh = verdicts(
+          assigned(docs)
+            .join(broadcast(dirtyCells), Seq("cell"), "left_semi"))
+        // dirty-cell delta rows for the span gauge (one bounded count
+        // over the already-planned churned frame)
+        val deltaDocs = churned.count()
+        val untouched = prevTouched
+          .join(broadcast(dirtyCells), Seq("cell"), "left_anti")
+        states.commit(span.f, untouched.unionByName(fresh),
+          dirtyBuckets, prevKey, key)
+        span.record(deltaDocs, dirtyBuckets.size, stateBuckets - dirtyBuckets.size)
+      }
+    }
+  }
+
   /** Apply every newly committed lake batch (bounded to `within` under a
     * [[Maintainer.refreshCoherent]] barrier). Returns batches applied.
     */
   override def refresh(spark: SparkSession,
-      within: Option[(Long, Long)] = None): Int = {
-    val t0 = System.nanoTime
-    val n = refreshSpans(spark, within)
-    ops.recordRefresh((System.nanoTime - t0) / 1e6, n)
-    n
-  }
-
-  private def refreshSpans(spark: SparkSession,
-      within: Option[(Long, Long)]): Int = {
-    checkModel(states.fs(spark), writer = true)
-    val from = lake.cursorInterval(spark, cursorName)
-    lake.poll(spark, cursorName, within) { span =>
-      val f = states.fs(spark)
-      val isTable = col("schema") === schemaName && col("table") === table
-      // one span pass: bounds, truncate, REPLICA IDENTITY FULL (the
-      // before image re-derives the retracted cell), and the id-is-row-
-      // key contract (the restricted candidate fold prunes on the
-      // replica identity, so the id the state carries must BE it)
-      val badKey = isTable && col("op").isin("insert", "update", "delete") && (
-        col("key_names").isNull || size(col("key_names")) =!= 1 ||
-          !(element_at(col("key_names"), 1) <=> lit(idKey)))
-      val bounds = span.agg(
-        min(col("batch_id").cast("long")), max(col("batch_id").cast("long")),
-        max(when(isTable && col("op") === "truncate", 1).otherwise(0)),
-        max(when(isTable && col("op").isin("update", "delete") &&
-          col("before").isNull, 1).otherwise(0)),
-        max(when(badKey, 1).otherwise(0)),
-        sum(when(isTable, 1L).otherwise(0L))).head()
-      if (!bounds.isNullAt(0) && bounds.getInt(3) == 1)
-        throw new IllegalStateException(
-          s"MaintainedSemDedup('$name'): an update/delete on " +
-            s"$schemaName.$table carries no before image — REPLICA " +
-            "IDENTITY FULL is required (the retraction re-derives the " +
-            "old image's cell)")
-      if (!bounds.isNullAt(0) && bounds.getInt(4) == 1)
-        throw new IllegalStateException(
-          s"MaintainedSemDedup('$name'): $schemaName.$table events carry " +
-            s"key_names other than ['$idKey'] — idKey must be the " +
-            "table's single replica-identity key (the candidate fold " +
-            "prunes on it)")
-      if (!bounds.isNullAt(0)) {
-        val spanRows = bounds.getLong(5)
-        val key = (math.min(from._1, bounds.getLong(0)),
-          math.max(from._2, bounds.getLong(1)))
-        if (!states.isCommitted(f, key)) {
-          val prevKey = states.latestWithin(f, from)
-          val truncated = bounds.getInt(2) == 1
-          if (truncated || prevKey.isEmpty) {
-            // SEED / truncate: the batch pipeline's full pass, through
-            // BASE (a compacted+vacuumed lake holds rows no surviving
-            // changelog row mentions)
-            states.commit(f, recomputeAll(spark, key._2, key._1),
-              (0 until stateBuckets).toSet, None, key)
-            ops.recordSpan(spanRows, spanRows, stateBuckets, 0)
-          } else {
-            // dirty cells and churned ids from the span's images (both
-            // sides of every event — a moved embedding dirties its old
-            // AND new cell; an unusable side contributes nothing)
-            val ev = span.filter(isTable &&
-              col("op").isin("insert", "update", "delete"))
-            val churned = ev.select(explode(array(
-                struct(cellOf(col("before")).as("cell"),
-                  element_at(col("before"), idKey).as("id")),
-                struct(cellOf(col("after")).as("cell"),
-                  element_at(col("after"), idKey).as("id")))).as("c"))
-              .select(col("c.cell").as("cell"), col("c.id").as("id"))
-              .filter(col("cell").isNotNull && col("id").isNotNull)
-              .distinct()
-              .localCheckpoint()
-            // bounded planning pull: ≤ stateBuckets rows
-            val dirtyBuckets = churned
-              .select(states.bucketExpr(Seq(col("cell"))).as("b"))
-              .distinct().collect().map(_.getInt(0)).toSet
-            if (dirtyBuckets.isEmpty) {
-              states.commit(f, emptyState(spark), Set.empty, prevKey, key)
-              ops.recordSpan(spanRows, 0, 0, stateBuckets)
-            } else {
-              val dirtyCells = churned.select("cell").distinct()
-              val prevTouched = states.readBuckets(spark, prevKey.get,
-                Some(dirtyBuckets), stateSchema).localCheckpoint()
-              // candidates: the dirty cells' previous members plus the
-              // churned docs — their CURRENT images fetched through the
-              // key-restricted fold pinned to the applied interval
-              val memberIds = prevTouched
-                .join(broadcast(dirtyCells), Seq("cell"), "left_semi")
-                .select(col("id").as("k"))
-              val candIds = memberIds
-                .unionByName(churned.select(col("id").as("k"))).distinct()
-              val docs = lake.stateAsOf(spark, schemaName, table,
-                  key._2, key._1, restrictToKeys = Some(candIds))
-                .select("after")
-              // recompute EXACTLY the dirty cells' verdicts (a churned
-              // doc now outside every dirty cell… cannot exist: both its
-              // cells are dirty by construction)
-              val fresh = verdicts(
-                assigned(docs)
-                  .join(broadcast(dirtyCells), Seq("cell"), "left_semi"))
-              // dirty-cell delta rows for the span gauge (one bounded
-              // count over the already-planned churned frame)
-              val deltaDocs = churned.count()
-              val untouched = prevTouched
-                .join(broadcast(dirtyCells), Seq("cell"), "left_anti")
-              states.commit(f, untouched.unionByName(fresh),
-                dirtyBuckets, prevKey, key)
-              ops.recordSpan(spanRows, deltaDocs, dirtyBuckets.size,
-                stateBuckets - dirtyBuckets.size)
-            }
-          }
-        }
-        states.gcWithin(f, from)
-      }
-    }
-  }
+      within: Option[(Long, Long)] = None): Int = loop.refresh(spark, within)
 
   // ---- reads ----------------------------------------------------------
 
@@ -391,9 +335,6 @@ final class MaintainedSemDedup(
   }
 
   /** Ops gauges for the `graft_lake_*` family. */
-  def gauges(spark: SparkSession): Seq[(String, Double)] = {
-    val (neg, pos) = lake.cursorInterval(spark, cursorName)
-    val lag = lake.committedBatchIds(spark).count(id => id < neg || id > pos)
-    Seq(s"semdedup_${name}_lag_batches" -> lag.toDouble) ++ ops.gauges
-  }
+  def gauges(spark: SparkSession): Seq[(String, Double)] =
+    loop.gauges(spark, asOf = false)()
 }

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.IncrementalAgg
 
@@ -30,12 +30,7 @@ import graft.operators.IncrementalAgg
   * would tear the view. Time travel pins every group to the same batch
   * boundary.
   *
-  * Crash safety: state versions commit by atomic manifest rename BEFORE
-  * the lake cursor advances. A crash between the two re-delivers the
-  * same span, which finds its version already committed and skips the
-  * rewrite — idempotent, same at-least-once → exactly-once story as the
-  * changelog itself. Versions older than the cursor are garbage-collected
-  * at the next refresh.
+  * Crash safety is the shared span protocol of [[SpanRefresh]].
   *
   * Prerequisite (same as [[IncrementalAgg]]): tables with updates/deletes
   * need REPLICA IDENTITY FULL so retractions carry their full old image.
@@ -113,85 +108,47 @@ final class MaintainedView(
 
   private val stateDir = new Path(lake.root, s"_graft_views/$name")
   private val states = new BucketedStateLog(stateDir, stateBuckets, agg.groupCols)
-  private val ops = new MaintainerOps("view", name)
-  private def cursorName = s"view_$name"
-
-  override def stateId: String = s"${lake.root}#$cursorName"
 
   private def stateSchema(spark: SparkSession) = agg.init(spark).schema
 
-  /** Apply every newly committed lake batch to the view (including a LATE
-    * snapshot batch below the cursor's floor — a mid-stream table
-    * addition). Returns the number of batches applied (0 = already
-    * current).
-    */
-  override def refresh(spark: SparkSession,
-      within: Option[(Long, Long)] = None): Int = {
-    val t0 = System.nanoTime
-    val n = refreshSpans(spark, within)
-    ops.recordRefresh((System.nanoTime - t0) / 1e6, n)
-    n
-  }
+  private val loop = new OneLogRefresh(lake, "view", "view", name, states) {
+    private val isTable = col("schema") === schemaName && col("table") === table
+    private def gc = agg.groupCols.head
+    private def ge = agg.groupExprs.head
 
-  private def refreshSpans(spark: SparkSession,
-      within: Option[(Long, Long)]): Int = {
-    val from = lake.cursorInterval(spark, cursorName)
-    lake.poll(spark, cursorName, within) { span =>
-      val f = states.fs(spark)
-      // partition-column inference can type small batch_id values as int;
-      // bounds + the truncate + row-key-shape flags ride one span pass
-      val isTable = col("schema") === schemaName && col("table") === table
-      val gc = agg.groupCols.head
-      val ge = agg.groupExprs.head
-      // groupIsRowKey contract: key_names must be exactly [group col] —
-      // evaluated per row only when the flag is set (lit(false) folds
-      // the expression away for ordinary views). NULL key_names (REPLICA
-      // IDENTITY NOTHING) must flag too: size(NULL)===1 is NULL, and a
-      // NULL riding through when(...,1).otherwise(0) reads as 0 — the
-      // shape violation would silently pass and the synthetic-keyed rows
-      // would vanish from dirty-group recomputes. The extractor is also
-      // VALUE-checked against the identity column wherever an image is
-      // present (MaintainedJoin.badRowKey's badImage analog): a group
-      // NAMED for the key but extracted from another column would hand
-      // dirtyKeys the wrong values and the key-restricted fold would
-      // silently return nothing for genuinely dirty groups
-      val badShape =
-        if (!groupIsRowKey) lit(false)
-        else {
-          def badImage(im: String) = col(im).isNotNull &&
-            !(ge(col(im)) <=> element_at(col(im), element_at(col("key_names"), 1)))
-          isTable && col("op").isin("insert", "update", "delete") && (
-            col("key_names").isNull || size(col("key_names")) =!= 1 ||
-              !(element_at(col("key_names"), 1) <=> gc) ||
-              badImage("after") || badImage("before"))
-        }
-      // groupIsImmutable contract — the violations (misdeclared groupCol,
-      // column-less delete image, group-changing update) are spelled
-      // ONCE in [[ImmutableContract.violation]], shared with the join's
-      // *KeyImmutable flags
-      val badImmutable =
-        if (!groupIsImmutable || groupIsRowKey) lit(false)
-        else ImmutableContract.violation(isTable, ge, groupCol.get)
-      val bounds = span
-        .agg(min(col("batch_id").cast("long")), max(col("batch_id").cast("long")),
-          max(when(isTable && col("op") === "truncate", 1).otherwise(0)),
-          max(when(badShape, 1).otherwise(0)),
-          max(when(badImmutable, 1).otherwise(0)),
-          // span rows for THIS table — rides the same one-pass aggregate
-          // (ops gauge; never an extra scan)
-          sum(when(isTable, 1L).otherwise(0L)))
-        .head()
-      if (groupIsRowKey && !bounds.isNullAt(0) && bounds.getInt(3) == 1)
-        throw new IllegalStateException(
+    protected def onTable: Column = isTable
+
+    // groupIsRowKey contract: key_names must be exactly [group col].
+    // NULL key_names (REPLICA IDENTITY NOTHING) must flag too:
+    // size(NULL)===1 is NULL, and a NULL riding through
+    // when(...,1).otherwise(0) reads as 0 — the shape violation would
+    // silently pass and the synthetic-keyed rows would vanish from
+    // dirty-group recomputes. The extractor is also VALUE-checked
+    // against the identity column wherever an image is present
+    // (MaintainedJoin.badRowKey's badImage analog): a group NAMED for
+    // the key but extracted from another column would hand dirtyKeys
+    // the wrong values and the key-restricted fold would silently
+    // return nothing for genuinely dirty groups. The groupIsImmutable
+    // violations (misdeclared groupCol, column-less delete image,
+    // group-changing update) are spelled ONCE in
+    // [[ImmutableContract.violation]], shared with the join's
+    // *KeyImmutable flags.
+    override protected def contracts: Seq[(String, Column, String)] =
+      if (groupIsRowKey) {
+        def badImage(im: String) = col(im).isNotNull &&
+          !(ge(col(im)) <=> element_at(col(im), element_at(col("key_names"), 1)))
+        Seq(("badShape", isTable && col("op").isin("insert", "update", "delete") && (
+          col("key_names").isNull || size(col("key_names")) =!= 1 ||
+            !(element_at(col("key_names"), 1) <=> gc) ||
+            badImage("after") || badImage("before")),
           s"groupIsRowKey is set but $schemaName.$table events carry " +
             s"key_names other than ['$gc'] (e.g. a multi-column or FULL " +
             "identity), or a group extractor whose value differs from " +
             "that identity column — the restricted fold keys on the " +
             "replica identity, so the flag requires key_names == the " +
-            "group column, extracted verbatim")
-      if (groupIsImmutable && !groupIsRowKey && !bounds.isNullAt(0) &&
-          bounds.getInt(4) == 1)
-        throw new IllegalStateException(
+            "group column, extracted verbatim"))
+      } else if (groupIsImmutable)
+        Seq(("badImmutable", ImmutableContract.violation(isTable, ge, groupCol.get),
           s"groupIsImmutable is set but a $schemaName.$table span carries " +
             "an event violating the contract — a group-changing update, a " +
             "delete or update whose image lacks the group COLUMN (REPLICA " +
@@ -199,108 +156,81 @@ final class MaintainedView(
             "unchanged-TOAST omission is not tolerated; a present " +
             "column with a NULL value is fine), or a declared groupCol " +
             "that does not match what the group extractor reads — the " +
-            "group-restricted fold could resurrect stale versions")
-      // a span of only EMPTY batches (zero rows) has null bounds: no
-      // deltas to apply — just let poll advance the cursor past them
-      if (!bounds.isNullAt(0)) {
-        val spanRows = bounds.getLong(5)
-        val key = (math.min(from._1, bounds.getLong(0)),
-          math.max(from._2, bounds.getLong(1)))
-        // replay where only the cursor advance was lost: the state for
-        // this span is already committed — rewriting it would tear a
-        // concurrent read; just let poll re-advance the cursor
-        if (!states.isCommitted(f, key)) {
-          val prevKey = states.latestWithin(f, from)
-          val events = applyTransform(span.filter(
-            col("schema") === schemaName && col("table") === table))
-          // recompute source pinned to exactly the applied interval: asOf
-          // bounds the top, the floor keeps a concurrently landing late
-          // snapshot (not in this span) out of the dirty-group rebuild
-          def current = currentImages(spark, key)
-          val hasTruncate = bounds.getInt(2) == 1
-          // SEED (no prior state) recomputes from the fold rather than
-          // applying span deltas: a lake compacted+vacuumed before the
-          // first refresh holds groups only in BASE — no surviving
-          // changelog row mentions them, so a span-delta seed would
-          // silently omit those groups forever; recomputeAll(current)
-          // reads through BASE. (Same reasoning as MaintainedJoin's
-          // seed rebuild.)
-          if (hasTruncate || prevKey.isEmpty) {
-            // rebuild from the boundary, all buckets rewritten
-            states.commit(f, agg.recomputeAll(current),
-              (0 until stateBuckets).toSet, None, key)
-            ops.recordSpan(spanRows, spanRows, stateBuckets, 0)
-          } else {
-            // LAZY: the per-bucket planning collect right below is the
-            // materializing action (eager spent a dedicated job)
-            val d = agg.delta(events).localCheckpoint(eager = false)
-            // bounded planning pull: ≤ stateBuckets rows — per-bucket
-            // counts give the touched set AND the delta's group
-            // cardinality (the dirty-keys gauge) in the one job the
-            // touched probe always ran
-            val perBucket = d
-              .groupBy(states.bucketExpr(agg.groupCols.map(col)).as("b"))
-              .count().collect()
-            val touched = perBucket.map(_.getInt(0)).toSet
-            val deltaGroups = perBucket.map(_.getLong(1)).sum
-            if (touched.isEmpty) {
-              // span had rows but no DML for THIS table: state unchanged —
-              // publish the new version as pure carry-forward
-              states.commit(f, stateEmpty(spark), Set.empty, prevKey, key)
-              ops.recordSpan(spanRows, 0, 0, stateBuckets)
-            } else {
-              // ONLY the touched buckets' rows feed the merge — the
-              // delta's groups are all inside them by construction
-              val prevTouched = prevKey
-                .map(states.readBuckets(spark, _, Some(touched), stateSchema(spark)))
-                .getOrElse(agg.init(spark))
-              // RESTRICTED dirty-group recompute, one callback for both
-              // flags: per-key views (groupIsRowKey — the group IS the
-              // replica key, extracted verbatim, so ge(after) equals the
-              // fold key) fetch dirty keys via the KEY-restricted fold
-              // (BASE bucket-pruned); immutable non-key groupings prune
-              // the fold INPUT by the dirty group values instead of
-              // folding the table. Dirty keys and fold rows route
-              // through the SAME extractor, so a canonicalizing cast
-              // (e.g. "05" → 5) agrees on both sides of the semi-join.
-              val next =
-                if (groupIsRowKey || groupIsImmutable)
-                  agg.stepMergeWith(prevTouched, d, dirtyKeys => {
-                    val hasNull = !dirtyKeys.filter(col(gc).isNull).isEmpty
-                    if (hasNull)
-                      // a NULL dirty group can't ride either restriction
-                      // (NULL never <=>-matches a key frame value) —
-                      // whole fold, semi-joined by the extractor
-                      current.join(
-                        broadcast(dirtyKeys.withColumnRenamed(gc, "_dk")),
-                        ge(col("after")) <=> col("_dk"), "left_semi")
-                    else {
-                      val ks = dirtyKeys.select(col(gc).cast("string").as("k"))
-                      (if (groupIsRowKey)
-                        lake.stateAsOf(spark, schemaName, table, key._2, key._1,
-                          restrictToKeys = Some(ks))
-                      else
-                        lake.stateAsOf(spark, schemaName, table, key._2, key._1,
-                          restrictToImmutable = Some((ge, ks))))
-                        .select(col("after"))
-                    }
-                  })
-                else agg.stepMerge(prevTouched, d, current)
-              states.commit(f, next, touched, prevKey, key)
-              ops.recordSpan(spanRows, deltaGroups,
-                touched.size, stateBuckets - touched.size)
-            }
-          }
-        }
-        // previous states inside the replay horizon are unreachable now
-        states.gcWithin(f, from)
+            "group-restricted fold could resurrect stale versions"))
+      else Nil
+
+    // recompute source pinned to exactly the applied interval: asOf
+    // bounds the top, the floor keeps a concurrently landing late
+    // snapshot (not in this span) out of the dirty-group rebuild
+    protected def seed(span: RefreshSpan, work: Unit): Unit =
+      states.commit(span.f, agg.recomputeAll(currentImages(span.spark, span.key)),
+        (0 until stateBuckets).toSet, None, span.key)
+
+    protected def delta(span: RefreshSpan, work: Unit): Unit = {
+      val spark = span.spark
+      val key = span.key
+      def current = currentImages(spark, key)
+      // LAZY: the per-bucket planning collect right below is the
+      // materializing action (eager spent a dedicated job)
+      val d = agg.delta(applyTransform(span.frame.filter(isTable)))
+        .localCheckpoint(eager = false)
+      // bounded planning pull: ≤ stateBuckets rows — per-bucket counts
+      // give the touched set AND the delta's group cardinality (the
+      // dirty-keys gauge) in the one job the touched probe always ran
+      val perBucket = d
+        .groupBy(states.bucketExpr(agg.groupCols.map(col)).as("b"))
+        .count().collect()
+      val touched = perBucket.map(_.getInt(0)).toSet
+      val deltaGroups = perBucket.map(_.getLong(1)).sum
+      if (touched.isEmpty) {
+        span.carryForward(states, stateSchema(spark))
+        span.record(0, 0, stateBuckets)
+      } else {
+        // ONLY the touched buckets' rows feed the merge — the delta's
+        // groups are all inside them by construction
+        val prevTouched =
+          states.readBuckets(spark, span.prevKey.get, Some(touched), stateSchema(spark))
+        // RESTRICTED dirty-group recompute, one callback for both flags:
+        // per-key views (groupIsRowKey — the group IS the replica key,
+        // extracted verbatim, so ge(after) equals the fold key) fetch
+        // dirty keys via the KEY-restricted fold (BASE bucket-pruned);
+        // immutable non-key groupings prune the fold INPUT by the dirty
+        // group values instead of folding the table. Dirty keys and fold
+        // rows route through the SAME extractor, so a canonicalizing
+        // cast (e.g. "05" → 5) agrees on both sides of the semi-join.
+        val next =
+          if (groupIsRowKey || groupIsImmutable)
+            agg.stepMergeWith(prevTouched, d, dirtyKeys => {
+              val hasNull = !dirtyKeys.filter(col(gc).isNull).isEmpty
+              if (hasNull)
+                // a NULL dirty group can't ride either restriction (NULL
+                // never <=>-matches a key frame value) — whole fold,
+                // semi-joined by the extractor
+                current.join(
+                  broadcast(dirtyKeys.withColumnRenamed(gc, "_dk")),
+                  ge(col("after")) <=> col("_dk"), "left_semi")
+              else {
+                val ks = dirtyKeys.select(col(gc).cast("string").as("k"))
+                (if (groupIsRowKey)
+                  lake.stateAsOf(spark, schemaName, table, key._2, key._1,
+                    restrictToKeys = Some(ks))
+                else
+                  lake.stateAsOf(spark, schemaName, table, key._2, key._1,
+                    restrictToImmutable = Some((ge, ks))))
+                  .select(col("after"))
+              }
+            })
+          else agg.stepMerge(prevTouched, d, current)
+        states.commit(span.f, next, touched, span.prevKey, key)
+        span.record(deltaGroups, touched.size, stateBuckets - touched.size)
       }
     }
   }
 
-  private def stateEmpty(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema(spark))
+  override def stateId: String = s"${lake.root}#${loop.cursorName}"
+
+  override def refresh(spark: SparkSession,
+      within: Option[(Long, Long)] = None): Int = loop.refresh(spark, within)
 
   private def applyTransform(env: DataFrame): DataFrame =
     transform.fold(env)(t => t(env))
@@ -329,21 +259,12 @@ final class MaintainedView(
     * ([[MaintainedBm25Index.rebuild]] runs this INSIDE its postings
     * maintainer's fingerprint-marker window, which is what makes the
     * composite crash-safe; this view carries no fingerprint of its own,
-    * so it is deliberately not public). Targets the union of the latest
-    * version and the cursor interval, like [[MaintainedDistinct
-    * .rebuild]]. No-op before the first refresh.
+    * so it is deliberately not public). Targets
+    * [[SpanRefresh.rebuildTarget]]. No-op before the first refresh.
     */
   private[sinks] def rebuild(spark: SparkSession): Unit = {
     val f = states.fs(spark)
-    val latest = states.latest(f)
-    val from = lake.cursorInterval(spark, cursorName)
-    val cursorKey = if (from._2 == Long.MinValue) None else Some(from)
-    val target = (latest, cursorKey) match {
-      case (Some(k), Some(c)) =>
-        Some((math.min(k._1, c._1), math.max(k._2, c._2)))
-      case (k, c) => k.orElse(c)
-    }
-    target.foreach { key =>
+    loop.rebuildTarget(spark, f).foreach { key =>
       states.commit(f, agg.recomputeAll(currentImages(spark, key)),
         (0 until stateBuckets).toSet, None, key,
         dirTag = s".r${java.lang.Long.toHexString(System.nanoTime)}")
@@ -408,12 +329,5 @@ final class MaintainedView(
     * sink's: `lakeGauges = Some(() => lake.gauges(spark) ++
     * view.gauges(spark))`. Driver-side metadata listings only.
     */
-  def gauges(spark: SparkSession): Seq[(String, Double)] = {
-    val asOf = states.latest(states.fs(spark))
-    val (neg, pos) = lake.cursorInterval(spark, cursorName)
-    val lag = lake.committedBatchIds(spark).count(id => id < neg || id > pos)
-    Seq(
-      s"view_${name}_asof" -> asOf.map(_._2).getOrElse(-1L).toDouble,
-      s"view_${name}_lag_batches" -> lag.toDouble) ++ ops.gauges
-  }
+  def gauges(spark: SparkSession): Seq[(String, Double)] = loop.gauges(spark)()
 }

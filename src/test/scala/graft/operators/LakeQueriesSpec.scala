@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -44,6 +45,37 @@ class LakeQueriesSpec extends AnyFunSuite {
     assert(got.columns.toSeq == want.columns.toSeq,
       s"$name column mismatch: ${got.columns.toSeq} vs ${want.columns.toSeq}")
     assert(rowsOf(got) == rowsOf(want), s"$name rows diverge from recompute")
+  }
+
+  /** Runs `body` under a job group and returns its result with the number
+    * of Spark jobs that carried the group. Child threads inherit the
+    * group, so refreshes run through `MaintainerOps.inParallel` count too.
+    * Listener events arrive in submission order, so once a marker job in
+    * a second group has been seen, every job of the body has been seen.
+    */
+  private def jobsIn[T](group: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val drain = s"$group-drain"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`drain`) => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(drain, drain)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   // the same derivation the builders use: BIGINT cents, ~10% integer bump
@@ -94,7 +126,11 @@ class LakeQueriesSpec extends AnyFunSuite {
   }
 
   test("q_mv serves non-null aggregates equal to a direct recompute") {
-    val got = LakeQueries.mvOrders(spark, dir)
+    val (got, jobs) = jobsIn("lqs-mv")(LakeQueries.mvOrders(spark, dir))
+    // the q_mv gate build's exact Spark job count at local[4]: a lazy
+    // checkpoint that silently folds twice, or a refresh that grows an
+    // action, moves it
+    assert(jobs == 170, s"q_mv build ran $jobs Spark jobs, pinned at 170")
     assertNoNulls(got, "q_mv")
     val p = pc("o_orderkey", "o_totalprice", 7)
     // the maintained IVF index's per-cell counts ride q_mv as constant
@@ -243,7 +279,8 @@ class LakeQueriesSpec extends AnyFunSuite {
   }
 
   test("q_mj equals a direct left join over the churned tables") {
-    val got = LakeQueries.mjOrders(spark, dir)
+    val (got, jobs) = jobsIn("lqs-mj")(LakeQueries.mjOrders(spark, dir))
+    assert(jobs == 103, s"q_mj build ran $jobs Spark jobs, pinned at 103")
     // sum_bal_cents is NULL for the UNMATCHED segment by construction —
     // the no-null check applies to the matched segments and to the price
     // column everywhere

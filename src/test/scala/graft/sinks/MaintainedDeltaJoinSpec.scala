@@ -959,4 +959,86 @@ class MaintainedDeltaJoinSpec extends AnyFunSuite {
           s"$writtenRows of $FACTS pairs")
     }
   }
+
+  /** Rewind the join's cursor to `0:0` — the crash window where the state
+    * committed but the cursor advance was lost.
+    */
+  private def rewindCursor(sink: LakeSink): Unit = {
+    // the raw write bypasses Hadoop's checksum sidecar — drop it too
+    new java.io.File(s"${sink.root}/_graft_cursors/.djoin_dj_orders.crc").delete()
+    java.nio.file.Files.write(
+      new java.io.File(s"${sink.root}/_graft_cursors/djoin_dj_orders").toPath,
+      "0:0".getBytes)
+  }
+
+  private def versions(dj: MaintainedDeltaJoin): Seq[(Long, Long)] =
+    dj.stateLog.committed(dj.stateLog.fs(spark))
+
+  test("replay after a lost cursor advance is idempotent and commits no new version") {
+    withJoin() { (sink, dj) =>
+      sink.appendBatch(envelope(Seq(
+        ev(1, "insert", "u", Seq("id"), null, user("1", "ann")),
+        ev(2, "insert", "o", Seq("oid"), null, order("a", "1", "5")),
+        ev(3, "insert", "o", Seq("oid"), null, order("b", "1", "6")))), 0L)
+      assert(dj.refresh(spark) == 1)
+      sink.appendBatch(envelope(Seq(
+        ev(4, "delete", "o", Seq("oid"), order("a", "1", "5"), null))), 1L)
+      assert(dj.refresh(spark) == 1)
+      val healthy = joinSet(dj)
+      assert(healthy == Set(("b", "ann", "6")))
+      val committed = versions(dj)
+      rewindCursor(sink)
+      assert(sink.cursor(spark, "djoin_dj_orders") == 0L)
+      // the replayed span must not double-apply the retraction
+      assert(dj.refresh(spark) == 1)
+      assert(joinSet(dj) == healthy)
+      assert(versions(dj) == committed, "a replayed span commits nothing")
+      assert(sink.cursor(spark, "djoin_dj_orders") == 1L, "cursor healed")
+      assert(dj.refresh(spark) == 0)
+    }
+  }
+
+  test("an empty committed batch advances the cursor without touching state") {
+    withJoin() { (sink, dj) =>
+      sink.appendBatch(envelope(Seq(
+        ev(1, "insert", "u", Seq("id"), null, user("1", "ann")),
+        ev(2, "insert", "o", Seq("oid"), null, order("a", "1", "5")))), 0L)
+      assert(dj.refresh(spark) == 1)
+      val committed = versions(dj)
+      sink.appendBatch(envelope(Seq.empty), 1L)
+      assert(dj.refresh(spark) == 1, "the empty batch is consumed")
+      assert(joinSet(dj) == Set(("a", "ann", "5")))
+      assert(versions(dj) == committed, "an empty span commits nothing")
+      assert(dj.refresh(spark) == 0, "cursor advanced past the empty batch")
+      sink.appendBatch(envelope(Seq(
+        ev(3, "insert", "o", Seq("oid"), null, order("b", "1", "6")))), 2L)
+      assert(dj.refresh(spark) == 1)
+      assert(joinSet(dj) == Set(("a", "ann", "5"), ("b", "ann", "6")))
+      assert(joinSet(dj) == expected(sink))
+    }
+  }
+
+  test("a late snapshot batch below the cursor floor reaches the join") {
+    withJoin() { (sink, dj) =>
+      import spark.implicits._
+      sink.appendBatch(envelope(Seq(
+        ev(1, "insert", "u", Seq("id"), null, user("1", "ann")),
+        ev(2, "insert", "o", Seq("oid"), null, order("a", "1", "5")),
+        ev(3, "insert", "o", Seq("oid"), null, order("b", "2", "6")))), 0L)
+      assert(dj.refresh(spark) == 1)
+      assert(joinSet(dj) == Set(("a", "ann", "5")))
+      // the user table's snapshot lands as a NEGATIVE batch id, below the
+      // cursor's floor: user 2 arrives and pairs with the waiting order
+      sink.appendSnapshot("public.u",
+        Seq(("2", "bo")).toDF("id", "name"), Seq("id"), 0L, -1L)
+      assert(dj.refresh(spark) == 1)
+      val withSnapshot = Set(("a", "ann", "5"), ("b", "bo", "6"))
+      assert(joinSet(dj) == withSnapshot, "snapshot rows joined the pairs")
+      assert(joinSet(dj) == expected(sink))
+      // replay the same late span (cursor rewound): must not double-apply
+      rewindCursor(sink)
+      assert(dj.refresh(spark) == 1)
+      assert(joinSet(dj) == withSnapshot, "replayed snapshot span is idempotent")
+    }
+  }
 }

@@ -207,4 +207,102 @@ class MaintainedSemDedupSpec extends AnyFunSuite {
       assert(e.getMessage.contains("different model"), e.getMessage)
     }
   }
+
+  test("committed state whose model marker is gone refuses rather than re-stamping") {
+    withDedup { (sink, sd) =>
+      sink.appendBatch(envelope(Seq(
+        ev(1, "insert", Seq("id"), null, doc("a", "1,0")))), 0L)
+      assert(sd.refresh(spark) == 1)
+      val stateDir = new java.io.File(sink.root, "_graft_semdedup/sd")
+      assert(new java.io.File(stateDir, "_model").delete())
+      new java.io.File(stateDir, "._model.crc").delete()
+      // the model the committed state was built under is now unknown
+      val reopened = new MaintainedSemDedup(sink, "public", "docs", "sd",
+        idKey = "id", embKey = "emb", centroids = Cents, tau = Tau,
+        stateBuckets = 4)
+      val e = intercept[IllegalStateException] { reopened.refresh(spark) }
+      assert(e.getMessage.contains("no _model marker"), e.getMessage)
+      assert(!new java.io.File(stateDir, "_model").exists, "nothing re-stamped")
+    }
+  }
+
+  /** Rewind the maintainer's cursor to `0:0` — the crash window where the
+    * state committed but the cursor advance was lost.
+    */
+  private def rewindCursor(sink: LakeSink): Unit = {
+    // the raw write bypasses Hadoop's checksum sidecar — drop it too
+    new java.io.File(s"${sink.root}/_graft_cursors/.semdedup_sd.crc").delete()
+    java.nio.file.Files.write(
+      new java.io.File(s"${sink.root}/_graft_cursors/semdedup_sd").toPath,
+      "0:0".getBytes)
+  }
+
+  private def versions(sd: MaintainedSemDedup): Seq[(Long, Long)] =
+    sd.stateLog.committed(sd.stateLog.fs(spark))
+
+  test("replay after a lost cursor advance is idempotent and commits no new version") {
+    withDedup { (sink, sd) =>
+      sink.appendBatch(envelope(Seq(
+        ev(1, "insert", Seq("id"), null, doc("a", "1,0")),
+        ev(2, "insert", Seq("id"), null, doc("b", "2,0")))), 0L)
+      assert(sd.refresh(spark) == 1)
+      sink.appendBatch(envelope(Seq(
+        ev(3, "delete", Seq("id"), doc("a", "1,0"), null))), 1L)
+      assert(sd.refresh(spark) == 1)
+      val healthy = verdictSet(sd)
+      assert(healthy == Set(("b", false)))
+      val committed = versions(sd)
+      rewindCursor(sink)
+      assert(sink.cursor(spark, "semdedup_sd") == 0L)
+      // the replayed span must not double-apply the delete
+      assert(sd.refresh(spark) == 1)
+      assert(verdictSet(sd) == healthy)
+      assert(versions(sd) == committed, "a replayed span commits nothing")
+      assert(sink.cursor(spark, "semdedup_sd") == 1L, "cursor healed")
+      assert(sd.refresh(spark) == 0)
+      assert(sd.assertConsistent(spark) == 1L)
+    }
+  }
+
+  test("an empty committed batch advances the cursor without touching state") {
+    withDedup { (sink, sd) =>
+      sink.appendBatch(envelope(Seq(
+        ev(1, "insert", Seq("id"), null, doc("a", "1,0")))), 0L)
+      assert(sd.refresh(spark) == 1)
+      val committed = versions(sd)
+      sink.appendBatch(envelope(Seq.empty), 1L)
+      assert(sd.refresh(spark) == 1, "the empty batch is consumed")
+      assert(verdictSet(sd) == Set(("a", false)))
+      assert(versions(sd) == committed, "an empty span commits nothing")
+      assert(sd.refresh(spark) == 0, "cursor advanced past the empty batch")
+      sink.appendBatch(envelope(Seq(
+        ev(2, "insert", Seq("id"), null, doc("b", "2,0")))), 2L)
+      assert(sd.refresh(spark) == 1)
+      assert(verdictSet(sd) == Set(("a", false), ("b", true)))
+      assert(sd.assertConsistent(spark) == 2L)
+    }
+  }
+
+  test("a late snapshot batch below the cursor floor reaches the verdicts") {
+    withDedup { (sink, sd) =>
+      import spark.implicits._
+      sink.appendBatch(envelope(Seq(
+        ev(1, "insert", Seq("id"), null, doc("b", "2,0")),
+        ev(2, "insert", Seq("id"), null, doc("d", "9,9")))), 0L)
+      assert(sd.refresh(spark) == 1)
+      assert(verdictSet(sd) == Set(("b", false), ("d", false)))
+      // the table's snapshot lands as a NEGATIVE batch id, below the
+      // cursor's floor: the lower-id "a" now keeps and drops "b"
+      sink.appendSnapshot("public.docs",
+        Seq(("a", "1,0"), ("c", "0,1")).toDF("id", "emb"), Seq("id"), 0L, -1L)
+      assert(sd.refresh(spark) == 1)
+      val withSnapshot = Set(("a", false), ("b", true), ("c", false), ("d", false))
+      assert(verdictSet(sd) == withSnapshot, "snapshot rows joined the verdicts")
+      assert(sd.assertConsistent(spark) == 4L)
+      // replay the same late span (cursor rewound): must not double-apply
+      rewindCursor(sink)
+      assert(sd.refresh(spark) == 1)
+      assert(verdictSet(sd) == withSnapshot, "replayed snapshot span is idempotent")
+    }
+  }
 }
