@@ -110,9 +110,6 @@ final case class GraftConfig(
     */
   def replicationDsn: String = s"$dsn&replication=database"
 
-  /** JDBC form of [[dsn]] for `SnapshotReader.jdbc` / `CatalogReader`. */
-  def jdbcUrl: String = s"jdbc:postgresql://$host:$port/$database"
-
   /** Options for `spark.readStream.format("pgcdc").options(...)` — a
     * complete binding: host/port/slot/publication select the walsender
     * socket source ([[graft.streaming.SocketWalSource]]), so

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.SimHash
+import graft.functions.{MinHash, SimHash}
 import graft.functions.TextFunctions._
 
 /** Deduplication operators over `documents` — the core of an LLM-training-data
@@ -37,29 +37,21 @@ object DedupQueries {
     * hashes) → 4 bands of 2 → equality join on (band, band-key) for
     * candidates → exact Jaccard verification of candidates only.
     *
-    * At 100 TB: signatures are ROW-LOCAL (`array_min(transform(...))` inside
-    * one codegen'd scan — zero shuffle before the band join; round-2 verdict
-    * fix), the band-bucket equality join touches only colliding pairs
-    * (P[bucket match] = 1-(1-j^r)^b), and verification joins the tiny
-    * broadcast candidate set against the corpus scan — nothing corpus-sized
-    * is ever broadcast or re-shuffled.
+    * At 100 TB: signatures are ROW-LOCAL ([[graft.functions.MinHash]]
+    * inside one projection over the shingle cache — zero shuffle before the
+    * band join; round-2 verdict fix), the band-bucket equality join touches
+    * only colliding pairs (P[bucket match] = 1-(1-j^r)^b), and
+    * verification joins the tiny broadcast candidate set against the
+    * corpus scan — nothing corpus-sized is ever broadcast or re-shuffled.
     */
   def minhashLsh(s: SparkSession, dir: String): DataFrame = {
     val docs = docShingleSets(s, dir, 5)
-    // One md5 per shingle; the k=8 permutation family is XOR with fixed
-    // 60-bit constants (a bijection per seed, so each min is a valid minhash;
-    // candidates are exact-Jaccard-verified anyway). 8× less hashing than a
-    // seed-prefixed md5 per permutation, same cross-engine reproducibility —
-    // the seeds themselves are hash60("minhash-seed-i"), recomputed
-    // identically in the oracle SQL.
-    val seeds = (0 until NumHashes).map(i => graft.functions.Hash60(s"minhash-seed-$i"))
-    val hashed = docs.withColumn("hs", transform(col("shs"), sh => hash60(sh)))
-    val sig = hashed.select(col("doc_id") +:
-      (0 until NumHashes).map(i =>
-        array_min(transform(col("hs"), h => h.bitwiseXOR(lit(seeds(i))))).as(s"m$i")): _*)
-    val bands = sig.select(col("doc_id"),
-      posexplode(array((0 until NumHashes / 2).map(j =>
-        concat_ws(",", col(s"m${2 * j}"), col(s"m${2 * j + 1}"))): _*)).as(Seq("band", "bkey")))
+    // The oracle SQL recomputes the kernel's DedupFamily seeds and its
+    // "m_{2j},m_{2j+1}" band keys identically.
+    val bands = docs.select(col("doc_id"),
+      posexplode(MinHash.bandKeys(
+        MinHash.signature(col("shs"), MinHash.DedupFamily, NumHashes), 2))
+        .as(Seq("band", "bkey")))
     val cand = bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey")
@@ -308,12 +300,11 @@ object DedupQueries {
       // the file source wants a directory: stream the sf dir, glob-filtered
       // down to the documents table's single parquet file
       // The file source hands the single documents parquet to ONE task, so
-      // the signature kernel (higher-order transform()s — interpreted, not
-      // whole-stage-codegen) ran serially and dominated the drive (~9 s of
-      // a ~10 s batch, JFR-verified). A real ingest source (Kafka, many
-      // files) arrives already partitioned; stand in for that with an
-      // explicit spread over the cores. Determinism is unaffected:
-      // bucketStep sorts each bucket's rows by doc_id before stepping.
+      // the signature kernel (one MD5 per shingle per document) would run
+      // serially. A real ingest source (Kafka, many files) arrives already
+      // partitioned; stand in for that with an explicit spread over the
+      // cores. Determinism is unaffected: updateBucket sorts each
+      // bucket's rows by doc_id before stepping.
       val docs = ss.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)

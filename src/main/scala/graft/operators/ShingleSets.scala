@@ -2,20 +2,20 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.functions.MinHash
 
 /** Per-document distinct n-token shingle sets — the shared scan every dedup
   * operator (and the fingerprinter) builds on.
   *
-  * This is one of the two places the engine drops to imperative
-  * `mapPartitions` (the other is the wire codec): Spark's higher-order array
-  * functions (`transform`/`slice`/`array_join`/`array_distinct`) are
-  * interpreted, not whole-stage-codegen'd, and this expression chain measured
-  * **24× slower** than the loop below (7.7s vs 0.32s for the sf0.1 corpus) —
-  * it dominated every dedup query's scan. Semantics are byte-identical to
-  * `array_distinct(wordShingles(tokens(text), n))`: `split("\\s+", -1)`
-  * (Spark's split semantics — leading/trailing empty tokens preserved),
-  * single-space joins, first-occurrence-ordered distinct, and documents with
-  * fewer than n tokens dropped — so the DuckDB oracles are unchanged.
+  * The shingles are [[MinHash.shingles]] (the one near-dup kernel), run
+  * imperatively in a partition scan: Spark's higher-order array functions
+  * (`transform`/`slice`/`array_join`/`array_distinct`) are interpreted,
+  * not whole-stage-codegen'd, and that expression chain measured **24×
+  * slower** than the loop (7.7s vs 0.32s for the sf0.1 corpus). A row
+  * per shingled document, none for a document with fewer than n tokens
+  * — the shape the DuckDB oracles pin. (A `filter` on the kernel's
+  * Column form would be pushed below its projection and shingle every
+  * document twice.)
   *
   * The frame is `persist()`ed: every dedup query references it from several
   * differently-aliased plan branches (signature build, self-join sides,
@@ -70,26 +70,9 @@ object ShingleSets {
     // 32 for every consumer of this cache).
     Tables.fanOut(Tables.documents(s, dir).select("doc_id", "text"), costFactor = 8)
       .mapPartitions { it =>
-      it.flatMap { r =>
-        val toks = r.getString(1).split("\\s+", -1)
-        if (toks.length < n) Iterator.empty
-        else {
-          val set = new java.util.LinkedHashSet[String](math.max(16, toks.length * 2))
-          val sb = new java.lang.StringBuilder(64)
-          var i = 0
-          while (i + n <= toks.length) {
-            sb.setLength(0)
-            var k = 0
-            while (k < n) {
-              if (k > 0) sb.append(' ')
-              sb.append(toks(i + k))
-              k += 1
-            }
-            set.add(sb.toString)
-            i += 1
-          }
-          Iterator.single(Row(r.getLong(0), set.toArray(new Array[String](set.size)).toSeq))
+        it.flatMap { r =>
+          Option(MinHash.shingles(r.getString(1), n))
+            .map(shs => Row(r.getLong(0), shs.toSeq))
         }
-      }
-    }(Encoders.row(schema)).persist()
+      }(Encoders.row(schema)).persist()
 }

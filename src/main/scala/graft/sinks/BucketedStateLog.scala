@@ -308,6 +308,15 @@ private[sinks] final class BucketedStateLog(
     writeManifest(f, key, carried ++ written)
   }
 
+  /** Publish `key` as a pure carry-forward of `prevKey`: its manifest
+    * references every one of `prevKey`'s slices and no slice is written —
+    * [[commit]] of an empty delta, without a Spark job or a version dir.
+    */
+  def carry(f: FileSystem, prevKey: (Long, Long), key: (Long, Long)): Unit = {
+    checkGeometry(f)
+    writeManifest(f, key, entries(f, prevKey))
+  }
+
   /** `buckets:subs` marker — the dir's committed layout, stamped by the
     * first (full-rewrite) commit before any manifest exists. Geometry is
     * fixed for the life of a state dir: the marker is replaced by full

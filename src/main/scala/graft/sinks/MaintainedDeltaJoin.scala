@@ -907,7 +907,7 @@ final class MaintainedDeltaJoin(
         val dirty = perSlice.map(r => (r.getInt(0), r.getInt(1))).toSet
         val deltaPairs = perSlice.map(_.getLong(2)).sum
         if (dirty.isEmpty) {
-          span.carryForward(states, stateSchema)
+          span.carryForward(states)
           gCarried += stateBuckets * subBuckets
         } else {
           val prevTouched = states.readSlices(spark, prevKey.get, dirty,
@@ -1175,7 +1175,7 @@ final class MaintainedDeltaJoin(
     var dirtyRows = 0L; var rewritten = 0; var carried = 0
     if (needCounts) cDelta match {
       case None =>
-        span.carryForward(counts, countSchema, Some(cPrev))
+        span.carryForward(counts, cPrev)
         carried += stateBuckets
       case Some(cd) =>
         // dirty buckets came from the shared planning collect above;
@@ -1236,7 +1236,7 @@ final class MaintainedDeltaJoin(
 
     if (needNulls) du match {
       case None =>
-        span.carryForward(nulls, nullsSchema, Some(nPrev))
+        span.carryForward(nulls, nPrev)
         carried += stateBuckets * nulls.subs
       case Some(duF) =>
         val duNamed = duF.select(col("jk"), col("k").as(kName),

@@ -237,7 +237,7 @@ final class MaintainedDistinct(
       val dirty = perSlice.map(r => (r.getInt(0), r.getInt(1))).toSet
       val deltaPairs = perSlice.map(_.getLong(2)).sum
       if (dirty.isEmpty) {
-        span.carryForward(states, stateSchema(spark))
+        span.carryForward(states)
         span.record(0, 0, stateBuckets)
       } else {
         // merge input = the DIRTY slices only: a hot bucket's clean

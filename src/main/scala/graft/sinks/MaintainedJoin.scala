@@ -351,6 +351,11 @@ final class MaintainedJoin(
       val dirtyKeys = perBucket.map(_.getLong(1)).sum
       val touchedBuckets = perBucket.map(_.getInt(0)).toSet ++
         (if (nullDirty) Set(states.nullBucket) else Set.empty)
+      if (touchedBuckets.isEmpty) {
+        span.carryForward(states)
+        span.record(0, 0, stateBuckets)
+        return
+      }
       // ONLY the touched buckets' slices are read — the splice's input
       // is bucket-bounded, never the whole state
       val prevTouched =

@@ -1,7 +1,8 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.MinHash
 import graft.operators.IncrementalDistinct
 
 /** A continuously-maintained MinHash-LSH near-duplicate index over one
@@ -23,11 +24,11 @@ import graft.operators.IncrementalDistinct
   * bucket membership — the whole crash/replay/seed/carry-forward/
   * bucketed-persistence discipline is inherited from
   * [[MaintainedDistinct]] verbatim (its specs, chaos soak, and scale pin
-  * cover this loop). Signature family mirrors the batch pipeline
-  * (`operators/DedupQueries.minhashLsh`): distinct n-token shingles,
-  * per-band minhash pairs under fixed XOR seeds — but hashed with
-  * codegen'd xxhash64 (the index needs determinism, not the batch
-  * oracle's cross-engine md5 reproducibility).
+  * cover this loop). Signatures come from the batch pipeline's kernel
+  * ([[graft.functions.MinHash]]): distinct n-token shingles hashed with
+  * `Hash60`, a minhash pair per band under this index's own XOR seed
+  * family (`lsh-<name>-seed`), each pair folded to one long band `sig`
+  * by `xxhash64(m_{2b}, m_{2b+1})`.
   *
   * Reads: [[buckets]] (per-(band, sig) doc counts — `nd_docs` ≥ 2 means
   * a collision), [[candidatePairs]] (distinct candidate id pairs from
@@ -72,12 +73,13 @@ final class MaintainedLshIndex(
   private[sinks] val md = new MaintainedDistinct(lake, dist, schemaName, table, name,
     stateBuckets, transform = explodeBands,
     // signatures are a function of (bands, shingleN, the name-derived
-    // seed family, the id/text keys); opening an existing state with any
-    // of them changed would mix two signature families — the guard
-    // refuses, [[rebuild]] migrates (r16 verdict "What's wrong" #1)
+    // seed family, the shingle hash, the id/text keys); opening an
+    // existing state with any of them changed would mix two signature
+    // families — the guard refuses, [[rebuild]] migrates (r16 verdict
+    // "What's wrong" #1)
     fingerprint = Some(s"lsh bands=$bands shingleN=$shingleN " +
       s"idKey=$idKey textKey=$textKey buckets=$stateBuckets " +
-      s"seeds=lsh-$name-seed" +
+      s"seeds=lsh-$name-seed hash=hash60" +
       // absent at 1 so pre-sub state dirs keep their exact fingerprint
       (if (subBuckets == 1) "" else s" subs=$subBuckets")),
     subBuckets = subBuckets)
@@ -89,46 +91,27 @@ final class MaintainedLshIndex(
     */
   def rebuild(spark: SparkSession): Unit = md.rebuild(spark)
 
-  /** Distinct n-token shingles of one image's text — the exact sets the
-    * signatures hash, un-hashed, shared by [[sigArray]] and the exact-
-    * Jaccard verification reads (so verification and indexing cannot
-    * disagree on tokenization). NULL when the text is absent or shorter
-    * than n tokens.
+  /** Distinct n-token shingles of a text column ([[MinHash.shingles]])
+    * — the exact sets the signatures hash, un-hashed, shared by the
+    * signature build and the exact-Jaccard verification reads (so
+    * verification and indexing cannot disagree on tokenization). NULL
+    * when the text is absent or shorter than n tokens.
     */
-  private def shingleArr(im: Column): Column =
-    shingleArrOfText(element_at(im, textKey))
+  private def shinglesOf(text: Column): Column = MinHash.shingles(text, shingleN)
 
-  /** [[shingleArr]] over a raw text column — the probe-frame variant
-    * ([[candidatesForAll]] evaluates it on the caller's text column
-    * directly, no synthetic image map needed).
+  /** Adds `out`, the per-band signature array of the shingle column
+    * `shs`: the kernel's 2·bands minhashes under this index's seed
+    * family, folded pairwise to `xxhash64(m_{2b}, m_{2b+1})`. NULL (no
+    * contribution) where `shs` is NULL. The minhashes land in their own
+    * projection first: the fold reads them 2·bands times, and the
+    * kernel inlined into each read would re-hash the shingles each time.
     */
-  private def shingleArrOfText(t: Column): Column = {
-    val toks = split(t, "\\s+", -1)
-    val shs = array_distinct(transform(
-      sequence(lit(0), size(toks) - lit(shingleN)),
-      i => array_join(slice(toks, i + lit(1), lit(shingleN)), " ")))
-    when(t.isNotNull && size(toks) >= shingleN, shs)
-  }
-
-  /** Per-band signature array of one image's text — the batch pipeline's
-    * family (distinct n-shingles → minhash pair per band) on codegen'd
-    * xxhash64. NULL (no contribution) when the text is absent or shorter
-    * than n tokens.
-    */
-  private def sigArray(im: Column): Column =
-    sigArrayOfText(element_at(im, textKey))
-
-  private def sigArrayOfText(t: Column): Column = {
-    val shs = shingleArrOfText(t)
-    val hs = transform(shs, sh => xxhash64(sh))
-    val sigs = array((0 until bands).map { b =>
-      val m1 = array_min(transform(hs,
-        h => h.bitwiseXOR(lit(graft.functions.Hash60(s"lsh-$name-seed-${2 * b}")))))
-      val m2 = array_min(transform(hs,
-        h => h.bitwiseXOR(lit(graft.functions.Hash60(s"lsh-$name-seed-${2 * b + 1}")))))
-      xxhash64(m1, m2)
-    }: _*)
-    when(shs.isNotNull, sigs)
+  private def withSigs(df: DataFrame, shs: String, out: String): DataFrame = {
+    val m = s"_m_$out"
+    df.withColumn(m, MinHash.signature(col(shs), s"lsh-$name-seed", 2 * bands))
+      .withColumn(out, when(col(m).isNotNull, array((0 until bands).map(b =>
+        xxhash64(element_at(col(m), 2 * b + 1), element_at(col(m), 2 * b + 2))): _*)))
+      .drop(m)
   }
 
   /** Envelope→envelope: one row per (event, band), images reduced to
@@ -143,12 +126,13 @@ final class MaintainedLshIndex(
         lit("id"), element_at(im, idKey),
         lit("band"), b.cast("string"),
         lit("sig"), element_at(sigs, b + 1).cast("string")))
-    env
-      .withColumn("_bsigs", sigArray(col("before")))
-      .withColumn("_asigs", sigArray(col("after")))
+    val shingled = env
+      .withColumn("_bsh", shinglesOf(element_at(col("before"), textKey)))
+      .withColumn("_ash", shinglesOf(element_at(col("after"), textKey)))
       // an event whose BOTH sides carry no signatures contributes nothing
-      .filter(col("_bsigs").isNotNull || col("_asigs").isNotNull ||
+      .filter(col("_bsh").isNotNull || col("_ash").isNotNull ||
         col("op") === "truncate")
+    withSigs(withSigs(shingled, "_bsh", "_bsigs"), "_ash", "_asigs")
       .select(col("*"), explode(sequence(lit(0), lit(bands - 1))).as("_band"))
       .withColumn("before", img(col("before"), col("_bsigs"), col("_band")))
       .withColumn("after", img(col("after"), col("_asigs"), col("_band")))
@@ -160,7 +144,7 @@ final class MaintainedLshIndex(
           .otherwise(col("op")))
       .filter(col("op") =!= "update" ||
         col("before").isNotNull || col("after").isNotNull)
-      .drop("_bsigs", "_asigs", "_band")
+      .drop("_bsh", "_ash", "_bsigs", "_asigs", "_band")
   }
 
   /** Apply every newly committed lake batch (bounded to `within` when
@@ -194,22 +178,26 @@ final class MaintainedLshIndex(
       .distinct()
   }
 
+  /** (band signatures, shingles) of one probe text, computed by
+    * evaluating the SAME engine expressions the index applied to
+    * documents on a one-row frame (so the probe agrees with the indexed
+    * signatures bit-for-bit — a driver-side reimplementation of the
+    * xxhash64 fold could drift). Both NULL for a short probe.
+    */
+  private def probeRow(spark: SparkSession, text: String): Row =
+    withSigs(ImageProbes.frame(spark, Map("id" -> "_probe", textKey -> text))
+      .select(shinglesOf(element_at(col("im"), textKey)).as("sh")), "sh", "sigs")
+      .select("sigs", "sh").head()
+
   /** Candidate near-duplicate ids of ONE probe text — the online point
     * lookup ("what in the corpus near-dups THIS new document?"), and the
-    * scale-right read: the probe's band signatures are computed by
-    * evaluating the SAME engine expression on a one-row frame (so the
-    * probe agrees with the indexed signatures bit-for-bit — a
-    * driver-side reimplementation of xxhash64/shingling could drift),
-    * each (band, sig) maps to its state-log hash bucket
+    * scale-right read: each of the probe's (band, sig) keys
+    * ([[probeRow]]) maps to its state-log hash bucket
     * ([[BucketedStateLog.bucketOf]]), and ONLY those ≤ `bands` buckets'
     * slices are read — never the index. Empty for short probes.
     */
-  private def probeFrame(spark: SparkSession, text: String): DataFrame =
-    ImageProbes.frame(spark, Map("id" -> "_probe", textKey -> text))
-
   def candidatesFor(spark: SparkSession, text: String): DataFrame = {
-    val sigRow = probeFrame(spark, text)
-      .select(sigArray(col("im")).as("sigs")).head()
+    val sigRow = probeRow(spark, text)
     val key = md.latestKey(spark)
     if (sigRow.isNullAt(0)) emptyCandidates(spark, key)
     else candidatesForAt(spark, key, sigRow.getSeq[Long](0))
@@ -290,11 +278,18 @@ final class MaintainedLshIndex(
   def candidatesForAll(spark: SparkSession, probes: DataFrame,
       idCol: String, textCol: String): DataFrame = {
     val key = md.latestKey(spark)
-    val pf = ProbeFrames.unique(probes, idCol, textCol)
-      .select(col("probe_id"), sigArrayOfText(col("_payload")).as("sigs"))
-      .filter(col("sigs").isNotNull)
-    candidateHitsAt(spark, key, pf)
+    candidateHitsAt(spark, key, probeSigs(probes, idCol, textCol))
   }
+
+  /** (probe_id, psh, sigs) of a probe frame — shingles and band
+    * signatures by the SAME engine expressions the index applied to
+    * documents; probes whose text is short/absent drop out.
+    */
+  private def probeSigs(probes: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    withSigs(ProbeFrames.unique(probes, idCol, textCol)
+      .select(col("probe_id"), shinglesOf(col("_payload")).as("psh"))
+      .filter(col("psh").isNotNull), "psh", "sigs")
 
   /** The shared set-probe core: signatures → exploded (probe, band, sig)
     * keys → bucket-pruned state join → per-(probe, id) band counts.
@@ -322,8 +317,7 @@ final class MaintainedLshIndex(
     * probe's text and its candidates' CURRENT texts (fetched
     * candidate-restricted at the SAME state version key), kept at or
     * above `threshold` — still one job for N probes. One probe pass
-    * derives signatures AND shingles (sigArray derives from shingleArr,
-    * so a second pass would re-shingle for nothing). Returns
+    * derives signatures AND shingles ([[probeSigs]]). Returns
     * (probe_id, id, bands_hit, jaccard); probes with short/absent text
     * produce no rows.
     */
@@ -331,13 +325,8 @@ final class MaintainedLshIndex(
       idCol: String, textCol: String,
       threshold: Double = 0.8): DataFrame = {
     val key = md.latestKey(spark)
-    val pf = ProbeFrames.unique(probes, idCol, textCol)
-      .select(col("probe_id"),
-        sigArrayOfText(col("_payload")).as("sigs"),
-        shingleArrOfText(col("_payload")).as("psh"))
-      .filter(col("sigs").isNotNull)
-      // referenced by the hits core AND the Jaccard join
-      .localCheckpoint()
+    // referenced by the hits core AND the Jaccard join
+    val pf = probeSigs(probes, idCol, textCol).localCheckpoint()
     val cand = candidateHitsAt(spark, key, pf).localCheckpoint()
     val docs = docShingles(spark, key,
       cand.select(col("id").as("k")).distinct())
@@ -359,11 +348,8 @@ final class MaintainedLshIndex(
   def verifiedCandidatesFor(spark: SparkSession, text: String,
       threshold: Double = 0.8): DataFrame = {
     // one probe job serves both the signatures (bucket lookup) and the
-    // shingles (Jaccard) — sigArray derives from shingleArr, so a second
-    // probe-frame job would recompute the shingling for nothing
-    val row = probeFrame(spark, text)
-      .select(sigArray(col("im")).as("sigs"), shingleArr(col("im")).as("sh"))
-      .head()
+    // shingles (Jaccard)
+    val row = probeRow(spark, text)
     val key = md.latestKey(spark)
     if (row.isNullAt(0))
       return emptyCandidates(spark, key)
@@ -388,7 +374,7 @@ final class MaintainedLshIndex(
       keys: DataFrame): DataFrame =
     md.corpusAsOf(spark, key, Some(keys))
       .select(element_at(col("after"), idKey).as("id"),
-        shingleArr(col("after")).as("sh"))
+        shinglesOf(element_at(col("after"), textKey)).as("sh"))
       .filter(col("sh").isNotNull)
 
   /** Fail-loud equivalence of the maintained signature state with a

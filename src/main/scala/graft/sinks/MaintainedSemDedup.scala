@@ -241,7 +241,7 @@ final class MaintainedSemDedup(
         .select(states.bucketExpr(Seq(col("cell"))).as("b"))
         .distinct().collect().map(_.getInt(0)).toSet
       if (dirtyBuckets.isEmpty) {
-        span.carryForward(states, stateSchema)
+        span.carryForward(states)
         span.record(0, 0, stateBuckets)
       } else {
         val dirtyCells = churned.select("cell").distinct()

@@ -183,7 +183,7 @@ final class MaintainedView(
       val touched = perBucket.map(_.getInt(0)).toSet
       val deltaGroups = perBucket.map(_.getLong(1)).sum
       if (touched.isEmpty) {
-        span.carryForward(states, stateSchema(spark))
+        span.carryForward(states)
         span.record(0, 0, stateBuckets)
       } else {
         // ONLY the touched buckets' rows feed the merge — the delta's

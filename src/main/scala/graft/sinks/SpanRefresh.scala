@@ -3,7 +3,6 @@ package graft.sinks
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** The span loop every maintainer refresh runs, written once: read the
   * cursor, [[LakeSink.poll]] the newly committed batches as ONE span, scan
@@ -204,11 +203,11 @@ private[sinks] final class RefreshSpan(
   def record(dirty: Long, rewritten: Int, carried: Int): Unit =
     ops.recordSpan(rows, dirty, rewritten, carried)
 
-  /** Publish `log`'s version at [[key]] as a pure carry-forward of `prev`:
-    * the span had rows but its delta touched none of this state.
+  /** Publish `log`'s version at [[key]] as a pure carry-forward of `prev`
+    * ([[BucketedStateLog.carry]], manifest only): the span had rows but
+    * its delta touched none of this state.
     */
-  def carryForward(log: BucketedStateLog, schema: StructType,
-      prev: Option[(Long, Long)] = prevKey): Unit =
-    log.commit(f, spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
-      Set.empty, prev, key)
+  def carryForward(log: BucketedStateLog,
+      prev: (Long, Long) = prevKey.get): Unit =
+    log.carry(f, prev, key)
 }

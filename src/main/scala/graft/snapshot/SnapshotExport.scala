@@ -8,7 +8,7 @@ import graft.snapshot.CatalogReader.SqlExecutor
   * stay open (and in this transaction) until every chunk finishes — that is
   * the whole point; `release()` is called only after the snapshot completes.
   * Workers attach with `SET TRANSACTION SNAPSHOT '<id>'`, which
-  * [[SnapshotReader.jdbc]] injects via `sessionInitStatement`.
+  * [[SnapshotReader.viaWire]] runs at the start of every chunk.
   */
 final class SnapshotExport(exec: SqlExecutor) {
   private var exported: Option[String] = None

@@ -241,7 +241,7 @@ object SnapshotOrchestrator {
     * committed in between appear in both the snapshot and the stream).
     * Records the incomplete job at the consistent point and returns it; the
     * job's `snapshotId` is the server-exported snapshot name for
-    * `SET TRANSACTION SNAPSHOT` ([[SnapshotReader.jdbc]]).
+    * `SET TRANSACTION SNAPSHOT` ([[SnapshotReader.viaWire]]).
     */
   def prepare(slots: SlotManager, store: SnapshotJobStore, slotName: String): SnapshotJob = {
     val created = slots.createFresh()

@@ -62,18 +62,4 @@ object SnapshotQuery {
     }
     Seq(base, where, tail).filter(_.nonEmpty).mkString(" ")
   }
-
-  /** The Spark JDBC `predicates` array for WHERE-fragment strategies: one
-    * predicate string per chunk/partition. (LIMIT/OFFSET chunks can't ride
-    * the predicates API — they become `dbtable` subqueries instead.)
-    */
-  def jdbcPredicates(chunks: Seq[ChunkPlanner.Chunk], condition: Option[String]): Array[String] =
-    chunks.map { ch =>
-      val p = ch.predicate.getOrElse(
-        throw new IllegalArgumentException("offset-strategy chunks have no predicate"))
-      condition match {
-        case Some(c) => s"$p AND ($c)"
-        case None => p
-      }
-    }.toArray
 }

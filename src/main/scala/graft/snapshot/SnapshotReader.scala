@@ -55,13 +55,12 @@ final case class SnapshotConfig(
 
 /** Executes a planned snapshot as a partitioned Spark read.
   *
-  * JDBC path (the production shape): one JDBC partition per chunk via the
-  * `predicates` array — Spark's direct analogue of the reference's chunk
-  * queue; `sessionInitStatement` carries `SET TRANSACTION SNAPSHOT '<id>'`
-  * so every partition sees the exported snapshot (B2,
-  * `pq/snapshot/transaction_snapshot.go:44-54`). The export transaction
-  * itself must be held open on the driver for the duration of the read —
-  * that wiring lives with the JDBC connection owner, not here.
+  * Wire path ([[viaWire]], the production shape): one Spark partition per
+  * chunk — Spark's direct analogue of the reference's chunk queue — each
+  * pinned to the exported snapshot with `SET TRANSACTION SNAPSHOT '<id>'`
+  * (B2, `pq/snapshot/transaction_snapshot.go:44-54`). The export
+  * transaction itself must be held open on the driver for the duration of
+  * the read — that wiring lives with the connection owner, not here.
   *
   * Parquet path: applies identical chunk predicates as Catalyst filters —
   * used by tests and the correctness oracle to prove the plan covers every
@@ -69,23 +68,6 @@ final case class SnapshotConfig(
   * equivalence tests, `snapshot_ctid_partitioning_test.go`).
   */
 object SnapshotReader {
-
-  def jdbc(
-      spark: SparkSession, url: String, schema: String, table: String,
-      stats: ChunkPlanner.TableStats, cfg: SnapshotConfig,
-      exportedSnapshotId: Option[String] = None,
-      props: java.util.Properties = new java.util.Properties()): DataFrame = {
-    val chunks = ChunkPlanner.plan(stats, cfg.chunkSize, cfg.strategyFor(schema, table))
-    val cond = cfg.conditionFor(schema, table)
-    exportedSnapshotId.foreach { id =>
-      props.setProperty("sessionInitStatement",
-        s"BEGIN; SET TRANSACTION ISOLATION LEVEL REPEATABLE READ; " +
-          s"SET TRANSACTION SNAPSHOT ${CatalogReader.sqlLiteral(id)}")
-    }
-    spark.read.jdbc(url,
-      s"${CatalogReader.quoteIdent(schema)}.${CatalogReader.quoteIdent(table)}",
-      SnapshotQuery.jdbcPredicates(chunks, cond), props)
-  }
 
   /** Wire-protocol snapshot read — no JDBC driver required: one Spark
     * partition per chunk, each dialing its own [[graft.pgproto.PgConnection]]

@@ -46,37 +46,7 @@ object StatefulOps {
     val timeoutConf =
       if (idleTimeoutMillis.isDefined) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
-    keyedEvents(s, events)
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[KeyState, KeyState](
-        org.apache.spark.sql.streaming.OutputMode.Update(), timeoutConf)(
-        updateKey(idleTimeoutMillis))
-  }
-
-  /** [[latestState]] on the `transformWithState` API — same keying and
-    * max-LSN-wins reduction ([[reduceKey]]), so both backends emit identical
-    * rows. Differences are operational, not semantic: state rides a named
-    * `ValueState` on the RocksDB provider (required by the API — pair with
-    * [[StateBackends.rocksDb]]) and idle keys expire through store-enforced
-    * TTL, which REMOVES silently exactly like the fMGWS timeout branch (no
-    * duplicate re-emission for update-mode sinks).
-    */
-  def latestStateTws(
-      s: SparkSession, events: DataFrame,
-      stateTtl: Option[java.time.Duration] = None): Dataset[KeyState] = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val timeMode = if (stateTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    keyedEvents(s, events)
-      .groupByKey(_._1)
-      .transformWithState(new KeyProcessor(stateTtl), timeMode,
-        org.apache.spark.sql.streaming.OutputMode.Update())
-  }
-
-  /** Shared keying projection: prefix-free composite key + (op, lsn, after). */
-  private def keyedEvents(
-      s: SparkSession, events: DataFrame): Dataset[(String, String, Long, Map[String, String])] = {
-    import s.implicits._
+    // prefix-free composite key + (op, lsn, after)
     events
       .select(
         when(size(col("key_names")) > 0,
@@ -90,41 +60,10 @@ object StatefulOps {
         col("op"), col("lsn"), col("after"))
       .filter(col("key").isNotNull)
       .as[(String, String, Long, Map[String, String])]
-  }
-
-  /** The pure reduction both backends share: fold the batch into the held
-    * state, max LSN wins, deletes tombstone.
-    */
-  private[streaming] def reduceKey(
-      key: String, held: Option[KeyState],
-      events: Iterator[(String, String, Long, Map[String, String])]): KeyState = {
-    val incoming = events.map { case (_, op, lsn, after) =>
-      KeyState(key, op, lsn, if (op == "delete") null else after)
-    }
-    (held.iterator ++ incoming).maxBy(_.lsn)
-  }
-
-  private[streaming] final class KeyProcessor(stateTtl: Option[java.time.Duration])
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      String, (String, String, Long, Map[String, String]), KeyState] {
-    import org.apache.spark.sql.streaming.{TimeMode, TTLConfig, ValueState}
-    import org.apache.spark.sql.streaming.OutputMode
-
-    @transient private var held: ValueState[KeyState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      held = getHandle.getValueState[KeyState]("latest",
-        org.apache.spark.sql.Encoders.product[KeyState],
-        stateTtl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, String, Long, Map[String, String])],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[KeyState] = {
-      val latest = reduceKey(key, if (held.exists()) Some(held.get()) else None, rows)
-      held.update(latest)
-      Iterator.single(latest)
-    }
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[KeyState, KeyState](
+        org.apache.spark.sql.streaming.OutputMode.Update(), timeoutConf)(
+        updateKey(idleTimeoutMillis))
   }
 
   /** The per-key state transition, extracted so specs can drive it directly
@@ -146,7 +85,10 @@ object StatefulOps {
       state.remove()
       Iterator.empty
     } else {
-      val latest = reduceKey(key, state.getOption, events)
+      // max LSN wins; deletes tombstone
+      val latest = (state.getOption.iterator ++ events.map { case (_, op, lsn, after) =>
+        KeyState(key, op, lsn, if (op == "delete") null else after)
+      }).maxBy(_.lsn)
       state.update(latest)
       idleTimeoutMillis.foreach(state.setTimeoutDuration)
       Iterator.single(latest)

@@ -3,21 +3,22 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.functions.TextFunctions.{hash60, wordShingles}
+import graft.functions.MinHash
 
 /** Ingest-time near-duplicate suppression — MinHash+LSH dedup as a
   * STREAMING operator, so a document pipeline can drop near-dups on
   * arrival instead of re-running batch dedup over the accumulated corpus.
   *
   * Same signature kernel as the batch pipeline
-  * ([[graft.operators.DedupQueries.minhashLsh]]): row-local distinct
-  * word-shingles → k seeded-XOR minhashes (one codegen'd projection, zero
-  * shuffle) → band keys. The stream then groups by (band, bucket) and each
-  * bucket's `flatMapGroupsWithState` state remembers the signatures it has
-  * seen; a new document whose signature agrees with a stored one on enough
-  * components (estimated Jaccard = matching fraction) is emitted as a
-  * [[StreamingDedup.DupFlag]]. Consumers drop flagged doc_ids (a doc
-  * flagged in ANY band is a near-dup — bands are an OR-index).
+  * ([[graft.operators.DedupQueries.minhashLsh]]): [[graft.functions.MinHash]]
+  * — row-local distinct word-shingles → k seeded-XOR minhashes → band
+  * keys, one projection and zero shuffle. The stream then groups by
+  * (band, bucket) and each bucket's `flatMapGroupsWithState` state
+  * remembers the signatures it has seen; a new document whose signature
+  * agrees with a stored one on enough components (estimated Jaccard =
+  * matching fraction) is emitted as a [[StreamingDedup.DupFlag]].
+  * Consumers drop flagged doc_ids (a doc flagged in ANY band is a
+  * near-dup — bands are an OR-index).
   *
   * 100-TB shape: state is hash-partitioned by bucket across executors;
   * per-bucket state is CAPPED at `maxBucketDocs` signatures (a bucket that
@@ -60,133 +61,24 @@ object StreamingDedup {
         updateBucket(numHashes, minEstJaccard, maxBucketDocs, idleTimeoutMillis))
   }
 
-  /** The shared signature kernel: (band, bucket-key, doc_id, signature)
-    * rows, one per band per shingleable document — both stateful backends
-    * consume exactly this frame.
-    *
-    * Imperative per-partition loop for the same reason as the batch
-    * [[graft.operators.ShingleSets]]: the higher-order-function expression
-    * chain (`transform`/`slice`/`array_join`) is interpreted, not
-    * whole-stage-codegen'd, and here it was worse than the batch case —
-    * predicate pushdown substituted the whole shingle+md5 expression into
-    * the `size(hs) > 0` filter (doubling it), and `slice(split(text))`
-    * inside the shingle lambda re-ran the regex split once PER SHINGLE
-    * POSITION. JFR put ~9 s of a ~10 s micro-batch in UTF8String.split /
-    * regex for sf0.1's 5000 docs; this loop computes each piece exactly
-    * once. Semantics are byte-identical to the expression form the DuckDB
-    * oracle pins: split("\\s+", -1), n-token shingles joined by single
-    * spaces, distinct, [[graft.functions.Hash60]] (= conv(substring(md5,
-    * 1,15),16,10)), per-hash seeded-XOR minimum, "," band keys; documents
-    * with fewer than `shingleN` tokens drop.
+  /** (band, bucket-key, doc_id, signature) rows, one per band per
+    * shingleable document, from the shared [[graft.functions.MinHash]]
+    * kernel under the batch pipeline's seed family — so a streamed
+    * document keys into exactly the bands `q_dedup_minhash` puts it in.
+    * A document too short to shingle has a NULL signature, which the
+    * band explode skips.
     */
   private[streaming] def bandedSignatures(
       s: SparkSession, docs: DataFrame,
       numHashes: Int, rowsPerBand: Int, shingleN: Int): Dataset[(Int, String, Long, Seq[Long])] = {
     import s.implicits._
     require(numHashes % rowsPerBand == 0, "numHashes must split into equal bands")
-    val nBands = numHashes / rowsPerBand
-    val seeds = (0 until numHashes).map(i => graft.functions.Hash60(s"minhash-seed-$i")).toArray
-
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (docId, text) =>
-          if (text == null) Iterator.empty
-          else {
-            val toks = text.split("\\s+", -1)
-            if (toks.length < shingleN) Iterator.empty
-            else {
-              // distinct shingles; order is irrelevant downstream (min-fold)
-              val shs = new java.util.HashSet[String](math.max(16, toks.length * 2))
-              val sb = new java.lang.StringBuilder(64)
-              val mins = Array.fill(numHashes)(Long.MaxValue)
-              var i = 0
-              while (i + shingleN <= toks.length) {
-                sb.setLength(0)
-                var k = 0
-                while (k < shingleN) {
-                  if (k > 0) sb.append(' ')
-                  sb.append(toks(i + k))
-                  k += 1
-                }
-                val sh = sb.toString
-                if (shs.add(sh)) {
-                  val h = graft.functions.Hash60(sh)
-                  var j = 0
-                  while (j < numHashes) {
-                    val v = h ^ seeds(j)
-                    if (v < mins(j)) mins(j) = v
-                    j += 1
-                  }
-                }
-                i += 1
-              }
-              val sig: Seq[Long] = mins.toSeq
-              (0 until nBands).iterator.map { b =>
-                val bkey = (0 until rowsPerBand)
-                  .map(r => mins(b * rowsPerBand + r)).mkString(",")
-                (b, bkey, docId, sig)
-              }
-            }
-          }
-        }
-      }
-  }
-
-  /** [[nearDupFlags]] on the `transformWithState` API (Spark 4 arbitrary
-    * state v2) — same signatures, same per-bucket math ([[bucketStep]]), so
-    * the two backends emit identical flags. What the new API buys at scale:
-    * state lives in a named `ValueState` on the RocksDB provider (the API
-    * REQUIRES RocksDB — pair with [[StateBackends.rocksDb]]), and idle
-    * buckets expire via store-enforced native TTL instead of per-key timeout
-    * bookkeeping in the transition function.
-    */
-  def nearDupFlagsTws(
-      s: SparkSession,
-      docs: DataFrame,
-      numHashes: Int = 8,
-      rowsPerBand: Int = 2,
-      shingleN: Int = 5,
-      minEstJaccard: Double = 0.5,
-      maxBucketDocs: Int = 128,
-      stateTtl: Option[java.time.Duration] = None): Dataset[DupFlag] = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    // TTL is clocked by processing time; without one, no clock is needed
-    val timeMode = if (stateTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    bandedSignatures(s, docs, numHashes, rowsPerBand, shingleN)
-      .groupByKey { case (band, bkey, _, _) => (band, bkey) }
-      .transformWithState(
-        new BucketProcessor(numHashes, minEstJaccard, maxBucketDocs, stateTtl),
-        timeMode, OutputMode.Append())
-  }
-
-  /** Per-bucket `StatefulProcessor`: one `ValueState[BucketState]` per
-    * (band, bucket), stepped by the shared [[bucketStep]] kernel.
-    */
-  private[streaming] final class BucketProcessor(
-      numHashes: Int, minEstJaccard: Double, maxBucketDocs: Int,
-      stateTtl: Option[java.time.Duration])
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      (Int, String), (Int, String, Long, Seq[Long]), DupFlag] {
-    import org.apache.spark.sql.streaming.{TimeMode, TTLConfig, ValueState}
-
-    @transient private var bucket: ValueState[BucketState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      bucket = getHandle.getValueState[BucketState]("bucket",
-        org.apache.spark.sql.Encoders.product[BucketState],
-        stateTtl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-
-    override def handleInputRows(
-        key: (Int, String),
-        rows: Iterator[(Int, String, Long, Seq[Long])],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[DupFlag] = {
-      val docs = if (bucket.exists()) bucket.get().docs else Nil
-      val (flags, next) =
-        bucketStep(numHashes, minEstJaccard, maxBucketDocs)(docs, rows.toSeq)
-      bucket.update(BucketState(next))
-      flags.iterator
-    }
+    docs
+      .select(col("doc_id"), MinHash.signature(MinHash.shingles(col("text"), shingleN),
+        MinHash.DedupFamily, numHashes).as("sig"))
+      .select(posexplode(MinHash.bandKeys(col("sig"), rowsPerBand)).as(Seq("band", "bkey")),
+        col("doc_id"), col("sig"))
+      .as[(Int, String, Long, Seq[Long])]
   }
 
   /** The per-bucket transition, extracted so specs drive it directly with
@@ -204,44 +96,29 @@ object StreamingDedup {
       state.remove()
       Iterator.empty
     } else {
-      val docs = state.getOption.map(_.docs).getOrElse(Nil)
-      val (flags, next) =
-        bucketStep(numHashes, minEstJaccard, maxBucketDocs)(docs, rows.toSeq)
-      state.update(BucketState(next))
-      idleTimeoutMillis.foreach(state.setTimeoutDuration)
-      flags.iterator
-    }
-  }
-
-  /** The pure per-bucket step both stateful backends share: fold a batch's
-    * rows (doc_id-sorted for deterministic flag direction) over the retained
-    * signatures; returns (flags emitted, new retained list). Eviction drops
-    * the OLDEST entries beyond the cap.
-    */
-  private[streaming] def bucketStep(
-      numHashes: Int, minEstJaccard: Double, maxBucketDocs: Int)(
-      retained: List[(Long, Seq[Long])],
-      rows: Seq[(Int, String, Long, Seq[Long])]): (List[DupFlag], List[(Long, Seq[Long])]) = {
-    var docs = retained
-    val flags = List.newBuilder[DupFlag]
-    // Deterministic order inside the batch: micro-batch iterators carry
-    // no ordering guarantee, and flag direction (who is "dup_of" whom)
-    // must not depend on shuffle arrival order.
-    rows.sortBy(_._3).foreach { case (band, _, docId, sig) =>
-      if (!docs.exists(_._1 == docId)) {
-        val best = docs.iterator.map { case (prevId, prevSig) =>
-          val same = (0 until numHashes).count(i => sig(i) == prevSig(i))
-          (prevId, same.toDouble / numHashes)
-        }.foldLeft(Option.empty[(Long, Double)]) {
-          case (acc, cur) if acc.forall(_._2 < cur._2) => Some(cur)
-          case (acc, _) => acc
+      var docs = state.getOption.map(_.docs).getOrElse(Nil)
+      val flags = List.newBuilder[DupFlag]
+      // Deterministic order inside the batch: micro-batch iterators carry
+      // no ordering guarantee, and flag direction (who is "dup_of" whom)
+      // must not depend on shuffle arrival order.
+      rows.toSeq.sortBy(_._3).foreach { case (band, _, docId, sig) =>
+        if (!docs.exists(_._1 == docId)) {
+          val best = docs.iterator.map { case (prevId, prevSig) =>
+            val same = (0 until numHashes).count(i => sig(i) == prevSig(i))
+            (prevId, same.toDouble / numHashes)
+          }.foldLeft(Option.empty[(Long, Double)]) {
+            case (acc, cur) if acc.forall(_._2 < cur._2) => Some(cur)
+            case (acc, _) => acc
+          }
+          best.filter(_._2 >= minEstJaccard).foreach { case (prevId, est) =>
+            flags += DupFlag(docId, prevId, band, est)
+          }
+          docs = (docs :+ (docId -> sig)).takeRight(maxBucketDocs)
         }
-        best.filter(_._2 >= minEstJaccard).foreach { case (prevId, est) =>
-          flags += DupFlag(docId, prevId, band, est)
-        }
-        docs = (docs :+ (docId -> sig)).takeRight(maxBucketDocs)
       }
+      state.update(BucketState(docs))
+      idleTimeoutMillis.foreach(state.setTimeoutDuration)
+      flags.result().iterator
     }
-    (flags.result(), docs)
   }
 }

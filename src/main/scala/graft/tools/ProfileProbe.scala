@@ -32,16 +32,8 @@ object ProfileProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val whats = (if (args.nonEmpty) args(0) else "mv").split(",").toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     val runs = whats.map(w => w -> resolve(w)).toMap // unknown names fail before any work
     def run(what: String, dir: String): Unit =
@@ -106,7 +98,8 @@ object ProfileProbe {
       Thread.sleep(500) // let listener drain
       println(f"PROBE $what wall=$wall%.2f s jobs=${jobs.get} stages=${stages.get} " +
         f"tasks=${tasks.get} taskTime=${taskMs.get / 1000.0}%.2f s " +
-        f"(task-parallel floor over ${cpus} cpus: ${taskMs.get / 1000.0 / cpus.toInt}%.2f s)")
+        f"(task-parallel floor over ${graft.LocalSession.cpus} cpus: " +
+        f"${taskMs.get / 1000.0 / graft.LocalSession.cpus}%.2f s)")
       sites.asScala.toSeq.sortBy(-_._2._2.get).take(8).foreach { case (site, (n, ns)) =>
         println(f"SITE ${ns.get / 1e9}%8.2f s  n=${n.get}%4d  $site")
       }

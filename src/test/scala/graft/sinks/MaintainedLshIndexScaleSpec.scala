@@ -99,12 +99,14 @@ class MaintainedLshIndexScaleSpec extends AnyFunSuite {
       assert(ix.refresh(spark) == 1)
       val seedMs = (System.nanoTime - t0) / 1e6
 
-      // churn: 0.1% of documents — half edited to fresh texts, half deleted
+      // churn: 0.1% of documents — half edited to fresh texts, half deleted.
+      // The edit replaces the one token every 5-shingle covers (the 5th),
+      // so the new text shares no shingle with the old one
       val churnRows = (0 until CHURN).map { j =>
         val i = j * (DOCS / CHURN) + 7
         if (j % 2 == 0)
           ev(100000L + j, "update", doc(s"d$i", text(i)),
-            doc(s"d$i", text(i) + s" edited$j"))
+            doc(s"d$i", text(i).replace(s" e${i % 79} ", s" edited$j ")))
         else ev(100000L + j, "delete", doc(s"d$i", text(i)), null)
       }
       sink.appendBatch(envelope(churnRows), 1L)
@@ -113,7 +115,7 @@ class MaintainedLshIndexScaleSpec extends AnyFunSuite {
       val churnMs = (System.nanoTime - t1) / 1e6
 
       // correctness sanity on the churned state: an edited doc's OLD text
-      // no longer probes to it; its new near-dup text still candidates it
+      // no longer probes to it
       val probeOld = ix.candidatesFor(spark, text(7)).collect()
         .map(_.getString(0)).toSet
       assert(!probeOld.contains("d7"),

@@ -349,6 +349,35 @@ class MaintainedLshIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("a state dir fingerprinted before the Hash60 kernel refuses — rebuild migrates") {
+    withIndex { (sink, ix, root) =>
+      sink.appendBatch(envelope(Seq(
+        ev(1, "insert", null, doc("a1", TextA)),
+        ev(2, "insert", null, doc("a2", TextA)))), 0L)
+      assert(ix.refresh(spark) == 1)
+      // the fingerprint an xxhash64-shingle index wrote for these params:
+      // its signatures are another family, so serving them would miss
+      val viewDir = new java.io.File(s"$root/_graft_views/lsh")
+      viewDir.listFiles().filter(_.getName.contains("_fingerprint"))
+        .foreach(_.delete())
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$root/_graft_views/lsh/_fingerprint"),
+        ("lsh bands=4 shingleN=5 idKey=id textKey=text buckets=8 " +
+          "seeds=lsh-lsh-seed").getBytes)
+      val e = intercept[IllegalStateException](ix.refresh(spark))
+      assert(e.getMessage.contains("different parameters") &&
+        e.getMessage.contains("rebuild"),
+        s"refusal must name the rebuild path: ${e.getMessage}")
+      intercept[IllegalStateException](ix.candidatePairs(spark))
+      ix.rebuild(spark)
+      assert(pairs(ix) == Set(("a1", "a2")))
+      val got = ix.candidatesFor(spark, TextA).collect()
+        .map(r => r.getString(0) -> r.getInt(1)).toMap
+      assert(got == Map("a1" -> 4, "a2" -> 4), s"probe after the migration: $got")
+      assert(ix.refresh(spark) == 0)
+    }
+  }
+
   test("rebuild after a crashed manifest replace recovers the full cursor span") {
     withIndex { (sink, ix, root) =>
       // two refreshes leave the replay-prev v(0,0) AND the latest v(0,1)

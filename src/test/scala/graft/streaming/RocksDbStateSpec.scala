@@ -49,41 +49,6 @@ class RocksDbStateSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("transformWithState backend: same flags as flatMapGroupsWithState, with and without TTL") {
-    def runTws(ttl: Option[java.time.Duration], name: String): Set[(Long, Long, Int, Double)] = {
-      // the arbitrary-state-v2 API requires the RocksDB provider
-      val s = StateBackends.rocksDb(spark.newSession())
-      // processing-time TTL keeps scheduling no-data cleanup batches, which
-      // starves processAllAvailable in a drive-to-completion test — let the
-      // TTL expire lazily instead (production leaves this on)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = MemoryStream[(Long, String)]
-      val docs = mem.toDF().toDF("doc_id", "text")
-      val q = StreamingDedup.nearDupFlagsTws(s, docs, minEstJaccard = 0.5, stateTtl = ttl)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        mem.addData((1L, base))
-        q.processAllAvailable()
-        mem.addData((2L, distinct), (3L, nearDup))
-        q.processAllAvailable()
-        s.table(name).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-      } finally q.stop()
-    }
-
-    val (fmgwsFlags, _) = runDedup(StateBackends.rocksDb(spark.newSession()), "dedup_fmgws_ref")
-    val twsFlags = runTws(None, "dedup_tws")
-    assert(twsFlags == fmgwsFlags,
-      s"backends must agree: tws=$twsFlags fmgws=$fmgwsFlags")
-    assert(twsFlags.nonEmpty && twsFlags.forall { case (d, of, _, est) =>
-      d == 3L && of == 1L && est >= 0.5 })
-    // a TTL far beyond the test's runtime: exercises the TTL state path
-    // without changing the output
-    assert(runTws(Some(java.time.Duration.ofHours(1)), "dedup_tws_ttl") == twsFlags)
-  }
-
   test("RocksDB provider: identical flags to the default provider, and really engaged") {
     val rocks = StateBackends.rocksDb(spark.newSession())
     assert(rocks.conf.get("spark.sql.streaming.stateStore.providerClass")

@@ -53,27 +53,6 @@ class StatefulOpsSpec extends AnyFunSuite {
     assert(finalState("1:3")._3.get("name") == "carol")
     // T1 commit rewrite: key 2's delete carries its txn-end LSN (140 + 3)
     assert(finalState("1:2")._2 == 143L)
-
-    // The transformWithState backend (RocksDB-required) must materialize
-    // the SAME final state from the same stream.
-    PgCdcTestHook.register("stateful_tws", new InMemoryWalSource(frames))
-    val rocks = StateBackends.rocksDb(spark.newSession())
-    val streamTws = rocks.readStream.format("pgcdc")
-      .option("testSourceKey", "stateful_tws")
-      .option("relationRegistryKey", "stateful_tws")
-      .option("maxTxnsPerTrigger", "2")
-      .load()
-    val q2 = StatefulOps.latestStateTws(rocks, streamTws)
-      .writeStream.format("memory").queryName("latest_state_tws")
-      .outputMode("update").start()
-    q2.processAllAvailable()
-    q2.stop()
-    val finalTws = rocks.table("latest_state_tws").collect()
-      .map(r => (r.getString(0), (r.getString(1), r.getLong(2),
-        Option(r.getAs[Map[String, String]]("image")))))
-      .groupBy(_._1).map { case (k, rows) => k -> rows.map(_._2).maxBy(_._2) }
-    assert(finalTws == finalState,
-      s"backends must materialize identical state: tws=$finalTws fmgws=$finalState")
   }
 
   test("composite replica-identity keys do not collapse on the first component") {
