@@ -40,8 +40,8 @@ object GraftConnector {
   /** Boot the pipeline from one [[GraftConfig]].
     *
     * @param exec regular-SQL seam (catalog introspection, publication DDL) —
-    *             `CatalogReader.jdbcExecutor` or `PgConnection.executor`,
-    *             usually wrapped in `RetryingExecutor`.
+    *             `PgConnection.executor`, usually wrapped in
+    *             `RetryingExecutor`.
     * @param replExec replication-protocol seam (CREATE_REPLICATION_SLOT) —
     *                 a `PgConnection(replication = true).executor`.
     * @param snapshotSink receives each table's typed snapshot frame

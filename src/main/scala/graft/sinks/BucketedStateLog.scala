@@ -117,22 +117,6 @@ private[sinks] final class BucketedStateLog(
   def subExpr: org.apache.spark.sql.Column =
     if (subs == 1) lit(0) else pmod(hash(subCols.map(col): _*), lit(subs))
 
-  /** Driver-side bucket of LITERAL key values — the same Murmur3
-    * evaluation [[bucketExpr]] applies on the engine, computed without a
-    * Spark job. Lets a point reader prune to the buckets of keys it
-    * already knows ([[MaintainedIvfIndex.search]] reads only its nprobe
-    * cells' buckets): pass the values in group-column order with their
-    * STATE column types (a type mismatch would hash differently and
-    * prune the wrong slices).
-    */
-  def bucketOf(values: Seq[(Any, org.apache.spark.sql.types.DataType)]): Int = {
-    val h = new org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
-      values.map { case (v, t) =>
-        org.apache.spark.sql.catalyst.expressions.Literal.create(v, t) })
-      .eval(null)
-    math.floorMod(h.asInstanceOf[Int], buckets)
-  }
-
   /** The bucket NULL-keyed rows land in. */
   lazy val nullBucket: Int = {
     // hash(null) is Murmur3's seed (42) — compute it the engine's way

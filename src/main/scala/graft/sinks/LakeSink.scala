@@ -977,12 +977,6 @@ final class LakeSink(
   def cursorInterval(spark: SparkSession, name: String): (Long, Long) =
     readCursor(spark, name)._1
 
-  /** The vacuum low extent this consumer has acknowledged as innocent
-    * (Long.MaxValue = none — any vacuum below the floor refuses).
-    */
-  def cursorAckedVacuumLow(spark: SparkSession, name: String): Long =
-    readCursor(spark, name)._2
-
   /** Cursor interval and the ACKNOWLEDGED vacuum low mark. The
     * acknowledged mark is the same construction the streaming
     * source's `LakeOffset.vl` carries: the vacuum low extent this

@@ -27,17 +27,17 @@ import graft.operators.{IncrementalAgg, IncrementalDistinct}
   * and they are deliberately NOT in the state fingerprint (the
   * tokenizer family and id/text keys are).
   *
-  * [[search]] is the scale-right read: the query tokenizes through the
-  * SAME engine expression on a one-row frame, each distinct term maps to
-  * its state-log hash bucket ([[BucketedStateLog.bucketOf]]), and ONLY
-  * those ≤ |query terms| buckets' slices are read; document lengths come
-  * from the lake's key-restricted fold over just the candidate ids,
-  * pinned to the same POSTINGS state version key (tf, df, and dl can
-  * never tear against a concurrent refresh). N/avgdl are a one-row pull
-  * from the stats view's own cursor, which [[refresh]] advances in the
-  * same call — the two reads agree at every shared refresh boundary
-  * (the q_mv composition caveat); between the two commits of one
-  * in-flight refresh, N/avgdl may lag the postings by that one span.
+  * [[search]] is the scale-right read, the one-row case of
+  * [[searchAll]]: the query tokenizes through the SAME engine expression
+  * as documents, and ONLY its ≤ |query terms| state buckets are read;
+  * document lengths come from the lake's key-restricted fold over just
+  * the candidate ids, pinned to the same POSTINGS state version key
+  * (tf, df, and dl can never tear against a concurrent refresh).
+  * N/avgdl are a one-row pull from the stats view's own cursor, which
+  * [[refresh]] advances in the same call — the two reads agree at every
+  * shared refresh boundary (the q_mv composition caveat); between the
+  * two commits of one in-flight refresh, N/avgdl may lag the postings
+  * by that one span.
   * Scoring is the reference formula (`idf = ln(1+(N-df+0.5)/(df+0.5))`,
   * `tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl))`), ties on doc id.
   *
@@ -308,36 +308,6 @@ final class MaintainedBm25Index(
     else dfCap
   }
 
-  /** The query terms surviving the df cap: terms whose df view entry
-    * exceeds `dfCap` are dropped BEFORE their posting lists are read —
-    * a stop word's postings ("the": df ≈ N) live entirely in one state
-    * bucket, so without the gate the most common query shape there is
-    * degrades to a corpus-proportional read through one skewed bucket.
-    * The lookup reads ≤ |terms| buckets of the VOCABULARY-sized df
-    * state (a bounded planning pull, ≤ |terms| rows). When the df view
-    * has no version within the postings interval (a pre-df-era state
-    * not yet refreshed), pruning is skipped — reads degrade to the
-    * uncapped cost, never to a wrong answer.
-    */
-  private[sinks] def cappedTerms(spark: SparkSession,
-      key: Option[(Long, Long)], terms: Seq[String],
-      dfCap: Long): Seq[String] = {
-    // validate BEFORE the early returns — the same invalid dfCap must
-    // refuse whatever the query tokenized to, or caller bugs hide until
-    // the query shape changes
-    require(dfCap > 0, s"dfCap must be positive, got $dfCap")
-    if (dfCap == Long.MaxValue || terms.isEmpty) return terms
-    val dKey = companionKey(dfView, spark, key)
-    if (dKey.isEmpty) return terms
-    val buckets = terms.map(t => dfView.stateLog.bucketOf(Seq(
-      (t, org.apache.spark.sql.types.StringType)))).toSet
-    val dfs = dfView.readBucketsAt(spark, dKey, buckets)
-      .filter(col("term").isin(terms: _*))
-      .select(col("term"), col("n").cast("long")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    terms.filter(t => dfs.getOrElse(t, 0L) <= dfCap)
-  }
-
   /** Fail-loud maintenance-equivalence of the postings state with a
     * from-scratch re-tokenization — see
     * [[MaintainedDistinct.verifyAgainstRebuild]]. Returns the number of
@@ -377,13 +347,15 @@ final class MaintainedBm25Index(
     md.rebuild(spark, s => { statsView.rebuild(s); dfView.rebuild(s) })
 
   /** Top-k BM25 retrieval for a free-text query: (id, score), score
-    * descending, ties on id. Empty (same schema) when the query has no
-    * alphabetic tokens or the index is empty.
+    * descending, ties on id — the one-row case of [[searchAll]], through
+    * the same core. Empty (same schema) when the query has no alphabetic
+    * tokens or the index is empty.
     *
     * `dfCap` bounds the read: terms whose document frequency exceeds it
-    * are dropped BEFORE their posting lists are fetched (see
-    * [[cappedTerms]]). Score semantics of a capped term: it contributes
-    * NOTHING — the result is exactly the uncapped search for the same
+    * are dropped BEFORE their posting lists are fetched (a stop word's
+    * postings live entirely in one state bucket; the gate reads the
+    * vocabulary-sized df view instead). Score semantics of a capped
+    * term: it contributes NOTHING — the result is exactly the uncapped search for the same
     * query with that term removed (spec-pinned). That is the honest
     * approximation: a term with df > cap has
     * idf ≤ ln(1 + (N−cap+0.5)/(cap+0.5)), ≈ 0 for any cap that is a
@@ -395,46 +367,9 @@ final class MaintainedBm25Index(
   def search(spark: SparkSession, query: String, k: Int,
       dfCap: Long = MaintainedBm25Index.InheritDfCap): DataFrame = {
     require(k > 0, s"top-k needs k > 0, got $k")
-    val cap = resolveCap(dfCap)
-    // the query tokenizes through the SAME engine expression as documents
-    val allTerms = ImageProbes
-      .frame(spark, Map("id" -> "_probe", textKey -> query))
-      .select(array_distinct(termsOf(col("im"))).as("t"))
-      .head().getSeq[String](0)
-    val key = md.latestKey(spark)
-    def empty: DataFrame = md.entriesAt(spark, key).filter(lit(false))
-      .select(col("v").as("id"), lit(0.0d).as("score"))
-    if (allTerms.isEmpty) return empty
-    val (nDocs, avgdl) = corpusStatsAt(spark, key)
-    if (nDocs == 0L) return empty
-    val qTerms = cappedTerms(spark, key, allTerms, cap)
-    if (qTerms.isEmpty) return empty
-    // bucket-pruned postings read: ≤ |query terms| buckets, never the index
-    val buckets = qTerms.map(t => md.stateLog.bucketOf(Seq(
-      (t, org.apache.spark.sql.types.StringType)))).toSet
-    val post = md.entriesBucketsAt(spark, key, buckets)
-      .filter(col("term").isin(qTerms: _*))
-      .select(col("term"), col("v").as("id"), col("rc").as("tf"))
-      .localCheckpoint()
-    // df is exact within the pruned read (it covers every posting of the
-    // query's terms); doc lengths come from the candidate-restricted fold
-    // at the SAME state version key
-    val dfs = post.groupBy("term").agg(count(lit(1)).as("df"))
-    val dls = md.corpusAsOf(spark, key,
-        Some(post.select(col("id").as("k")).distinct()))
-      .select(element_at(col("after"), idKey).as("id"),
-        size(termsOf(col("after"))).cast("double").as("dl"))
-    val idf = log(lit(1.0) +
-      (lit(nDocs.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val norm = col("tf") + lit(k1) *
-      (lit(1 - b) + lit(b) * col("dl") / lit(avgdl))
-    post
-      .join(broadcast(dfs), Seq("term"))
-      .join(dls, Seq("id"))
-      .withColumn("contrib", idf * (col("tf") * lit(k1 + 1) / norm))
-      .groupBy("id").agg(sum(col("contrib")).as("score"))
+    rank(spark, ProbeFrames.single(spark, typedLit(query)), k, resolveCap(dfCap))
+      .drop("probe_id")
       .orderBy(col("score").desc, col("id").asc)
-      .limit(k)
   }
 
   /** SET-ORIENTED [[search]]: top-k BM25 retrieval for EVERY probe row
@@ -458,17 +393,23 @@ final class MaintainedBm25Index(
       dfCap: Long = MaintainedBm25Index.InheritDfCap): DataFrame = {
     require(k > 0, s"top-k needs k > 0, got $k")
     val cap = resolveCap(dfCap)
-    val key = md.latestKey(spark)
-    def empty: DataFrame = probes
-      .select(col(idCol).cast("string").as("probe_id"),
-        lit(null).cast("string").as("id"), lit(0.0d).as("score"))
-      .filter(lit(false))
     // intake validation runs BEFORE the empty-corpus early return: a
     // malformed probe frame must refuse on the pipeline's very first
     // (still-empty-index) run, not start failing once the corpus fills
-    val src = ProbeFrames.unique(probes, idCol, queryCol)
+    rank(spark, ProbeFrames.unique(probes, idCol, queryCol), k, cap)
+  }
+
+  /** The ranking core of both searches, over a unique (probe_id,
+    * _payload) frame and a resolved df cap.
+    */
+  private def rank(spark: SparkSession, src: DataFrame, k: Int,
+      cap: Long): DataFrame = {
+    val key = md.latestKey(spark)
     val (nDocs, avgdl) = corpusStatsAt(spark, key)
-    if (nDocs == 0L) return empty
+    if (nDocs == 0L) return src
+      .select(col("probe_id"), lit(null).cast("string").as("id"),
+        lit(0.0d).as("score"))
+      .filter(lit(false))
     // materialized once: probes tokenize exactly one time, whether the
     // frame then feeds the df-cap planning pull + join or goes straight
     // to postings-bucket planning

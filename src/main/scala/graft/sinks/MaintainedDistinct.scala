@@ -376,22 +376,19 @@ final class MaintainedDistinct(
     case None => dist.init(spark)
   }
 
-  /** [[entries]] restricted to a bucket subset — point readers that know
-    * their group keys prune to those keys' buckets
-    * ([[BucketedStateLog.bucketOf]]) and never scan the state.
+  /** [[entriesAt]] restricted to a bucket subset — probe readers plan
+    * their keys' buckets in the engine ([[BucketedStateLog.bucketExpr]]
+    * over the probe frame, a bounded distinct pull) and never scan the
+    * state.
     */
-  private[sinks] def entriesBuckets(spark: SparkSession, only: Set[Int]): DataFrame =
-    entriesBucketsAt(spark, latestKey(spark), only)
-
-  /** [[entriesBuckets]] pinned to an explicit version key. */
   private[sinks] def entriesBucketsAt(spark: SparkSession,
       key: Option[(Long, Long)], only: Set[Int]): DataFrame = key match {
     case Some(k) => states.readBuckets(spark, k, Some(only), stateSchema(spark))
     case None => dist.init(spark)
   }
 
-  /** The state log's bucket geometry, for [[BucketedStateLog.bucketOf]]
-    * callers (group-key → bucket, driver-side).
+  /** The state log's bucket geometry, for probe readers' bucket
+    * planning ([[BucketedStateLog.bucketExpr]]).
     */
   private[sinks] def stateLog: BucketedStateLog = states
 

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.IncrementalDistinct
 
@@ -23,14 +24,13 @@ import graft.operators.IncrementalDistinct
   * posting membership — crash/replay/seed/carry-forward/bucketed
   * persistence inherited verbatim from [[MaintainedDistinct]].
   *
-  * [[search]] is the scale-right read: the query embedding is assigned
-  * to its `nprobe` nearest cells ON THE DRIVER (centroids are a bounded
-  * in-memory model), those cells map to their state-log hash buckets
-  * ([[BucketedStateLog.bucketOf]] — the same Murmur3 the engine
-  * applies), and ONLY those buckets' slices are read — a point lookup
-  * over a billion-document index reads ~nprobe/buckets of the state,
-  * never the state. Returned ids are IVF candidates — exact re-rank
-  * downstream, same as the batch `q_ann_ivf` pipeline.
+  * [[search]] is the scale-right read, the one-row case of the set
+  * reads ([[searchTopKAll]]): the query embedding is assigned to its
+  * `nprobe` nearest cells in the engine, by the same expressions as the
+  * postings, and ONLY those cells' state-log buckets are read — a point
+  * lookup over a billion-document index reads ~nprobe/buckets of the
+  * state, never the state. Returned ids are IVF candidates — exact
+  * re-rank downstream, same as the batch `q_ann_ivf` pipeline.
   *
   * Distance is squared L2 (ties break on the lower cell index, so
   * assignment is deterministic); L2-normalize embeddings upstream for
@@ -157,9 +157,8 @@ final class MaintainedIvfIndex(
     * FLOAT, accumulated in double. ONE definition by construction —
     * assignment ([[cellOf]]), ranking ([[searchTopK]]/[[searchTopKAll]]),
     * training, and the drift gauge must agree bit-for-bit or a near-tie
-    * embedding ranks under one family and posts under another
-    * ([[nearestCells]] mirrors it driver-side; the near-tie spec pins
-    * the pairing).
+    * embedding ranks under one family and posts under another (the
+    * near-tie spec pins the pairing).
     */
   private def sqDist(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
@@ -241,52 +240,22 @@ final class MaintainedIvfIndex(
   /** Per-cell posting counts (`cell`, `nd_docs`). */
   def cells(spark: SparkSession): DataFrame = md.read(spark)
 
-  /** The driver-side assignment of an arbitrary embedding — exposed so
-    * writers and tests agree with the engine's expression bit-for-bit.
-    */
-  def nearestCells(query: Seq[Float], nprobe: Int): Seq[Int] = {
-    require(query.size == dim, s"query dim ${query.size} != $dim")
-    centroids.zipWithIndex.map { case (c, i) =>
-      // mirror the engine's arithmetic exactly: [[cellOf]] squares the
-      // difference in FLOAT ((a-b)*(a-b) over float arrays) and only the
-      // accumulate widens to double — squaring in double here would
-      // resolve near-ties the engine's float square collapses, assigning
-      // a near-tie embedding to a different cell than its posting
-      (c.zip(query).map { case (a, b) =>
-        val d = a - b; (d * d).toDouble }.sum, i)
-    }.sortBy { case (d, i) => (d, i) }.take(nprobe).map(_._2)
-  }
-
-  /** IVF candidate ids for a query embedding: assign to `nprobe` nearest
-    * cells on the driver, read ONLY those cells' state-log buckets, and
-    * return the posting ids (`id`, `cell` — plus `code` under PQ).
-    * Exact re-rank downstream.
+  /** IVF candidate ids for a query embedding — the one-row case of the
+    * set reads' candidate read ([[postingsOf]]): the `nprobe` nearest
+    * cells, ONLY those cells' state-log buckets, and their posting rows
+    * (`id`, `cell` — plus `code` under PQ). Exact re-rank downstream.
     */
   def search(spark: SparkSession, query: Seq[Float], nprobe: Int): DataFrame =
-    searchAt(spark, md.latestKey(spark), query, nprobe)
-
-  private def searchAt(spark: SparkSession, key: Option[(Long, Long)],
-      query: Seq[Float], nprobe: Int): DataFrame = {
-    val cells = nearestCells(query, nprobe)
-    val buckets = cells.map(c => md.stateLog.bucketOf(
-      Seq((c, org.apache.spark.sql.types.IntegerType)))).toSet
-    val rows = md.entriesBucketsAt(spark, key, buckets)
-      .filter(col("cell").isin(cells: _*))
-    if (pqBooks.isEmpty) rows.select(col("v").as("id"), col("cell"))
-    else rows.select(col("v.id").as("id"), col("cell"),
-      col("v.code").as("code"))
-  }
+    postingsOf(spark, md.latestKey(spark), point(spark, query), nprobe)
+      .drop("probe_id")
 
   /** [[search]] FINISHED the way the batch `q_ann_ivf` pipeline finishes
-    * (`AnnQueries`): exact distance re-rank of the candidates against
-    * their CURRENT embeddings, top `k`. The embeddings are fetched via
-    * the key-restricted state fold pinned to the index's applied interval
-    * ([[MaintainedDistinct.corpusAsOf]]): only the candidate ids' bucket
-    * slices of the lake are read — candidate-proportional, never a table
-    * scan. Distance is exact squared L2 in the engine's arithmetic family
-    * (float component differences squared in float, double accumulate —
-    * identical to assignment, so ranking and assignment cannot disagree);
-    * ascending, ties on id. Returns (id, dist).
+    * (`AnnQueries`), the one-row case of [[searchTopKAll]]: exact
+    * squared-L2 re-rank of the candidates against their CURRENT
+    * embeddings, fetched candidate-restricted at the index's applied
+    * interval ([[MaintainedDistinct.corpusAsOf]] — never a table scan)
+    * and scored in assignment's arithmetic family; top `k`, ascending,
+    * ties on id. Returns (id, dist).
     *
     * Prerequisite: `idKey` must be the table's replica-identity key (the
     * fold key the restricted read prunes on) — already required for
@@ -295,19 +264,7 @@ final class MaintainedIvfIndex(
   def searchTopK(spark: SparkSession, query: Seq[Float], nprobe: Int,
       k: Int): DataFrame = {
     require(k > 0, s"top-k needs k > 0, got $k")
-    require(query.size == dim, s"query dim ${query.size} != $dim")
-    // ONE key threads the candidate read and the embedding fetch — see
-    // MaintainedLshIndex.verifiedPairs for the tear this prevents
-    val key = md.latestKey(spark)
-    val cand = searchAt(spark, key, query, nprobe).localCheckpoint()
-    val docs = md.corpusAsOf(spark, key,
-      Some(cand.select(col("id").as("k")).distinct()))
-    val dist = sqDist(parsedVec(col("after")), typedLit(query))
-    docs
-      .select(element_at(col("after"), idKey).as("id"), dist.as("dist"))
-      .join(cand.select("id"), Seq("id"), "left_semi")
-      .orderBy(col("dist").asc, col("id").asc)
-      .limit(k)
+    ranked(topK(spark, point(spark, query), nprobe, k, None))
   }
 
   /** ADC (asymmetric-distance) approximation of ‖probe − doc‖² computed
@@ -351,25 +308,18 @@ final class MaintainedIvfIndex(
       "the index with codebooks (or use the exact searchTopK)")
     require(k > 0, s"top-k needs k > 0, got $k")
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    require(query.size == dim, s"query dim ${query.size} != $dim")
-    val key = md.latestKey(spark)
-    // one job, bounded by the shortlist: the ADC sort sees only the
-    // probed buckets' posting rows
-    val short = searchAt(spark, key, query, nprobe)
-      .withColumn("approx", adcApprox(typedLit(query), col("code")))
-      .orderBy(col("approx").asc, col("id").asc)
-      .limit(shortlist)
-      .select("id")
-      .localCheckpoint()
-    val docs = md.corpusAsOf(spark, key,
-      Some(short.select(col("id").as("k")).distinct()))
-    val dist = sqDist(parsedVec(col("after")), typedLit(query))
-    docs
-      .select(element_at(col("after"), idKey).as("id"), dist.as("dist"))
-      .join(short, Seq("id"), "left_semi")
-      .orderBy(col("dist").asc, col("id").asc)
-      .limit(k)
+    ranked(topK(spark, point(spark, query), nprobe, k, Some(shortlist)))
   }
+
+  /** A point read's one-row probe vector frame (probe_id, qv). */
+  private def point(spark: SparkSession, query: Seq[Float]): DataFrame = {
+    require(query.size == dim, s"query dim ${query.size} != $dim")
+    ProbeFrames.single(spark, typedLit(query)).withColumnRenamed("_payload", "qv")
+  }
+
+  /** A point top-k's rows in rank order: dist ascending, ties on id. */
+  private def ranked(topK: DataFrame): DataFrame =
+    topK.drop("probe_id").orderBy(col("dist").asc, col("id").asc)
 
   /** The corpus' current usable embeddings (id, v float array) as of the
     * index's applied interval — the shared read of the drift gauge and
@@ -573,89 +523,20 @@ final class MaintainedIvfIndex(
     * loop would pay a fingerprint read + manifest listing + job apiece
     * for. Each probe's `nprobe` nearest cells are computed ENGINE-side
     * in the same arithmetic family as [[cellOf]] (float squared
-    * differences, double accumulate, ties to the lower cell — bit-equal
-    * to [[nearestCells]]); the postings read is pruned to the DISTINCT
-    * probed cells' buckets (bounded planning pull, ≤ stateBuckets
-    * rows); candidates re-rank against their current embeddings fetched
-    * candidate-restricted at the SAME state version key; top-k per
-    * probe is one windowed rank over (dist, id). Returns
-    * (probe_id, id, dist); probes with absent/mis-dimensioned
-    * embeddings produce no output rows. `embCol` holds the
-    * comma-separated float embedding (the image-map encoding).
+    * differences, double accumulate, ties to the lower cell); the
+    * postings read is pruned to the DISTINCT probed cells' buckets
+    * (bounded planning pull, ≤ stateBuckets rows); candidates re-rank
+    * against their current embeddings fetched candidate-restricted at
+    * the SAME state version key; top-k per probe is one windowed rank
+    * over (dist, id). Returns (probe_id, id, dist); probes with
+    * absent/mis-dimensioned embeddings produce no output rows. `embCol`
+    * holds the comma-separated float embedding (the image-map encoding).
     */
   def searchTopKAll(spark: SparkSession, probes: DataFrame,
       idCol: String, embCol: String, nprobe: Int, k: Int): DataFrame = {
     require(k > 0, s"top-k needs k > 0, got $k")
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
-    val (key, pv, probeCells, probed) =
-      setProbePlan(spark, probes, idCol, embCol, nprobe)
-    // checkpointed: referenced by both the restricted embedding fetch
-    // and the re-rank join — without it the bucket read would run twice
-    val cand = md.entriesBucketsAt(spark, key, probed)
-      .join(probeCells, Seq("cell"))
-      .select(col("probe_id"),
-        (if (pqBooks.isEmpty) col("v") else col("v.id")).as("id"))
-      .localCheckpoint()
-    exactReRank(spark, key, cand, pv, k)
-  }
-
-  /** Probe parse → engine-side cell assignment → bucket planning — the
-    * head BOTH set reads share (the one-arithmetic-family contract is
-    * "by construction" only while exact and ADC probes assign cells
-    * through these same expressions): unique probes parsed to float
-    * vectors (absent/mis-dimensioned embeddings drop here), each
-    * probe's `nprobe` nearest cells in [[nearestCells]]'s exact order
-    * (struct(dist, cell) sorted lexicographically = ascending distance,
-    * ties to the lower cell), and the distinct probed cells' state
-    * buckets (bounded planning pull, ≤ stateBuckets rows). The probe
-    * frames are checkpointed — each feeds two downstream consumers.
-    */
-  private def setProbePlan(spark: SparkSession, probes: DataFrame,
-      idCol: String, embCol: String, nprobe: Int)
-      : (Option[(Long, Long)], DataFrame, DataFrame, Set[Int]) = {
-    val key = md.latestKey(spark)
-    val v = transform(split(col("_payload"), ","), s => s.try_cast("float"))
-    val pv = ProbeFrames.unique(probes, idCol, embCol)
-      .select(col("probe_id"),
-        when(col("_payload").isNotNull && size(v) === dim &&
-          !exists(v, x => x.isNull), v).as("qv"))
-      .filter(col("qv").isNotNull)
-      .localCheckpoint()
-    val cents = typedLit(centroids)
-    val cellsOf = transform(cents, (c, i) => struct(
-      sqDist(col("qv"), c).as("d"), i.as("cell")))
-    val probeCells = pv
-      .select(col("probe_id"),
-        explode(slice(array_sort(cellsOf), 1, nprobe)).as("pc"))
-      .select(col("probe_id"), col("pc.cell").cast("int").as("cell"))
-      .localCheckpoint()
-    val probed = probeCells
-      .select(md.stateLog.bucketExpr(Seq(col("cell"))).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    (key, pv, probeCells, probed)
-  }
-
-  /** Exact-distance finish BOTH set reads share: candidate
-    * (probe_id, id) rows fetch their current embeddings candidate-
-    * restricted at the SAME state version key, score against the probe
-    * vector, and one windowed rank keeps top-k per probe (dist asc,
-    * id asc). Returns (probe_id, id, dist).
-    */
-  private def exactReRank(spark: SparkSession, key: Option[(Long, Long)],
-      cand: DataFrame, pv: DataFrame, k: Int): DataFrame = {
-    val docs = md.corpusAsOf(spark, key,
-        Some(cand.select(col("id").as("k")).distinct()))
-      .select(element_at(col("after"), idKey).as("id"),
-        parsedVec(col("after")).as("dv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("probe_id").orderBy(col("dist").asc, col("id").asc)
-    cand
-      .join(docs, Seq("id"))
-      .join(pv, Seq("probe_id"))
-      .withColumn("dist", sqDist(col("dv"), col("qv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("probe_id"), col("id"), col("dist"))
+    topK(spark, parsedProbes(probes, idCol, embCol), nprobe, k, None)
   }
 
   /** [[searchTopKAll]] with the PQ/ADC shortlist of [[searchTopKAdc]] —
@@ -664,8 +545,8 @@ final class MaintainedIvfIndex(
     * probe vector and the posting's code (one windowed rank per probe;
     * no corpus access), and only each probe's `shortlist` survivors
     * enter the exact re-rank fetch. Same approximation contract as
-    * [[searchTopKAdc]]; identical arithmetic family, so set output ==
-    * the per-probe [[searchTopKAdc]] loop. Returns (probe_id, id, dist).
+    * [[searchTopKAdc]], whose point read runs this same core. Returns
+    * (probe_id, id, dist).
     */
   def searchTopKAllAdc(spark: SparkSession, probes: DataFrame,
       idCol: String, embCol: String, nprobe: Int, k: Int,
@@ -675,24 +556,86 @@ final class MaintainedIvfIndex(
     require(k > 0, s"top-k needs k > 0, got $k")
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
-    val (key, pv, probeCells, probed) =
-      setProbePlan(spark, probes, idCol, embCol, nprobe)
-    val wAdc = org.apache.spark.sql.expressions.Window
-      .partitionBy("probe_id").orderBy(col("approx").asc, col("id").asc)
-    // the shortlist rank sees only posting rows + the probe vector —
-    // checkpointed because it feeds both the restricted fetch and the
-    // re-rank join
-    val short = md.entriesBucketsAt(spark, key, probed)
-      .join(probeCells, Seq("cell"))
-      .select(col("probe_id"), col("v.id").as("id"),
-        col("v.code").as("code"))
-      .join(pv, Seq("probe_id"))
-      .withColumn("approx", adcApprox(col("qv"), col("code")))
-      .withColumn("ark", row_number().over(wAdc))
-      .filter(col("ark") <= shortlist)
-      .select(col("probe_id"), col("id"))
+    topK(spark, parsedProbes(probes, idCol, embCol), nprobe, k, Some(shortlist))
+  }
+
+  /** Unique probes parsed to (probe_id, qv) float vectors — absent or
+    * mis-dimensioned embeddings drop here. Checkpointed: the frame feeds
+    * both the cell assignment and the re-rank.
+    */
+  private def parsedProbes(probes: DataFrame, idCol: String,
+      embCol: String): DataFrame = {
+    val v = transform(split(col("_payload"), ","), s => s.try_cast("float"))
+    ProbeFrames.unique(probes, idCol, embCol)
+      .select(col("probe_id"),
+        when(col("_payload").isNotNull && size(v) === dim &&
+          !exists(v, x => x.isNull), v).as("qv"))
+      .filter(col("qv").isNotNull)
       .localCheckpoint()
-    exactReRank(spark, key, short, pv, k)
+  }
+
+  /** The candidate read every probe shares: probe cells, then probed
+    * buckets, then posting rows. Each probe's `nprobe` nearest cells
+    * come from the same expressions as [[cellOf]] (struct(dist, cell)
+    * sorted lexicographically = ascending distance, ties to the lower
+    * cell); the distinct probed cells' state buckets are a bounded
+    * planning pull (≤ stateBuckets rows); only those buckets' slices are
+    * read. Returns (probe_id, id, cell [, code under PQ]).
+    */
+  private def postingsOf(spark: SparkSession, key: Option[(Long, Long)],
+      pv: DataFrame, nprobe: Int): DataFrame = {
+    val cellsOf = transform(typedLit(centroids), (c, i) => struct(
+      sqDist(col("qv"), c).as("d"), i.as("cell")))
+    // checkpointed: feeds the bucket planning pull and the postings join.
+    // A point read checks no nprobe: one ≤ 0 probes no cell.
+    val probeCells = pv
+      .select(col("probe_id"),
+        explode(slice(array_sort(cellsOf), 1, math.max(nprobe, 0))).as("pc"))
+      .select(col("probe_id"), col("pc.cell").cast("int").as("cell"))
+      .localCheckpoint()
+    val probed = probeCells
+      .select(md.stateLog.bucketExpr(Seq(col("cell"))).as("b"))
+      .distinct().collect().map(_.getInt(0)).toSet
+    val rows = md.entriesBucketsAt(spark, key, probed)
+      .join(probeCells, Seq("cell"))
+    if (pqBooks.isEmpty) rows.select(col("probe_id"), col("v").as("id"), col("cell"))
+    else rows.select(col("probe_id"), col("v.id").as("id"), col("cell"),
+      col("v.code").as("code"))
+  }
+
+  /** The top-k core of every top-k read: the candidate read, under PQ
+    * optionally cut to each probe's `shortlist` best by ADC distance
+    * ([[adcApprox]], from the posting rows alone), then the exact finish:
+    * candidates fetch their current embeddings candidate-restricted at
+    * the SAME state version key, score against the probe vector, and one
+    * windowed rank keeps top-k per probe (dist asc, id asc). Returns
+    * (probe_id, id, dist).
+    */
+  private def topK(spark: SparkSession, pv: DataFrame, nprobe: Int, k: Int,
+      shortlist: Option[Int]): DataFrame = {
+    val key = md.latestKey(spark)
+    val posts = postingsOf(spark, key, pv, nprobe)
+    // checkpointed: referenced by both the restricted embedding fetch
+    // and the re-rank join — without it the bucket read would run twice
+    val cand = shortlist.fold(posts) { s =>
+      posts.join(pv, Seq("probe_id"))
+        .withColumn("approx", adcApprox(col("qv"), col("code")))
+        .withColumn("ark", row_number().over(Window.partitionBy("probe_id")
+          .orderBy(col("approx").asc, col("id").asc)))
+        .filter(col("ark") <= s)
+    }.select(col("probe_id"), col("id")).localCheckpoint()
+    val docs = md.corpusAsOf(spark, key,
+        Some(cand.select(col("id").as("k")).distinct()))
+      .select(element_at(col("after"), idKey).as("id"),
+        parsedVec(col("after")).as("dv"))
+    val w = Window.partitionBy("probe_id").orderBy(col("dist").asc, col("id").asc)
+    cand
+      .join(docs, Seq("id"))
+      .join(pv, Seq("probe_id"))
+      .withColumn("dist", sqDist(col("dv"), col("qv")))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(col("probe_id"), col("id"), col("dist"))
   }
 
   /** Ops gauges — the underlying maintainer's family. */

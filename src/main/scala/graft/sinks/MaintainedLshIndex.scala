@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.MinHash
 import graft.operators.IncrementalDistinct
@@ -178,54 +178,15 @@ final class MaintainedLshIndex(
       .distinct()
   }
 
-  /** (band signatures, shingles) of one probe text, computed by
-    * evaluating the SAME engine expressions the index applied to
-    * documents on a one-row frame (so the probe agrees with the indexed
-    * signatures bit-for-bit — a driver-side reimplementation of the
-    * xxhash64 fold could drift). Both NULL for a short probe.
-    */
-  private def probeRow(spark: SparkSession, text: String): Row =
-    withSigs(ImageProbes.frame(spark, Map("id" -> "_probe", textKey -> text))
-      .select(shinglesOf(element_at(col("im"), textKey)).as("sh")), "sh", "sigs")
-      .select("sigs", "sh").head()
-
   /** Candidate near-duplicate ids of ONE probe text — the online point
-    * lookup ("what in the corpus near-dups THIS new document?"), and the
-    * scale-right read: each of the probe's (band, sig) keys
-    * ([[probeRow]]) maps to its state-log hash bucket
-    * ([[BucketedStateLog.bucketOf]]), and ONLY those ≤ `bands` buckets'
-    * slices are read — never the index. Empty for short probes.
+    * lookup ("what in the corpus near-dups THIS new document?"): the
+    * one-row case of [[candidatesForAll]], through the same core, so only
+    * the probe's ≤ `bands` state buckets are read. Returns
+    * (id, bands_hit); empty, same schema, for short probes.
     */
-  def candidatesFor(spark: SparkSession, text: String): DataFrame = {
-    val sigRow = probeRow(spark, text)
-    val key = md.latestKey(spark)
-    if (sigRow.isNullAt(0)) emptyCandidates(spark, key)
-    else candidatesForAt(spark, key, sigRow.getSeq[Long](0))
-  }
-
-  /** Empty candidates in the SAME (id, bands_hit) shape as the normal
-    * path — a schema that differed by branch would throw
-    * AnalysisException on callers exactly and only for short probes.
-    */
-  private def emptyCandidates(spark: SparkSession,
-      key: Option[(Long, Long)]): DataFrame =
-    md.entriesAt(spark, key).filter(lit(false))
-      .select(col("v").as("id"))
-      .groupBy("id").agg(count(lit(1)).cast("int").as("bands_hit"))
-
-  private def candidatesForAt(spark: SparkSession,
-      key: Option[(Long, Long)], sigs: Seq[Long]): DataFrame = {
-    val keys = sigs.zipWithIndex.map { case (s, b) => (b, s) }
-    val buckets = keys.map { case (b, s) => md.stateLog.bucketOf(Seq(
-      (b, org.apache.spark.sql.types.IntegerType),
-      (s, org.apache.spark.sql.types.LongType))) }.toSet
-    val hit = keys.map { case (b, s) =>
-      col("band") === b && col("sig") === s }.reduce(_ || _)
-    md.entriesBucketsAt(spark, key, buckets)
-      .filter(hit)
-      .select(col("v").as("id"), col("band").cast("int").as("band"))
-      .groupBy("id").agg(count(lit(1)).cast("int").as("bands_hit"))
-  }
+  def candidatesFor(spark: SparkSession, text: String): DataFrame =
+    candidateHitsAt(spark, md.latestKey(spark),
+      probeSigs(ProbeFrames.single(spark, typedLit(text)))).drop("probe_id")
 
   /** [[candidatePairs]] FINISHED, not just candidated: exact n-gram
     * Jaccard computed over the candidates' CURRENT texts, keeping pairs
@@ -272,28 +233,27 @@ final class MaintainedLshIndex(
     * ≤ stateBuckets rows) — the state read is probed-bucket-
     * proportional, never probes × state. Returns
     * (probe_id, id, bands_hit); probes whose text is short/absent
-    * produce no output rows (the per-probe API returns an empty frame
-    * for those). `idCol`/`textCol` name the probe frame's columns.
+    * produce no output rows. `idCol`/`textCol` name the probe frame's
+    * columns.
     */
   def candidatesForAll(spark: SparkSession, probes: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    val key = md.latestKey(spark)
-    candidateHitsAt(spark, key, probeSigs(probes, idCol, textCol))
-  }
+      idCol: String, textCol: String): DataFrame =
+    candidateHitsAt(spark, md.latestKey(spark),
+      probeSigs(ProbeFrames.unique(probes, idCol, textCol)))
 
-  /** (probe_id, psh, sigs) of a probe frame — shingles and band
+  /** (probe_id, psh, sigs) of a unique probe frame — shingles and band
     * signatures by the SAME engine expressions the index applied to
     * documents; probes whose text is short/absent drop out.
     */
-  private def probeSigs(probes: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    withSigs(ProbeFrames.unique(probes, idCol, textCol)
+  private def probeSigs(src: DataFrame): DataFrame =
+    withSigs(src
       .select(col("probe_id"), shinglesOf(col("_payload")).as("psh"))
       .filter(col("psh").isNotNull), "psh", "sigs")
 
-  /** The shared set-probe core: signatures → exploded (probe, band, sig)
-    * keys → bucket-pruned state join → per-(probe, id) band counts.
-    * `pf` carries (probe_id, sigs [, anything else]).
+  /** The probe core of every candidate read, point and set: signatures
+    * → exploded (probe, band, sig) keys → bucket-pruned state join →
+    * per-(probe, id) band counts. `pf` carries (probe_id, sigs
+    * [, anything else]).
     */
   private def candidateHitsAt(spark: SparkSession,
       key: Option[(Long, Long)], pf: DataFrame): DataFrame = {
@@ -312,8 +272,7 @@ final class MaintainedLshIndex(
       .select(col("probe_id"), col("id"), col("bands_hit"))
   }
 
-  /** [[candidatesForAll]] FINISHED, like the point
-    * [[verifiedCandidatesFor]]: exact n-gram Jaccard between each
+  /** [[candidatesForAll]] FINISHED: exact n-gram Jaccard between each
     * probe's text and its candidates' CURRENT texts (fetched
     * candidate-restricted at the SAME state version key), kept at or
     * above `threshold` — still one job for N probes. One probe pass
@@ -323,10 +282,27 @@ final class MaintainedLshIndex(
     */
   def verifiedCandidatesForAll(spark: SparkSession, probes: DataFrame,
       idCol: String, textCol: String,
-      threshold: Double = 0.8): DataFrame = {
+      threshold: Double = 0.8): DataFrame =
+    verifiedOf(spark, ProbeFrames.unique(probes, idCol, textCol), threshold)
+
+  /** [[candidatesFor]] finished: exact Jaccard between the probe text and
+    * each candidate's current text, kept at or above `threshold` — the
+    * one-row case of [[verifiedCandidatesForAll]]. Returns
+    * (id, bands_hit, jaccard); empty (same schema) for short probes.
+    */
+  def verifiedCandidatesFor(spark: SparkSession, text: String,
+      threshold: Double = 0.8): DataFrame =
+    verifiedOf(spark, ProbeFrames.single(spark, typedLit(text)), threshold)
+      .drop("probe_id")
+
+  /** The verified core of both verified reads, over a unique
+    * (probe_id, _payload) frame.
+    */
+  private def verifiedOf(spark: SparkSession, src: DataFrame,
+      threshold: Double): DataFrame = {
     val key = md.latestKey(spark)
     // referenced by the hits core AND the Jaccard join
-    val pf = probeSigs(probes, idCol, textCol).localCheckpoint()
+    val pf = probeSigs(src).localCheckpoint()
     val cand = candidateHitsAt(spark, key, pf).localCheckpoint()
     val docs = docShingles(spark, key,
       cand.select(col("id").as("k")).distinct())
@@ -338,32 +314,6 @@ final class MaintainedLshIndex(
           size(array_union(col("sh"), col("psh"))))
       .filter(col("jaccard") >= threshold)
       .select(col("probe_id"), col("id"), col("bands_hit"), col("jaccard"))
-  }
-
-  /** [[candidatesFor]] finished: exact Jaccard between the probe text and
-    * each candidate's current text (fetched key-restricted, as in
-    * [[verifiedPairs]]), kept at or above `threshold`. Returns
-    * (id, bands_hit, jaccard); empty (same schema) for short probes.
-    */
-  def verifiedCandidatesFor(spark: SparkSession, text: String,
-      threshold: Double = 0.8): DataFrame = {
-    // one probe job serves both the signatures (bucket lookup) and the
-    // shingles (Jaccard)
-    val row = probeRow(spark, text)
-    val key = md.latestKey(spark)
-    if (row.isNullAt(0))
-      return emptyCandidates(spark, key)
-        .withColumn("jaccard", lit(0.0d)).filter(lit(false))
-    val cand = candidatesForAt(spark, key, row.getSeq[Long](0))
-      .localCheckpoint()
-    val probeSh = typedLit(row.getSeq[String](1))
-    docShingles(spark, key, cand.select(col("id").as("k")).distinct())
-      .join(cand, Seq("id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh"), probeSh)).cast("double") /
-          size(array_union(col("sh"), probeSh)))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id"), col("bands_hit"), col("jaccard"))
   }
 
   /** (id, shingle-set) of the docs whose replica keys are in `keys` —
@@ -439,8 +389,8 @@ private[sinks] object SampleResidues {
   * a materialized (probe_id, _payload) frame.
   */
 private[sinks] object ProbeFrames {
-  def unique(probes: org.apache.spark.sql.DataFrame, idCol: String,
-      payloadCol: String): org.apache.spark.sql.DataFrame = {
+  def unique(probes: DataFrame, idCol: String,
+      payloadCol: String): DataFrame = {
     val src = probes
       .select(col(idCol).cast("string").as("probe_id"),
         col(payloadCol).as("_payload"))
@@ -456,23 +406,10 @@ private[sinks] object ProbeFrames {
           "deduplicate or re-key the probe frame")
     src
   }
-}
 
-/** One-row frame carrying a synthetic image map under column `im` — the
-  * shared probe seam of the maintained-index family: probes evaluate the
-  * SAME engine expressions the index applied to documents (signatures,
-  * shingles, tokens), so probe and index can never drift bit-for-bit the
-  * way a driver-side reimplementation could.
-  */
-private[sinks] object ImageProbes {
-  def frame(spark: SparkSession, im: Map[String, String]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      new java.util.ArrayList(Seq(org.apache.spark.sql.Row(im)).asJava),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("im",
-          org.apache.spark.sql.types.MapType(
-            org.apache.spark.sql.types.StringType,
-            org.apache.spark.sql.types.StringType)))))
-  }
+  /** The one-row (probe_id, _payload) frame a point lookup hands the
+    * core its set API runs — one probe needs no duplicate check.
+    */
+  def single(spark: SparkSession, payload: Column): DataFrame =
+    spark.range(1).select(lit("_probe").as("probe_id"), payload.as("_payload"))
 }

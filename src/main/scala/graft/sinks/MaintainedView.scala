@@ -303,9 +303,9 @@ final class MaintainedView(
     case None => agg.view(agg.init(spark))
   }
 
-  /** [[readAt]] restricted to a bucket subset — point readers that know
-    * their group keys ([[BucketedStateLog.bucketOf]] via [[stateLog]])
-    * prune to those keys' buckets and never scan the state.
+  /** [[readAt]] restricted to a bucket subset — probe readers plan their
+    * keys' buckets in the engine ([[BucketedStateLog.bucketExpr]] via
+    * [[stateLog]], a bounded distinct pull) and never scan the state.
     */
   private[sinks] def readBucketsAt(spark: SparkSession,
       key: Option[(Long, Long)], only: Set[Int]): DataFrame = key match {
@@ -314,8 +314,8 @@ final class MaintainedView(
     case None => agg.view(agg.init(spark))
   }
 
-  /** The state log's bucket geometry, for [[BucketedStateLog.bucketOf]]
-    * callers (group-key → bucket, driver-side).
+  /** The state log's bucket geometry, for probe readers' bucket
+    * planning ([[BucketedStateLog.bucketExpr]]).
     */
   private[sinks] def stateLog: BucketedStateLog = states
 

@@ -165,18 +165,4 @@ object CatalogReader {
     */
   private def regclassLiteral(schema: String, table: String): String =
     sqlLiteral(s"${quoteIdent(schema)}.${quoteIdent(table)}")
-
-  /** JDBC binding of the seam — untestable without a live PostgreSQL (this
-    * container has none), exactly mirroring the snapshot reader's JDBC path.
-    */
-  def jdbcExecutor(conn: java.sql.Connection): SqlExecutor = { sql =>
-    val st = conn.createStatement()
-    try {
-      val rs = st.executeQuery(sql)
-      val n = rs.getMetaData.getColumnCount
-      val out = Seq.newBuilder[Seq[String]]
-      while (rs.next()) out += (1 to n).map(rs.getString)
-      out.result()
-    } finally st.close()
-  }
 }

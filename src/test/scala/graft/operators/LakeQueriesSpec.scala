@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -47,35 +46,12 @@ class LakeQueriesSpec extends AnyFunSuite {
     assert(rowsOf(got) == rowsOf(want), s"$name rows diverge from recompute")
   }
 
-  /** Runs `body` under a job group and returns its result with the number
-    * of Spark jobs that carried the group. Child threads inherit the
-    * group, so refreshes run through `MaintainerOps.inParallel` count too.
-    * Listener events arrive in submission order, so once a marker job in
-    * a second group has been seen, every job of the body has been seen.
+  /** `body`'s result with the number of Spark jobs it ran
+    * ([[SparkTestBase.jobCallSites]]).
     */
   private def jobsIn[T](group: String)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val drain = s"$group-drain"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`drain`) => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(drain, drain)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener never saw the marker job")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (out, sites) = SparkTestBase.jobCallSites(group)(body)
+    (out, sites.size)
   }
 
   // the same derivation the builders use: BIGINT cents, ~10% integer bump

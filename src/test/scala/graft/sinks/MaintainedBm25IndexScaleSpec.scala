@@ -2,10 +2,11 @@ package graft.sinks
 
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.cdc.ChangeEvent
@@ -149,6 +150,43 @@ class MaintainedBm25IndexScaleSpec extends AnyFunSuite {
     }
   }
 
+  /** Rows the scans of files under `stateDir` returned while `body` ran,
+    * summed over every query it executed (eager checkpoints included):
+    * each reports its executed plan to a QueryExecutionListener, and a
+    * marker query drains the listener bus before the sum is read.
+    */
+  private def rowsReadUnder(stateDir: String)(body: => Unit): Long = {
+    val marker = s"drain-${java.util.UUID.randomUUID}"
+    val rows = new java.util.concurrent.atomic.AtomicLong
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    def flatten(p: SparkPlan): Seq[SparkPlan] = {
+      val nested = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => Nil
+      }
+      p +: (p.children ++ nested).flatMap(flatten)
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.toString.contains(marker)) drained.countDown()
+        else rows.addAndGet(flatten(qe.executedPlan).collect {
+          case f: FileSourceScanExec
+              if f.relation.location.rootPaths.forall(_.toString.contains(stateDir)) =>
+            f.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
+        }.sum)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(marker)).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker query")
+      rows.get
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** The stop-term READ bound (r17 verdict's named scale-killer): a term
     * in every document makes its posting list corpus-sized and entirely
     * resident in ONE state bucket — the df cap must drop it BEFORE that
@@ -167,24 +205,15 @@ class MaintainedBm25IndexScaleSpec extends AnyFunSuite {
       assert(ix.refresh(spark) == 1)
 
       val probe = s"the qa${enc(5 % 997)}" // stop term + one tail term
-      val key = ix.md.latestKey(spark)
-      // the df gate: "the" (df = DOCS) is dropped before any postings
-      // read; the tail term survives
-      val surviving = ix.cappedTerms(spark, key,
-        Seq("the", s"qa${enc(5 % 997)}"), dfCap = 1000L)
-      assert(surviving == Seq(s"qa${enc(5 % 997)}"),
-        s"df cap must drop the planted stop term: $surviving")
-
-      // read cost = rows RESIDENT in the state buckets the search would
-      // scan (bucket pruning is directory-level — pushed filters don't
-      // change which slices are fetched)
-      def residentRows(terms: Seq[String]): Long = {
-        val buckets = terms.map(t => ix.md.stateLog.bucketOf(Seq(
-          (t, org.apache.spark.sql.types.StringType)))).toSet
-        ix.md.entriesBucketsAt(spark, key, buckets).count()
+      // read cost = rows RESIDENT in the postings buckets the real search
+      // scans (bucket pruning is directory-level — pushed filters don't
+      // change which slices are fetched). The df gate drops "the"
+      // (df = DOCS) before any postings read; the tail term survives.
+      def searchRead(dfCap: Long): Long = rowsReadUnder("/_graft_views/bmstop/") {
+        ix.search(spark, probe, 5, dfCap = dfCap).collect()
       }
-      val capped = residentRows(surviving)
-      val uncapped = residentRows(Seq("the", s"qa${enc(5 % 997)}"))
+      val capped = searchRead(1000L)
+      val uncapped = searchRead(Long.MaxValue)
       assert(uncapped >= DOCS.toLong,
         s"the stop term's bucket must be corpus-sized, got $uncapped")
       // the tail term's bucket holds ~ (9 unique-ish terms × DOCS)/BUCKETS
@@ -199,7 +228,7 @@ class MaintainedBm25IndexScaleSpec extends AnyFunSuite {
         s"df cap must cut the stop-term read >5x (got $ratio)")
 
       // exactness: the capped search == the stop-term-less search,
-      // score for score; and the df lookup itself reads ≤ |terms| rows
+      // score for score
       val got = ix.search(spark, probe, 5, dfCap = 1000L).collect()
         .map(r => (r.getString(0), r.getDouble(1))).toSeq
       val want = ix.search(spark, s"qa${enc(5 % 997)}", 5).collect()

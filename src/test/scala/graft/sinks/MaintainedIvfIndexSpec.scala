@@ -174,22 +174,6 @@ class MaintainedIvfIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("driver-side bucketOf agrees with the engine's bucketExpr for every cell") {
-    // the search path prunes state buckets with a DRIVER-evaluATED hash;
-    // disagreement with the engine would silently prune the wrong slices
-    // and lose postings — pin the two bit-for-bit over all cells
-    import spark.implicits._
-    val log = new BucketedStateLog(
-      new org.apache.hadoop.fs.Path("/tmp/unused-bucketof"), 8, Seq("cell"))
-    val engine = Cents.indices.toDF("cell")
-      .select(col("cell"), log.bucketExpr(Seq(col("cell"))).as("b"))
-      .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-    Cents.indices.foreach { c =>
-      assert(log.bucketOf(Seq((c, org.apache.spark.sql.types.IntegerType))) == engine(c),
-        s"driver/engine bucket disagreement for cell $c")
-    }
-  }
-
   test("searchTopK: exact re-rank over fetched embeddings matches brute force after churn") {
     withIndex { (sink, ix, _) =>
       sink.appendBatch(envelope(Seq(
@@ -257,14 +241,15 @@ class MaintainedIvfIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("driver nearestCells mirrors the engine's float arithmetic on near-tie embeddings") {
+  test("point lookup follows the engine's float-square tie-break on near-tie embeddings") {
     // Two centroids whose distances to the origin TIE in the engine's
     // arithmetic (float-squared components, double accumulate:
     // fl(x0²)+fl(y0²) == fl(x1²)+fl(y1²) exactly) but differ when the
     // squares are taken in double — cell 1 is truly nearer by ~1.5e-8.
-    // The engine breaks its tie to the LOWER cell; a driver that squared
-    // in double would resolve the tie to cell 1 and probe the wrong
-    // bucket, silently missing the exact-match document at nprobe=1.
+    // The engine breaks its tie to the LOWER cell; a probe assigned in
+    // any other arithmetic would resolve the tie to cell 1 and probe the
+    // wrong bucket, silently missing the exact-match document at
+    // nprobe=1.
     val tieCents = Seq(
       Seq(0.7379646301269531f, 1.04422926902771f),
       Seq(0.7379644513130188f, 1.0442293882369995f))
@@ -279,10 +264,7 @@ class MaintainedIvfIndexSpec extends AnyFunSuite {
       // the engine assigned the doc to cell 0 (tie -> lower index)
       val cells = ix.cells(spark).collect().map(r => r.getInt(0)).toSeq
       assert(cells == Seq(0), s"engine must tie-break to cell 0, got $cells")
-      // the driver agrees — and the end-to-end point lookup finds the doc
-      assert(ix.nearestCells(Seq(0f, 0f), 1) == Seq(0),
-        "driver must reproduce the engine's float-square tie, not resolve " +
-          "it in double")
+      // and the end-to-end point lookup finds the doc
       assert(hits(ix, Seq(0f, 0f)) == Set("t"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.cdc.ChangeEvent
+import graft.operators.IncrementalAgg
 
 /** The maintained two-table join: dirty-key recompute, key-changing
   * updates, deletes, truncate fallback, and replay idempotence — each
@@ -280,6 +281,41 @@ class MaintainedJoinSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+
+  test("a span of only another table's rows carries both states forward manifest-only, in pinned jobs") {
+    withJoin { (sink, mj) =>
+      val mv = new MaintainedView(sink, new IncrementalAgg(
+        group = Seq("uid" -> (im => element_at(im, "uid"))), sums = Nil),
+        "public", "o", "orders_per_user")
+      sink.appendBatch(envelope(Seq(
+        ev(1, "insert", "u", Seq("id"), null, user("1", "alice")),
+        ev(2, "insert", "o", Seq("oid"), null, order("a", "1", "10")))), 0L)
+      // the seeds write state slices — the detector below is not vacuous
+      val (_, seedJobs) = SparkTestBase.jobCallSites("carry-seed") {
+        (mv.refresh(spark), mj.refresh(spark))
+      }
+      val stateWrite = "parquet at BucketedStateLog.scala"
+      assert(seedJobs.exists(_.startsWith(stateWrite)), s"$seedJobs")
+      val (views, joins) = (mv.read(spark).collect().toSet, joinSet(mj))
+      // a span holding only a third table's rows: neither delta touches
+      // a key, so each refresh commits its version as a carry
+      sink.appendBatch(envelope(Seq(
+        ev(3, "insert", "x", Seq("id"), null, Map("id" -> "9")))), 1L)
+      val (mvApplied, mvJobs) =
+        SparkTestBase.jobCallSites("carry-mv")(mv.refresh(spark))
+      val (mjApplied, mjJobs) =
+        SparkTestBase.jobCallSites("carry-mj")(mj.refresh(spark))
+      assert(mvApplied == 1 && mjApplied == 1)
+      assert(!(mvJobs ++ mjJobs).exists(_.startsWith(stateWrite)),
+        s"a carry is manifest-only: $mvJobs $mjJobs")
+      assert(mvJobs.size == 3, s"view carry ran ${mvJobs.size} jobs, pinned at 3: $mvJobs")
+      assert(mjJobs.size == 4, s"join carry ran ${mjJobs.size} jobs, pinned at 4: $mjJobs")
+      assert(mv.read(spark).collect().toSet == views)
+      assert(joinSet(mj) == joins)
+      assert(mj.gauges(spark).toMap.apply(
+        """join_buckets_rewritten{join="orders_by_user"}""") == 0.0)
+    }
+  }
 
   test("row-key-restricted recompute matches the full fold through churn, compaction, and deletes") {
     // `leftKeyIsRowKey`: u's join key IS its replica key, so the dirty

@@ -119,13 +119,13 @@ class MaintainedSemDedupSpec extends AnyFunSuite {
       val vName = s"v${IntervalKeys.name(key)}"
       val (written, carried) =
         log.entries(f, key).partition(_._2.startsWith(vName))
-      val dirtyBucket = log.bucketOf(
-        Seq((1, org.apache.spark.sql.types.IntegerType)))
+      def bucketOf(cell: Int): Int =
+        spark.range(1).select(log.bucketExpr(Seq(lit(cell)))).head().getInt(0)
+      val dirtyBucket = bucketOf(1)
       assert(written.keySet.map(_._1) == Set(dirtyBucket),
         s"one-cell churn must rewrite only bucket $dirtyBucket, wrote " +
           s"${written.keySet}")
-      val cell0Bucket = log.bucketOf(
-        Seq((0, org.apache.spark.sql.types.IntegerType)))
+      val cell0Bucket = bucketOf(0)
       if (cell0Bucket != dirtyBucket)
         assert(carried.keySet.map(_._1).contains(cell0Bucket),
           "the clean cell's bucket must carry by reference")

@@ -206,6 +206,43 @@ class SetProbeSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  test("point probes that hit nothing return an empty frame with a hit's schema") {
+    val dir = Files.createTempDirectory("lake-setmiss").toString
+    try {
+      val sink = new LakeSink(dir)
+      val text = "the quick brown fox jumps over the lazy dog tonight"
+      sink.appendBatch(envelope(Seq(ev(1, "insert", null,
+        Map("id" -> "d1", "text" -> text, "emb" -> "1,1")))), 0L)
+      val lsh = new MaintainedLshIndex(sink, "public", "docs", "smisslsh",
+        idKey = "id", textKey = "text", stateBuckets = 8)
+      val bm = new MaintainedBm25Index(sink, "public", "docs", "smissbm",
+        idKey = "id", textKey = "text", stateBuckets = 8)
+      val ivf = new MaintainedIvfIndex(sink, "public", "docs", "smissivf",
+        idKey = "id", embKey = "emb",
+        centroids = Seq(Seq(0f, 0f), Seq(10f, 10f)), stateBuckets = 8)
+      assert(Seq(lsh.refresh(spark), bm.refresh(spark), ivf.refresh(spark)) ==
+        Seq(1, 1, 1))
+      def sameShape(what: String, hit: DataFrame, miss: DataFrame): Unit = {
+        assert(hit.collect().nonEmpty, s"$what: the hit must hit")
+        assert(miss.collect().isEmpty, s"$what: the miss must be empty")
+        assert(miss.schema == hit.schema, s"$what: ${miss.schema} vs ${hit.schema}")
+      }
+      val short = "too few tokens" // no signatures
+      sameShape("LSH candidatesFor",
+        lsh.candidatesFor(spark, text), lsh.candidatesFor(spark, short))
+      sameShape("LSH verifiedCandidatesFor",
+        lsh.verifiedCandidatesFor(spark, text),
+        lsh.verifiedCandidatesFor(spark, short))
+      sameShape("BM25 search",
+        bm.search(spark, "quick fox", 5), bm.search(spark, "42 --- !!!", 5))
+      // d1 sits in cell 0; cell 1 holds no posting
+      sameShape("IVF search", ivf.search(spark, Seq(1f, 1f), 1),
+        ivf.search(spark, Seq(10f, 10f), 1))
+      sameShape("IVF searchTopK", ivf.searchTopK(spark, Seq(1f, 1f), 1, 3),
+        ivf.searchTopK(spark, Seq(10f, 10f), 1, 3))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("duplicate probe ids: exact duplicates collapse, differing payloads refuse") {
     val dir = Files.createTempDirectory("lake-setdup").toString
     try {
@@ -301,8 +338,9 @@ class SetProbeSpec extends AnyFunSuite {
         "p2" -> s"qd${enc(400)} qe${enc(123)}")
       // the buckets the set read scans = the probed terms' buckets
       val terms = probes.flatMap(_._2.split(" ")).distinct
-      val probed = terms.map(t => ix.md.stateLog.bucketOf(Seq(
-        (t, org.apache.spark.sql.types.StringType)))).toSet
+      val probed = spark.createDataFrame(terms.map(Tuple1(_))).toDF("t")
+        .select(ix.md.stateLog.bucketExpr(Seq(col("t"))))
+        .collect().map(_.getInt(0)).toSet
       val resident = ix.md.entriesBucketsAt(spark, key, probed).count()
       val stateRows = DOCS.toLong * 6
       assert(probed.size <= terms.size)
