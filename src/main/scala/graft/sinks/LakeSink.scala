@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,8 +18,9 @@ import org.apache.spark.sql.types.{LongType, MapType, StringType, StructField, S
   * primitives only — a deliberately small transaction log in the style
   * file formats like Delta/Iceberg standardized:
   *
-  *  - `changelog/batch_id=<n>/` — each micro-batch lands in its OWN
-  *    partition directory (one atomic unit per foreachBatch call).
+  *  - `changelog/` — each micro-batch lands in its OWN Hive-style
+  *    `batch_id` partition directory ([[batchDir]]; one atomic unit per
+  *    foreachBatch call).
   *  - `_graft_commits/<n>` — zero-byte marker, created only AFTER the
   *    batch's parquet is fully written. Readers resolve the log as
   *    "batch dirs ∩ markers", so a half-written batch (crash mid-append)
@@ -114,6 +115,8 @@ final class LakeSink(
 
   private def commitDir = new Path(root, "_graft_commits")
   private def changelogDir = new Path(root, "changelog")
+  /** The one spelling of the changelog layout: batch `id`'s directory. */
+  private def batchDir(id: Long) = new Path(changelogDir, s"batch_id=$id")
   private def baseDataDir = new Path(root, "_base_data")
   private def vacuumedFile = new Path(commitDir, "_vacuumed")
   private def vacuumedLowFile = new Path(commitDir, "_vacuumed_low")
@@ -152,7 +155,7 @@ final class LakeSink(
         struct(col("schema"), col("table"), col("commit_lsn"), col("lsn"))))
         .as("tr"))
       .write.mode("overwrite")
-      .parquet(new Path(changelogDir, s"batch_id=$batchId").toString)
+      .parquet(batchDir(batchId).toString)
     val truncLines = obs.get("tr") match {
       case rows: Seq[_] =>
         rows.collect { case r: org.apache.spark.sql.Row =>
@@ -260,6 +263,17 @@ final class LakeSink(
       .sorted
   }
 
+  /** Batch `id`'s parquet data files (empty when its directory is gone) —
+    * the stream's partition planning reads the changelog through this.
+    */
+  private[graft] def batchDataFiles(spark: SparkSession, id: Long): Seq[FileStatus] = {
+    val f = fs(spark)
+    val dir = batchDir(id)
+    if (!f.exists(dir)) Seq.empty
+    else f.listStatus(dir).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+  }
+
   /** Highest batch id folded into BASE (Long.MinValue before the first
     * compaction — NOT -1, which is a legal snapshot batch id).
     */
@@ -308,7 +322,7 @@ final class LakeSink(
       spark.read
         .option("basePath", changelogDir.toString)
         .schema(graft.cdc.ChangeEvent.schema.add("batch_id", "long"))
-        .parquet(ids.map(i => new Path(changelogDir, s"batch_id=$i").toString): _*)
+        .parquet(ids.map(batchDir(_).toString): _*)
   }
 
   /** Envelope rows keyed for the fold: (schema, table, op, commit_lsn,
@@ -702,7 +716,7 @@ final class LakeSink(
         "snapshot batches were already compacted into base — cannot clear a " +
           "delivered snapshot; use a fresh lake root for the re-export")
     snapIds.foreach { id =>
-      f.delete(new Path(changelogDir, s"batch_id=$id"), true)
+      f.delete(batchDir(id), true)
       f.delete(new Path(commitDir, id.toString), false)
     }
   }
@@ -1245,7 +1259,7 @@ final class LakeSink(
       val newHigh = math.max(dropped.max, vacuumHighWater(spark))
       writeLongAtomic(f, vacuumedFile, newHigh)
       dropped.foreach { id =>
-        f.delete(new Path(changelogDir, s"batch_id=$id"), true)
+        f.delete(batchDir(id), true)
         f.delete(new Path(commitDir, id.toString), false)
       }
     }

@@ -444,10 +444,9 @@ final class MaintainedBm25Index(
       .distinct().collect().map(_.getInt(0)).toSet
     // checkpointed: feeds df-per-term, the hits join, and (via hits)
     // the candidate-restricted length fetch
-    val post = md.entriesBucketsAt(spark, key, probed)
+    val post = ProbeFrames.candidates(md.entriesBucketsAt(spark, key, probed)
       .join(pterms.select("term").distinct(), Seq("term"), "left_semi")
-      .select(col("term"), col("v").as("id"), col("rc").as("tf"))
-      .localCheckpoint()
+      .select(col("term"), col("v").as("id"), col("rc").as("tf")), probed)
     // df is exact within the pruned read: it covers EVERY posting of
     // each surviving probed term
     val dfs = post.groupBy("term").agg(count(lit(1)).as("df"))

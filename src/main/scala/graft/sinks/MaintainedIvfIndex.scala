@@ -247,7 +247,7 @@ final class MaintainedIvfIndex(
     */
   def search(spark: SparkSession, query: Seq[Float], nprobe: Int): DataFrame =
     postingsOf(spark, md.latestKey(spark), point(spark, query), nprobe)
-      .drop("probe_id")
+      ._1.drop("probe_id")
 
   /** [[search]] FINISHED the way the batch `q_ann_ivf` pipeline finishes
     * (`AnnQueries`), the one-row case of [[searchTopKAll]]: exact
@@ -580,10 +580,11 @@ final class MaintainedIvfIndex(
     * sorted lexicographically = ascending distance, ties to the lower
     * cell); the distinct probed cells' state buckets are a bounded
     * planning pull (≤ stateBuckets rows); only those buckets' slices are
-    * read. Returns (probe_id, id, cell [, code under PQ]).
+    * read. Returns (probe_id, id, cell [, code under PQ]) and the probed
+    * bucket set.
     */
   private def postingsOf(spark: SparkSession, key: Option[(Long, Long)],
-      pv: DataFrame, nprobe: Int): DataFrame = {
+      pv: DataFrame, nprobe: Int): (DataFrame, Set[Int]) = {
     val cellsOf = transform(typedLit(centroids), (c, i) => struct(
       sqDist(col("qv"), c).as("d"), i.as("cell")))
     // checkpointed: feeds the bucket planning pull and the postings join.
@@ -598,9 +599,9 @@ final class MaintainedIvfIndex(
       .distinct().collect().map(_.getInt(0)).toSet
     val rows = md.entriesBucketsAt(spark, key, probed)
       .join(probeCells, Seq("cell"))
-    if (pqBooks.isEmpty) rows.select(col("probe_id"), col("v").as("id"), col("cell"))
+    (if (pqBooks.isEmpty) rows.select(col("probe_id"), col("v").as("id"), col("cell"))
     else rows.select(col("probe_id"), col("v.id").as("id"), col("cell"),
-      col("v.code").as("code"))
+      col("v.code").as("code")), probed)
   }
 
   /** The top-k core of every top-k read: the candidate read, under PQ
@@ -614,16 +615,16 @@ final class MaintainedIvfIndex(
   private def topK(spark: SparkSession, pv: DataFrame, nprobe: Int, k: Int,
       shortlist: Option[Int]): DataFrame = {
     val key = md.latestKey(spark)
-    val posts = postingsOf(spark, key, pv, nprobe)
+    val (posts, probed) = postingsOf(spark, key, pv, nprobe)
     // checkpointed: referenced by both the restricted embedding fetch
     // and the re-rank join — without it the bucket read would run twice
-    val cand = shortlist.fold(posts) { s =>
+    val cand = ProbeFrames.candidates(shortlist.fold(posts) { s =>
       posts.join(pv, Seq("probe_id"))
         .withColumn("approx", adcApprox(col("qv"), col("code")))
         .withColumn("ark", row_number().over(Window.partitionBy("probe_id")
           .orderBy(col("approx").asc, col("id").asc)))
         .filter(col("ark") <= s)
-    }.select(col("probe_id"), col("id")).localCheckpoint()
+    }.select(col("probe_id"), col("id")), probed)
     val docs = md.corpusAsOf(spark, key,
         Some(cand.select(col("id").as("k")).distinct()))
       .select(element_at(col("after"), idKey).as("id"),

@@ -186,7 +186,7 @@ final class MaintainedLshIndex(
     */
   def candidatesFor(spark: SparkSession, text: String): DataFrame =
     candidateHitsAt(spark, md.latestKey(spark),
-      probeSigs(ProbeFrames.single(spark, typedLit(text)))).drop("probe_id")
+      probeSigs(ProbeFrames.single(spark, typedLit(text))))._1.drop("probe_id")
 
   /** [[candidatePairs]] FINISHED, not just candidated: exact n-gram
     * Jaccard computed over the candidates' CURRENT texts, keeping pairs
@@ -239,7 +239,7 @@ final class MaintainedLshIndex(
   def candidatesForAll(spark: SparkSession, probes: DataFrame,
       idCol: String, textCol: String): DataFrame =
     candidateHitsAt(spark, md.latestKey(spark),
-      probeSigs(ProbeFrames.unique(probes, idCol, textCol)))
+      probeSigs(ProbeFrames.unique(probes, idCol, textCol)))._1
 
   /** (probe_id, psh, sigs) of a unique probe frame — shingles and band
     * signatures by the SAME engine expressions the index applied to
@@ -253,10 +253,10 @@ final class MaintainedLshIndex(
   /** The probe core of every candidate read, point and set: signatures
     * → exploded (probe, band, sig) keys → bucket-pruned state join →
     * per-(probe, id) band counts. `pf` carries (probe_id, sigs
-    * [, anything else]).
+    * [, anything else]). Also returns the probed bucket set.
     */
   private def candidateHitsAt(spark: SparkSession,
-      key: Option[(Long, Long)], pf: DataFrame): DataFrame = {
+      key: Option[(Long, Long)], pf: DataFrame): (DataFrame, Set[Int]) = {
     val keys = pf
       .select(col("probe_id"), posexplode(col("sigs")).as(Seq("band", "sig")))
       // materialized once: the frame feeds both the bucket-planning pull
@@ -265,11 +265,11 @@ final class MaintainedLshIndex(
     val probed = keys
       .select(md.stateLog.bucketExpr(Seq(col("band"), col("sig"))).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
-    md.entriesBucketsAt(spark, key, probed)
+    (md.entriesBucketsAt(spark, key, probed)
       .join(keys, Seq("band", "sig"))
       .groupBy(col("probe_id"), col("v").as("id"))
       .agg(count(lit(1)).cast("int").as("bands_hit"))
-      .select(col("probe_id"), col("id"), col("bands_hit"))
+      .select(col("probe_id"), col("id"), col("bands_hit")), probed)
   }
 
   /** [[candidatesForAll]] FINISHED: exact n-gram Jaccard between each
@@ -303,7 +303,8 @@ final class MaintainedLshIndex(
     val key = md.latestKey(spark)
     // referenced by the hits core AND the Jaccard join
     val pf = probeSigs(src).localCheckpoint()
-    val cand = candidateHitsAt(spark, key, pf).localCheckpoint()
+    val (hits, probed) = candidateHitsAt(spark, key, pf)
+    val cand = ProbeFrames.candidates(hits, probed)
     val docs = docShingles(spark, key,
       cand.select(col("id").as("k")).distinct())
     cand
@@ -412,4 +413,13 @@ private[sinks] object ProbeFrames {
     */
   def single(spark: SparkSession, payload: Column): DataFrame =
     spark.range(1).select(lit("_probe").as("probe_id"), payload.as("_payload"))
+
+  /** A probe read's candidate frame, ready for its candidate-restricted
+    * fold: checkpointed when the bucket planning pull found buckets to
+    * probe; otherwise cut by `limit(0)`, which the optimizer folds —
+    * with the whole fold and finish downstream of it — into an empty
+    * relation, so a read that cannot hit starts no job after that pull.
+    */
+  def candidates(frame: DataFrame, probed: Set[Int]): DataFrame =
+    if (probed.isEmpty) frame.limit(0) else frame.localCheckpoint()
 }

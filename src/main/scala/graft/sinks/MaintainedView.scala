@@ -118,36 +118,31 @@ final class MaintainedView(
 
     protected def onTable: Column = isTable
 
-    // groupIsRowKey contract: key_names must be exactly [group col].
-    // NULL key_names (REPLICA IDENTITY NOTHING) must flag too:
-    // size(NULL)===1 is NULL, and a NULL riding through
-    // when(...,1).otherwise(0) reads as 0 — the shape violation would
-    // silently pass and the synthetic-keyed rows would vanish from
-    // dirty-group recomputes. The extractor is also VALUE-checked
-    // against the identity column wherever an image is present
-    // (MaintainedJoin.badRowKey's badImage analog): a group NAMED for
-    // the key but extracted from another column would hand dirtyKeys
-    // the wrong values and the key-restricted fold would silently
-    // return nothing for genuinely dirty groups. The groupIsImmutable
+    // groupIsRowKey contract: key_names must be exactly [group col] —
+    // the join flags' row-key contract, spelled ONCE in
+    // [[RowKeyContract.violation]] (single-column identity incl. the
+    // NULL key_names of REPLICA IDENTITY NOTHING, extractor VALUE-checked
+    // against it wherever an image is present), plus the view's own check
+    // that the identity column IS the group column. A group NAMED for the
+    // key but extracted from another column would hand dirtyKeys the
+    // wrong values and the key-restricted fold would silently return
+    // nothing for genuinely dirty groups. The groupIsImmutable
     // violations (misdeclared groupCol, column-less delete image,
     // group-changing update) are spelled ONCE in
     // [[ImmutableContract.violation]], shared with the join's
     // *KeyImmutable flags.
     override protected def contracts: Seq[(String, Column, String)] =
-      if (groupIsRowKey) {
-        def badImage(im: String) = col(im).isNotNull &&
-          !(ge(col(im)) <=> element_at(col(im), element_at(col("key_names"), 1)))
-        Seq(("badShape", isTable && col("op").isin("insert", "update", "delete") && (
-          col("key_names").isNull || size(col("key_names")) =!= 1 ||
-            !(element_at(col("key_names"), 1) <=> gc) ||
-            badImage("after") || badImage("before")),
+      if (groupIsRowKey)
+        Seq(("badShape", RowKeyContract.violation(isTable, ge) ||
+          (isTable && col("op").isin("insert", "update", "delete") &&
+            !(element_at(col("key_names"), 1) <=> gc)),
           s"groupIsRowKey is set but $schemaName.$table events carry " +
             s"key_names other than ['$gc'] (e.g. a multi-column or FULL " +
             "identity), or a group extractor whose value differs from " +
             "that identity column — the restricted fold keys on the " +
             "replica identity, so the flag requires key_names == the " +
             "group column, extracted verbatim"))
-      } else if (groupIsImmutable)
+      else if (groupIsImmutable)
         Seq(("badImmutable", ImmutableContract.violation(isTable, ge, groupCol.get),
           s"groupIsImmutable is set but a $schemaName.$table span carries " +
             "an event violating the contract — a group-changing update, a " +

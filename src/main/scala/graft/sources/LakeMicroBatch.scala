@@ -1,22 +1,17 @@
 package graft.sources
 
-import java.io.{ObjectInputStream, ObjectOutputStream}
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression, GenericInternalRow, Projection, SafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression, SafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.PlanBridge
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 
 import graft.sinks.LakeSink
 
@@ -25,8 +20,10 @@ import graft.sinks.LakeSink
   * the option surface). Replaces the former DSv1 `Source`: offsets are
   * plain [[LakeOffset]]s end to end (no `SerializedOffset` games), and
   * `planInputPartitions` prunes to exactly the new batch ids' parquet
-  * files — one [[InputPartition]] per data file, read executor-side by a
-  * self-contained parquet Group reader (no driver data movement, no
+  * files ([[LakeSink.batchDataFiles]]) — one [[FilePartition]] per data
+  * file, its `batch_id` riding as the partition value, read
+  * executor-side by Spark's own parquet reader
+  * ([[ChangelogReaderFactory]]; no driver data movement, no
   * `private[sql]` streaming-frame constructor).
   *
   * Admission (`latestOffset(start, limit)`) is the same two-sided
@@ -147,18 +144,14 @@ final class LakeMicroBatchStream(
     // interval. Missing (vacuumed) ids in a replayed span contribute no
     // files; gap DETECTION lives in the admission path.
     merge(e)
-    val ids = sink.committedBatchIds(spark)
+    sink.committedBatchIds(spark)
       .filter(id => id >= e.neg && id <= e.pos)
       .filter(id => id < s.neg || id > s.pos)
-    if (ids.isEmpty) return Array.empty
-    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ids.flatMap { id =>
-      val dir = new Path(new Path(root, "changelog"), s"batch_id=$id")
-      if (!f.exists(dir)) Seq.empty
-      else f.listStatus(dir).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(st => LakeInputPartition(st.getPath.toString, id))
-    }.toArray
+      .flatMap(id => sink.batchDataFiles(spark, id).map(st =>
+        PartitionedFile(InternalRow(id), SparkPath.fromFileStatus(st), 0, st.getLen,
+          modificationTime = st.getModificationTime, fileSize = st.getLen)))
+      .zipWithIndex.map { case (file, i) => FilePartition(i, Array(file)) }
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -186,9 +179,16 @@ final class LakeMicroBatchStream(
       case Some(rel) => Seq(s"${rel.namespace}.${rel.name}")
       case None => tables
     }
-    new LakeReaderFactory(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration),
-      tableFilter, typedExprs)
+    // Spark's parquet reader over the envelope, `batch_id` appended from
+    // each file's partition value (it sets up and broadcasts its own
+    // Hadoop conf, so it gets a copy)
+    val schema = LakeReadSource.changelogSchema
+    val data = StructType(schema.filterNot(_.name == "batch_id"))
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, data, StructType(Seq(schema("batch_id"))), data, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      new Configuration(spark.sparkContext.hadoopConfiguration))
+    new ChangelogReaderFactory(read, tableFilter.toSet, typedExprs)
   }
 
   override def commit(end: Offset): Unit = merge(LakeOffset.fromJson(end.json))
@@ -220,188 +220,47 @@ final class LakeMicroBatchStream(
   }
 }
 
-/** One changelog parquet data file (its batch id rides along — the lake
-  * stores it in the directory name, not the file).
+/** Executor side of the stream: Spark's parquet reader (`read`, one
+  * envelope row plus `batch_id` per event) with the table filter applied
+  * row-local and — for a typed feed — the bound typed projection
+  * evaluated, so rows leave the executor already typed.
   */
-final case class LakeInputPartition(file: String, batchId: Long) extends InputPartition
-
-/** Minimal writable-serialization wrapper for the Hadoop conf the
-  * executor-side parquet readers need (Configuration itself is not
-  * Java-serializable).
-  */
-final class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
-final class LakeReaderFactory(
-    conf: SerializableHadoopConf,
-    tables: Seq[String],
+private[sources] final class ChangelogReaderFactory(
+    read: PartitionedFile => Iterator[InternalRow],
+    tables: Set[String],
     typedExprs: Option[Seq[Expression]]) extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[LakeInputPartition]
-    new LakePartitionReader(p, conf.value, tables.toSet, typedExprs)
-  }
-}
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private val files = partition.asInstanceOf[FilePartition].files.iterator
+      private var rows: Iterator[InternalRow] = Iterator.empty
+      // SafeProjection (codegen with interpreted fallback): the output rows
+      // may carry maps/arrays the engine reads generically
+      private val projection = typedExprs.map(SafeProjection.create)
+      private var cur: InternalRow = _
 
-/** Executor-side reader of one changelog parquet file: decodes the FIXED
-  * envelope schema (the lake writes it, so the physical shape is known —
-  * int64 scalars, binary strings, int96-or-int64 timestamps, 3-level
-  * string list, string→string maps) into [[InternalRow]]s via the public
-  * parquet-mr Group API, appends the partition's `batch_id`, applies the
-  * table filter row-local, and — for a typed feed — evaluates the bound
-  * typed projection.
-  */
-final class LakePartitionReader(
-    p: LakeInputPartition, conf: Configuration,
-    tables: Set[String], typedExprs: Option[Seq[Expression]])
-    extends PartitionReader[InternalRow] {
-
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new Path(p.file))
-      .withConf(conf).build()
-  private val projection: Option[Projection] =
-    // SafeProjection (codegen with interpreted fallback): the output rows
-    // may carry maps/arrays the engine reads generically
-    typedExprs.map(SafeProjection.create)
-  private var cur: InternalRow = _
-
-  override def next(): Boolean = {
-    var g = reader.read()
-    while (g != null) {
-      val row = toRow(g)
-      val qualified = s"${str(row, 4)}.${str(row, 5)}"
-      if (tables.isEmpty || tables.contains(qualified)) {
-        cur = projection.fold(row: InternalRow)(_ (row))
-        return true
-      }
-      g = reader.read()
-    }
-    false
-  }
-
-  override def get(): InternalRow = cur
-  override def close(): Unit = reader.close()
-
-  private def str(r: InternalRow, i: Int): String = {
-    val v = r.getUTF8String(i)
-    if (v == null) null else v.toString
-  }
-
-  // field order = LakeReadSource.changelogSchema: lsn, commit_lsn, xid,
-  // op, schema, table, message_time, commit_time, key_names, before,
-  // after, batch_id
-  private def toRow(g: Group): GenericInternalRow = {
-    val r = new GenericInternalRow(12)
-    setLong(g, "lsn", r, 0)
-    setLong(g, "commit_lsn", r, 1)
-    setLong(g, "xid", r, 2)
-    setString(g, "op", r, 3)
-    setString(g, "schema", r, 4)
-    setString(g, "table", r, 5)
-    setTimestamp(g, "message_time", r, 6)
-    setTimestamp(g, "commit_time", r, 7)
-    r.update(8, readList(g, "key_names"))
-    r.update(9, readMap(g, "before"))
-    r.update(10, readMap(g, "after"))
-    r.setLong(11, p.batchId)
-    r
-  }
-
-  private def present(g: Group, field: String): Boolean =
-    g.getType.containsField(field) && g.getFieldRepetitionCount(field) > 0
-
-  private def setLong(g: Group, field: String, r: GenericInternalRow, i: Int): Unit =
-    if (present(g, field)) r.setLong(i, g.getLong(field, 0)) else r.setNullAt(i)
-
-  private def setString(g: Group, field: String, r: GenericInternalRow, i: Int): Unit =
-    if (present(g, field))
-      r.update(i, UTF8String.fromBytes(g.getBinary(field, 0).getBytes))
-    else r.setNullAt(i)
-
-  /** TimestampType micros since epoch, from either encoding Spark writes:
-    * INT96 (legacy default: little-endian nanos-of-day + julian day) or
-    * INT64 micros.
-    */
-  private def setTimestamp(g: Group, field: String, r: GenericInternalRow, i: Int): Unit = {
-    if (!present(g, field)) { r.setNullAt(i); return }
-    val prim = g.getType.getType(field).asPrimitiveType().getPrimitiveTypeName
-    val micros = prim match {
-      case PrimitiveTypeName.INT96 =>
-        val bytes = g.getInt96(field, 0).getBytes // 12 bytes little-endian
-        val buf = java.nio.ByteBuffer.wrap(bytes)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val nanosOfDay = buf.getLong
-        val julianDay = buf.getInt
-        (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-      case PrimitiveTypeName.INT64 =>
-        // honor the logical-type UNIT: Spark legally writes INT64
-        // timestamps as millis (outputTimestampType=TIMESTAMP_MILLIS)
-        // or micros — treating raw millis as micros would shift every
-        // event 1000x toward 1970
-        import org.apache.parquet.schema.LogicalTypeAnnotation
-        val v = g.getLong(field, 0)
-        g.getType.getType(field).getLogicalTypeAnnotation match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit match {
-              case LogicalTypeAnnotation.TimeUnit.MILLIS => v * 1000L
-              case LogicalTypeAnnotation.TimeUnit.MICROS => v
-              case LogicalTypeAnnotation.TimeUnit.NANOS => v / 1000L
+      override def next(): Boolean = {
+        while (true) {
+          if (rows.hasNext) {
+            val row = rows.next()
+            // envelope ordinals 4, 5 = schema, table
+            if (tables.isEmpty ||
+                tables.contains(s"${row.getUTF8String(4)}.${row.getUTF8String(5)}")) {
+              cur = projection.fold(row)(_ (row))
+              return true
             }
-          case _ => v // no annotation: Spark's default is micros
+          } else if (files.hasNext) rows = read(files.next())
+          else return false
         }
-      case other => throw new IllegalStateException(
-        s"unexpected parquet type $other for timestamp column $field in ${p.file}")
-    }
-    r.setLong(i, micros)
-  }
+        false
+      }
 
-  /** Standard 3-level list encoding: group { repeated group list
-    * { optional binary element } }.
-    */
-  private def readList(g: Group, field: String): GenericArrayData = {
-    if (!present(g, field)) return null
-    val lg = g.getGroup(field, 0)
-    val n = lg.getFieldRepetitionCount(0)
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      val el = lg.getGroup(0, i)
-      out(i) =
-        if (el.getFieldRepetitionCount(0) == 0) null
-        else UTF8String.fromBytes(el.getBinary(0, 0).getBytes)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+      override def get(): InternalRow = cur
 
-  /** Standard map encoding: group (MAP) { repeated group key_value
-    * { required binary key; optional binary value } }.
-    */
-  private def readMap(g: Group, field: String): ArrayBasedMapData = {
-    if (!present(g, field)) return null
-    val mg = g.getGroup(field, 0)
-    val n = mg.getFieldRepetitionCount(0)
-    val keys = new Array[Any](n)
-    val vals = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      val kv = mg.getGroup(0, i)
-      keys(i) = UTF8String.fromBytes(kv.getBinary(0, 0).getBytes)
-      vals(i) =
-        if (kv.getFieldRepetitionCount(1) == 0) null
-        else UTF8String.fromBytes(kv.getBinary(1, 0).getBytes)
-      i += 1
+      // a file read to its end closes itself; this covers an abandoned one
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
     }
-    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
-  }
 }

@@ -42,8 +42,9 @@ import graft.sinks.LakeSink
   * micro-batch stream ([[LakeMicroBatchStream]]) — offsets checkpointed
   * by Structured Streaming itself (no named cursors — [[LakeSink.poll]]
   * is the pull-based alternative), partition planning pruned to exactly
-  * the new batch ids' files. Options: `tables` (comma-separated
-  * `schema.table` filter, applied row-local in the partition readers),
+  * the new batch ids' files, which Spark's own parquet reader decodes.
+  * Options: `tables` (comma-separated `schema.table` filter, applied
+  * row by row as each file is read),
   * `maxBatchesPerTrigger` (admission cap per micro-batch), and
   * `table` + `typed=true` for a TYPED change feed of one table — the
   * same projection as the live registry's typed views, schema resolved
@@ -60,7 +61,8 @@ import graft.sinks.LakeSink
   *
   * 100-TB shape: planning I/O is one commit-log listing plus the new
   * batches' file listings per trigger; data moves only executor-side,
-  * straight from the batch parquet files, pruned to exactly the new ids.
+  * straight from the batch parquet files (one input partition each),
+  * pruned to exactly the new ids.
   */
 final class LakeReadSourceProvider
     extends RelationProvider with StreamSinkProvider with TableProvider

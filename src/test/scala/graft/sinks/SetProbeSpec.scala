@@ -233,6 +233,24 @@ class SetProbeSpec extends AnyFunSuite {
       sameShape("LSH verifiedCandidatesFor",
         lsh.verifiedCandidatesFor(spark, text),
         lsh.verifiedCandidatesFor(spark, short))
+      // a read that cannot hit plans its candidate fold away: its bucket
+      // planning pull (if it ran as a job at all) is the last job it
+      // starts — no checkpoint of the empty candidates, no fold scan for
+      // AQE to cancel, no final job
+      def noJobAfterPull(what: String, index: String, read: => DataFrame): Unit = {
+        val (rows, sites) = SparkTestBase.jobCallSites(s"smiss-$what")(read.collect())
+        assert(rows.isEmpty, what)
+        val pull = sites.lastIndexWhere(_.startsWith(s"collect at $index.scala"))
+        assert(sites.drop(pull + 1).isEmpty, s"$what: jobs after the planning pull: $sites")
+      }
+      noJobAfterPull("lsh-point", "MaintainedLshIndex",
+        lsh.verifiedCandidatesFor(spark, short))
+      noJobAfterPull("lsh-set", "MaintainedLshIndex", lsh.verifiedCandidatesForAll(
+        spark, probeFrame("p1" -> short), "pid", "payload"))
+      noJobAfterPull("bm25-set", "MaintainedBm25Index", bm.searchAll(
+        spark, probeFrame("p1" -> "42 --- !!!"), "pid", "payload", 5))
+      noJobAfterPull("ivf-nprobe0", "MaintainedIvfIndex",
+        ivf.searchTopK(spark, Seq(1f, 1f), 0, 3))
       sameShape("BM25 search",
         bm.search(spark, "quick fox", 5), bm.search(spark, "42 --- !!!", 5))
       // d1 sits in cell 0; cell 1 holds no posting

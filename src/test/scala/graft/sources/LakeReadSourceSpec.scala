@@ -47,35 +47,51 @@ class LakeReadSourceSpec extends AnyFunSuite {
       ev(4, "insert", "orders", null, Map("id" -> "7", "total" -> "9.5")))), 1L)
   }
 
-  test("streaming: INT64/MILLIS parquet timestamps read as the written instant") {
-    // a lake written under outputTimestampType=TIMESTAMP_MILLIS stores
-    // message_time/commit_time as INT64 millis — the stream reader must
-    // honor the logical-type unit, not assume micros
-    withLake { (sink, dir) =>
-      // restore the PRIOR session value, not a hardcoded one — overwriting
-      // the shared session's default would silently change what parquet
-      // encoding every later test exercises
-      val key = "spark.sql.parquet.outputTimestampType"
-      val prior = spark.conf.getOption(key)
-      spark.conf.set(key, "TIMESTAMP_MILLIS")
-      try seed(sink)
-      finally prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      val ckpt = Files.createTempDirectory("lake-ts-ckpt").toString
-      val buf = new java.util.concurrent.ConcurrentLinkedQueue[java.sql.Timestamp]()
-      val q = spark.readStream.format("graft-lake").option("path", dir).load()
-        .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], _: Long) =>
-          df.select("commit_time").collect().foreach(r => buf.add(r.getTimestamp(0)))
+  // Spark writes the envelope's timestamps in whichever encoding
+  // spark.sql.parquet.outputTimestampType names (INT96, or INT64 micros or
+  // millis) — the stream reader must honor each, not assume one. The
+  // same lake carries the envelope's nullable shapes: a NULL `before`
+  // (inserts), NULL `key_names` (a keyless REPLICA IDENTITY NOTHING
+  // table) and image maps holding NULL values.
+  Seq("INT96" -> "INT96", "TIMESTAMP_MICROS" -> "INT64/MICROS",
+      "TIMESTAMP_MILLIS" -> "INT64/MILLIS").foreach { case (encoding, label) =>
+    test(s"streaming: $label parquet timestamps read as the written instant") {
+      withLake { (sink, dir) =>
+        val odd = Seq(
+          Row(5L, 5L, 7L, "insert", "public", "logs", T, T, null, null,
+            Map("msg" -> "hi", "note" -> null)),
+          Row(6L, 6L, 7L, "update", "public", "users", T, T, Seq("id"),
+            Map("id" -> "2", "name" -> null), Map("id" -> "2", "name" -> "b2")))
+        // restore the PRIOR session value, not a hardcoded one — overwriting
+        // the shared session's default would silently change what parquet
+        // encoding every later test exercises
+        val key = "spark.sql.parquet.outputTimestampType"
+        val prior = spark.conf.getOption(key)
+        spark.conf.set(key, encoding)
+        try {
+          seed(sink)
+          sink.appendBatch(envelope(odd), 2L)
+        } finally prior match {
+          case Some(v) => spark.conf.set(key, v)
+          case None => spark.conf.unset(key)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(60000)
-      val got = scala.jdk.CollectionConverters.IteratorHasAsScala(buf.iterator())
-        .asScala.toSet
-      assert(got == Set(T), s"expected $T, got $got")
+        val ckpt = Files.createTempDirectory("lake-ts-ckpt").toString
+        val buf = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+        val q = spark.readStream.format("graft-lake").option("path", dir).load()
+          .writeStream
+          .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], _: Long) =>
+            df.drop("batch_id").collect().foreach(buf.add)
+          }
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination(60000)
+        val rows = scala.jdk.CollectionConverters.IteratorHasAsScala(buf.iterator())
+          .asScala.toSeq
+        val got = rows.map(_.getTimestamp(7)).toSet
+        assert(got == Set(T), s"expected $T, got $got")
+        val back = rows.filter(r => r.getLong(0) >= 5L).sortBy(_.getLong(0))
+        assert(back == odd, s"expected $odd, got $back")
+      }
     }
   }
 
