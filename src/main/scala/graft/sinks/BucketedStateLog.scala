@@ -33,14 +33,14 @@ private[sinks] object IntervalKeys {
     sortedKeys.filter { case (n, p) => n >= from._1 && p <= from._2 }.lastOption
 }
 
-/** Marker-committed maintained-operator state: versions whose rows are
+/** Marker-committed bucketed state: versions whose rows are
   * HASH-BUCKETED on a key, so committing a new
   * version rewrites only the buckets the refresh touched — untouched
   * buckets carry into the new version by manifest reference, their files
-  * byte-identical. The same slice/manifest construction [[LakeSink]]'s
-  * `compact` uses for BASE, applied to maintained-operator state: without
-  * it a maintained join over a 10 TB state would rewrite 10 TB per
-  * refresh regardless of churn.
+  * byte-identical. It stores every maintainer's state and the lake's
+  * BASE ([[LakeSink]] keeps one log per table plus a slice-less log as
+  * its commit point): without it a maintained join over a 10 TB state
+  * would rewrite 10 TB per refresh regardless of churn.
   *
   * Layout under `dir`:
   *  - `v<neg>_<pos>/bucket=<b>/` — immutable parquet slices written by
@@ -295,10 +295,12 @@ private[sinks] final class BucketedStateLog(
   /** Publish `key` as a pure carry-forward of `prevKey`: its manifest
     * references every one of `prevKey`'s slices and no slice is written —
     * [[commit]] of an empty delta, without a Spark job or a version dir.
+    * `prevKey = None` publishes an empty version (a full rewrite to
+    * nothing, which stamps the geometry like any full rewrite).
     */
-  def carry(f: FileSystem, prevKey: (Long, Long), key: (Long, Long)): Unit = {
-    checkGeometry(f)
-    writeManifest(f, key, entries(f, prevKey))
+  def carry(f: FileSystem, prevKey: Option[(Long, Long)], key: (Long, Long)): Unit = {
+    if (prevKey.isEmpty) writeGeometry(f) else checkGeometry(f)
+    writeManifest(f, key, prevKey.map(entries(f, _)).getOrElse(Map.empty))
   }
 
   /** `buckets:subs` marker — the dir's committed layout, stamped by the
@@ -309,12 +311,12 @@ private[sinks] final class BucketedStateLog(
     * next to committed versions — every incremental commit then refuses
     * until the full rewrite is re-run, loud not silent.
     */
-  private def geometryPath = new Path(dir, "_geometry")
+  private def geometryPath = new Path(dir, BucketedStateLog.GeometryFile)
 
   private def readGeometry(f: FileSystem): Option[String] =
     BucketedStateLog.readMarker(f, geometryPath)
 
-  private def writeGeometry(f: FileSystem): Unit = {
+  private[sinks] def writeGeometry(f: FileSystem): Unit = {
     val want = s"$buckets:$subs"
     // skip the replace when the marker already matches: every routine
     // re-seed/retrain/recode at unchanged geometry would otherwise
@@ -667,6 +669,14 @@ private[sinks] object BucketedStateLog {
     sweepMarkerTmps(f, dir, markerName)
     got
   }
+
+  /** The bucket count of the state dir `dir`, from its `_geometry`
+    * marker; None while no full rewrite has stamped one.
+    */
+  def bucketsOf(f: FileSystem, dir: Path): Option[Int] =
+    readMarker(f, new Path(dir, GeometryFile)).flatMap(_.split(":")(0).toIntOption)
+
+  private val GeometryFile = "_geometry"
 
   /** A small marker file's trimmed UTF-8 content; None when absent. */
   def readMarker(f: FileSystem, p: Path): Option[String] =

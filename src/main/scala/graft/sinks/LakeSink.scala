@@ -29,21 +29,19 @@ import org.apache.spark.sql.types.{LongType, MapType, StringType, StructField, S
   *    same epoch id, making replay idempotent (exactly-once commits over
   *    an at-least-once channel, same story as the reference's
   *    ack-after-apply listener).
-  *  - `_graft_commits/_base_manifest.<v>` — the BASE pointer: one
-  *    immutable manifest file per compaction, naming the folded
-  *    watermark, the bucket count, and the data directory of every
-  *    (schema, table, bucket) slice. Written to a temp name and renamed
-  *    into place (rename-to-fresh-path is atomic), so a reader sees
-  *    either the previous manifest or the complete new one — never a
-  *    missing or half-written base.
-  *  - `_base_data/v<v>/schema=<s>/table=<t>/bucket=<b>/` — immutable
-  *    folded-state slices. BASE rows are hash-bucketed on the fold key
-  *    (`pmod(hash(k), buckets)`), so a compaction rewrites ONLY the
-  *    buckets whose keys appear in the post-watermark tail; untouched
-  *    buckets carry forward by manifest reference, byte-identical.
-  *    Superseded slices are garbage-collected one compaction later (the
-  *    previous manifest's exclusive slices are retained through one
-  *    cycle for in-flight readers).
+  *  - `_base_data/schema=<s>/table=<t>/` — BASE: one [[BucketedStateLog]]
+  *    per table holding its folded state, hash-bucketed on the fold key
+  *    `k`, with versions keyed by the folded interval `(foldedLow,
+  *    watermark)`. A compaction rewrites ONLY the buckets whose keys
+  *    appear in the tail; untouched buckets carry forward by manifest
+  *    reference, byte-identical.
+  *  - `_base_data/_lake/` — the lake's commit point: a log with no slices
+  *    whose version K is published only after every table log holds K,
+  *    so a reader sees either the previous BASE or the complete new one.
+  *    Its `_geometry` marker fixes the lake's bucket count. The newest
+  *    `retainManifests` lake keys stay readable; slices only older keys
+  *    reference are garbage-collected (a superseded slice survives one
+  *    compaction for in-flight readers).
   *
   * Single-writer per root: batch ids are the streaming query's epoch ids,
   * so one lake root belongs to one writing query (its checkpoint already
@@ -117,9 +115,52 @@ final class LakeSink(
   private def changelogDir = new Path(root, "changelog")
   /** The one spelling of the changelog layout: batch `id`'s directory. */
   private def batchDir(id: Long) = new Path(changelogDir, s"batch_id=$id")
-  private def baseDataDir = new Path(root, "_base_data")
   private def vacuumedFile = new Path(commitDir, "_vacuumed")
   private def vacuumedLowFile = new Path(commitDir, "_vacuumed_low")
+  private def baseDataDir = new Path(root, "_base_data")
+  private def tableRel(sch: String, tbl: String) = s"_base_data/schema=$sch/table=$tbl"
+
+  /** The lake's commit point (see the class doc); `n` matters only to
+    * the publish, which checks it against the committed geometry.
+    */
+  private def lakeLog(n: Int) =
+    new BucketedStateLog(new Path(baseDataDir, "_lake"), n, Seq("k"))
+
+  /** The folded interval `(foldedLow, watermark)`: the lake log's latest
+    * key, None before the first compaction.
+    */
+  private def foldedInterval(f: FileSystem): Option[(Long, Long)] =
+    lakeLog(baseBuckets).latest(f)
+
+  /** BASE's bucket count: the lake log's `_geometry` marker, which the
+    * first compaction stamps from `baseBuckets` — a reader opened with
+    * another `baseBuckets` still reads the committed geometry. Memoized
+    * once a marker is found.
+    */
+  private def buckets(f: FileSystem): Int = {
+    if (committedBuckets == 0)
+      BucketedStateLog.bucketsOf(f, new Path(baseDataDir, "_lake"))
+        .foreach(committedBuckets = _)
+    if (committedBuckets == 0) baseBuckets else committedBuckets
+  }
+
+  @volatile private var committedBuckets = 0
+
+  @transient private lazy val tableLogs =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), BucketedStateLog]()
+
+  /** One table's BASE log. */
+  private def tableLog(f: FileSystem, sch: String, tbl: String): BucketedStateLog = {
+    val n = buckets(f)
+    tableLogs.computeIfAbsent((sch, tbl),
+      _ => new BucketedStateLog(new Path(root, tableRel(sch, tbl)), n, Seq("k")))
+  }
+
+  /** (schema, table) of every BASE table log. */
+  private def baseTables(f: FileSystem): Seq[(String, String)] =
+    Option(f.globStatus(new Path(baseDataDir, "schema=*/table=*"))).toSeq.flatten
+      .map(st => (st.getPath.getParent.getName.stripPrefix("schema="),
+        st.getPath.getName.stripPrefix("table=")))
 
   /** `writeStream.foreachBatch(sink.appendBatch _)` target: land one
     * micro-batch of the envelope, exactly once. A replayed batch id whose
@@ -137,8 +178,7 @@ final class LakeSink(
     // snapshot batch (id below every previously folded id, e.g. a
     // mid-stream table addition after a compaction) is genuinely new and
     // must land, not be mistaken for a replay.
-    val m = readManifest(f)
-    if (m.exists(mm => batchId <= mm.watermark && batchId >= mm.minFolded)) return
+    if (foldedInterval(f).exists { case (lo, wm) => batchId >= lo && batchId <= wm }) return
     // The batch's per-table TRUNCATE positions ride the write job as an
     // observed metric (no second scan) and land as marker CONTENT: every
     // fold needs "latest truncate at-or-below my read point", and reading
@@ -250,8 +290,7 @@ final class LakeSink(
   def batchLanded(spark: SparkSession, batchId: Long): Boolean = {
     val f = fs(spark)
     f.exists(new Path(commitDir, batchId.toString)) ||
-      readManifest(f).exists(m =>
-        batchId >= m.minFolded && batchId <= m.watermark)
+      foldedInterval(f).exists { case (lo, wm) => batchId >= lo && batchId <= wm }
   }
 
   /** Batch ids with a commit marker (sorted). */
@@ -278,25 +317,30 @@ final class LakeSink(
     * compaction — NOT -1, which is a legal snapshot batch id).
     */
   def watermark(spark: SparkSession): Long =
-    readManifest(fs(spark)).map(_.watermark).getOrElse(Long.MinValue)
+    foldedInterval(fs(spark)).fold(Long.MinValue)(_._2)
 
   /** Lowest batch id folded into BASE (Long.MinValue before the first
     * compaction). The folded set is exactly `[foldedLow, watermark]`;
     * committed ids OUTSIDE that interval are the fold's changelog tail.
     */
   def foldedLow(spark: SparkSession): Long =
-    readManifest(fs(spark)).map(_.minFolded).getOrElse(Long.MinValue)
-
-  /** Current BASE manifest version (0 before the first compaction). */
-  def baseVersion(spark: SparkSession): Long =
-    readManifest(fs(spark)).map(_.version).getOrElse(0L)
+    foldedInterval(fs(spark)).fold(Long.MinValue)(_._1)
 
   /** Current BASE slice map: (schema, table, bucket) → data directory
     * path relative to the lake root. Introspection for operators and the
     * churn-proportionality specs; the paths are immutable once published.
     */
-  def baseEntries(spark: SparkSession): Map[(String, String, Int), String] =
-    readManifest(fs(spark)).map(_.entries).getOrElse(Map.empty)
+  def baseEntries(spark: SparkSession): Map[(String, String, Int), String] = {
+    val f = fs(spark)
+    foldedInterval(f).toSeq.flatMap { key =>
+      baseTables(f).flatMap { case (sch, tbl) =>
+        val log = tableLog(f, sch, tbl)
+        if (!log.isCommitted(f, key)) Nil
+        else log.entries(f, key).map { case ((b, _), rel) =>
+          (sch, tbl, b) -> s"${tableRel(sch, tbl)}/$rel" }
+      }
+    }.toMap
+  }
 
   /** The committed changelog (optionally only batches AFTER `fromBatch`).
     * Uncommitted / half-written batch directories are filtered out by the
@@ -377,36 +421,25 @@ final class LakeSink(
       .flatMap(r => if (r.isNullAt(0)) None else
         Some((r.getStruct(0).getLong(0), r.getStruct(0).getLong(1))))
 
-  /** BASE slices of one table as fold input, per the current manifest. */
-  private def baseFor(
-      spark: SparkSession, m: Option[Manifest],
+  /** One table's BASE at lake key `key` as fold input, restricted to the
+    * buckets `only` picks. None when there is no key, when the table log
+    * lacks it (the table had no rows in its batches) or when no wanted
+    * slice is non-empty.
+    */
+  private def baseAt(spark: SparkSession, f: FileSystem, key: Option[(Long, Long)],
       schemaName: String, table: String,
-      restrictToKeys: Option[DataFrame] = None): Option[DataFrame] = {
-    val relevant = m.toSeq.flatMap(_.entries.collect {
-      case ((s, t, b), rel) if s == schemaName && t == table =>
-        b -> new Path(root, rel).toString
-    })
-    // a key restriction prunes BASE to the slices its keys hash into
-    // (bounded planning pull: ≤ buckets distinct values) — a restricted
-    // fold over a billion-key base reads ~|touched buckets|/buckets of it
-    val pruned = (m, restrictToKeys) match {
-      case (Some(mm), Some(ks)) =>
-        val want = ks.select(pmod(hash(col("k")), lit(mm.buckets)).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSet
-        relevant.filter { case (b, _) => want.contains(b) }
-      case _ => relevant
+      only: BucketedStateLog => Option[Set[Int]]): Option[DataFrame] =
+    key.flatMap { k =>
+      val log = tableLog(f, schemaName, table)
+      if (!log.isCommitted(f, k)) None
+      else {
+        val want = only(log)
+        if (!log.entries(f, k).keys.exists(bs => want.forall(_.contains(bs._1)))) None
+        else Some(log.readBuckets(spark, k, want, ImageSchema)
+          .select(lit("insert").as("op"), col("commit_lsn"), col("lsn"),
+            col("k"), col("after")))
+      }
     }
-    if (pruned.isEmpty) None
-    else {
-      val base = spark.read.schema(ImageSchema)
-        .parquet(pruned.map(_._2): _*)
-        .select(lit("insert").as("op"), col("commit_lsn"), col("lsn"),
-          col("k"), col("after"))
-      Some(restrictToKeys
-        .map(ks => base.join(broadcast(ks), Seq("k"), "left_semi"))
-        .getOrElse(base))
-    }
-  }
 
   /** Latest state per replica-identity key for one table: BASE (if any)
     * unioned with the post-watermark tail, truncate-aware, folded to the
@@ -416,9 +449,8 @@ final class LakeSink(
     */
   def latestState(spark: SparkSession, schemaName: String, table: String): DataFrame = {
     val f = fs(spark)
-    val m = readManifest(f)
-    val wm = m.map(_.watermark).getOrElse(Long.MinValue)
-    val lo = m.map(_.minFolded).getOrElse(Long.MinValue)
+    val m = foldedInterval(f)
+    val (lo, wm) = m.getOrElse((Long.MinValue, Long.MinValue))
     // ONE commit-log listing serves both the tail read and the marker
     // metadata (r21 advice): two listings let a truncate-bearing batch
     // committing in between put its truncate position into truncAt while
@@ -433,7 +465,7 @@ final class LakeSink(
     // metadata (no Spark job); empty markers fall back to the scan.
     val truncAt = markerTruncates(f, tailIds, schemaName, table)
       .getOrElse(maxTruncate(tail))
-    val all = baseFor(spark, m, schemaName, table)
+    val all = baseAt(spark, f, m, schemaName, table, _ => None)
       .map(_.unionByName(tail)).getOrElse(tail)
     foldImages(all, truncAt)
   }
@@ -443,15 +475,15 @@ final class LakeSink(
     * returned it right after that batch committed. Snapshot batches
     * (negative ids) are part of history like any other batch.
     *
-    * Resolution: fold from the newest RETAINED manifest whose watermark is
-    * ≤ `asOf` (GC keeps the current manifest and its predecessor) plus the
-    * changelog batches in `(watermark, asOf]`; with no qualifying manifest
-    * the fold rebuilds from the raw changelog. Either way the result is
-    * only available while the needed history is retained — if [[vacuum]]
-    * has deleted batches past the chosen fold point this throws rather
-    * than silently returning a state with holes. Retention is therefore
-    * operator-controlled: delay `vacuum` (and `compact`) as far back as
-    * time-travel reads must reach.
+    * Resolution: fold from BASE at the newest RETAINED lake key whose
+    * watermark is ≤ `asOf` (GC keeps the newest `retainManifests` keys)
+    * plus the changelog batches in `(watermark, asOf]`; with no
+    * qualifying key the fold rebuilds from the raw changelog. Either way
+    * the result is only available while the needed history is retained —
+    * if [[vacuum]] has deleted batches past the chosen fold point this
+    * throws rather than silently returning a state with holes. Retention
+    * is therefore operator-controlled: delay `vacuum` (and `compact`) as
+    * far back as time-travel reads must reach.
     *
     * Scale shape: identical to [[latestState]] — one shuffle on the fold
     * key over base + bounded tail; `asOf` only tightens the tail's
@@ -558,12 +590,10 @@ final class LakeSink(
     // `floor` additionally bounds the read from BELOW in the two-sided id
     // space (maintained views pin their recompute to exactly the interval
     // they have applied, so a concurrently landing late snapshot batch
-    // cannot tear a dirty-group rebuild). Manifests whose fold dips under
-    // the floor are skipped — older manifests have equal-or-higher floors.
-    val m = manifestVersions(f).map(readManifestVersion(f, _))
-      .filter(mm => mm.watermark <= asOf && mm.minFolded >= floor).lastOption
-    val wm = m.map(_.watermark).getOrElse(Long.MinValue)
-    val lo = m.map(_.minFolded).getOrElse(Long.MinValue)
+    // cannot tear a dirty-group rebuild). Lake keys whose fold dips under
+    // the floor are skipped — older keys have equal-or-higher floors.
+    val m = lakeLog(baseBuckets).latestWithin(f, (floor, asOf))
+    val (lo, wm) = m.getOrElse((Long.MinValue, Long.MinValue))
     // Retention check — PRECISE: the fold needs the ids in (wm, asOf]
     // above the chosen base and [floor, min(lo-1, asOf)] below it, and an
     // id can only be MISSING-because-deleted if it lies inside the vacuum
@@ -583,10 +613,10 @@ final class LakeSink(
     }
     val posMissing = deletedWithin(math.max(wm + 1, 0L), asOf)
     // Below-base requirement: the ids in [floor, min(-1, asOf, lo-1)]
-    // ("no manifest chosen" rebuilds from the raw changelog, so it needs
+    // ("no lake key chosen" rebuilds from the raw changelog, so it needs
     // every negative id at-or-below asOf).
     val negMissing = deletedWithin(floor,
-      m.fold(math.min(-1L, asOf))(mm => Seq(-1L, asOf, mm.minFolded - 1).min))
+      m.fold(math.min(-1L, asOf))(k => Seq(-1L, asOf, k._1 - 1).min))
     if (posMissing || negMissing)
       throw new IllegalStateException(
         s"state as of batch $asOf needs changelog batches outside the " +
@@ -629,14 +659,18 @@ final class LakeSink(
           .drop("schema", "table")
       case _ => tail0
     }
-    val base0 = baseFor(spark, m, schemaName, table, restrictToKeys)
-    val base = (base0, restrictToImmutable) match {
-      case (Some(b), Some((ex, ks))) =>
+    // a key restriction prunes BASE to the slices its keys hash into
+    // (bounded planning pull: ≤ buckets distinct values) — a restricted
+    // fold over a billion-key base reads ~|touched buckets|/buckets of it
+    val base = baseAt(spark, f, m, schemaName, table, log => restrictToKeys.map(
+        _.select(log.bucketCol(col("k"))).distinct().collect().map(_.getInt(0)).toSet))
+      .map(b => (restrictToKeys, restrictToImmutable) match {
+        case (Some(ks), _) => b.join(broadcast(ks), Seq("k"), "left_semi")
         // BASE rows are folded inserts: the image is `after`
-        Some(b.join(broadcast(ks.select(col("k").as("_imm"))),
-          ex(col("after")).cast("string") <=> col("_imm"), "left_semi"))
-      case _ => base0
-    }
+        case (_, Some((ex, ks))) => b.join(broadcast(ks.select(col("k").as("_imm"))),
+          ex(col("after")).cast("string") <=> col("_imm"), "left_semi")
+        case _ => b
+      })
     val all = base.map(_.unionByName(tail)).getOrElse(tail)
     foldImages(all, truncAt)
   }
@@ -852,113 +886,82 @@ final class LakeSink(
         col("commit_lsn") :+ col("lsn"): _*)
   }
 
-  /** Fold the committed post-watermark tail into BASE and advance the
-    * watermark — CHURN-PROPORTIONALLY. Only buckets whose keys appear in
-    * the tail are re-folded and rewritten (a truncate touches all of its
-    * table's buckets); every other slice carries into the new manifest by
-    * reference, its files untouched. The new manifest is published with
-    * one atomic rename, so a concurrent reader sees either the old or the
-    * new BASE in full (plus a tail that covers the difference — the fold
-    * is idempotent under that overlap because newer (commit_lsn, lsn)
-    * always wins). Slices superseded by THIS compaction are retained
-    * until the NEXT one (in-flight readers of the previous manifest),
-    * then garbage-collected.
+  /** Fold the committed tail into BASE and advance the folded interval —
+    * CHURN-PROPORTIONALLY. Only buckets whose keys appear in the tail are
+    * re-folded and rewritten (a truncate touches all of its table's
+    * buckets); every other slice carries into the table log's new version
+    * by reference, its files untouched. The lake log publishes the new
+    * key only after every table log holds it, so a concurrent reader sees
+    * either the old or the new BASE in full (plus a tail that covers the
+    * difference — the fold is idempotent under that overlap because newer
+    * (commit_lsn, lsn) always wins). A compaction that died before that
+    * publish is redone by the next one, which skips every table log
+    * already holding its key. Slices only lake keys older than the newest
+    * `retainManifests` reference are then garbage-collected.
     *
     * Planning collects are bounded: one (tables × buckets)-row touched-
     * bucket summary, plus per-table output-directory listings.
     */
   def compact(spark: SparkSession): Unit = {
     val f = fs(spark)
+    // ONE commit-log listing gives both the new interval and the tail: a
+    // batch landing between two listings would be folded but left
+    // outside the recorded interval
     val ids = committedBatchIds(spark)
     if (ids.isEmpty) return
-    val m = readManifest(f)
-    val wm = m.map(_.watermark).getOrElse(Long.MinValue)
-    val mf = m.map(_.minFolded).getOrElse(Long.MaxValue)
+    val old = foldedInterval(f)
+    val (lo, wm) = old.getOrElse((Long.MaxValue, Long.MinValue))
     // new work on EITHER side of the folded interval: epochs above the
     // watermark, or a late snapshot batch below the fold floor
-    if (ids.max <= wm && ids.min >= mf) return
-    val hi = math.max(ids.max, wm)
-    val newLow = math.min(ids.min, mf)
-    val n = m.map(_.buckets).getOrElse(baseBuckets)
-    val newV = m.map(_.version + 1).getOrElse(1L)
-    val oldEntries = m.map(_.entries).getOrElse(Map.empty[(String, String, Int), String])
-
-    val tail = keyedEvents(changelogOutside(
-      spark, m.map(_.minFolded).getOrElse(Long.MinValue), wm))
+    if (ids.max <= wm && ids.min >= lo) return
+    val key = (math.min(ids.min, lo), math.max(ids.max, wm))
+    val lake = lakeLog(buckets(f))
+    // a fresh lake fixes its geometry before any table log is written
+    if (old.isEmpty) lake.writeGeometry(f)
+    val tail = keyedEvents(changelogOf(spark, ids.filter(id => id < lo || id > wm)))
     // Touched buckets + truncate position per table: ≤ tables × (buckets+2)
     // cells — planning-scale, bounded by the schema, not the data.
     val perTable = tail.groupBy(col("schema"), col("table"))
       .agg(
-        collect_set(when(col("op") =!= "truncate",
-          pmod(hash(col("k")), lit(n)))).as("bks"),
+        collect_set(when(col("op") =!= "truncate", lake.bucketCol(col("k")))).as("bks"),
         max(col("op") === "truncate").as("has_trunc"),
         max(when(col("op") === "truncate",
           struct(col("commit_lsn"), col("lsn")))).as("trunc_at"))
       .collect()
 
-    var entries = oldEntries
     perTable.foreach { r =>
       val (sch, tbl) = (r.getString(0), r.getString(1))
-      val hasTrunc = r.getBoolean(3)
-      val touched: Set[Int] =
-        if (hasTrunc) (0 until n).toSet
-        else r.getSeq[Int](2).toSet
-      val truncAt =
-        if (r.isNullAt(4)) None
-        else Some((r.getStruct(4).getLong(0), r.getStruct(4).getLong(1)))
-      val oldForTable = oldEntries.collect {
-        case ((s, t, b), rel) if s == sch && t == tbl => b -> rel
+      val log = tableLog(f, sch, tbl)
+      if (!log.isCommitted(f, key)) {
+        val touched: Set[Int] =
+          if (r.getBoolean(3)) (0 until lake.buckets).toSet
+          else r.getSeq[Int](2).toSet
+        val truncAt =
+          if (r.isNullAt(4)) None
+          else Some((r.getStruct(4).getLong(0), r.getStruct(4).getLong(1)))
+        val prev = old.filter(log.isCommitted(f, _))
+        val tailT = tail
+          .filter(col("schema") === sch && col("table") === tbl &&
+            col("op") =!= "truncate")
+          .filter(log.bucketCol(col("k")).isin(touched.toSeq: _*))
+          .select("op", "commit_lsn", "lsn", "k", "after")
+        val all = baseAt(spark, f, prev, sch, tbl, _ => Some(touched))
+          .map(_.unionByName(tailT)).getOrElse(tailT)
+        // buckets that fold to empty write no slice — a missing slice
+        // reads as an empty one
+        log.commit(f, foldImages(all, truncAt), touched, prev, key)
       }
-      val baseDirs = touched.toSeq.sorted.flatMap(oldForTable.get)
-        .map(rel => new Path(root, rel).toString)
-      val base =
-        if (baseDirs.isEmpty) None
-        else Some(spark.read.schema(ImageSchema).parquet(baseDirs: _*)
-          .select(lit("insert").as("op"), col("commit_lsn"), col("lsn"),
-            col("k"), col("after")))
-      val tailT = tail
-        .filter(col("schema") === sch && col("table") === tbl &&
-          col("op") =!= "truncate")
-        .filter(pmod(hash(col("k")), lit(n)).isin(touched.toSeq: _*))
-        .select("op", "commit_lsn", "lsn", "k", "after")
-      val all = base.map(_.unionByName(tailT)).getOrElse(tailT)
-      val outDir = new Path(baseDataDir, s"v$newV/schema=$sch/table=$tbl")
-      f.delete(outDir, true) // leftovers of a crashed prior attempt at this version
-      foldImages(all, truncAt)
-        .withColumn("bucket", pmod(hash(col("k")), lit(n)))
-        .write.partitionBy("bucket")
-        .parquet(outDir.toString)
-      // Buckets that folded to empty write no files — they drop out of the
-      // manifest entirely (a missing slice reads as an empty slice).
-      val written: Set[Int] =
-        if (!f.exists(outDir)) Set.empty
-        else f.listStatus(outDir).toSeq.filter(_.isDirectory)
-          .flatMap(st => st.getPath.getName.stripPrefix("bucket=").toIntOption)
-          .toSet
-      entries = entries.filterNot { case ((s, t, b), _) =>
-        s == sch && t == tbl && touched.contains(b)
-      } ++ written.map(b =>
-        (sch, tbl, b) -> s"_base_data/v$newV/schema=$sch/table=$tbl/bucket=$b")
     }
-
-    val newManifest = Manifest(newV, hi, n, entries, newLow)
-    writeManifest(f, newManifest)
-    // GC: keep the new manifest and its predecessor (in-flight readers of
-    // the old manifest may still be scanning its exclusive slices); drop
-    // everything older, and every data slice neither manifest references.
-    // retainManifests manifests stay readable (current + predecessors):
-    // each is a TIME-TRAVEL anchor — stateAsOf resolves from the newest
-    // retained manifest at-or-below the target, so manifest retention ×
-    // compaction cadence (together with vacuum's keepLast) is the lake's
-    // history depth. Slices any retained manifest references survive.
-    val retained = (manifestVersions(f) :+ newV).distinct.sorted
-      .takeRight(retainManifests)
-    val keepRefs = retained.map {
-      case v if v == newV => newManifest.entries.values.toSet
-      case v if m.exists(_.version == v) => m.get.entries.values.toSet
-      case v => readManifestVersion(f, v).entries.values.toSet
-    }.foldLeft(Set.empty[String])(_ ++ _)
-    gcBase(f, keepRefs, retained.toSet)
+    val logs = baseTables(f).map { case (sch, tbl) => tableLog(f, sch, tbl) }
+    logs.filterNot(_.isCommitted(f, key))
+      .foreach(log => log.carry(f, old.filter(log.isCommitted(f, _)), key))
+    lake.carry(f, old, key)
+    // each retained lake key is a TIME-TRAVEL anchor — stateAsOf resolves
+    // from the newest one at-or-below the target, so retainManifests ×
+    // compaction cadence (with vacuum's keepLast) is the lake's history
+    // depth; every slice a retained key references survives
+    lake.committed(f).takeRight(retainManifests).headOption
+      .foreach(oldest => (lake +: logs).foreach(_.gcWithin(f, oldest)))
   }
 
   /** Incremental changelog consumption with a durable named cursor — the
@@ -1033,12 +1036,12 @@ final class LakeSink(
     */
   def seedCursor(spark: SparkSession, name: String): (Long, Long) = {
     val ids = committedBatchIds(spark)
-    val m = readManifest(fs(spark)) // one read serves both bounds
+    val m = foldedInterval(fs(spark)) // one read serves both bounds
     // the floor covers every surviving and every folded id (vacuum only
     // ever drops folded ids, so the fold floor also covers its extent)
-    val neg = (ids ++ m.map(_.minFolded)).minOption.getOrElse(0L).min(0L)
+    val neg = (ids ++ m.map(_._1)).minOption.getOrElse(0L).min(0L)
     val pos = math.max(ids.maxOption.getOrElse(Long.MinValue),
-      m.map(_.watermark).getOrElse(Long.MinValue))
+      m.fold(Long.MinValue)(_._2))
     // acknowledge the CURRENT vacuum extent as innocent: the seed read
     // (stateAsOf/latestState through BASE) covers everything it deleted
     writeCursor(spark, name, neg, pos, ackedVl = vacuumLowWater(spark))
@@ -1172,8 +1175,8 @@ final class LakeSink(
     */
   def gauges(spark: SparkSession): Seq[(String, Double)] = {
     val ids = committedBatchIds(spark)
-    val wm = watermark(spark)
-    val lo = foldedLow(spark)
+    val f = fs(spark)
+    val (lo, wm) = foldedInterval(f).getOrElse((Long.MinValue, Long.MinValue))
     // vacuum-safety signal: a FULL [[vacuum]] would delete exactly the
     // committed ids inside the folded interval — a registered consumer is
     // at risk iff one of those ids lies OUTSIDE its cursor (undelivered),
@@ -1182,7 +1185,6 @@ final class LakeSink(
     // vacuum strands fewer, so the gauge errs toward alerting. Per scrape
     // this costs the commit-log listing plus one cursor-dir listing and
     // one small read per consumer.
-    val f = fs(spark)
     val wouldDrop = ids.filter(id => id >= lo && id <= wm)
     val cursorDir = new Path(root, "_graft_cursors")
     val cursors =
@@ -1203,7 +1205,6 @@ final class LakeSink(
       "committed_batches" -> ids.size.toDouble,
       "snapshot_batches" -> ids.count(_ < 0).toDouble,
       "last_batch_id" -> ids.filter(_ >= 0).lastOption.getOrElse(-1L).toDouble,
-      "base_version" -> baseVersion(spark).toDouble,
       "watermark" -> (if (wm == Long.MinValue) -1.0 else wm.toDouble),
       "consumers" -> cursors.size.toDouble,
       "consumers_at_risk_on_vacuum" -> atRisk.toDouble)
@@ -1223,11 +1224,11 @@ final class LakeSink(
     * `keepLast` lowest (most recently landed) snapshot batches — in the
     * changelog even though BASE already covers them. They are the replay
     * window for consumers that have not caught up, and together with the
-    * retained manifests the lake's TIME-TRAVEL depth: [[stateAsOf]]
-    * resolves from the newest retained manifest at-or-below the target
+    * retained lake keys the lake's TIME-TRAVEL depth: [[stateAsOf]]
+    * resolves from the newest retained key at-or-below the target
     * plus the surviving tail, so size `retainManifests` × compaction
     * cadence to the history you need (`keepLast` alone cannot reach below
-    * the oldest retained manifest's watermark). One caveat on the
+    * the oldest retained key's watermark). One caveat on the
     * snapshot side: an OLDER anchor's tail includes every snapshot batch
     * below its fold floor, so once retention drops a snapshot, anchors
     * that predate it refuse (precisely — [[stateAsOf]] checks the actual
@@ -1265,100 +1266,7 @@ final class LakeSink(
     }
   }
 
-  // ---- manifest + atomic small-file plumbing ------------------------------
-
-  private def manifestVersionOf(name: String): Option[Long] =
-    if (name.startsWith(ManifestPrefix) && !name.endsWith(".tmp"))
-      name.stripPrefix(ManifestPrefix).toLongOption
-    else None
-
-  /** Committed manifest versions on disk, ascending (the current one and —
-    * between GC cycles — its predecessor).
-    */
-  private def manifestVersions(f: FileSystem): Seq[Long] =
-    if (!f.exists(commitDir)) Seq.empty
-    else f.listStatus(commitDir).toSeq
-      .flatMap(st => manifestVersionOf(st.getPath.getName)).sorted
-
-  /** Read one committed manifest by version. */
-  private def readManifestVersion(f: FileSystem, v: Long): Manifest = {
-    val in = f.open(new Path(commitDir, ManifestPrefix + v))
-    val text =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    val lines = text.split("\n").filter(_.nonEmpty)
-    val (wm, n, minFolded) = lines.headOption.map(_.split("\t")) match {
-      case Some(Array(w, b, lo)) => (w.toLong, b.toInt, lo.toLong)
-      case _ => throw new IllegalStateException(
-        s"corrupt lake manifest ${new Path(commitDir, ManifestPrefix + v)}: " +
-          s"header '${lines.headOption.getOrElse("")}' is not " +
-          "'watermark<TAB>buckets<TAB>minFolded' — rebuild the lake")
-    }
-    val entries = lines.tail.map { l =>
-      val Array(s, t, b, rel) = l.split("\t", 4)
-      (s, t, b.toInt) -> rel
-    }.toMap
-    Manifest(v, wm, n, entries, minFolded)
-  }
-
-  /** Newest committed manifest, if any compaction has published one. */
-  private def readManifest(f: FileSystem): Option[Manifest] =
-    manifestVersions(f).lastOption.map(readManifestVersion(f, _))
-
-  /** Publish a manifest: full content to a temp name, then one rename to
-    * the (fresh) versioned name — atomic on every Hadoop filesystem, so a
-    * reader never observes a partial manifest.
-    */
-  private def writeManifest(f: FileSystem, m: Manifest): Unit = {
-    f.mkdirs(commitDir)
-    val dst = new Path(commitDir, ManifestPrefix + m.version)
-    val tmp = new Path(commitDir, ManifestPrefix + m.version + ".tmp")
-    val sb = new StringBuilder
-    sb.append(m.watermark).append('\t').append(m.buckets)
-      .append('\t').append(m.minFolded).append('\n')
-    m.entries.toSeq.sortBy { case ((s, t, b), _) => (s, t, b) }
-      .foreach { case ((s, t, b), rel) =>
-        sb.append(s).append('\t').append(t).append('\t')
-          .append(b).append('\t').append(rel).append('\n')
-      }
-    val out = f.create(tmp, true)
-    try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // crashed prior attempt at this version may have left dst; checked
-    // rename — a false return must not silently lose the manifest
-    BucketedStateLog.publishReplace(f, tmp, dst)
-  }
-
-  /** Delete superseded manifests and every base slice neither kept
-    * manifest references (including crashed-compaction orphans).
-    */
-  private def gcBase(f: FileSystem, keepRefs: Set[String], keepVersions: Set[Long]): Unit = {
-    f.listStatus(commitDir).foreach { st =>
-      val name = st.getPath.getName
-      manifestVersionOf(name).foreach { v =>
-        if (!keepVersions.contains(v)) f.delete(st.getPath, false)
-      }
-      if (name.startsWith(ManifestPrefix) && name.endsWith(".tmp"))
-        f.delete(st.getPath, false)
-    }
-    if (!f.exists(baseDataDir)) return
-    val slices = f.globStatus(
-      new Path(baseDataDir, "v*/schema=*/table=*/bucket=*"))
-    val rootUri = new Path(root).toUri.getPath.stripSuffix("/")
-    slices.foreach { st =>
-      val rel = st.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-      if (!keepRefs.contains(rel)) f.delete(st.getPath, true)
-    }
-    // prune version/table/schema dirs emptied by slice deletion
-    f.listStatus(baseDataDir).filter(_.isDirectory).foreach { vd =>
-      def pruneEmpty(p: Path): Boolean = {
-        val kids = f.listStatus(p)
-        val emptyKids = kids.filter(_.isDirectory).filter(k => pruneEmpty(k.getPath))
-        if (kids.length == emptyKids.length) { f.delete(p, true); true } else false
-      }
-      pruneEmpty(vd.getPath)
-    }
-  }
+  // ---- atomic small-file plumbing ----------------------------------------
 
   /** Atomic overwrite of a small long-valued file: temp + rename (the
     * delete-before-rename window is covered on the read side, which
@@ -1419,11 +1327,9 @@ object LakeSink {
     */
   private[sinks] val KeySep = "\u0000"
 
-  private[sinks] val ManifestPrefix = "_base_manifest."
-
   /** The lake's one on-disk format, named in `<root>/_graft_format`. */
   private[sinks] val FormatFile = "_graft_format"
-  private[sinks] val FormatVersion = "graft-lake 1"
+  private[sinks] val FormatVersion = "graft-lake 2"
 
   /** Root entries only the lake itself writes (maintainers may stamp
     * their own dirs and markers under the root before its first write).
@@ -1436,21 +1342,6 @@ object LakeSink {
     * table name reads as "unknown", falling back to the scan.
     */
   private[sinks] val TruncMetaMagic = "t1"
-
-  /** The BASE pointer: folded watermark, bucket count, and the slice map
-    * (schema, table, bucket) → data dir relative to the lake root.
-    */
-  /** `minFolded` is the LOWEST batch id folded into this base — the folded
-    * set is exactly the id interval `[minFolded, watermark]`. Needed
-    * because the id space is two-sided (snapshots count down from -1,
-    * epochs up from 0): a late snapshot landing after a compaction sits
-    * BELOW the folded interval, and every reader folds it from the
-    * changelog until the next compaction absorbs it.
-    */
-  private[sinks] final case class Manifest(
-      version: Long, watermark: Long, buckets: Int,
-      entries: Map[(String, String, Int), String],
-      minFolded: Long)
 
   /** Folded-image slice schema — read with it explicitly so empty slices
     * and empty folds never trip schema inference.

@@ -209,5 +209,5 @@ private[sinks] final class RefreshSpan(
     */
   def carryForward(log: BucketedStateLog,
       prev: (Long, Long) = prevKey.get): Unit =
-    log.carry(f, prev, key)
+    log.carry(f, Some(prev), key)
 }

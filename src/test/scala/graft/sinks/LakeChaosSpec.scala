@@ -356,13 +356,14 @@ class LakeChaosSpec extends AnyFunSuite {
               pendingHalf.foreach { case (id, rows) => commitBatch(id, rows) }
               pendingHalf = None
             case 7 => // crashed compaction debris + torn small-file temps
-              val v = sink.baseVersion(spark) + 1
-              f.mkdirs(new Path(dir, s"_base_data/v$v/schema=public/table=t/bucket=0"))
+              val log = "_base_data/schema=public/table=t"
+              val v = s"${sink.foldedLow(spark)}_${sink.watermark(spark) + 1}"
+              f.mkdirs(new Path(dir, s"$log/v$v/bucket=0"))
               val junk = f.create(new Path(dir,
-                s"_base_data/v$v/schema=public/table=t/bucket=0/part-junk.parquet"), true)
+                s"$log/v$v/bucket=0/part-junk.parquet"), true)
               junk.write("torn".getBytes); junk.close()
               val tmp = f.create(new Path(dir,
-                s"_graft_commits/_base_manifest.$v.tmp"), true)
+                s"$log/_commits/manifest.$v.tmp"), true)
               tmp.write("torn".getBytes); tmp.close()
               sink.compact(spark)
               checkFold()

@@ -89,17 +89,22 @@ class LakeFormatSpec extends AnyFunSuite {
   }
 
   test("a marker with another format value refuses") {
-    withRoot { dir =>
-      new LakeSink(dir).appendBatch(envelope(Seq(ev(1, "1", "a"))), 0L)
-      setMarker(dir, Some("graft-lake 0"))
-      val e = refusesNaming(dir)(new LakeSink(dir).committedBatchIds(spark))
-      assert(e.getMessage.contains("graft-lake 0"), e.getMessage)
-      // even a root with no lake data is not re-stamped over a foreign marker
-      withRoot { empty =>
-        setMarker(empty, Some("graft-lake 0"))
-        refusesNaming(empty)(new LakeSink(empty).appendBatch(
-          envelope(Seq(ev(1, "1", "a"))), 0L))
-        assert(marker(empty).contains("graft-lake 0"))
+    // "graft-lake 1" kept BASE in its own manifest format under
+    // _graft_commits; a compacted and vacuumed root of it would otherwise
+    // read as never compacted, its vacuumed history silently gone
+    Seq("graft-lake 0", "graft-lake 1").foreach { other =>
+      withRoot { dir =>
+        new LakeSink(dir).appendBatch(envelope(Seq(ev(1, "1", "a"))), 0L)
+        setMarker(dir, Some(other))
+        val e = refusesNaming(dir)(new LakeSink(dir).committedBatchIds(spark))
+        assert(e.getMessage.contains(other), e.getMessage)
+        // even a root with no lake data is not re-stamped over a foreign marker
+        withRoot { empty =>
+          setMarker(empty, Some(other))
+          refusesNaming(empty)(new LakeSink(empty).appendBatch(
+            envelope(Seq(ev(1, "1", "a"))), 0L))
+          assert(marker(empty).contains(other))
+        }
       }
     }
   }
@@ -142,19 +147,19 @@ class LakeFormatSpec extends AnyFunSuite {
     }
   }
 
-  test("a manifest header without the fold floor refuses as corrupt") {
+  test("a garbled line in a BASE table-log manifest refuses as corrupt") {
     withRoot { dir =>
       val sink = new LakeSink(dir)
       sink.appendBatch(envelope(Seq(ev(1, "1", "a"))), 0L)
       sink.compact(spark)
-      val mp = new java.io.File(dir, s"_graft_commits/${LakeSink.ManifestPrefix}1")
+      val mp = new java.io.File(dir, "_base_data/schema=public/table=t/_commits/manifest.0_0")
       val lines = new String(Files.readAllBytes(mp.toPath), "UTF-8").split("\n")
-      val head = lines.head.split("\t")
-      Files.write(mp.toPath, ((head(0) + "\t" + head(1)) +: lines.tail)
+      assert(lines.nonEmpty)
+      Files.write(mp.toPath, (lines.head.replace("\t", " ") +: lines.tail)
         .mkString("", "\n", "\n").getBytes("UTF-8"))
       new java.io.File(mp.getParent, s".${mp.getName}.crc").delete()
       val e = intercept[IllegalStateException](sink.latestState(spark, "public", "t"))
-      assert(e.getMessage.contains("corrupt lake manifest"), e.getMessage)
+      assert(e.getMessage.contains("corrupted state manifest"), e.getMessage)
     }
   }
 }

@@ -113,7 +113,7 @@ class LakeSinkSpec extends AnyFunSuite {
       assert(sink.committedBatchIds(spark).isEmpty, "folded batches vacuumed")
       assert(sink.baseEntries(spark).keys.exists {
         case (s, t, _) => s == "public" && t == "users" })
-      assert(new java.io.File(s"$dir/_base_data/v1/schema=public/table=users").exists())
+      assert(new java.io.File(s"$dir/_base_data/schema=public/table=users").exists())
       assert(stateMap(sink) == before, "state survives vacuum via base")
       // post-compaction tail supersedes base rows and a replayed OLD batch id
       // (below the watermark) must still be a no-op after vacuum
@@ -546,7 +546,7 @@ class LakeSinkSpec extends AnyFunSuite {
       sink.appendBatch(envelope((1 to 64).map(i =>
         ev(i, "insert", "users", null, Map("id" -> i.toString, "name" -> s"n$i")))), 0L)
       sink.compact(spark)
-      assert(sink.baseVersion(spark) == 1L)
+      assert(sink.watermark(spark) == 0L)
       val v1 = sink.baseEntries(spark)
       assert(v1.nonEmpty && v1.keys.forall(_._3 < 8))
       def fileStamps(rel: String): Map[String, Long] = {
@@ -561,12 +561,12 @@ class LakeSinkSpec extends AnyFunSuite {
         .select(pmod(hash(lit("1")), lit(8))).collect().head.getInt(0)
       sink.compact(spark)
       val v2 = sink.baseEntries(spark)
-      assert(sink.baseVersion(spark) == 2L)
+      assert(sink.watermark(spark) == 1L)
       // the dirty bucket moved to a v2 slice; every other slice is the SAME
       // path with the SAME untouched files
       assert(v2((("public"), "users", dirtyBucket)) !=
         v1(("public", "users", dirtyBucket)))
-      assert(v2(("public", "users", dirtyBucket)).contains("/v2/"))
+      assert(v2(("public", "users", dirtyBucket)).contains("/v0_1/"))
       v1.foreach { case (k @ (_, _, b), rel) =>
         if (b != dirtyBucket) {
           assert(v2(k) == rel, s"clean bucket $b was rewritten")
@@ -746,6 +746,95 @@ class LakeSinkSpec extends AnyFunSuite {
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(fallback == Map("2" -> "b2"),
         "legacy empty marker must fold identically via the scan fallback")
+    }
+  }
+
+  /** Per-key names of a fold result. */
+  private def names(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+    df.select(col("k"), element_at(col("after"), "name")).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+
+  /** The oracle: a direct in-order fold of envelope rows keyed on `id`. */
+  private def directFold(rows: Seq[Row]): Map[String, String] =
+    rows.foldLeft(Map.empty[String, String]) { (m, r) =>
+      r.getString(3) match {
+        case "delete" => m - r.getMap[String, String](9)("id")
+        case _ =>
+          val after = r.getMap[String, String](10)
+          m + (after("id") -> after("name"))
+      }
+    }
+
+  test("a table first landing after compact + vacuum reads through an empty BASE") {
+    withSink { (sink, _) =>
+      sink.appendBatch(envelope(Seq(
+        ev(1, "insert", "users", null, Map("id" -> "1", "name" -> "a")))), 0L)
+      sink.appendBatch(envelope(Seq(
+        ev(2, "update", "users", null, Map("id" -> "1", "name" -> "a2")))), 1L)
+      sink.compact(spark); sink.vacuum(spark)
+      // "pets" lands only now: no batch folded at the lake key holds it
+      val b2 = Seq(
+        ev(3, "insert", "pets", null, Map("id" -> "p1", "name" -> "rex")),
+        ev(4, "insert", "pets", null, Map("id" -> "p2", "name" -> "tom")))
+      val b3 = Seq(
+        ev(5, "update", "pets", null, Map("id" -> "p1", "name" -> "rex2")),
+        ev(6, "delete", "pets", Map("id" -> "p2", "name" -> null), null))
+      sink.appendBatch(envelope(b2), 2L)
+      sink.appendBatch(envelope(b3), 3L)
+      def check(): Unit = {
+        assert(names(sink.latestState(spark, "public", "pets")) == directFold(b2 ++ b3))
+        assert(names(sink.stateAsOf(spark, "public", "pets", asOf = 3L)) ==
+          directFold(b2 ++ b3))
+        assert(names(sink.stateAsOf(spark, "public", "pets", asOf = 2L)) == directFold(b2))
+      }
+      check()
+      // once compacted, its log exists but lacks the older lake key that
+      // the as-of-2 read resolves through
+      sink.compact(spark)
+      check()
+    }
+  }
+
+  test("a compaction that died before its lake publish is redone by the next compact") {
+    withSink { (sink, dir) =>
+      sink.appendBatch(envelope(Seq(
+        ev(1, "insert", "users", null, Map("id" -> "1", "name" -> "a")),
+        ev(2, "insert", "users", null, Map("id" -> "2", "name" -> "b")))), 0L)
+      sink.compact(spark)
+      sink.appendBatch(envelope(Seq(
+        ev(3, "update", "users", null, Map("id" -> "1", "name" -> "a2")),
+        ev(4, "insert", "users", null, Map("id" -> "3", "name" -> "c")),
+        ev(5, "insert", "other", null, Map("id" -> "9", "name" -> "z")))), 1L)
+      sink.appendBatch(envelope(Seq(
+        ev(6, "delete", "users", Map("id" -> "2", "name" -> null), null))), 2L)
+      def reads() = (stateMap(sink),
+        (0L to 2L).map(b => names(sink.stateAsOf(spark, "public", "users", asOf = b))))
+      val before = reads()
+      sink.compact(spark)
+      assert(sink.watermark(spark) == 2L)
+      // the crash: every table log holds (0, 2), the lake log does not
+      val lakeCommits = new java.io.File(dir, "_base_data/_lake/_commits")
+      assert(new java.io.File(lakeCommits, "manifest.0_2").delete())
+      new java.io.File(lakeCommits, ".manifest.0_2.crc").delete()
+      assert(sink.watermark(spark) == 0L && sink.foldedLow(spark) == 0L)
+      assert(reads() == before)
+      sink.vacuum(spark)
+      assert(sink.committedBatchIds(spark) == Seq(1L, 2L),
+        "vacuum must drop only the published interval")
+      val usersManifest = new java.io.File(dir,
+        "_base_data/schema=public/table=users/_commits/manifest.0_2")
+      val stamp = usersManifest.lastModified()
+      sink.compact(spark)
+      assert(new java.io.File(lakeCommits, "manifest.0_2").exists())
+      assert(sink.watermark(spark) == 2L && sink.foldedLow(spark) == 0L)
+      assert(usersManifest.lastModified() == stamp,
+        "a table log already holding the key is skipped, not rewritten")
+      assert(stateMap(sink) == before._1)
+      assert((1L to 2L).map(b => names(sink.stateAsOf(spark, "public", "users", asOf = b))) ==
+        before._2.drop(1))
+      sink.vacuum(spark)
+      assert(stateMap(sink) == before._1)
+      assert(names(sink.latestState(spark, "public", "other")) == Map("9" -> "z"))
     }
   }
 }

@@ -569,4 +569,46 @@ class MaintainedJoinSpec extends AnyFunSuite {
       assert(e.getMessage.contains("leftKeyIsRowKey"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
+
+  test("REPLICA IDENTITY DEFAULT: a feed without before images maintains the splice join") {
+    // Under DEFAULT identity an update carries no before image and a
+    // delete's before holds only the key. Joined on both sides' identity
+    // keys (o's identity here is uid), the splice join maintains the
+    // result; the delta join computes retractions from before images and
+    // refuses the same lake.
+    withJoin { (sink, mj) =>
+      val dj = new MaintainedDeltaJoin(sink, ("public", "u"), ("public", "o"),
+        im => element_at(im, "id"), im => element_at(im, "uid"), "orders_by_user_dj")
+      sink.appendBatch(envelope(Seq(
+        ev(1, "insert", "u", Seq("id"), null, user("1", "alice")),
+        ev(2, "insert", "u", Seq("id"), null, user("2", "bo")),
+        ev(3, "insert", "o", Seq("uid"), null, order("a", "1", "10")),
+        ev(4, "insert", "o", Seq("uid"), null, order("b", "2", "20")))), 0L)
+      assert(mj.refresh(spark) == 1)
+      assert(dj.refresh(spark) == 1)
+      assert(joinSet(mj) == Set(("a", "alice", "10"), ("b", "bo", "20")))
+      assert(joinSet(mj) == expected(sink))
+
+      sink.appendBatch(envelope(Seq(
+        ev(5, "update", "u", Seq("id"), null, user("1", "alina")),
+        ev(6, "update", "o", Seq("uid"), null, order("b", "2", "25")),
+        ev(7, "delete", "u", Seq("id"), Map("id" -> "2"), null),
+        ev(8, "insert", "u", Seq("id"), null, user("3", "cy")),
+        ev(9, "insert", "o", Seq("uid"), null, order("c", "3", "30")))), 1L)
+      assert(mj.refresh(spark) == 1)
+      assert(joinSet(mj) == Set(("a", "alina", "10"), ("c", "cy", "30")))
+      assert(joinSet(mj) == expected(sink))
+
+      sink.compact(spark)
+      sink.appendBatch(envelope(Seq(
+        ev(10, "delete", "o", Seq("uid"), Map("uid" -> "1"), null),
+        ev(11, "update", "u", Seq("id"), null, user("3", "cyd")))), 2L)
+      assert(mj.refresh(spark) == 1)
+      assert(joinSet(mj) == Set(("c", "cyd", "30")))
+      assert(joinSet(mj) == expected(sink))
+
+      val e = intercept[IllegalStateException](dj.refresh(spark))
+      assert(e.getMessage.contains("REPLICA IDENTITY FULL is required"), e.getMessage)
+    }
+  }
 }
